@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.errors import AnalysisException
 
+from .session import empty_df
+
 
 def read_done(spark: SparkSession, path: str) -> DataFrame:
     """DataFrame[pkey int] of completed buckets (empty if no checkpoint).
@@ -29,7 +31,7 @@ def read_done(spark: SparkSession, path: str) -> DataFrame:
     try:
         return spark.read.parquet(path).select("pkey").distinct()
     except AnalysisException:
-        return spark.createDataFrame([], "pkey int")
+        return empty_df(spark, "pkey int")
 
 
 def mark_done(encoded_written: DataFrame, path: str) -> None:

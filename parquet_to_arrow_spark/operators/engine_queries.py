@@ -23,6 +23,7 @@ from ..column import (
     encode_int_array,
     encode_string_array,
 )
+from ..session import empty_df
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -126,7 +127,7 @@ def roundtrip_lineitem_ints(spark, sf_dir) -> DataFrame:
         for rg in range(pq.ParquetFile(f).metadata.num_row_groups)
     ]
     if not splits:
-        return spark.createDataFrame([], ddl)
+        return empty_df(spark, ddl)
     sdf = spark.createDataFrame(splits, "path string, rg int").repartition(
         len(splits)
     )

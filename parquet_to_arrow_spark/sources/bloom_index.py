@@ -44,6 +44,7 @@ import uuid
 
 import numpy as np
 
+from ..session import empty_df
 from . import iceberg_meta
 
 
@@ -380,7 +381,7 @@ def point_lookup(spark, table_or_path: str, column: str, value,
     )
     ddl = iceberg_meta._spark_ddl(schema)
     if not cands:
-        return spark.createDataFrame([], ddl)
+        return empty_df(spark, ddl)
     return (
         spark.read.schema(ddl)
         .parquet(*cands)

@@ -2732,5 +2732,7 @@ def read_incremental(
     )
     files = added_files(table_dir, since_snapshot_id, to_snapshot_id)
     if not files:
-        return spark.createDataFrame([], _spark_ddl(cur_schema))
+        from ..session import empty_df
+
+        return empty_df(spark, _spark_ddl(cur_schema))
     return spark.read.schema(_spark_ddl(cur_schema)).parquet(*[f.path for f in files])

@@ -25,7 +25,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..encode import ENCODED_SCHEMA_DDL, encode_batch
-from ..session import DEFAULT_CHUNK_ROWS
+from ..session import DEFAULT_CHUNK_ROWS, empty_df
+from ..verify import multiset_diff
 
 
 def resolve_files(path: str, suffix: str = ".parquet"):
@@ -105,16 +106,26 @@ def files_df(
     files: list[str] | None = None,
     sizes: dict[str, int] | None = None,
 ) -> DataFrame:
-    """One row per parquet file, grouped into size-balanced task partitions.
+    """One ``path`` row per file, grouped into size-balanced task partitions.
 
-    Task granularity is BYTES, not files: each Spark→Python task round-trip
-    costs ~0.2 s of fixed overhead (measured on a no-op mapInArrow at
-    local[1]), so one-task-per-small-file wastes most of the wall clock on a
-    many-file input — the same reason Spark's own scans pack small files up
-    to maxPartitionBytes. Groups are built greedily largest-file-first into
-    min(n_files, max(parallelism, total/target)) bins (rounded up to a
-    multiple of the parallelism so waves stay balanced), then laid out one
-    group per partition via exact slicing — no shuffle, no hash skew.
+    Task granularity is BYTES, not files: every task of the consuming
+    ``mapInArrow`` pays a fixed Python-worker round-trip, so one task per
+    small file wastes the wall clock on a many-file input — the same reason
+    Spark's own scans pack small files up to maxPartitionBytes. Groups are
+    built greedily largest-file-first into min(n_files, max(parallelism,
+    total/target)) bins (rounded up to a multiple of the parallelism so
+    waves stay balanced), then laid out one group per partition — no
+    shuffle, no hash skew, ``getNumPartitions()`` equals the bin count.
+
+    The frame is built on the JVM: the groups cross py4j as one string, are
+    split and parallelized one group per slice, and SQL explodes each group
+    into rows, so no Python worker starts just to produce path strings. A
+    PythonRDD path frame (``parallelize`` + ``createDataFrame``) forks
+    workers that unpickle the paths before the scan begins; it was most of
+    the ~0.2 s per task measured on a no-op mapInArrow at local[1]. A plan
+    literal of the file table is no alternative (every task deserializes
+    the whole table), nor is a broadcast join (its exchange breaks the
+    fast path's zero-exchange plan).
 
     Pass an explicit ``files``+``sizes`` pair (e.g. from an Iceberg
     manifest walk, which already knows both) to skip the filesystem
@@ -126,7 +137,7 @@ def files_df(
         files = [qualify_path(i.path, path) for i in infos]
         sizes = {qualify_path(i.path, path): i.size for i in infos}
     if not files:
-        return spark.createDataFrame([], "path string")
+        return empty_df(spark, "path string")
     par = max(spark.sparkContext.defaultParallelism, 1)
     by_bytes = math.ceil(sum(sizes.values()) / max(target_bytes, 1))
     n_tasks = min(len(files), par * math.ceil(max(par, by_bytes) / par))
@@ -136,10 +147,19 @@ def files_df(
         i = load.index(min(load))
         groups[i].append(f)
         load[i] += sizes[f]
-    rdd = spark.sparkContext.parallelize(groups, n_tasks).flatMap(
-        lambda g: [(f,) for f in g]
+    # a path holds no NUL: "\0" joins a group's paths and "\0\0" joins the
+    # groups (paths are never empty, so a run of 2k NULs is k group breaks);
+    # the sentinel group keeps trailing empty groups, which split() drops
+    blob = "\0\0".join("\0".join(g) for g in groups) + "\0\0-"
+    jvm = spark.sparkContext._jvm
+    parts = jvm.java.util.regex.Pattern.compile("\0\0").splitAsStream(blob).toList()
+    jrdd = spark.sparkContext._jsc.parallelize(parts.subList(0, n_tasks), n_tasks)
+    jds = spark._jsparkSession.createDataset(
+        jrdd.rdd(), jvm.org.apache.spark.sql.Encoders.STRING()
     )
-    return spark.createDataFrame(rdd, "path string")
+    return DataFrame(jds.toDF(), spark).select(
+        F.explode(F.array_remove(F.split("value", "\0"), "")).alias("path")
+    )
 
 
 def encode_parquet_dir(
@@ -309,40 +329,21 @@ def token_hashes_from_encoded(encoded: DataFrame) -> DataFrame:
 
 
 def verify_hashes(left: DataFrame, right: DataFrame) -> dict:
-    """Distributed scalar-only round-trip verdict: full outer join on doc_id,
-    compare (n_tok, tok_hash). Row counts are compared explicitly — a side
-    with duplicated doc_ids joins every duplicate as 'ok', so without the
-    count check duplicate-row corruption is silent (the reference
-    parquet-diff fails on row-count mismatch, src/parquet-diff.cc:238-245).
+    """Distributed scalar-only round-trip verdict over two hash frames
+    (``HASH_SCHEMA_DDL``): ``verify.multiset_diff`` keyed on doc_id,
+    comparing (n_tok, tok_hash). Each side's hash stage runs exactly once:
+    the sides are tagged, unioned and shuffled once on doc_id, counted per
+    (doc_id, n_tok, tok_hash) and then per doc_id, and one collect returns
+    what a full outer join on doc_id would count — 'ok'/'mismatch' per
+    joined pair (duplicates join k×k times), 'missing' for left rows with
+    no right doc_id, 'extra' for right rows with no left doc_id and for
+    null-doc_id rows of either side (a null key never joins). 'equal' also
+    requires n_left == n_right: duplicated rows join as 'ok', and the
+    reference parquet-diff fails on row-count mismatch
+    (src/parquet-diff.cc:238-245).
     Returns {'equal', 'n_left', 'n_right', 'ok', 'missing', 'extra',
     'mismatch'}."""
-    l_, r_ = left.alias("l"), right.alias("r")
-    n_left, n_right = l_.count(), r_.count()
-    joined = l_.join(r_, F.col("l.doc_id") == F.col("r.doc_id"), "full_outer")
-    status = (
-        F.when(F.col("l.doc_id").isNull(), "extra")
-        .when(F.col("r.doc_id").isNull(), "missing")
-        .when(
-            ~(
-                F.col("l.n_tok").eqNullSafe(F.col("r.n_tok"))
-                & F.col("l.tok_hash").eqNullSafe(F.col("r.tok_hash"))
-            ),
-            "mismatch",
-        )
-        .otherwise("ok")
-    )
-    counts = {
-        row["status"]: row["count"]
-        for row in joined.select(status.alias("status")).groupBy("status").count().collect()
-    }
-    bad = {k: counts.get(k, 0) for k in ("missing", "extra", "mismatch")}
-    return {
-        "equal": not any(bad.values()) and n_left == n_right,
-        "n_left": n_left,
-        "n_right": n_right,
-        "ok": counts.get("ok", 0),
-        **bad,
-    }
+    return multiset_diff(left, right, "doc_id", ("n_tok", "tok_hash"))
 
 
 def read_arrow_ipc(spark: SparkSession, path: str, ddl: str) -> DataFrame:
@@ -378,9 +379,8 @@ def read_arrow_ipc(spark: SparkSession, path: str, ddl: str) -> DataFrame:
                         ]
                         yield pa.RecordBatch.from_arrays(cols, names=b.schema.names)
 
-    files = [qualify_path(i.path, path) for i in resolve_files(path, suffix=".arrow")[1]]
-    rdd = spark.sparkContext.parallelize([(f,) for f in files], max(len(files), 1))
-    return spark.createDataFrame(rdd, "path string").mapInArrow(run, ddl)
+    sizes = {qualify_path(i.path, path): i.size for i in resolve_files(path, ".arrow")[1]}
+    return files_df(spark, None, files=list(sizes), sizes=sizes).mapInArrow(run, ddl)
 
 
 def write_bucketed_table(

@@ -22,6 +22,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..encode import TOKENS_SCHEMA_DDL, encode_tokens_df
+from ..session import empty_df
 
 
 def incremental_encode(
@@ -404,8 +405,8 @@ def streaming_exact_dedup(
     q.stop()
     q.awaitTermination()
     out_ddl = "fp string, keep_id long, n_copies long"
-    table = spark.createDataFrame(emitted, out_ddl) if emitted else (
-        spark.createDataFrame([], out_ddl)
+    table = (
+        spark.createDataFrame(emitted, out_ddl) if emitted else empty_df(spark, out_ddl)
     )
     # keep each key's FINAL emission: max copies, then min keep_id (a key
     # re-emitted with the same count in a later batch carries the same or

@@ -62,6 +62,44 @@ def test_encode_fast_path_has_no_shuffle(spark, tmp_path):
     assert "Exchange" not in plan, plan
 
 
+def test_file_split_plans_start_no_python_worker(spark, tmp_path):
+    """The file-split path frame is built on the JVM: a PythonRDD frame
+    (``Scan ExistingRDD``) forks Python workers in every job just to
+    produce path strings, before the scan's own mapInArrow starts."""
+    from parquet_to_arrow_spark import checkpoint
+    from parquet_to_arrow_spark.sources.io import (
+        encode_parquet_dir,
+        token_hashes_from_parquet,
+    )
+    from parquet_to_arrow_spark.sources.synth import synth_tokens_df
+
+    path = str(tmp_path / "tok")
+    synth_tokens_df(spark, 200, n_partitions=2).write.parquet(path)
+    for df in (
+        encode_parquet_dir(spark, path),
+        token_hashes_from_parquet(spark, path),
+        checkpoint.read_done(spark, str(tmp_path / "never_written")),
+    ):
+        assert "ExistingRDD" not in plan_of(df), plan_of(df)
+
+
+def test_files_df_lays_out_one_greedy_group_per_partition(spark):
+    from parquet_to_arrow_spark.sources.io import files_df
+
+    assert spark.sparkContext.defaultParallelism == 8
+    files = [f"/data/f{i}.parquet" for i in range(10)]
+    sizes = dict(zip(files, [100, 90, 80, 70, 60, 50, 40, 30, 20, 10]))
+    # 8 bins, largest file first into the least-loaded bin
+    want = [[f] for f in files[:6]] + [[files[6], files[9]], [files[7], files[8]]]
+    # zero-byte files leave the second bin empty; it keeps its partition
+    zero = ["/data/a.parquet", "/data/b.parquet"]
+    for fs, sz, groups in ((files, sizes, want), (zero, dict.fromkeys(zero, 0), [zero, []])):
+        df = files_df(spark, None, files=fs, sizes=sz)
+        assert df.columns == ["path"]
+        assert df.rdd.getNumPartitions() == len(groups)
+        assert [[r.path for r in part] for part in df.rdd.glom().collect()] == groups
+
+
 def test_decode_path_has_no_shuffle(spark, tmp_path):
     from parquet_to_arrow_spark.decode import decode_chunks_df
     from parquet_to_arrow_spark.encode import encode_tokens_df

@@ -127,6 +127,53 @@ def test_verify_hashes_detects_duplicates(spark):
     bad = verify_hashes(left, dup)
     assert not bad["equal"]
     assert bad["n_left"] == 2 and bad["n_right"] == 3
+    # exact full-outer-join counts: duplicates join k×k times, null hashes
+    # compare null-safely, and a null doc_id never joins, so its rows on
+    # both sides are 'extra'
+    cases = [
+        (
+            [("a", 2, 11), ("a", 2, 12), ("b", 3, 22), ("c", 1, 1)],
+            [("a", 2, 11), ("a", 2, 13), ("b", 3, 99), ("d", 1, 1)],
+            dict(equal=False, n_left=4, n_right=4, ok=1, missing=1, extra=1, mismatch=4),
+        ),
+        (
+            [("a", 2, 11), (None, 1, 1)],
+            [("a", 2, 11), (None, 1, 1), ("e", None, None)],
+            dict(equal=False, n_left=2, n_right=3, ok=1, missing=0, extra=3, mismatch=0),
+        ),
+        (
+            [("a", None, 5)],
+            [("a", None, 5), ("a", 1, 5)],
+            dict(equal=False, n_left=1, n_right=2, ok=1, missing=0, extra=0, mismatch=1),
+        ),
+    ]
+    for lrows, rrows, want in cases:
+        got = verify_hashes(spark.createDataFrame(lrows, ddl), spark.createDataFrame(rrows, ddl))
+        assert got == want, (lrows, rrows, got)
+
+
+def test_verify_hashes_reads_each_row_once(spark):
+    """Each side's hash stage is the expensive part of a verify (a parquet
+    scan or a chunk decode in Python): the verdict must read it once."""
+    from parquet_to_arrow_spark.sources.io import HASH_SCHEMA_DDL, verify_hashes
+
+    def counted(acc):
+        def run(batches):
+            for b in batches:
+                acc.add(b.num_rows)
+                yield b
+
+        return run
+
+    seen = [spark.sparkContext.accumulator(0) for _ in range(2)]
+    left, right = (
+        spark.range(500)
+        .selectExpr("CAST(id AS STRING) AS doc_id", "CAST(id % 7 AS INT) AS n_tok", "id AS tok_hash")
+        .mapInArrow(counted(acc), HASH_SCHEMA_DDL)
+        for acc in seen
+    )
+    assert verify_hashes(left, right)["equal"]
+    assert [acc.value for acc in seen] == [500, 500]
 
 
 def test_read_done_missing_path(spark, tmp_path):
@@ -134,6 +181,7 @@ def test_read_done_missing_path(spark, tmp_path):
     # Hadoop-compatible filesystem; missing path == nothing done
     done = checkpoint.read_done(spark, str(tmp_path / "never_written"))
     assert done.columns == ["pkey"]
+    assert done.schema.simpleString() == "struct<pkey:int>"
     assert done.count() == 0
 
 
