@@ -32,7 +32,7 @@ def entry(spark: SparkSession) -> DataFrame:
     (doc_id, tokens, n_tok, source) shape, encode with per-chunk codec
     auto-selection, decode, verify bit-identity, and return per-codec
     metrics with the verification verdict attached."""
-    from parquet_to_arrow_spark.decode import decode_chunks_df
+    from parquet_to_arrow_spark.encode import decode_chunks_df
     from parquet_to_arrow_spark.encode import encode_tokens_df
     from parquet_to_arrow_spark.manifest import codec_metrics, manifest_from_encoded
     from parquet_to_arrow_spark.operators.engine_queries import tokenize_documents

@@ -9,7 +9,7 @@ Prints ONE JSON line:
 
 Env:
   SPARK_GRAFT_SF_DIR   table dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     cores for the headline run (default 32)
+  SPARK_GRAFT_CPUS     cores for the headline run (default: all cores)
   SPARK_GRAFT_SCALING  "0" to skip the local[N] vs local[4N] pair (default on)
   SPARK_GRAFT_BENCH_ROWS  override synth row count for the encode measurement
 
@@ -36,7 +36,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 SCALING = os.environ.get("SPARK_GRAFT_SCALING", "1") != "0"
 
 # sf guess from dir name for reporting + synth sizing
@@ -47,6 +47,25 @@ except ValueError:
 
 BENCH_ROWS = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", str(int(2_000_000 * SF))))
 AVG_TOKENS = 256
+
+HEADLINE = [
+    "q1_pricing_summary",
+    "revenue_by_nation",
+    "window_top3_per_supplier",
+    "events_hourly_rollup",
+    "roundtrip_lineitem_ints",
+    "roundtrip_documents_text",
+    "roundtrip_tokenized_documents",
+    "exact_dedup_groups",
+    "minhash_lsh_pairs",
+    "simhash64",
+    "ann_bruteforce_topk",
+    "lang_id",
+    "token_counts",
+    "sessionize_events",
+    "pivot_qty_by_status",
+    "roundtrip_orders_table",
+]
 
 
 def _input_dir(n_rows: int) -> str:
@@ -154,24 +173,6 @@ def main() -> None:
     from parquet_to_arrow_spark.session import get_spark
 
     qs = entrymod.queries()
-    headline = [
-        "q1_pricing_summary",
-        "revenue_by_nation",
-        "window_top3_per_supplier",
-        "events_hourly_rollup",
-        "roundtrip_lineitem_ints",
-        "roundtrip_documents_text",
-        "roundtrip_tokenized_documents",
-        "exact_dedup_groups",
-        "minhash_lsh_pairs",
-        "simhash64",
-        "ann_bruteforce_topk",
-        "lang_id",
-        "token_counts",
-        "sessionize_events",
-        "pivot_qty_by_status",
-        "roundtrip_orders_table",
-    ]
     spark = get_spark(app="bench", cores=CPUS)
     # steady-state: absorb one-time session costs (executor spin-up, Arrow
     # module import, first-codegen) before the timed loop, exactly like the
@@ -185,7 +186,7 @@ def main() -> None:
     reps = int(os.environ.get("SPARK_GRAFT_QUERY_REPS", "3"))
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
-    for name in headline:
+    for name in HEADLINE:
         ts = []
         for _ in range(reps):
             t0 = time.time()

@@ -26,31 +26,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "revenue_by_nation",
-    "window_top3_per_supplier",
-    "events_hourly_rollup",
-    "roundtrip_lineitem_ints",
-    "roundtrip_documents_text",
-    "roundtrip_tokenized_documents",
-    "exact_dedup_groups",
-    "minhash_lsh_pairs",
-    "simhash64",
-    "ann_bruteforce_topk",
-    "lang_id",
-    "token_counts",
-    "sessionize_events",
-    "pivot_qty_by_status",
-    "roundtrip_orders_table",
-]
+import bench  # noqa: E402
 
 
 def _session(cores=None):
     from parquet_to_arrow_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    return get_spark(app="bench_extra", cores=cores or cpus)
+    return get_spark(app="bench_extra", cores=cores)
 
 
 def _warm(spark, qs, sf_dir):
@@ -138,12 +120,12 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     if mode == "queries":
         reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-        names = sys.argv[4:] or HEADLINE
+        names = sys.argv[4:] or bench.HEADLINE
         run_queries(sf_dir, reps, names)
     elif mode == "plans":
         outdir = sys.argv[3] if len(sys.argv) > 3 else "plans/r06"
         suffix = sys.argv[4] if len(sys.argv) > 4 else "before"
-        names = sys.argv[5:] or HEADLINE
+        names = sys.argv[5:] or bench.HEADLINE
         write_plans(sf_dir, outdir, suffix, names)
     elif mode == "minhash":
         reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2

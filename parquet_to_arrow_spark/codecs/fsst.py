@@ -161,16 +161,6 @@ def decode(payload: bytes, meta: dict, n: int) -> np.ndarray:
     return np.frombuffer(raw, dtype=np.dtype(meta["dtype"]), count=n)
 
 
-def encode_bytes(data: bytes) -> tuple[bytes, dict]:
-    symbols = build_symbol_table(data)
-    payload = compress(data, symbols)
-    return payload, {"dtype": "bytes", "symbols": [s.hex() for s in symbols]}
-
-
-def decode_bytes(payload: bytes, meta: dict) -> bytes:
-    return decompress(payload, [bytes.fromhex(h) for h in meta["symbols"]])
-
-
 def estimate(stats: dict) -> int:
     """Sample-compression extrapolation (measured, not guessed —
     cf. SURVEY.md §7.4 item 4)."""

@@ -9,9 +9,7 @@ equivalent of Parquet footer metadata, made queryable.
 
 from __future__ import annotations
 
-import json
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 MANIFEST_COLUMNS = [
     "chunk_id",
@@ -79,14 +77,6 @@ def column_codecs(encoded: DataFrame) -> DataFrame:
 
 def write_manifest(manifest: DataFrame, path: str, mode: str = "append") -> None:
     manifest.write.mode(mode).parquet(path)
-
-
-def read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def summary_json(manifest: DataFrame) -> str:
-    return json.dumps(totals(manifest), default=int)
 
 
 def group_codec_metrics(encoded: DataFrame) -> DataFrame:

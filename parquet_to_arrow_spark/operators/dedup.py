@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..sources.io import spread
+
 # K=64 signatures in 16 bands of 4 rows: the (1/b)^(1/r) S-curve threshold
 # is (1/16)^(1/4) = 0.5 — exactly the operator's default similarity
 # threshold — and est_jaccard granularity improves from 1/16 to 1/64.
@@ -30,17 +32,6 @@ SHINGLE = 5
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition up to the session's parallelism when the scan produced
-    fewer splits than cores (a small single-file input otherwise runs every
-    pre-shuffle stage — the shingle/word EXPLODE, the expensive part — on
-    one task). No-op at scale where inputs already have >= cores splits."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def content_fp(col=None):
@@ -83,7 +74,7 @@ def doc_shingles(df: DataFrame, k: int = SHINGLE) -> DataFrame:
     """Distinct char k-gram shingles per doc, derived JVM-side."""
     idx = F.sequence(F.lit(1), F.greatest(F.length("text") - (k - 1), F.lit(1)))
     sh = F.array_distinct(F.transform(idx, lambda i: F.substr("text", i, F.lit(k))))
-    return _spread(df).select("doc_id", F.explode(sh).alias("shingle"))
+    return spread(df).select("doc_id", F.explode(sh).alias("shingle"))
 
 
 def _md5_signed64(col):
@@ -444,7 +435,7 @@ def simhash64(spark, sf_dir) -> DataFrame:
     single-space split, same empty-token filter (docs with no words emit no
     row), same md5 halves, ties (s==0) -> 0, bit 63 sign via uint64 view.
     Shuffle volume: ZERO (was: words x 64 partial-agg rows)."""
-    docs = _spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    docs = spread(_docs(spark, sf_dir)).select("doc_id", "text")
 
     def run(batches):
         import hashlib

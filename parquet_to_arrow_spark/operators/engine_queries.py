@@ -18,27 +18,13 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..column import (
+    _utf8_parts,
     decode_int_array,
     decode_string_array,
     encode_int_array,
     encode_string_array,
 )
-from ..session import empty_df
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition up to the session's parallelism when the scan produced
-    fewer splits than cores: parquet's openCostInBytes floor packs a small
-    single-file table into 1-7 splits, which serializes the expensive
-    per-batch codec work downstream (measured sf1.0: the documents FSST
-    round-trip ran on 2 of 32 cores). The shuffled bytes are the small
-    scan itself; no-op at scale where inputs already have >= cores splits.
-    Only used by queries whose OUTPUT is partitioning-independent (identity
-    round-trips) — codec_metrics* keep the scan's natural chunking."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+from ..sources import io as pio
 
 
 def tokenize_documents(
@@ -48,23 +34,18 @@ def tokenize_documents(
     (doc_id string, tokens array<int32>, n_tok int32, source string)
     via deterministic byte-level tokenization (UTF-8 code units), fully
     vectorized on Arrow buffers. ``spread=True`` rebalances a few-split scan
-    across the session's cores first (see _spread) — only for callers whose
-    results don't depend on chunk boundaries."""
+    across the session's cores first (see ``sources.io.spread``) — only for
+    callers whose results don't depend on chunk boundaries."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text", "source"
     )
     if spread:
-        docs = _spread(docs)
+        docs = pio.spread(docs)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            text = batch.column(1).cast(pa.large_utf8())
-            buf = text.buffers()
-            offsets = np.frombuffer(
-                buf[1], dtype=np.int64, count=len(text) + 1, offset=text.offset * 8
-            )
-            data = buf[2].to_pybytes() if buf[2] is not None else b""
-            blob = data[offsets[0] : offsets[-1]]
+            text = batch.column(1)
+            blob, _ = _utf8_parts(text)
             # codepoint tokenizer: one whole-blob UTF-8 -> UTF-32 decode
             # (C-speed, no per-row Python); token = Unicode codepoint
             flat = np.frombuffer(blob.decode("utf-8").encode("utf-32-le"), dtype=np.int32)
@@ -88,7 +69,7 @@ def roundtrip_documents_text(spark, sf_dir) -> DataFrame:
     costliest per-byte kernel in the engine and the documents scan packs
     into ~2 splits (guide §2.5 input-skew fix; identity output is
     partitioning-independent)."""
-    docs = _spread(
+    docs = pio.spread(
         spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     )
 
@@ -108,35 +89,22 @@ def roundtrip_lineitem_ints(spark, sf_dir) -> DataFrame:
     """Four int64/int32 lineitem columns through the int codec stack
     (selector chooses per chunk) and back; oracle = identity SELECT.
 
-    Scan shape (round 6): (file, row-group) splits read with pyarrow INSIDE
-    the workers — the engine's own fast-path pattern (sources/io.py) — so
-    the input crosses the JVM->Python boundary zero times; only the decoded
-    result crosses back. The Spark-scan + mapInArrow form paid the double
-    Arrow conversion, which dominated the query (identity mapInArrow alone:
-    1.75 s vs 0.3 s scan noop at sf1.0); this shape measures 2.05 -> 1.43 s
-    with identical output values."""
-    import pyarrow.parquet as pq
-
-    from ..sources.io import list_parquet_files, open_parquet
-
+    Scan shape: the engine's file-split scan (``sources.io.files_df``).
+    Tasks receive lineitem file paths and stream each file in 8192-row
+    batches with pyarrow INSIDE the workers, so the input crosses the
+    JVM->Python boundary zero times and only the decoded result crosses
+    back. The plan has no Exchange and no Python-built path frame, and the
+    driver reads no footer. A Spark scan + mapInArrow pays the double Arrow
+    conversion, which dominated the query (identity mapInArrow alone:
+    1.75 s vs 0.3 s scan noop at sf1.0)."""
     cols = ["l_orderkey", "l_partkey", "l_suppkey", "l_linenumber"]
-    ddl = "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int"
-    splits = [
-        (f, rg)
-        for f in list_parquet_files(f"{sf_dir}/lineitem.parquet")
-        for rg in range(pq.ParquetFile(f).metadata.num_row_groups)
-    ]
-    if not splits:
-        return empty_df(spark, ddl)
-    sdf = spark.createDataFrame(splits, "path string, rg int").repartition(
-        len(splits)
-    )
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            for path, rg in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                tbl = open_parquet(path).read_row_group(rg, columns=cols)
-                for batch in tbl.to_batches(max_chunksize=8192):
+            for path in b.column(0).to_pylist():
+                for batch in pio.open_parquet(path).iter_batches(
+                    batch_size=8192, columns=cols
+                ):
                     arrays = []
                     for i in range(batch.num_columns):
                         col = batch.column(i)
@@ -148,15 +116,16 @@ def roundtrip_lineitem_ints(spark, sf_dir) -> DataFrame:
                         arrays.append(pa.array(out, type=col.type))
                     yield pa.RecordBatch.from_arrays(arrays, names=cols)
 
-    return sdf.mapInArrow(run, ddl)
+    return pio.files_df(spark, f"{sf_dir}/lineitem.parquet").mapInArrow(
+        run, "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int"
+    )
 
 
 def roundtrip_tokenized_documents(spark, sf_dir) -> DataFrame:
     """The flagship path on real data: tokenize -> full chunk encode ->
     decode -> return (doc_id, n_tok, tok_checksum); oracle = the same
     checksum computed directly in SQL (sum of UTF-8 code units)."""
-    from ..decode import decode_chunks_df
-    from ..encode import encode_tokens_df
+    from ..encode import decode_chunks_df, encode_tokens_df
 
     tokens = tokenize_documents(spark, sf_dir, spread=True)
     decoded = decode_chunks_df(encode_tokens_df(tokens))
@@ -301,13 +270,7 @@ def token_vocab_stats(spark, sf_dir, k: int = 100) -> DataFrame:
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            text = batch.column(0).cast(pa.large_utf8())
-            buf = text.buffers()
-            offsets = np.frombuffer(
-                buf[1], dtype=np.int64, count=len(text) + 1, offset=text.offset * 8
-            )
-            data = buf[2].to_pybytes() if buf[2] is not None else b""
-            blob = data[offsets[0] : offsets[-1]]
+            blob, _ = _utf8_parts(batch.column(0))
             flat = np.frombuffer(blob.decode("utf-8").encode("utf-32-le"), dtype=np.int32)
             uniq, counts = np.unique(flat, return_counts=True)
             yield pa.RecordBatch.from_arrays(

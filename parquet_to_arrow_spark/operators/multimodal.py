@@ -13,8 +13,9 @@ Decode story (two tiers, honestly separated):
   unfiltering across all five RFC 2083 filter types, with a matching
   CRC32'd encoder).
 - Remaining COMPRESSED codecs (jpeg/mp3/h264) require libraries absent
-  from this image: decode_media raises NotImplementedError for those media
-  types — a runtime guard, not fake output.
+  from this image: the container decoders (decode_image, decode_wav,
+  decode_rawv) reject those payloads with ValueError — a runtime guard,
+  not fake output.
 
 The Spark-side plumbing is identical for both tiers: binary columns, typed
 metadata, Arrow-batched mapInPandas with explicit output schemas, metadata
@@ -35,9 +36,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 MEDIA_SCHEMA = (
     "doc_id long, payload binary, media_type string, n_bytes long"
 )
-FEATURE_SCHEMA = "doc_id long, media_type string, n_bytes long, feat array<float>"
-
-_FEAT_DIM = 8
 
 
 def documents_as_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,49 +48,6 @@ def documents_as_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("text/plain;lang="), F.col("lang")).alias("media_type"),
         F.octet_length(F.col("text")).cast("long").alias("n_bytes"),
     )
-
-
-def decode_media(payload: bytes, media_type: str) -> np.ndarray:
-    """STUB: real image/audio decode is unavailable in this container.
-
-    Raises for genuinely binary media; text payloads get a deterministic
-    fake feature vector so the distributed plumbing is exercisable.
-    """
-    if not media_type.startswith("text/"):
-        raise NotImplementedError(
-            "binary media decode requires codec libraries not present in this image"
-        )
-    arr = np.frombuffer(payload, dtype=np.uint8)
-    # deterministic fake "features": byte-histogram moments
-    feat = np.zeros(_FEAT_DIM, dtype=np.float32)
-    if len(arr):
-        feat[0] = len(arr)
-        feat[1] = float(arr.mean())
-        feat[2] = float(arr.min())
-        feat[3] = float(arr.max())
-        feat[4:8] = np.bincount(arr % 4, minlength=4).astype(np.float32)
-    return feat
-
-
-def extract_features(media: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction: the real pipeline shape
-    (mapInPandas, explicit schema, no driver collect)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                decode_media(p, m) for p, m in zip(pdf["payload"], pdf["media_type"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": pdf["n_bytes"],
-                    "feat": [f.tolist() for f in feats],
-                }
-            )
-
-    return media.mapInPandas(run, FEATURE_SCHEMA)
 
 
 def media_meta(spark, sf_dir) -> DataFrame:
@@ -402,7 +357,7 @@ THUMB_SCHEMA = "doc_id long, w int, h int, mean_r double, mean_g double, mean_b 
 
 def decode_image(payload: bytes) -> np.ndarray:
     """Container dispatch on magic bytes: P6 PPM (uncompressed) or PNG
-    (zlib). Other image formats raise in decode_media's stub guard."""
+    (zlib). Other image formats (jpeg...) raise."""
     if payload[:2] == b"P6":
         return decode_ppm(payload)
     if payload[:8] == b"\x89PNG\r\n\x1a\n":
@@ -477,7 +432,7 @@ def media_png_features(spark, sf_dir) -> DataFrame:
 # --- video: real RAWV container + frame sampling (h264 honestly stubbed) ------
 #
 # Compressed video (h264/vp9) needs codec libraries absent from this image,
-# so like jpeg/mp3 those raise NotImplementedError in decode_media. The
+# so like jpeg/mp3 those payloads raise in the container decoder. The
 # SPARK-SIDE PLUMBING a video pipeline needs — binary payload column, typed
 # header, frame-sample stride, Arrow-batched decode, exact-integer pooling —
 # is real and oracle-checked over an uncompressed RAWV container

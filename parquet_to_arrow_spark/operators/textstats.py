@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources.io import spread
+
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -112,12 +114,10 @@ def tfidf_top_terms(spark, sf_dir, k: int = 3) -> DataFrame:
     broadcasts it), one per-doc window. idf = ln((N+1)/(df+1)) + 1 (smooth;
     always positive), score = tf * idf, ties broken by term ascending so the
     ranking is fully deterministic and oracle-checkable."""
-    from .dedup import _spread
-
     docs = _docs(spark, sf_dir)
     n_docs = docs.count()  # driver-side scalar; one cheap metadata-ish job
     words = (
-        _spread(docs)
+        spread(docs)
         .select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("w"))
         .filter(F.length("w") > 0)
     )
@@ -224,9 +224,7 @@ def duplicated_ngrams(spark, sf_dir, k: int = BOILER_K, min_docs: int = BOILER_M
     row per (doc, gram) and the count IS the document frequency — no
     count-distinct state. Boilerplate grams (present in every doc) are
     exactly the heavy keys partial aggregation absorbs map-side."""
-    from .dedup import _spread
-
-    docs = _spread(_docs(spark, sf_dir))
+    docs = spread(_docs(spark, sf_dir))
     g = docs.select(
         "doc_id",
         F.explode(F.array_distinct(_word_kgrams(_words(F.col("text")), k))).alias("gram"),
@@ -248,9 +246,7 @@ def doc_boilerplate_frac(
     Per-doc totals come straight off the scan (size of the distinct-gram
     array, no shuffle); only the (gram -> doc) hit-join shuffles, keyed the
     same way as the census so the two aggregations pipeline."""
-    from .dedup import _spread
-
-    docs = _spread(_docs(spark, sf_dir))
+    docs = spread(_docs(spark, sf_dir))
     with_grams = docs.select(
         "doc_id", F.array_distinct(_word_kgrams(_words(F.col("text")), k)).alias("__g")
     )
@@ -397,9 +393,7 @@ def unigram_logprob(spark, sf_dir) -> DataFrame:
     aggregation, one join back on the word dimension (Spark broadcasts a
     small vocab; a 10^9-type vocabulary shuffles — both correct), one
     per-doc aggregation. avg_logprob = sum(ln(count(w)/total))/n_words."""
-    from .dedup import _spread
-
-    docs = _spread(_docs(spark, sf_dir))
+    docs = spread(_docs(spark, sf_dir))
     words = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("w")
     ).filter(F.length("w") > 0)
@@ -431,9 +425,7 @@ def bigram_logprob(spark, sf_dir) -> DataFrame:
     100 TB argument applies (everything after the explode is
     bigram-vocabulary-sized). Docs with fewer than two words have no
     bigrams and are excluded (no defined score)."""
-    from .dedup import _spread
-
-    docs = _spread(_docs(spark, sf_dir))
+    docs = spread(_docs(spark, sf_dir))
     ws = F.filter(F.split(F.col("text"), " "), lambda w: F.length(w) > 0)
     d = docs.select("doc_id", ws.alias("ws")).filter(F.size("ws") >= 2)
     bg = d.select(
@@ -467,9 +459,7 @@ def source_kl_drift(spark, sf_dir) -> DataFrame:
     word), counts per word, two scalar-ish joins, then a per-source sum.
     KL = sum_w p_s(w) * ln(p_s(w) / p(w)) — finite by construction since
     every word of a source is in the corpus."""
-    from .dedup import _spread
-
-    docs = _spread(_docs(spark, sf_dir))
+    docs = spread(_docs(spark, sf_dir))
     words = docs.select(
         "source", F.explode(F.split(F.col("text"), " ")).alias("w")
     ).filter(F.length("w") > 0)
@@ -576,9 +566,7 @@ def vocab_coverage(spark, sf_dir) -> DataFrame:
     deterministic and oracle-exact."""
     from pyspark.sql import Window
 
-    from .dedup import _spread
-
-    docs = _spread(_docs(spark, sf_dir))
+    docs = spread(_docs(spark, sf_dir))
     words = docs.select(F.explode(F.split(F.col("text"), " ")).alias("w")).filter(
         F.length("w") > 0
     )
@@ -620,9 +608,7 @@ def bpe_pair_stats(spark, sf_dir, top_n: int = 50) -> DataFrame:
     are exactly what map-side combine absorbs), and the top-N is a
     TakeOrderedAndProject with the pair string as the deterministic
     tiebreak — never a global sort."""
-    from .dedup import _spread
-
-    docs = _spread(_docs(spark, sf_dir))
+    docs = spread(_docs(spark, sf_dir))
     g = docs.select(
         F.explode(_word_kgrams(_words(F.col("text")), 2)).alias("pair")
     )

@@ -19,7 +19,7 @@ import io
 import json
 import struct
 import zlib
-from typing import Any, Iterator
+from typing import Any
 
 MAGIC = b"Obj\x01"
 
@@ -281,9 +281,3 @@ def read_container(data: bytes) -> tuple[dict[str, bytes], list[dict]]:
         if buf.read(16) != sync:
             raise ValueError("sync marker mismatch")
     return meta, records
-
-
-def iter_container_file(path: str) -> Iterator[dict]:
-    with open(path, "rb") as f:
-        _, records = read_container(f.read())
-    yield from records

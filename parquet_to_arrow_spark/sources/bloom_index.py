@@ -16,9 +16,10 @@ keyed by snapshot + data file, never load-bearing for correctness):
   ``path, m_bits, k, bits``), published atomically via tmp+hard-link
   like every other metadata artifact. One row per data file; blobs are
   ~10 bits/row at the default 1% fpp (125 KB for a 100k-row file).
-- Build is one Spark task per data file (the engine's file-split scan
-  idiom, sources/io.py): the worker reads ONLY the indexed column via
-  pyarrow and emits the packed filter — no shuffle, no driver data pass.
+- Build runs over the engine's file-split scan (sources/io.py files_df,
+  size-balanced file groups per task): the worker reads ONLY the indexed
+  column via pyarrow and emits one packed filter per file — no shuffle,
+  no driver data pass.
 - Lookup is conservative by construction: a data file with no recorded
   filter (appended after the index was built, or indexed under another
   column) is always a candidate. A stale index can therefore only cost
@@ -46,6 +47,7 @@ import numpy as np
 
 from ..session import empty_df
 from . import iceberg_meta
+from .io import files_df
 
 
 def _hash_pair(value) -> tuple[int, int]:
@@ -154,7 +156,8 @@ def _refresh_index(
     if meta is None:
         raise FileNotFoundError(f"no iceberg table at {table_or_path}")
     sid = meta.get("current-snapshot-id")
-    live = sorted(f.path for f in iceberg_meta.snapshot_files(table_or_path))
+    sizes = {f.path: f.file_size for f in iceberg_meta.snapshot_files(table_or_path)}
+    live = sorted(sizes)
     if fpp is None:
         # the quantity that matters is EXPECTED FALSE-POSITIVE FILES per
         # lookup (n_files * fpp), so the default tightens with file count:
@@ -170,18 +173,19 @@ def _refresh_index(
     ]
     if not rebuild and set(idx) <= live_set:
         return _index_path(table_or_path, column), 0
-    built = _build_blooms(spark, rebuild, column, fpp)
+    built = _build_blooms(spark, {p: sizes[p] for p in rebuild}, column, fpp)
     keep = {p: b for p, b in idx.items() if p in live_set}
     keep.update(built)
     return _write_index(table_or_path, column, keep, sid), len(rebuild)
 
 
-def _build_blooms(spark, paths: list[str], column: str, fpp: float) -> dict:
-    """One Spark task per file -> {path: Bloom} (the build kernel shared
-    by full and incremental builds)."""
+def _build_blooms(spark, sizes: dict[str, int], column: str, fpp: float) -> dict:
+    """{path: Bloom} for the files of ``sizes`` (path -> bytes), built in
+    the workers over the engine's file-split scan (``sources.io.files_df``);
+    the build kernel shared by full and incremental builds."""
     import pandas as pd
 
-    if not paths:
+    if not sizes:
         return {}
 
     def gen(pdfs):
@@ -201,8 +205,7 @@ def _build_blooms(spark, paths: list[str], column: str, fpp: float) -> dict:
                 )
 
     rows = (
-        spark.createDataFrame([(p,) for p in paths], "path string")
-        .repartition(max(1, len(paths)))
+        files_df(spark, None, files=list(sizes), sizes=sizes)
         .mapInPandas(gen, "path string, m_bits long, k int, bits string")
         .collect()
     )

@@ -130,6 +130,7 @@ def files_df(
     Pass an explicit ``files``+``sizes`` pair (e.g. from an Iceberg
     manifest walk, which already knows both) to skip the filesystem
     listing entirely."""
+    import heapq
     import math
 
     if files is None:
@@ -142,11 +143,12 @@ def files_df(
     by_bytes = math.ceil(sum(sizes.values()) / max(target_bytes, 1))
     n_tasks = min(len(files), par * math.ceil(max(par, by_bytes) / par))
     groups: list[list[str]] = [[] for _ in range(n_tasks)]
-    load = [0] * n_tasks
+    # (load, bin) heap: least-loaded bin first, lowest index on ties
+    heap = [(0, i) for i in range(n_tasks)]
     for f in sorted(files, key=lambda f: (-sizes[f], f)):
-        i = load.index(min(load))
+        load, i = heap[0]
         groups[i].append(f)
-        load[i] += sizes[f]
+        heapq.heapreplace(heap, (load + sizes[f], i))
     # a path holds no NUL: "\0" joins a group's paths and "\0\0" joins the
     # groups (paths are never empty, so a run of 2k NULs is k group breaks);
     # the sentinel group keeps trailing empty groups, which split() drops
@@ -160,6 +162,23 @@ def files_df(
     return DataFrame(jds.toDF(), spark).select(
         F.explode(F.array_remove(F.split("value", "\0"), "")).alias("path")
     )
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Repartition up to the session's parallelism when a Spark scan
+    produced fewer splits than cores; a no-op at scale, where inputs
+    already have >= cores splits. Parquet's openCostInBytes floor packs a
+    small single-file table into 1-7 splits, which otherwise runs every
+    pre-shuffle stage on a few tasks: the per-batch codec work (measured
+    sf1.0: the documents FSST round-trip ran on 2 of 32 cores) or the
+    shingle/word explode. The shuffled bytes are the small scan itself.
+    Only for callers whose OUTPUT is partitioning-independent (identity
+    round-trips, aggregates); codec_metrics* keep the scan's natural
+    chunking."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
 
 
 def encode_parquet_dir(

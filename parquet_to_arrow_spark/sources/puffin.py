@@ -305,23 +305,6 @@ def write_puffin(
     return metas
 
 
-def read_puffin_footer(path: str) -> dict:
-    """Read a Puffin file's footer payload ({"blobs": [...], "properties":
-    {...}}), verifying all three magics."""
-    with open(path, "rb") as f:
-        data = f.read()
-    if data[:4] != MAGIC or data[-4:] != MAGIC:
-        raise ValueError(f"{path}: not a Puffin file (bad magic)")
-    (flags,) = struct.unpack_from("<I", data, len(data) - 8)
-    if flags & 1:
-        raise NotImplementedError("compressed Puffin footers not supported")
-    (footer_len,) = struct.unpack_from("<I", data, len(data) - 12)
-    footer_start = len(data) - 12 - footer_len
-    if data[footer_start - 4 : footer_start] != MAGIC:
-        raise ValueError(f"{path}: bad footer magic")
-    return json.loads(data[footer_start : footer_start + footer_len])
-
-
 def read_blob(path: str, offset: int, length: int) -> bytes:
     """Read one blob's payload bytes by footer-recorded offset/length."""
     with open(path, "rb") as f:

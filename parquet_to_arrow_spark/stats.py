@@ -77,14 +77,3 @@ def int_stats(values: np.ndarray, vmin: int | None = None, vmax: int | None = No
         stats["delta_width"] = 0
     stats["byte_sample"] = values[: _BYTE_SAMPLE // values.dtype.itemsize].tobytes()
     return stats
-
-
-def bytes_stats(blob: bytes, n_values: int) -> dict:
-    """Stats for a UTF-8 blob (string column payload)."""
-    return {
-        "n": len(blob),
-        "dtype": "uint8",
-        "itemsize": 1,
-        "n_values": n_values,
-        "byte_sample": blob[:_BYTE_SAMPLE],
-    }

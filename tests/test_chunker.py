@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from parquet_to_arrow_spark.chunker import encode_skew_aware, plan_buckets, with_salted_pkey
-from parquet_to_arrow_spark.decode import decode_chunks_df
+from parquet_to_arrow_spark.encode import decode_chunks_df
 from parquet_to_arrow_spark.encode import decode_chunk_row, encode_tokens_df
 from parquet_to_arrow_spark.sources.synth import synth_tokens_df
 from parquet_to_arrow_spark.verify import assert_roundtrip

@@ -20,7 +20,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), os.pardir, "scripts")
 
 import encode_job  # noqa: E402
 
-from parquet_to_arrow_spark.decode import decode_chunks_df
+from parquet_to_arrow_spark.encode import decode_chunks_df
 from parquet_to_arrow_spark.sources.synth import synth_tokens_df
 from parquet_to_arrow_spark.verify import diff_report
 

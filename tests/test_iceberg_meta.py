@@ -687,7 +687,7 @@ class TestSnapshotEncode:
         """encode_iceberg_snapshot(table, id) encodes EXACTLY snapshot id's
         files: rows appended afterwards are invisible, and the decoded
         output is bit-identical to the snapshot's content."""
-        from parquet_to_arrow_spark.decode import decode_chunks_df
+        from parquet_to_arrow_spark.encode import decode_chunks_df
         from parquet_to_arrow_spark.sources import iceberg as icebergmod
         from parquet_to_arrow_spark.sources.io import encode_iceberg_snapshot
         from parquet_to_arrow_spark.sources.synth import synth_tokens_df
@@ -1864,7 +1864,7 @@ class TestDerivedPartitionEncode:
         table column physically in the data files — the Arrow file-split
         fast path must accept such tables (only IDENTITY strips columns)
         and the decode must be bit-identical."""
-        from parquet_to_arrow_spark.decode import decode_chunks_df
+        from parquet_to_arrow_spark.encode import decode_chunks_df
         from parquet_to_arrow_spark.sources.iceberg import with_bucket_column
         from parquet_to_arrow_spark.sources.io import encode_iceberg_snapshot
         from parquet_to_arrow_spark.sources.synth import synth_tokens_df

@@ -9,8 +9,9 @@ import numpy as np
 import pytest
 
 from parquet_to_arrow_spark.operators.multimodal import (
-    decode_media,
+    decode_image,
     decode_ppm,
+    decode_rawv,
     decode_wav,
     ppm_bytes,
     wav_bytes,
@@ -43,8 +44,14 @@ def test_ppm_roundtrip_and_mean_pool():
 
 
 def test_compressed_media_still_guarded():
-    with pytest.raises(NotImplementedError):
-        decode_media(b"\xff\xd8\xff", "image/jpeg")
+    # jpeg, mp3 and h264 payloads are rejected by the container decoders
+    for decode, payload in (
+        (decode_image, b"\xff\xd8\xff\xe0" + bytes(60)),
+        (decode_wav, b"ID3\x04" + bytes(60)),
+        (decode_rawv, b"\x00\x00\x00\x01\x67" + bytes(60)),
+    ):
+        with pytest.raises(ValueError):
+            decode(payload)
 
 
 def test_audio_features_distributed(spark):

@@ -67,6 +67,7 @@ def test_file_split_plans_start_no_python_worker(spark, tmp_path):
     (``Scan ExistingRDD``) forks Python workers in every job just to
     produce path strings, before the scan's own mapInArrow starts."""
     from parquet_to_arrow_spark import checkpoint
+    from parquet_to_arrow_spark.operators.engine_queries import roundtrip_lineitem_ints
     from parquet_to_arrow_spark.sources.io import (
         encode_parquet_dir,
         token_hashes_from_parquet,
@@ -75,12 +76,16 @@ def test_file_split_plans_start_no_python_worker(spark, tmp_path):
 
     path = str(tmp_path / "tok")
     synth_tokens_df(spark, 200, n_partitions=2).write.parquet(path)
+    lineitem = roundtrip_lineitem_ints(spark, SF)
     for df in (
         encode_parquet_dir(spark, path),
         token_hashes_from_parquet(spark, path),
         checkpoint.read_done(spark, str(tmp_path / "never_written")),
+        lineitem,
     ):
         assert "ExistingRDD" not in plan_of(df), plan_of(df)
+    # the lineitem round-trip scans file splits: no round-robin Exchange
+    assert "Exchange" not in plan_of(lineitem), plan_of(lineitem)
 
 
 def test_files_df_lays_out_one_greedy_group_per_partition(spark):
@@ -93,7 +98,15 @@ def test_files_df_lays_out_one_greedy_group_per_partition(spark):
     want = [[f] for f in files[:6]] + [[files[6], files[9]], [files[7], files[8]]]
     # zero-byte files leave the second bin empty; it keeps its partition
     zero = ["/data/a.parquet", "/data/b.parquet"]
-    for fs, sz, groups in ((files, sizes, want), (zero, dict.fromkeys(zero, 0), [zero, []])):
+    # equal sizes: ties go to the lowest-index bin, so bins 0-3 get 3 files
+    # and bins 4-7 get 2
+    eq = [f"/data/e{i:02d}.parquet" for i in range(20)]
+    eq_want = [eq[i::8] for i in range(8)]
+    for fs, sz, groups in (
+        (files, sizes, want),
+        (zero, dict.fromkeys(zero, 0), [zero, []]),
+        (eq, dict.fromkeys(eq, 1), eq_want),
+    ):
         df = files_df(spark, None, files=fs, sizes=sz)
         assert df.columns == ["path"]
         assert df.rdd.getNumPartitions() == len(groups)
@@ -101,7 +114,7 @@ def test_files_df_lays_out_one_greedy_group_per_partition(spark):
 
 
 def test_decode_path_has_no_shuffle(spark, tmp_path):
-    from parquet_to_arrow_spark.decode import decode_chunks_df
+    from parquet_to_arrow_spark.encode import decode_chunks_df
     from parquet_to_arrow_spark.encode import encode_tokens_df
     from parquet_to_arrow_spark.sources.synth import synth_tokens_df
 
@@ -175,7 +188,7 @@ def test_duplicated_ngrams_aggregates_partial(spark):
     assert plan.count("HashAggregate") >= 2
     # operator headers "(n) Exchange" count each exchange once (the tree
     # section repeats them); allowed: the gram shuffle + the small-input
-    # _spread repartition
+    # spread repartition
     n_exchange = len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
     assert n_exchange <= 2, plan
 

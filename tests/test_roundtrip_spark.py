@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from parquet_to_arrow_spark import checkpoint, manifest
-from parquet_to_arrow_spark.decode import decode_chunks_df
+from parquet_to_arrow_spark.encode import decode_chunks_df
 from parquet_to_arrow_spark.encode import encode_tokens_df
 from parquet_to_arrow_spark.sources.synth import synth_tokens_df
 from parquet_to_arrow_spark.verify import assert_roundtrip, diff_report

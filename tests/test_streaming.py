@@ -3,7 +3,7 @@ picked up; files already processed are not re-encoded."""
 
 from __future__ import annotations
 
-from parquet_to_arrow_spark.decode import decode_chunks_df
+from parquet_to_arrow_spark.encode import decode_chunks_df
 from parquet_to_arrow_spark.sources.synth import synth_tokens_df
 from parquet_to_arrow_spark.streaming.incremental import run_incremental_encode
 from parquet_to_arrow_spark.verify import assert_roundtrip
@@ -149,7 +149,7 @@ def test_incremental_encode_to_iceberg_exactly_once(spark, tmp_path):
     snapshot; a FRESH stream checkpoint replays old epoch ids and the
     replace_on='batch' commits overwrite instead of double-appending — the
     table always equals the landing directory exactly."""
-    from parquet_to_arrow_spark.decode import decode_chunks_df
+    from parquet_to_arrow_spark.encode import decode_chunks_df
     from parquet_to_arrow_spark.sources import iceberg_meta as ice
     from parquet_to_arrow_spark.sources.synth import synth_tokens_df
     from parquet_to_arrow_spark.streaming.incremental import incremental_encode_to_iceberg
