@@ -89,7 +89,7 @@ def compact_small_chunks(
 
     from pyspark import TaskContext
 
-    from .encode import ENCODED_SCHEMA_DDL, decode_chunk_row, encode_batch
+    from .encode import ENCODED_SCHEMA_DDL, TOKENS_COLUMNS, decode_chunks, encode_batch
 
     big = encoded.filter(F.col("n_rows") >= min_rows)
     small = encoded.filter(F.col("n_rows") < min_rows)
@@ -114,17 +114,11 @@ def compact_small_chunks(
             seq += 1
             return out
 
-        for batch in batches:
-            metas = batch.column(batch.schema.get_field_index("meta"))
-            payloads = batch.column(batch.schema.get_field_index("payload"))
-            n_rows = batch.column(batch.schema.get_field_index("n_rows"))
-            for i in range(batch.num_rows):
-                buffer.append(
-                    decode_chunk_row(metas[i].as_py(), payloads[i].as_py(), n_rows[i].as_py())
-                )
-                buffered += n_rows[i].as_py()
-                if buffered >= target_rows:
-                    yield flush()
+        for decoded in decode_chunks(batches, TOKENS_COLUMNS, False):
+            buffer.append(decoded)
+            buffered += decoded.num_rows
+            if buffered >= target_rows:
+                yield flush()
         out = flush()
         if out is not None:
             yield out

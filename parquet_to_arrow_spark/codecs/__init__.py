@@ -9,6 +9,7 @@ and ``estimate(stats) -> bytes``.
 
 from . import bitpack, delta, dictionary, for_, fsst, plain, rle
 
+# order = the selector's deterministic tie-break (cheapest decode first)
 ALL = {m.NAME: m for m in (plain, bitpack, for_, delta, rle, dictionary, fsst)}
 
 __all__ = ["plain", "bitpack", "for_", "delta", "rle", "dictionary", "fsst", "ALL"]

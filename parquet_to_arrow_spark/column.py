@@ -22,9 +22,9 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from .codecs import fsst
+from .codecs import ALL, fsst
 from .codecs.base import bit_width, pack_bits, packed_size, unpack_bits
-from .selector import INT_CODECS, rank_int_codecs
+from .selector import rank_int_codecs
 from .stats import int_stats
 
 # --- integer arrays ---------------------------------------------------------
@@ -36,10 +36,10 @@ def encode_int_array(values: np.ndarray, vmin: int | None = None, vmax: int | No
     plain_bytes = stats["n"] * stats["itemsize"]
     ranked = rank_int_codecs(stats)
     best = ranked[0][1]
-    payload, meta = INT_CODECS[best].encode(values)
+    payload, meta = ALL[best].encode(values)
     if best != "plain" and len(payload) >= plain_bytes and stats["n"] > 0:
         best = "plain"
-        payload, meta = INT_CODECS["plain"].encode(values)
+        payload, meta = ALL["plain"].encode(values)
     return {
         "codec": best,
         "meta": meta,
@@ -50,7 +50,7 @@ def encode_int_array(values: np.ndarray, vmin: int | None = None, vmax: int | No
 
 
 def decode_int_array(codec: str, meta: dict, payload: bytes, n: int) -> np.ndarray:
-    return INT_CODECS[codec].decode(payload, meta, n)
+    return ALL[codec].decode(payload, meta, n)
 
 
 # --- string arrays ----------------------------------------------------------

@@ -25,11 +25,11 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from pyspark import TaskContext
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
+from .checkpoint import with_pkey
 from .column import (
     _pack_parts,
     _unpack_parts,
@@ -49,9 +49,13 @@ ENCODED_SCHEMA_DDL = (
 
 TOKENS_SCHEMA_DDL = "doc_id string, tokens array<int>, n_tok int, source string"
 
+TOKENS_COLUMNS = ("doc_id", "tokens", "n_tok", "source")
+
 
 def _tokens_parts(batch: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray]:
-    """(flat int32 token values, int32 per-row lengths) from a list column."""
+    """(flat int32 token values, int64 row offsets into them) from a list
+    column. The offsets are the list array's own offsets buffer, shifted to
+    start at 0 for a sliced batch; row lengths are their ``np.diff``."""
     col = batch.column(batch.schema.get_field_index("tokens"))
     if isinstance(col, pa.ChunkedArray):  # pragma: no cover
         col = col.combine_chunks()
@@ -65,14 +69,17 @@ def _tokens_parts(batch: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray]:
     if flat.type != pa.int32():
         flat = flat.cast(pa.int32())
     values = flat.to_numpy(zero_copy_only=False)
-    lengths = pc.list_value_length(col).to_numpy(zero_copy_only=False)
-    return values.astype(np.int32, copy=False), lengths.astype(np.int32, copy=False)
+    offsets = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    offsets -= offsets[0]
+    return values.astype(np.int32, copy=False), offsets
 
 
 _MIN_GROUP_VALUES = 4096
 
 
-def _cluster_order(values: np.ndarray, lengths: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+def _cluster_order(
+    values: np.ndarray, offsets: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Stable row order clustering rows by token-content signature.
 
     Returns (row_order, group_label_per_row_in_new_order, rmin, rmax) —
@@ -88,9 +95,8 @@ def _cluster_order(values: np.ndarray, lengths: np.ndarray) -> tuple[np.ndarray,
     reordered consistently. Tiny groups merge into a misc group to bound
     per-part overhead.
     """
+    lengths = np.diff(offsets)
     n = len(lengths)
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offsets[1:])
     rmin = np.zeros(n, dtype=np.int64)
     rmax = np.zeros(n, dtype=np.int64)
     nonempty = lengths > 0
@@ -112,7 +118,7 @@ def _cluster_order(values: np.ndarray, lengths: np.ndarray) -> tuple[np.ndarray,
     # merge groups too small to amortize per-part overhead
     uniq, inv = np.unique(label, return_inverse=True)
     group_values = np.zeros(len(uniq), dtype=np.int64)
-    np.add.at(group_values, inv, lengths.astype(np.int64))
+    np.add.at(group_values, inv, lengths)
     misc = group_values < _MIN_GROUP_VALUES
     relabeled = np.where(misc[inv], np.int64(1 << 30), label)
     order = np.argsort(relabeled, kind="stable")
@@ -121,8 +127,9 @@ def _cluster_order(values: np.ndarray, lengths: np.ndarray) -> tuple[np.ndarray,
 
 def encode_batch(batch: pa.RecordBatch, chunk_id: str, pkey: int = -1) -> pa.RecordBatch:
     """Encode one Arrow batch of tokens rows into a single encoded-chunk row."""
-    values, lengths = _tokens_parts(batch)
-    order, labels, rmin, rmax = _cluster_order(values, lengths)
+    values, offsets = _tokens_parts(batch)
+    lengths = np.diff(offsets).astype(np.int32)
+    order, labels, rmin, rmax = _cluster_order(values, offsets)
     doc_id = batch.column(batch.schema.get_field_index("doc_id"))
     source = batch.column(batch.schema.get_field_index("source"))
     if isinstance(doc_id, pa.ChunkedArray):  # pragma: no cover
@@ -133,8 +140,6 @@ def encode_batch(batch: pa.RecordBatch, chunk_id: str, pkey: int = -1) -> pa.Rec
         # delta repeated over row lengths — in int32 when indices fit (they
         # do for any sane chunk; int32 halves the index traffic, measured
         # 24.9 -> 6.9 ms on a 7.1M-value chunk, ~30% of encode_batch)
-        old_offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
-        np.cumsum(lengths, out=old_offsets[1:])
         new_lengths = lengths[order]
         new_offsets = np.zeros(len(new_lengths) + 1, dtype=np.int64)
         np.cumsum(new_lengths, out=new_offsets[1:])
@@ -143,11 +148,11 @@ def encode_batch(batch: pa.RecordBatch, chunk_id: str, pkey: int = -1) -> pa.Rec
             idt = np.int32 if total < (1 << 31) else np.int64
             gather = np.arange(total, dtype=idt)
             gather += np.repeat(
-                (old_offsets[:-1][order] - new_offsets[:-1]).astype(idt),
+                (offsets[:-1][order] - new_offsets[:-1]).astype(idt),
                 new_lengths,
             )
             values = values[gather]
-        lengths = new_lengths
+        lengths, offsets = new_lengths, new_offsets
         order_pa = pa.array(order)
         doc_id = doc_id.take(order_pa)
         source = source.take(order_pa)
@@ -159,8 +164,6 @@ def encode_batch(batch: pa.RecordBatch, chunk_id: str, pkey: int = -1) -> pa.Rec
     }
     # one encoded part per content group of the tokens stream; group extrema
     # come free from the clustering pass's per-row reduceat (no extra scan)
-    offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offsets[1:])
     rmin_o, rmax_o = rmin[order], rmax[order]
     nonempty_o = lengths > 0
     row_bounds = [0]
@@ -225,7 +228,7 @@ def decode_chunk_row(
     payload: bytes,
     n_rows: int,
     expected_checksum: int | None = None,
-    columns: tuple[str, ...] = ("doc_id", "tokens", "n_tok", "source"),
+    columns: tuple[str, ...] = TOKENS_COLUMNS,
 ) -> pa.RecordBatch:
     """Inverse of :func:`encode_batch`: one encoded row -> a tokens batch.
 
@@ -271,6 +274,30 @@ def decode_chunk_row(
     return pa.RecordBatch.from_arrays([out[c] for c in names], names=names)
 
 
+def decode_chunks(
+    batches: Iterator[pa.RecordBatch], columns: tuple[str, ...], verify_checksum: bool
+) -> Iterator[pa.RecordBatch]:
+    """Worker side of every chunk decode: one :func:`decode_chunk_row` batch
+    per encoded row. Payloads are copied out one row at a time, so a task
+    never holds a second copy of a whole batch of payloads. With
+    ``verify_checksum``, each chunk is checked against the frame's
+    ``checksum`` column when it has one."""
+    for batch in batches:
+        metas = batch.column(batch.schema.get_field_index("meta"))
+        payloads = batch.column(batch.schema.get_field_index("payload"))
+        n_rows = batch.column(batch.schema.get_field_index("n_rows"))
+        ck = batch.schema.get_field_index("checksum")
+        checks = batch.column(ck) if verify_checksum and ck >= 0 else None
+        for i in range(batch.num_rows):
+            yield decode_chunk_row(
+                metas[i].as_py(),
+                payloads[i].as_py(),
+                n_rows[i].as_py(),
+                checks[i].as_py() if checks is not None else None,
+                columns,
+            )
+
+
 # --- DataFrame-level pipelines ----------------------------------------------
 
 
@@ -282,9 +309,13 @@ def encode_tokens_df(
 ) -> DataFrame:
     """Encode a tokens DataFrame into encoded chunks.
 
-    fast path (default): zero-shuffle mapInArrow, chunk = Arrow batch.
+    fast path (default): zero-shuffle mapInArrow; the chunk is the Arrow
+    batch the session hands the worker (``spark.sql.execution.arrow.
+    maxRecordsPerBatch`` rows at most).
     keyed path: deterministic bucket per row -> one task group per bucket,
     resumable via the checkpoint table (checkpoint.py).
+
+    ``n_buckets`` and ``chunk_rows`` apply only when ``by_key=True``.
     """
     if not by_key:
 
@@ -297,12 +328,8 @@ def encode_tokens_df(
 
         return df.mapInArrow(encode_partition, ENCODED_SCHEMA_DDL)
 
-    if "pkey" in df.columns:  # caller-planned buckets (e.g. chunker salting)
-        keyed = df
-    else:
-        keyed = df.withColumn(
-            "pkey", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_buckets)).cast("int")
-        )
+    # caller-planned buckets (e.g. chunker salting) are kept as they are
+    keyed = df if "pkey" in df.columns else with_pkey(df, n_buckets)
 
     def encode_bucket(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # Rows arrive sorted by pkey within the partition; an Arrow batch may
@@ -335,28 +362,11 @@ _TOKENS_FIELD_DDL = {
 }
 
 
-def decode_chunks_df(
-    encoded: DataFrame,
-    verify_checksum: bool = True,
-    columns: tuple[str, ...] = ("doc_id", "tokens", "n_tok", "source"),
-) -> DataFrame:
+def decode_chunks_df(encoded: DataFrame, columns: tuple[str, ...] = TOKENS_COLUMNS) -> DataFrame:
     """Decode encoded chunks back to the tokens schema (zero shuffles),
-    integrity-checking each chunk against its stored checksum by default.
-    ``columns`` prunes the decode (projection pushdown into the chunk
-    format — unrequested column parts are never decoded)."""
-
-    def decode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            metas = batch.column(batch.schema.get_field_index("meta"))
-            payloads = batch.column(batch.schema.get_field_index("payload"))
-            n_rows = batch.column(batch.schema.get_field_index("n_rows"))
-            has_ck = batch.schema.get_field_index("checksum") >= 0
-            checks = batch.column(batch.schema.get_field_index("checksum")) if has_ck else None
-            for i in range(batch.num_rows):
-                expected = checks[i].as_py() if (verify_checksum and checks is not None) else None
-                yield decode_chunk_row(
-                    metas[i].as_py(), payloads[i].as_py(), n_rows[i].as_py(), expected, columns
-                )
-
+    integrity-checking each chunk against its stored checksum when the
+    frame has a ``checksum`` column. ``columns`` prunes the decode
+    (projection pushdown into the chunk format — unrequested column parts
+    are never decoded)."""
     ddl = ", ".join(_TOKENS_FIELD_DDL[c] for c in columns)
-    return encoded.mapInArrow(decode_partition, ddl)
+    return encoded.mapInArrow(lambda batches: decode_chunks(batches, columns, True), ddl)

@@ -179,7 +179,7 @@ def minhash_lsh_pairs(
     and measured, instead of an unbounded join. The cap also bounds the
     verify pass's per-group memory (band_cap^2/2 pairs).
     """
-    sig = minhash_signatures(spark, sf_dir, docs=docs).cache()
+    sig = minhash_signatures(spark, sf_dir, docs=docs)
     rows_per_band = N_MINHASH // N_BANDS
     # The signature crosses the band shuffle AND the Python boundary as ONE
     # 512-byte binary blob, not array<long>: Spark's row<->Arrow bridge

@@ -89,32 +89,25 @@ def roundtrip_lineitem_ints(spark, sf_dir) -> DataFrame:
     """Four int64/int32 lineitem columns through the int codec stack
     (selector chooses per chunk) and back; oracle = identity SELECT.
 
-    Scan shape: the engine's file-split scan (``sources.io.files_df``).
-    Tasks receive lineitem file paths and stream each file in 8192-row
-    batches with pyarrow INSIDE the workers, so the input crosses the
-    JVM->Python boundary zero times and only the decoded result crosses
-    back. The plan has no Exchange and no Python-built path frame, and the
+    Scan shape: the engine's file-split scan (``sources.io.files_df`` +
+    ``scan_files``). Tasks receive lineitem file paths and stream each file
+    in 8192-row batches with pyarrow INSIDE the workers, so the input
+    crosses the JVM->Python boundary zero times and only the decoded result
+    crosses back. The plan has no Exchange and no Python-built path frame, and the
     driver reads no footer. A Spark scan + mapInArrow pays the double Arrow
     conversion, which dominated the query (identity mapInArrow alone:
     1.75 s vs 0.3 s scan noop at sf1.0)."""
     cols = ["l_orderkey", "l_partkey", "l_suppkey", "l_linenumber"]
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            for path in b.column(0).to_pylist():
-                for batch in pio.open_parquet(path).iter_batches(
-                    batch_size=8192, columns=cols
-                ):
-                    arrays = []
-                    for i in range(batch.num_columns):
-                        col = batch.column(i)
-                        vals = col.to_numpy(zero_copy_only=False)
-                        enc = encode_int_array(vals)
-                        out = decode_int_array(
-                            enc["codec"], enc["meta"], enc["payload"], len(vals)
-                        )
-                        arrays.append(pa.array(out, type=col.type))
-                    yield pa.RecordBatch.from_arrays(arrays, names=cols)
+        for _, _, batch in pio.scan_files(batches, cols, batch_size=8192):
+            arrays = []
+            for col in batch.columns:
+                vals = col.to_numpy(zero_copy_only=False)
+                enc = encode_int_array(vals)
+                out = decode_int_array(enc["codec"], enc["meta"], enc["payload"], len(vals))
+                arrays.append(pa.array(out, type=col.type))
+            yield pa.RecordBatch.from_arrays(arrays, names=cols)
 
     return pio.files_df(spark, f"{sf_dir}/lineitem.parquet").mapInArrow(
         run, "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int"

@@ -11,28 +11,7 @@ sizes, not just heuristics).
 
 from __future__ import annotations
 
-from .codecs import bitpack, delta, dictionary, for_, fsst, plain, rle
-
-INT_CODECS = {
-    plain.NAME: plain,
-    bitpack.NAME: bitpack,
-    for_.NAME: for_,
-    delta.NAME: delta,
-    rle.NAME: rle,
-    dictionary.NAME: dictionary,
-    fsst.NAME: fsst,
-}
-
-# Deterministic tie-break order (cheapest decode first).
-_PRIORITY = [
-    plain.NAME,
-    bitpack.NAME,
-    for_.NAME,
-    delta.NAME,
-    rle.NAME,
-    dictionary.NAME,
-    fsst.NAME,
-]
+from .codecs import ALL, fsst
 
 
 def rank_int_codecs(stats: dict) -> list[tuple[int, str]]:
@@ -44,15 +23,14 @@ def rank_int_codecs(stats: dict) -> list[tuple[int, str]]:
     data dict/bitpack/FoR almost always win and FSST never gets probed.
     """
     ranked = []
-    for name in _PRIORITY:
-        if name == fsst.NAME:
-            continue
-        est = INT_CODECS[name].estimate(stats)
-        ranked.append((est, name))
+    for name, codec in ALL.items():
+        if name != fsst.NAME:
+            ranked.append((codec.estimate(stats), name))
     plain_size = stats["n"] * stats["itemsize"]
     if stats["n"] > 0 and min(e for e, _ in ranked) > 0.55 * plain_size:
-        ranked.append((INT_CODECS[fsst.NAME].estimate(stats), fsst.NAME))
-    ranked.sort(key=lambda t: (t[0], _PRIORITY.index(t[1])))
+        ranked.append((fsst.estimate(stats), fsst.NAME))
+    # stable sort: ties keep the registry's order (cheapest decode first)
+    ranked.sort(key=lambda t: t[0])
     return ranked
 
 

@@ -24,7 +24,13 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..encode import ENCODED_SCHEMA_DDL, encode_batch
+from ..encode import (
+    ENCODED_SCHEMA_DDL,
+    TOKENS_COLUMNS,
+    _tokens_parts,
+    decode_chunks,
+    encode_batch,
+)
 from ..session import DEFAULT_CHUNK_ROWS, empty_df
 from ..verify import multiset_diff
 
@@ -102,7 +108,6 @@ TARGET_TASK_BYTES = 256 << 20
 def files_df(
     spark: SparkSession,
     path: str | None,
-    target_bytes: int = TARGET_TASK_BYTES,
     files: list[str] | None = None,
     sizes: dict[str, int] | None = None,
 ) -> DataFrame:
@@ -113,9 +118,10 @@ def files_df(
     small file wastes the wall clock on a many-file input — the same reason
     Spark's own scans pack small files up to maxPartitionBytes. Groups are
     built greedily largest-file-first into min(n_files, max(parallelism,
-    total/target)) bins (rounded up to a multiple of the parallelism so
-    waves stay balanced), then laid out one group per partition — no
-    shuffle, no hash skew, ``getNumPartitions()`` equals the bin count.
+    total/TARGET_TASK_BYTES)) bins (rounded up to a multiple of the
+    parallelism so waves stay balanced), then laid out one group per
+    partition — no shuffle, no hash skew, ``getNumPartitions()`` equals the
+    bin count.
 
     The frame is built on the JVM: the groups cross py4j as one string, are
     split and parallelized one group per slice, and SQL explodes each group
@@ -140,7 +146,7 @@ def files_df(
     if not files:
         return empty_df(spark, "path string")
     par = max(spark.sparkContext.defaultParallelism, 1)
-    by_bytes = math.ceil(sum(sizes.values()) / max(target_bytes, 1))
+    by_bytes = math.ceil(sum(sizes.values()) / TARGET_TASK_BYTES)
     n_tasks = min(len(files), par * math.ceil(max(par, by_bytes) / par))
     groups: list[list[str]] = [[] for _ in range(n_tasks)]
     # (load, bin) heap: least-loaded bin first, lowest index on ties
@@ -181,40 +187,46 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
+def scan_files(
+    batches: Iterator[pa.RecordBatch],
+    columns: list[str],
+    batch_size: int = DEFAULT_CHUNK_ROWS,
+) -> Iterator[tuple[str, int, pa.RecordBatch]]:
+    """Worker side of the file-split scan: streams every file of a
+    ``files_df`` partition in ``batch_size``-row batches (bounded memory,
+    like the reference's pull batches, src/parquet-to-text-stream.cc:74)
+    and yields (file stem, batch ordinal, batch) for each non-empty batch.
+    The ordinal counts every batch the reader returns, so (stem, ordinal)
+    names a chunk stably regardless of task placement."""
+    for pdf in batches:
+        for fpath in pdf.column(0).to_pylist():
+            stem = os.path.splitext(os.path.basename(fpath))[0]
+            reader = open_parquet(fpath).iter_batches(batch_size=batch_size, columns=columns)
+            for seq, batch in enumerate(reader):
+                if batch.num_rows:
+                    yield stem, seq, batch
+
+
 def encode_parquet_dir(
-    spark: SparkSession,
-    path: str,
-    chunk_rows: int = DEFAULT_CHUNK_ROWS,
-    columns: tuple[str, ...] = ("doc_id", "tokens", "n_tok", "source"),
+    spark: SparkSession, path: str, chunk_rows: int = DEFAULT_CHUNK_ROWS
 ) -> DataFrame:
     """Scan+encode a tokens parquet directory Arrow-natively.
 
-    Each task streams its files in ``chunk_rows`` batches (bounded memory,
-    like the reference's 30-row pull batches, src/parquet-to-text-stream.cc:74)
+    Each task streams its files in ``chunk_rows`` batches (``scan_files``)
     and emits one encoded-chunk row per batch. Chunk ids are content-stable:
     (file basename, batch ordinal) — reruns produce identical chunks
     regardless of task placement.
     """
 
-    return _encode_files(files_df(spark, path), chunk_rows, columns)
+    return _encode_files(files_df(spark, path), chunk_rows)
 
 
-def _encode_files(
-    fdf: DataFrame, chunk_rows: int, columns: tuple[str, ...]
-) -> DataFrame:
-    """Shared fast-path core: one task per file group, per-file streaming
-    decode in chunk_rows batches, content-stable chunk ids."""
+def _encode_files(fdf: DataFrame, chunk_rows: int) -> DataFrame:
+    """Shared fast-path core: one encoded chunk per scanned batch."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for pdf in batches:
-            for fpath in pdf.column(0).to_pylist():
-                pf = open_parquet(fpath)
-                base = os.path.splitext(os.path.basename(fpath))[0]
-                for seq, batch in enumerate(
-                    pf.iter_batches(batch_size=chunk_rows, columns=list(columns))
-                ):
-                    if batch.num_rows:
-                        yield encode_batch(batch, chunk_id=f"{base}.{seq:05d}")
+        for stem, seq, batch in scan_files(batches, list(TOKENS_COLUMNS), chunk_rows):
+            yield encode_batch(batch, chunk_id=f"{stem}.{seq:05d}")
 
     return fdf.mapInArrow(run, ENCODED_SCHEMA_DDL)
 
@@ -240,7 +252,6 @@ def encode_iceberg_snapshot(
     table_dir: str,
     snapshot_id: int | None = None,
     chunk_rows: int = DEFAULT_CHUNK_ROWS,
-    columns: tuple[str, ...] = ("doc_id", "tokens", "n_tok", "source"),
 ) -> DataFrame:
     """Snapshot-consistent fast-path encode: the encode sees exactly the
     files of one committed snapshot regardless of concurrent appends (pass
@@ -273,9 +284,7 @@ def encode_iceberg_snapshot(
             "snapshot has pending position deletes; run "
             "iceberg.materialize_deletes before the fast-path encode"
         )
-    return _encode_files(
-        _iceberg_files_df(spark, table_dir, snapshot_id), chunk_rows, columns
-    )
+    return _encode_files(_iceberg_files_df(spark, table_dir, snapshot_id), chunk_rows)
 
 
 # --- scalar-only verification path (token arrays never cross the JVM) -------
@@ -285,10 +294,10 @@ HASH_SCHEMA_DDL = "doc_id string, n_tok int, tok_hash long"
 
 
 def _hash_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
-    from ..encode import _tokens_parts
     from ..hashing import row_token_hashes
 
-    values, lengths = _tokens_parts(batch)
+    values, offsets = _tokens_parts(batch)
+    lengths = np.diff(offsets)
     h = row_token_hashes(values, lengths)
     doc = batch.column(batch.schema.get_field_index("doc_id"))
     return pa.RecordBatch.from_arrays(
@@ -314,35 +323,19 @@ def token_hashes_from_parquet(
         fdf = files_df(spark, path)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for pdf in batches:
-            for fpath in pdf.column(0).to_pylist():
-                pf = open_parquet(fpath)
-                for batch in pf.iter_batches(
-                    batch_size=DEFAULT_CHUNK_ROWS, columns=["doc_id", "tokens"]
-                ):
-                    if batch.num_rows:
-                        yield _hash_batch(batch)
+        for _, _, batch in scan_files(batches, ["doc_id", "tokens"]):
+            yield _hash_batch(batch)
 
     return fdf.mapInArrow(run, HASH_SCHEMA_DDL)
 
 
 def token_hashes_from_encoded(encoded: DataFrame) -> DataFrame:
     """Decode chunks and emit per-row hashes — token arrays stay in Python."""
-    from ..encode import decode_chunk_row
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            metas = batch.column(batch.schema.get_field_index("meta"))
-            payloads = batch.column(batch.schema.get_field_index("payload"))
-            n_rows = batch.column(batch.schema.get_field_index("n_rows"))
-            for i in range(batch.num_rows):
-                decoded = decode_chunk_row(
-                    metas[i].as_py(),
-                    payloads[i].as_py(),
-                    n_rows[i].as_py(),
-                    columns=("doc_id", "tokens"),  # projection pushdown
-                )
-                yield _hash_batch(decoded)
+        # projection pushdown: only doc_id and tokens are decoded
+        for decoded in decode_chunks(batches, ("doc_id", "tokens"), False):
+            yield _hash_batch(decoded)
 
     return encoded.mapInArrow(run, HASH_SCHEMA_DDL)
 

@@ -77,6 +77,8 @@ def _roaring32_bytes(values) -> bytes:
     per-key boolean masks, no per-element Python."""
     import numpy as np
 
+    if not isinstance(values, np.ndarray):
+        values = list(values)  # np.asarray rejects generators
     v = np.unique(np.asarray(values, dtype=np.uint32))
     hi16 = (v >> np.uint32(16)).astype(np.uint16)
     change = np.flatnonzero(hi16[1:] != hi16[:-1])

@@ -30,7 +30,6 @@ def incremental_encode(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    chunk_rows: int | None = None,
 ) -> StreamingQuery:
     """Start an availableNow incremental encode over a landing directory."""
     stream = (
@@ -40,8 +39,7 @@ def incremental_encode(
     )
 
     def sink(batch_df, epoch_id: int) -> None:
-        kw = {"chunk_rows": chunk_rows} if chunk_rows else {}
-        encode_tokens_df(batch_df, **kw).write.mode("append").parquet(output_dir)
+        encode_tokens_df(batch_df).write.mode("append").parquet(output_dir)
 
     return (
         stream.writeStream.foreachBatch(sink)
@@ -61,7 +59,6 @@ def incremental_encode_to_iceberg(
     input_dir: str,
     table_dir: str,
     checkpoint_dir: str,
-    chunk_rows: int | None = None,
 ) -> StreamingQuery:
     """Incremental encode whose sink is an ICEBERG SNAPSHOT PER MICRO-BATCH.
 
@@ -94,8 +91,7 @@ def incremental_encode_to_iceberg(
         ]
         if committed and epoch_id <= max(committed):
             return  # replayed epoch: already durable in the table
-        kw = {"chunk_rows": chunk_rows} if chunk_rows else {}
-        encoded = encode_tokens_df(batch_df, **kw)
+        encoded = encode_tokens_df(batch_df)
         data_dir = os.path.join(table_dir, "data", f"batch-{epoch_id}")
         encoded.write.mode("overwrite").parquet(data_dir)
         iceberg_meta.commit_parquet_dir(

@@ -90,6 +90,8 @@ def _restore_validity(dense: pa.Array, n: int, has_validity: bool, payload: byte
 
 
 def encode_column(arr: pa.Array, name: str) -> dict:
+    """One column chunk as a ``column._pack_parts`` part: codec = column
+    kind, meta = logical type + dense count + its sub-parts' framing."""
     t = arr.type
     validity, dense = _split_validity(arr)
     parts: dict[str, dict] = {}
@@ -153,25 +155,23 @@ def encode_column(arr: pa.Array, name: str) -> dict:
     parts["data"] = enc
     payload, meta_parts = _pack_parts(parts)
     return {
-        "kind": kind,
-        "type_meta": meta,
-        "n": len(arr),
-        "n_dense": len(dense),
-        "parts": meta_parts,
+        "codec": kind,
+        "meta": {**meta, "n_dense": len(dense), "parts": meta_parts},
         "payload": payload,
+        "n": len(arr),
         "raw_bytes": enc.get("raw_bytes", len(enc["payload"])) + (len(arr) + 7) // 8,
     }
 
 
-def decode_column(col_meta: dict, payload: bytes) -> pa.Array:
-    parts = _unpack_parts(col_meta["parts"], payload)
-    n, n_dense = col_meta["n"], col_meta["n_dense"]
-    kind = col_meta["kind"]
+def decode_column(kind: str, meta: dict, payload: bytes, n: int) -> pa.Array:
+    """Inverse of :func:`encode_column`."""
+    parts = _unpack_parts(meta["parts"], payload)
+    n_dense = meta["n_dense"]
     data = parts["data"]
     if kind in ("int", "timestamp", "date32"):
         vals = decode_int_array(data["codec"], data["meta"], data["payload"], n_dense)
         if kind == "int":
-            logical = col_meta["type_meta"]["logical"]
+            logical = meta["logical"]
             if logical == "uint64":
                 # bit reinterpret, not value cast (values > 2^63 are stored
                 # as negative int64 — an arrow cast would range-check)
@@ -184,14 +184,13 @@ def decode_column(col_meta: dict, payload: bytes) -> pa.Array:
                 }[logical]
                 dense = pa.array(vals).cast(pa_type)
         elif kind == "timestamp":
-            tm = col_meta["type_meta"]
-            dense = pa.array(vals, type=pa.int64()).cast(pa.timestamp(tm["unit"], tm["tz"]))
+            dense = pa.array(vals, type=pa.int64()).cast(pa.timestamp(meta["unit"], meta["tz"]))
         else:
             dense = pa.array(vals.astype(np.int32)).cast(pa.date32())
     elif kind == "bool":
         dense = pa.array(unpack_bits(data["payload"], 1, n_dense).astype(bool))
     elif kind == "float":
-        itemsize = col_meta["type_meta"]["itemsize"]
+        itemsize = meta["itemsize"]
         mat = np.frombuffer(data["payload"], dtype=np.uint8).reshape(itemsize, n_dense)
         raw = np.ascontiguousarray(mat.T).view(np.float32 if itemsize == 4 else np.float64).ravel()
         dense = pa.array(raw)
@@ -207,19 +206,11 @@ def decode_column(col_meta: dict, payload: bytes) -> pa.Array:
 
 
 def encode_table_batch(batch: pa.RecordBatch, chunk_id: str) -> pa.RecordBatch:
-    cols: dict[str, dict] = {}
-    blob = bytearray()
-    raw_bytes = 0
-    for i, field in enumerate(batch.schema):
-        enc = encode_column(batch.column(i), field.name)
-        enc_payload = enc.pop("payload")
-        enc["offset"] = len(blob)
-        enc["length"] = len(enc_payload)
-        blob += enc_payload
-        raw_bytes += enc["raw_bytes"]
-        cols[field.name] = enc
-    schema_json = json.dumps([f.name for f in batch.schema])
-    meta = json.dumps({"columns": cols}, separators=(",", ":"))
+    cols = {f.name: encode_column(batch.column(i), f.name) for i, f in enumerate(batch.schema)}
+    blob, meta_parts = _pack_parts(cols)
+    raw_bytes = sum(c["raw_bytes"] for c in cols.values())
+    schema_json = json.dumps(batch.schema.names)
+    meta = json.dumps({"columns": meta_parts}, separators=(",", ":"))
     return pa.RecordBatch.from_arrays(
         [
             pa.array([chunk_id]),
@@ -228,7 +219,7 @@ def encode_table_batch(batch: pa.RecordBatch, chunk_id: str) -> pa.RecordBatch:
             pa.array([len(blob) + len(meta)], type=pa.int64()),
             pa.array([schema_json]),
             pa.array([meta]),
-            pa.array([bytes(blob)], type=pa.binary()),
+            pa.array([blob], type=pa.binary()),
         ],
         names=["chunk_id", "n_rows", "raw_bytes", "enc_bytes", "schema", "meta", "payload"],
     )
@@ -236,19 +227,18 @@ def encode_table_batch(batch: pa.RecordBatch, chunk_id: str) -> pa.RecordBatch:
 
 def decode_table_row(schema_json: str, meta_json: str, payload: bytes) -> pa.RecordBatch:
     names = json.loads(schema_json)
-    cols = json.loads(meta_json)["columns"]
-    arrays = []
-    for name in names:
-        cm = cols[name]
-        part = payload[cm["offset"] : cm["offset"] + cm["length"]]
-        arrays.append(decode_column(cm, part))
+    cols = _unpack_parts(json.loads(meta_json)["columns"], payload)
+    arrays = [
+        decode_column(c["codec"], c["meta"], c["payload"], c["n"]) for c in map(cols.get, names)
+    ]
     return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
 # --- DataFrame wrappers -------------------------------------------------------
 
 
-def encode_table_df(df: DataFrame, chunk_rows: int = 8192) -> DataFrame:
+def encode_table_df(df: DataFrame) -> DataFrame:
+    """One generic chunk per Arrow batch the session hands the worker."""
     from pyspark import TaskContext
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 import pyarrow as pa
 import pytest
 
@@ -60,6 +62,36 @@ def test_checksum_catches_payload_corruption(spark):
         batch = decode_chunk_row(row["meta"], bytes(tampered), row["n_rows"], row["checksum"])
         # if structure survived, the checksum must not
         raise AssertionError(f"tamper undetected: {batch.num_rows}")
+
+
+def test_decode_chunks_df_fails_on_tampered_chunk(spark):
+    """The DataFrame decode verifies every chunk: one chunk whose token
+    payload was altered after encode fails the job with the checksum error."""
+    encoded = encode_tokens_df(synth_tokens_df(spark, 600, n_partitions=2))
+    rows = [r.asDict() for r in encoded.orderBy("chunk_id").collect()]
+    assert len(rows) >= 2
+    assert decode_chunks_df(spark.createDataFrame(rows, encoded.schema)).count() == 600
+
+    # flip one bit of the token parts, keeping the chunk decodable
+    row = rows[0]
+    parts = json.loads(row["meta"])["parts"]
+    token_bytes = [
+        p["offset"] + i for k, p in parts.items() if k.startswith("tokens_g") for i in range(p["length"])
+    ]
+    for pos in token_bytes:
+        tampered = bytearray(row["payload"])
+        tampered[pos] ^= 0x01
+        try:
+            decode_chunk_row(row["meta"], bytes(tampered), row["n_rows"], row["checksum"])
+        except Exception as e:  # other flips may break the structure first
+            if "checksum mismatch" in str(e):
+                break
+    else:
+        pytest.fail("no single-bit payload change reaches the checksum check")
+    rows[0] = dict(row, payload=bytes(tampered))
+    frame = spark.createDataFrame(rows, encoded.schema)
+    with pytest.raises(Exception, match="chunk checksum mismatch"):
+        decode_chunks_df(frame).collect()
 
 
 def test_compact_small_chunks(spark):

@@ -2966,6 +2966,12 @@ class TestDeletionVectors:
         assert got64 == b"\x01" + b"\x00" * 7 + b"\x00\x00\x00\x00" + want
         assert pf.read_roaring64(got64).tolist() == [1, 3]
 
+    def test_roaring32_accepts_any_iterable(self):
+        """A generator serializes exactly like the sorted list of its values."""
+        from parquet_to_arrow_spark.sources import puffin as pf
+
+        assert pf._roaring32_bytes(iter([3, 1, 2])) == pf._roaring32_bytes([1, 2, 3])
+
     def test_roaring_container_edges(self):
         from parquet_to_arrow_spark.sources import puffin as pf
 

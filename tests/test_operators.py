@@ -103,6 +103,25 @@ def test_minhash_band_cap_bounds_skewed_join(spark, tmp_path_factory):
     assert all(r["est_jaccard"] == 1.0 for r in pairs)
 
 
+def test_minhash_lsh_leaves_nothing_persisted(spark, tmp_path):
+    """The signatures feed one select inside the query: a call must not
+    leave a cached frame behind (it would leak storage per call and let a
+    repeated call skip the signature build)."""
+    from parquet_to_arrow_spark.operators.dedup import minhash_lsh_pairs
+
+    text = "signatures are built once per call and never kept around " * 4
+    rows = [(i, text if i < 3 else f"unrelated document number {i} " * 6, "en", "web", 10)
+            for i in range(8)]
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    pairs = minhash_lsh_pairs(spark, str(tmp_path), threshold=0.5).collect()
+    assert {(r["doc_a"], r["doc_b"]) for r in pairs} >= {(0, 1), (0, 2), (1, 2)}
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 def test_ngram_jaccard_scores_planted_pair(spark, planted_docs):
     from parquet_to_arrow_spark.operators.dedup import ngram_jaccard_pairs
 

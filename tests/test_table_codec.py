@@ -101,7 +101,7 @@ def test_media_blob_table_roundtrip_spark(spark):
 
     media = documents_as_wav(spark, "/root/testdata/sf0.001").cache()
     ddl = "doc_id bigint, payload binary, media_type string, n_bytes bigint"
-    decoded = decode_table_df(encode_table_df(media, chunk_rows=128), ddl)
+    decoded = decode_table_df(encode_table_df(media), ddl)
     j = media.alias("a").join(decoded.alias("b"), "doc_id")
     n_equal = j.filter(
         F.col("a.payload").eqNullSafe(F.col("b.payload"))
