@@ -128,11 +128,11 @@ def compact_small_chunks(
     return big.unionByName(recombined)
 
 
-def encode_skew_aware(df: DataFrame, n_buckets: int = 256, chunk_rows: int = 8192) -> DataFrame:
+def encode_skew_aware(df: DataFrame, n_buckets: int = 256) -> DataFrame:
     """Source-aligned, skew-safe keyed encode: plan -> salt -> bucket encode."""
     from .encode import encode_tokens_df
 
     plan = plan_buckets(df, n_buckets)
     keyed = with_salted_pkey(df, plan)
     n_total = max(plan["__n_buckets__"][0], 1)
-    return encode_tokens_df(keyed, by_key=True, n_buckets=n_total, chunk_rows=chunk_rows)
+    return encode_tokens_df(keyed, by_key=True, n_buckets=n_total)

@@ -7,8 +7,9 @@ Spark-first design:
   shuffles: chunk boundaries follow the scan's partitioning, exactly like the
   reference streams row groups (reference: src/parquet-to-text-stream.cc:272-285).
 - The keyed path (``by_key=True``) buckets rows by a stable partition key
-  (xxhash64(doc_id) % n_buckets, optionally salted by the skewed ``source``)
-  and encodes one chunk per bucket via ``groupBy().applyInArrow`` — this is
+  (xxhash64(doc_id) % n_buckets, optionally salted by the skewed ``source``),
+  ``repartition``s on it, ``sortWithinPartitions`` by (pkey, doc_id) and
+  encodes one chunk per bucket per Arrow batch via ``mapInArrow`` — this is
   the resumable path: the checkpoint table is keyed by ``pkey``.
 - All codec math is vectorized numpy on flat Arrow buffers (no per-row
   Python, per BASELINE.json input_hint).
@@ -39,7 +40,6 @@ from .column import (
     encode_string_array,
 )
 from .hashing import chunk_checksum
-from .session import DEFAULT_CHUNK_ROWS
 
 ENCODED_SCHEMA_DDL = (
     "chunk_id string, pkey int, n_rows long, n_values long, "
@@ -301,21 +301,16 @@ def decode_chunks(
 # --- DataFrame-level pipelines ----------------------------------------------
 
 
-def encode_tokens_df(
-    df: DataFrame,
-    by_key: bool = False,
-    n_buckets: int = 256,
-    chunk_rows: int = DEFAULT_CHUNK_ROWS,
-) -> DataFrame:
-    """Encode a tokens DataFrame into encoded chunks.
+def encode_tokens_df(df: DataFrame, by_key: bool = False, n_buckets: int = 256) -> DataFrame:
+    """Encode a tokens DataFrame into encoded chunks. On both paths a chunk
+    holds at most one Arrow batch the session hands the worker
+    (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows).
 
-    fast path (default): zero-shuffle mapInArrow; the chunk is the Arrow
-    batch the session hands the worker (``spark.sql.execution.arrow.
-    maxRecordsPerBatch`` rows at most).
-    keyed path: deterministic bucket per row -> one task group per bucket,
-    resumable via the checkpoint table (checkpoint.py).
+    fast path (default): zero-shuffle mapInArrow, one chunk per batch.
+    keyed path: deterministic bucket per row -> one chunk per bucket per
+    batch, resumable via the checkpoint table (checkpoint.py).
 
-    ``n_buckets`` and ``chunk_rows`` apply only when ``by_key=True``.
+    ``n_buckets`` applies only when ``by_key=True``.
     """
     if not by_key:
 
@@ -344,11 +339,10 @@ def encode_tokens_df(
             bounds = np.concatenate(([0], change + 1, [len(pk)]))
             for lo, hi in zip(bounds[:-1], bounds[1:]):
                 pkey = int(pk[lo])
-                for start in range(int(lo), int(hi), chunk_rows):
-                    sub = body.slice(start, min(chunk_rows, int(hi) - start))
-                    i = seq.get(pkey, 0)
-                    seq[pkey] = i + 1
-                    yield encode_batch(sub, chunk_id=f"k{pkey:06d}.{i:05d}", pkey=pkey)
+                i = seq.get(pkey, 0)
+                seq[pkey] = i + 1
+                sub = body.slice(int(lo), int(hi - lo))
+                yield encode_batch(sub, chunk_id=f"k{pkey:06d}.{i:05d}", pkey=pkey)
 
     grouped = keyed.repartition(n_buckets, "pkey").sortWithinPartitions("pkey", "doc_id")
     return grouped.mapInArrow(encode_bucket, ENCODED_SCHEMA_DDL)

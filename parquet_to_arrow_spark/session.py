@@ -1,9 +1,12 @@
 """SparkSession factory tuned for the encode engine.
 
 Local-mode defaults match the sandbox (local[$SPARK_GRAFT_CPUS], single JVM);
-on a real cluster the same settings apply per executor. Arrow batch size is
-the chunk-size knob: one Arrow batch == one encoded chunk on the fast path,
-the Spark analogue of the reference's row group (SURVEY.md §1.4).
+on a real cluster the same settings apply per executor. Arrow batch size
+(``chunk_rows`` -> ``spark.sql.execution.arrow.maxRecordsPerBatch``) is the
+one chunk-size setting: on every encode path a chunk is at most one Arrow
+batch (the file-split scan reads its files in batches of this size, the
+keyed path cuts each batch at bucket boundaries), the Spark analogue of the
+reference's row group (SURVEY.md §1.4).
 """
 
 from __future__ import annotations

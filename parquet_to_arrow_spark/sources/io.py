@@ -9,8 +9,8 @@ exactly like the reference opens the Parquet footer itself
 compact binary blobs — cross the JVM boundary.
 
 On a real cluster the same pattern works against HDFS/S3 via pyarrow.fs;
-here paths are local. Iceberg integration would hand us these file lists
-from a snapshot's manifests (jars not in this image — see checkpoint.py).
+here paths are local. An Iceberg table hands us these file lists from a
+snapshot's manifests (``input_files_df``).
 """
 
 from __future__ import annotations
@@ -207,63 +207,31 @@ def scan_files(
                     yield stem, seq, batch
 
 
-def encode_parquet_dir(
-    spark: SparkSession, path: str, chunk_rows: int = DEFAULT_CHUNK_ROWS
-) -> DataFrame:
-    """Scan+encode a tokens parquet directory Arrow-natively.
-
-    Each task streams its files in ``chunk_rows`` batches (``scan_files``)
-    and emits one encoded-chunk row per batch. Chunk ids are content-stable:
-    (file basename, batch ordinal) — reruns produce identical chunks
-    regardless of task placement.
-    """
-
-    return _encode_files(files_df(spark, path), chunk_rows)
-
-
-def _encode_files(fdf: DataFrame, chunk_rows: int) -> DataFrame:
-    """Shared fast-path core: one encoded chunk per scanned batch."""
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for stem, seq, batch in scan_files(batches, list(TOKENS_COLUMNS), chunk_rows):
-            yield encode_batch(batch, chunk_id=f"{stem}.{seq:05d}")
-
-    return fdf.mapInArrow(run, ENCODED_SCHEMA_DDL)
-
-
-def _iceberg_files_df(
-    spark: SparkSession, table_dir: str, snapshot_id: int | None = None
-) -> DataFrame:
-    """File-split task frame straight from a snapshot's manifest walk —
-    paths AND sizes come from metadata, zero filesystem listing."""
-    from . import iceberg_meta
-
-    dfiles = iceberg_meta.snapshot_files(table_dir, snapshot_id)
-    return files_df(
-        spark,
-        None,
-        files=[f.path for f in dfiles],
-        sizes={f.path: f.file_size for f in dfiles},
-    )
-
-
-def encode_iceberg_snapshot(
+def input_files_df(
     spark: SparkSession,
-    table_dir: str,
+    path: str,
+    columns: tuple[str, ...],
     snapshot_id: int | None = None,
-    chunk_rows: int = DEFAULT_CHUNK_ROWS,
 ) -> DataFrame:
-    """Snapshot-consistent fast-path encode: the encode sees exactly the
-    files of one committed snapshot regardless of concurrent appends (pass
-    an older id to encode historical state). Identity-partitioned tables
-    are rejected — their partition columns live in paths, not in the data
-    files this path streams."""
+    """The ``files_df`` task frame for a scan of ``columns`` from ``path``:
+    a plain parquet directory is listed; an Iceberg table resolves through
+    the manifest walk of one snapshot (default: current; NOT a directory
+    listing, which would also pick up orphan files from crashed writes and
+    tear under concurrent appends), paths AND sizes from metadata.
+
+    Fails closed where the raw data files are not the snapshot's rows: an
+    identity partition on a scanned column (its values live in paths, not
+    in the data files) and pending merge-on-read deletes (the file-split
+    scan would resurrect deleted rows). ``snapshot_id`` is ignored for a
+    plain directory."""
     from . import iceberg_meta
 
-    meta = iceberg_meta.current_metadata(table_dir)
-    if meta is not None and any(
-        s["transform"] == "identity"
-        for spec in meta.get("partition-specs", [{"spec-id": 0, "fields": []}])
+    meta = iceberg_meta.current_metadata(path)
+    if meta is None:
+        return files_df(spark, path)
+    if any(
+        s["transform"] == "identity" and s["source"] in columns
+        for spec in meta.get("partition-specs", [])
         for s in iceberg_meta._partition_specs(meta, spec["spec-id"])
     ):
         # only IDENTITY partitioning moves table columns out of the data
@@ -273,18 +241,44 @@ def encode_iceberg_snapshot(
         # spec evolution, files written under an old identity spec still
         # lack their columns until compaction migrates them
         raise NotImplementedError(
-            "fast-path encode of identity-partitioned tables (partition "
+            "file-split scan of identity-partitioned columns (partition "
             "columns are not in the data files; use read_snapshot + the "
             "keyed encode)"
         )
-    if meta is not None and iceberg_meta.snapshot_delete_files(table_dir, snapshot_id):
-        # the Arrow file-split scan streams raw data files and would
-        # resurrect MoR-deleted rows — refuse, don't corrupt
+    if iceberg_meta.snapshot_delete_files(path, snapshot_id):
         raise ValueError(
             "snapshot has pending position deletes; run "
-            "iceberg.materialize_deletes before the fast-path encode"
+            "iceberg.materialize_deletes before the file-split scan"
         )
-    return _encode_files(_iceberg_files_df(spark, table_dir, snapshot_id), chunk_rows)
+    dfiles = iceberg_meta.snapshot_files(path, snapshot_id)
+    return files_df(
+        spark,
+        None,
+        files=[f.path for f in dfiles],
+        sizes={f.path: f.file_size for f in dfiles},
+    )
+
+
+def encode_parquet_dir(
+    spark: SparkSession, path: str, snapshot_id: int | None = None
+) -> DataFrame:
+    """Scan+encode a tokens parquet directory or Iceberg snapshot
+    (``input_files_df``) Arrow-natively.
+
+    Each task streams its files in batches of the session's
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows (``scan_files``)
+    and emits one encoded-chunk row per batch. Chunk ids are content-stable:
+    (file basename, batch ordinal) — reruns produce identical chunks
+    regardless of task placement.
+    """
+    batch_size = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for stem, seq, batch in scan_files(batches, list(TOKENS_COLUMNS), batch_size):
+            yield encode_batch(batch, chunk_id=f"{stem}.{seq:05d}")
+
+    fdf = input_files_df(spark, path, TOKENS_COLUMNS, snapshot_id)
+    return fdf.mapInArrow(run, ENCODED_SCHEMA_DDL)
 
 
 # --- scalar-only verification path (token arrays never cross the JVM) -------
@@ -311,21 +305,15 @@ def token_hashes_from_parquet(
 ) -> DataFrame:
     """(doc_id, n_tok, tok_hash) per row, scanning parquet Arrow-natively.
 
-    An Iceberg table path resolves through its snapshot's manifests (NOT a
-    directory listing, which would also pick up orphan files from crashed
-    writes); ``snapshot_id`` selects historical state, matching an encode
-    of the same snapshot."""
-    from . import iceberg_meta
-
-    if iceberg_meta.current_version(path) is not None:
-        fdf = _iceberg_files_df(spark, path, snapshot_id)
-    else:
-        fdf = files_df(spark, path)
+    The input resolves through ``input_files_df``, with the same snapshot
+    checks as the encode; ``snapshot_id`` selects an Iceberg table's
+    historical state, matching an encode of the same snapshot."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for _, _, batch in scan_files(batches, ["doc_id", "tokens"]):
             yield _hash_batch(batch)
 
+    fdf = input_files_df(spark, path, ("doc_id", "tokens"), snapshot_id)
     return fdf.mapInArrow(run, HASH_SCHEMA_DDL)
 
 

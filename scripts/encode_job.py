@@ -11,15 +11,20 @@ Usage (local or cluster — the script itself is cluster-agnostic):
         --buckets 512 --mode keyed
 
 Modes:
-  fast   zero-shuffle: chunk = input split, direct Arrow-native scan
+  fast   zero-shuffle: chunk = one Arrow batch of an input file, direct
+         Arrow-native scan of a parquet directory or Iceberg snapshot
          (sources/io.encode_parquet_dir) — maximum throughput, resume at
          file granularity is the caller's concern.
   keyed  deterministic bucket per row (xxhash64(doc_id) % buckets), one
          shuffle, resumable: rerun after a crash and only pending buckets
-         are encoded (checkpoint.pending anti-join).
+         are encoded (the keyed input is filtered to the buckets the
+         checkpoint and the committed snapshots do not list as done).
 
 Verification (--verify) compares per-row token hashes of input vs decoded
 output without ever shipping token arrays through the JVM (sources/io).
+The fast path and --verify both refuse an Iceberg snapshot with pending
+merge-on-read deletes; with --verify the refusal comes before anything is
+written.
 """
 
 from __future__ import annotations
@@ -43,7 +48,13 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--checkpoint", default=None)
     p.add_argument("--buckets", type=int, default=256)
     p.add_argument("--mode", choices=["fast", "keyed"], default="fast")
-    p.add_argument("--chunk-rows", type=int, default=8192)
+    p.add_argument(
+        "--chunk-rows",
+        type=int,
+        default=8192,
+        help="rows per chunk: sets the session's Arrow batch "
+        "(spark.sql.execution.arrow.maxRecordsPerBatch), the chunk of both modes",
+    )
     p.add_argument(
         "--wave-size",
         type=int,
@@ -86,25 +97,23 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app="encode_job", cores=args.cores, chunk_rows=args.chunk_rows)
     t0 = time.time()
 
+    from parquet_to_arrow_spark.sources import iceberg_meta
+
     if args.iceberg_table:
         from parquet_to_arrow_spark.sources import iceberg as ice
-        from parquet_to_arrow_spark.sources import iceberg_meta
 
-    from parquet_to_arrow_spark.sources import iceberg_meta as _im
-
-    input_is_table = _im.current_version(args.input) is not None
+    if args.verify:
+        # built before the first write: it resolves (and checks) the SAME
+        # snapshot the encode reads (historical when --input-snapshot was
+        # given), so a refused snapshot stops the job with nothing written
+        input_hashes = pio.token_hashes_from_parquet(
+            spark, args.input, snapshot_id=args.input_snapshot
+        )
 
     if args.mode == "fast":
-        if input_is_table:
-            # snapshot-consistent input: the file list comes from the
-            # manifest walk, so concurrent appends to the source table
-            # cannot tear this run's view
-            encoded = pio.encode_iceberg_snapshot(
-                spark, args.input, snapshot_id=args.input_snapshot,
-                chunk_rows=args.chunk_rows,
-            )
-        else:
-            encoded = pio.encode_parquet_dir(spark, args.input, chunk_rows=args.chunk_rows)
+        # an Iceberg input is snapshot-consistent: the file list comes from
+        # the manifest walk, so concurrent appends cannot tear this run's view
+        encoded = pio.encode_parquet_dir(spark, args.input, snapshot_id=args.input_snapshot)
         encoded.write.mode("append").option("compression", "zstd").parquet(args.output)
         if args.iceberg_table:
             # commit only the files this run added (append mode accretes)
@@ -135,8 +144,8 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F
 
         tokens = (
-            _im.read_snapshot(spark, args.input, args.input_snapshot)
-            if input_is_table
+            iceberg_meta.read_snapshot(spark, args.input, args.input_snapshot)
+            if iceberg_meta.current_version(args.input) is not None
             else spark.read.parquet(args.input)
         )
         keyed = ckpt.with_pkey(tokens, args.buckets)
@@ -172,9 +181,7 @@ def main(argv: list[str] | None = None) -> int:
         for w0 in range(0, len(pending_keys), wave):
             keys = pending_keys[w0 : w0 + wave]
             part = keyed.filter(F.col("pkey").isin(keys))
-            encoded = encode_tokens_df(
-                part, by_key=True, n_buckets=args.buckets, chunk_rows=args.chunk_rows
-            )
+            encoded = encode_tokens_df(part, by_key=True, n_buckets=args.buckets)
             wave_dir = os.path.join(args.output, f"wave={keys[0]}")
             encoded.write.mode("overwrite").option("compression", "zstd").parquet(wave_dir)
             if args.iceberg_table:
@@ -204,14 +211,7 @@ def main(argv: list[str] | None = None) -> int:
     stats["wall_seconds"] = round(time.time() - t0, 2)
 
     if args.verify:
-        report = pio.verify_hashes(
-            # hash the SAME snapshot the encode read (historical when
-            # --input-snapshot was given), not whatever is current now
-            pio.token_hashes_from_parquet(
-                spark, args.input, snapshot_id=args.input_snapshot
-            ),
-            pio.token_hashes_from_encoded(written),
-        )
+        report = pio.verify_hashes(input_hashes, pio.token_hashes_from_encoded(written))
         stats["verify"] = report
         if not report["equal"]:
             print(json.dumps(stats, default=int))

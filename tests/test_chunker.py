@@ -46,7 +46,7 @@ def test_salted_buckets_are_balanced(spark, skewed):
 
 
 def test_skew_aware_roundtrip(spark, skewed):
-    encoded = encode_skew_aware(skewed, n_buckets=32, chunk_rows=512)
+    encoded = encode_skew_aware(skewed, n_buckets=32)
     assert_roundtrip(skewed, decode_chunks_df(encoded))
 
 
@@ -98,8 +98,14 @@ def test_compact_small_chunks(spark):
     from parquet_to_arrow_spark.chunker import compact_small_chunks
 
     tokens = synth_tokens_df(spark, 4000, avg_tokens=32, n_partitions=8).cache()
-    tiny = encode_tokens_df(tokens, by_key=True, n_buckets=8, chunk_rows=128).cache()
-    n_before = tiny.count()
+    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(batch_key)
+    spark.conf.set(batch_key, "128")  # the session's batch is the chunk size
+    try:
+        tiny = encode_tokens_df(tokens, by_key=True, n_buckets=8).cache()
+        n_before = tiny.count()
+    finally:
+        spark.conf.set(batch_key, saved)
     compacted = compact_small_chunks(tiny, min_rows=1024, target_rows=2048).cache()
     n_after = compacted.count()
     assert n_after < n_before / 4, (n_before, n_after)

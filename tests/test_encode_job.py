@@ -215,3 +215,24 @@ def test_fast_mode_encodes_from_iceberg_input(job_spark, tmp_path):
     rep = diff_report(tokens, decoded)
     assert rep["equal"] and rep["n_left"] == 600, rep
     tokens.unpersist()
+
+
+def test_verify_refuses_pending_deletes_before_writing(job_spark, tmp_path):
+    """A merge-on-read delete leaves the deleted row in the raw data files
+    that the verify hash side scans. --verify must refuse such a snapshot
+    (not report a false 'missing' row) and stop before the first wave
+    writes or checkpoints anything."""
+    from parquet_to_arrow_spark.sources import iceberg as ice
+
+    spark = job_spark
+    table = str(tmp_path / "intable")
+    ice.append(synth_tokens_df(spark, 100, avg_tokens=16, n_partitions=1), table)
+    ice.delete_where_mor(spark, table, "doc_id = 'doc-000000000001'")
+
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    args = ["--input", table, "--output", out, "--manifest", str(tmp_path / "man"),
+            "--checkpoint", ckpt, "--buckets", "4", "--mode", "keyed", "--verify"]
+    with pytest.raises(ValueError, match="position deletes"):
+        encode_job.main(args)
+    assert not os.path.exists(out) and not os.path.exists(ckpt)

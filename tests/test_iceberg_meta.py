@@ -684,12 +684,12 @@ class TestIncremental:
 
 class TestSnapshotEncode:
     def test_encode_from_snapshot_is_consistent_under_appends(self, spark, tmp_path):
-        """encode_iceberg_snapshot(table, id) encodes EXACTLY snapshot id's
+        """encode_parquet_dir(table, id) encodes EXACTLY snapshot id's
         files: rows appended afterwards are invisible, and the decoded
         output is bit-identical to the snapshot's content."""
         from parquet_to_arrow_spark.encode import decode_chunks_df
         from parquet_to_arrow_spark.sources import iceberg as icebergmod
-        from parquet_to_arrow_spark.sources.io import encode_iceberg_snapshot
+        from parquet_to_arrow_spark.sources.io import encode_parquet_dir
         from parquet_to_arrow_spark.sources.synth import synth_tokens_df
         from parquet_to_arrow_spark.verify import diff_report
 
@@ -701,11 +701,11 @@ class TestSnapshotEncode:
                  .filter("doc_id >= 'doc-000000000300'").cache())
         icebergmod.append(extra, table)
 
-        enc_old = encode_iceberg_snapshot(spark, table, snapshot_id=s1, chunk_rows=64)
+        enc_old = encode_parquet_dir(spark, table, snapshot_id=s1)
         rep = diff_report(first, decode_chunks_df(enc_old))
         assert rep["equal"] and rep["n_left"] == 300, rep
 
-        enc_now = encode_iceberg_snapshot(spark, table, chunk_rows=64)
+        enc_now = encode_parquet_dir(spark, table)
         rep2 = diff_report(first.union(extra), decode_chunks_df(enc_now))
         assert rep2["equal"] and rep2["n_left"] == 500, rep2  # 300 + 200 appended
         first.unpersist(); extra.unpersist()
@@ -886,7 +886,10 @@ class TestSecondReviewRegressions:
         assert sum(f.record_count for f in inc) == 2
 
     def test_partitioned_snapshot_encode_rejected(self, spark, tmp_path):
-        from parquet_to_arrow_spark.sources.io import encode_iceberg_snapshot
+        from parquet_to_arrow_spark.sources.io import (
+            encode_parquet_dir,
+            token_hashes_from_parquet,
+        )
 
         df = spark.createDataFrame(
             [(f"doc-{i}", [1, 2], 2, ["a", "b"][i % 2]) for i in range(4)],
@@ -898,7 +901,9 @@ class TestSecondReviewRegressions:
         ice.commit_parquet_dir(table, d, spark_schema=df.schema, ts_ms=1,
                                partition_by=["source"])
         with pytest.raises(NotImplementedError, match="partitioned"):
-            encode_iceberg_snapshot(spark, table)
+            encode_parquet_dir(spark, table)
+        # the verify hash side reads only doc_id and tokens, both in the files
+        assert token_hashes_from_parquet(spark, table).count() == 4
 
     def test_token_hashes_honor_snapshot_id(self, spark, tmp_path):
         from parquet_to_arrow_spark.sources.iceberg import append
@@ -1331,14 +1336,21 @@ class TestPositionDeletes:
 
     def test_compaction_and_encode_refuse_pending_deletes(self, spark, tmp_path):
         from parquet_to_arrow_spark.sources.iceberg import compact_files, delete_where_mor
-        from parquet_to_arrow_spark.sources.io import encode_iceberg_snapshot
+        from parquet_to_arrow_spark.sources.io import (
+            encode_parquet_dir,
+            token_hashes_from_parquet,
+        )
 
         table = self._table(spark, tmp_path)
         delete_where_mor(spark, table, "doc_id = 1")
         with pytest.raises(ValueError, match="position deletes"):
             compact_files(spark, table, target_bytes=1 << 20)
         with pytest.raises(ValueError, match="position deletes"):
-            encode_iceberg_snapshot(spark, table)
+            encode_parquet_dir(spark, table)
+        # the verify hash side scans the same raw files: it refuses too
+        # instead of hashing the deleted row back in
+        with pytest.raises(ValueError, match="position deletes"):
+            token_hashes_from_parquet(spark, table)
 
     def test_partitioned_mor_delete_with_pruning(self, spark, tmp_path):
         from parquet_to_arrow_spark.sources.iceberg import delete_where_mor, read_table
@@ -1866,7 +1878,7 @@ class TestDerivedPartitionEncode:
         and the decode must be bit-identical."""
         from parquet_to_arrow_spark.encode import decode_chunks_df
         from parquet_to_arrow_spark.sources.iceberg import with_bucket_column
-        from parquet_to_arrow_spark.sources.io import encode_iceberg_snapshot
+        from parquet_to_arrow_spark.sources.io import encode_parquet_dir
         from parquet_to_arrow_spark.sources.synth import synth_tokens_df
         from parquet_to_arrow_spark.verify import diff_report
 
@@ -1880,7 +1892,7 @@ class TestDerivedPartitionEncode:
             table, d, spark_schema=tokens.schema, ts_ms=1,
             partition_by=["doc_id:bucket[4]"],
         )
-        dec = decode_chunks_df(encode_iceberg_snapshot(spark, table))
+        dec = decode_chunks_df(encode_parquet_dir(spark, table))
         rep = diff_report(tokens, dec)
         assert rep["equal"] and rep["ok"] == 500, rep
         tokens.unpersist()

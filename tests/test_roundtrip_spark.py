@@ -44,12 +44,29 @@ def test_fast_path_roundtrip(spark, tokens):
 
 
 def test_keyed_path_roundtrip(spark, tokens):
-    encoded = encode_tokens_df(tokens, by_key=True, n_buckets=16, chunk_rows=512).cache()
+    encoded = encode_tokens_df(tokens, by_key=True, n_buckets=16).cache()
     decoded = decode_chunks_df(encoded)
     assert_roundtrip(tokens, decoded)
     pkeys = [r["pkey"] for r in encoded.select("pkey").distinct().collect()]
     assert all(0 <= k < 16 for k in pkeys)
     encoded.unpersist()
+
+
+def test_file_split_chunk_is_session_arrow_batch(spark, tmp_path):
+    """The session's Arrow batch size is the one chunk-size setting: the
+    file-split encode reads each file in batches of that many rows."""
+    from parquet_to_arrow_spark.sources.io import encode_parquet_dir
+
+    path = str(tmp_path / "one_file")
+    synth_tokens_df(spark, 1000, avg_tokens=16, n_partitions=1).write.parquet(path)
+    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(batch_key)
+    spark.conf.set(batch_key, "256")
+    try:
+        rows = encode_parquet_dir(spark, path).select("chunk_id", "n_rows").collect()
+    finally:
+        spark.conf.set(batch_key, saved)
+    assert [r["n_rows"] for r in sorted(rows)] == [256, 256, 256, 232]
 
 
 def test_compression_beats_parquet_snappy(spark, tokens, tmp_path):

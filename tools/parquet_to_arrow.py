@@ -71,7 +71,7 @@ def main(argv=None) -> int:
         return 1
     from parquet_to_arrow_spark.session import get_spark
 
-    spark = get_spark(app="parquet_to_arrow", cores="8")
+    spark = get_spark(app="parquet_to_arrow")
     try:
         convert(spark, argv[0], argv[1])
     except Exception as e:  # noqa: BLE001

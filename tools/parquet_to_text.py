@@ -193,7 +193,7 @@ def main(argv=None) -> int:
     p.add_argument("format", choices=["csv", "json"])
     p.add_argument("--row-range", type=parse_range, default=None)
     p.add_argument("--column-range", type=parse_range, default=None)
-    p.add_argument("--cores", default="8")
+    p.add_argument("--cores", default=None, help="local[N] cores (default: env/all)")
     args = p.parse_args(argv)
 
     from parquet_to_arrow_spark.session import get_spark

@@ -161,7 +161,7 @@ def main(argv=None) -> int:
     p.add_argument("old")
     p.add_argument("new")
     p.add_argument("--strict-chunking", action="store_true")
-    p.add_argument("--cores", default="8")
+    p.add_argument("--cores", default=None, help="local[N] cores (default: env/all)")
     args = p.parse_args(argv)
 
     from parquet_to_arrow_spark.session import get_spark
