@@ -379,9 +379,7 @@ def point_lookup(spark, table_or_path: str, column: str, value,
         return iceberg_meta.read_snapshot(spark, table_or_path).filter(
             F.col(column) == F.lit(value)
         )
-    schema = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
+    schema = iceberg_meta._current_schema(meta)
     ddl = iceberg_meta._spark_ddl(schema)
     if not cands:
         return empty_df(spark, ddl)

@@ -487,6 +487,55 @@ def _write_rewrite(survivors: DataFrame, rw_dir: str, meta: dict | None) -> None
     w.parquet(rw_dir)
 
 
+def _rewrite_files(
+    spark: SparkSession,
+    table_or_path: str,
+    hits,
+    keep,
+    detail: str,
+    partition_filter: dict | None = None,
+    add: DataFrame | None = None,
+) -> int | None:
+    """The one copy-on-write rewrite behind delete_where, delete_keys and
+    merge_keys: scan the current snapshot (pruned by ``partition_filter``)
+    with each row's source file, collect the files ``hits(scan)`` finds
+    rows in, rewrite exactly those files as ``keep(scan)`` of their rows
+    (plus ``add``, for an upsert) through the table's layout
+    (_write_rewrite), and commit the replacement files with the originals
+    removed as one snapshot whose operation-detail is ``detail``.
+    Untouched files are carried forward as-is; removed rows stay reachable
+    via time travel until snapshot expiry. Returns the snapshot id, or
+    None when no file has a hit."""
+    import uuid
+    from urllib.parse import unquote, urlparse
+
+    meta = iceberg_meta.current_metadata(table_or_path)
+    if meta is None:
+        raise FileNotFoundError(f"no iceberg table at {table_or_path}")
+    scan = iceberg_meta.read_snapshot(
+        spark, table_or_path, partition_filter=partition_filter
+    ).withColumn("__file", F.input_file_name())
+    affected_uris = [
+        r["__file"] for r in hits(scan).select("__file").distinct().collect()
+    ]  # bounded by the table's file count — the same scale as the manifest walk
+    if not affected_uris:
+        return None
+    # input_file_name() returns percent-encoded URIs; manifests store raw
+    # abspaths — unquote or the remove-path match silently finds nothing
+    affected = {os.path.abspath(unquote(urlparse(u).path)) for u in affected_uris}
+    survivors = keep(scan.filter(F.col("__file").isin(affected_uris))).drop("__file")
+    if add is not None:
+        survivors = survivors.unionByName(add.select(*survivors.columns))
+    rw_dir = os.path.join(table_or_path, "data", f"rw-{uuid.uuid4().hex[:8]}")
+    _write_rewrite(survivors, rw_dir, meta)
+    return iceberg_meta.commit_parquet_dir(
+        table_or_path,
+        rw_dir,
+        summary={"operation-detail": detail},
+        remove_paths=affected,
+    )
+
+
 def delete_where(
     spark: SparkSession,
     table_or_path: str,
@@ -495,10 +544,11 @@ def delete_where(
 ) -> int | None:
     """Copy-on-write DELETE: rewrite only the files that contain matching
     rows, without those rows, and commit survivors + removals as one
-    snapshot. Untouched files are carried forward as-is; deleted rows stay
-    reachable via time travel until snapshot expiry — Iceberg v1 delete
-    semantics, which is also how the engine's dedup verdicts become
-    physical row removal.
+    snapshot (_rewrite_files). Untouched files are carried forward as-is;
+    deleted rows stay reachable via time travel until snapshot expiry —
+    Iceberg v1 delete semantics, which is also how the engine's dedup
+    verdicts become physical row removal. Rows where the predicate is NULL
+    are kept.
 
     Works on unpartitioned AND identity-partitioned engine-native tables:
     survivors of a partitioned table are rewritten through the same hive
@@ -514,41 +564,39 @@ def delete_where(
     of those waves' files, AND snapshot expiry can defeat both matches —
     run deletes and wave jobs against the same table sequentially, not
     interleaved."""
-    import uuid
-    from urllib.parse import unquote, urlparse
+    if iceberg_available(spark):
+        raise NotImplementedError("use the catalog's DELETE FROM on the jar path")
+    return _rewrite_files(
+        spark,
+        table_or_path,
+        hits=lambda scan: scan.filter(predicate),
+        keep=lambda scan: scan.filter(f"NOT coalesce(({predicate}), false)"),
+        detail="delete-where",
+        partition_filter=partition_filter,
+    )
 
-    from pyspark.sql import functions as F
 
+def _doomed_positions(
+    spark: SparkSession,
+    table_or_path: str,
+    predicate: str,
+    partition_filter: dict | None,
+) -> tuple[dict, DataFrame]:
+    """(current metadata, (file_path, pos) of every row matching
+    ``predicate``) — the shared front half of the merge-on-read deletes.
+    Positions come from the scanner's native _metadata.row_index (no
+    window, no shuffle over the data), and the scan already applies
+    pending deletes, so a re-delete never records a row twice."""
     if iceberg_available(spark):
         raise NotImplementedError("use the catalog's DELETE FROM on the jar path")
     meta = iceberg_meta.current_metadata(table_or_path)
     if meta is None:
         raise FileNotFoundError(f"no iceberg table at {table_or_path}")
     scan = iceberg_meta.read_snapshot(
-        spark, table_or_path, partition_filter=partition_filter
-    ).withColumn("__file", F.input_file_name())
-    affected_uris = [
-        r["__file"]
-        for r in scan.filter(predicate).select("__file").distinct().collect()
-    ]  # bounded by the table's file count — the same scale as the manifest walk
-    if not affected_uris:
-        return None
-    # input_file_name() returns percent-encoded URIs; manifests store raw
-    # abspaths — unquote or the remove-path match silently finds nothing
-    affected = {os.path.abspath(unquote(urlparse(u).path)) for u in affected_uris}
-
-    survivors = (
-        scan.filter(F.col("__file").isin(affected_uris))
-        .filter(f"NOT coalesce(({predicate}), false)")  # NULL pred = keep
-        .drop("__file")
+        spark, table_or_path, partition_filter=partition_filter, with_positions=True
     )
-    rw_dir = os.path.join(table_or_path, "data", f"rw-{uuid.uuid4().hex[:8]}")
-    _write_rewrite(survivors, rw_dir, meta)
-    return iceberg_meta.commit_parquet_dir(
-        table_or_path,
-        rw_dir,
-        summary={"operation-detail": "delete-where"},
-        remove_paths=affected,
+    return meta, scan.filter(predicate).select(
+        F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
     )
 
 
@@ -577,19 +625,7 @@ def delete_where_mor(
     Files" + "Row-level deletes"."""
     import uuid
 
-    from pyspark.sql import functions as F
-
-    if iceberg_available(spark):
-        raise NotImplementedError("use the catalog's DELETE FROM on the jar path")
-    meta = iceberg_meta.current_metadata(table_or_path)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_or_path}")
-    scan = iceberg_meta.read_snapshot(
-        spark, table_or_path, partition_filter=partition_filter, with_positions=True
-    )
-    doomed = scan.filter(predicate).select(
-        F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
-    )
+    _, doomed = _doomed_positions(spark, table_or_path, predicate, partition_filter)
     del_dir = os.path.join(table_or_path, "data", f"delete-{uuid.uuid4().hex[:8]}")
     # range-partition + sort: each delete file holds a contiguous sorted
     # (file_path, pos) run (spec sort order); AQE coalesces the typically
@@ -643,21 +679,9 @@ def delete_where_dv(
     Returns the snapshot id, or None when nothing matched."""
     import uuid
 
-    from pyspark.sql import functions as F
-
     from . import puffin as pf
 
-    if iceberg_available(spark):
-        raise NotImplementedError("use the catalog's DELETE FROM on the jar path")
-    meta = iceberg_meta.current_metadata(table_or_path)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_or_path}")
-    scan = iceberg_meta.read_snapshot(
-        spark, table_or_path, partition_filter=partition_filter, with_positions=True
-    )
-    doomed = scan.filter(predicate).select(
-        F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
-    )
+    meta, doomed = _doomed_positions(spark, table_or_path, predicate, partition_filter)
 
     def mk(pdf):
         import pandas as pd
@@ -744,40 +768,19 @@ def _scan_delete_dir(
     return out
 
 
-def delete_keys_mor(
-    spark: SparkSession,
-    table_or_path: str,
-    keys: DataFrame,
-    key_cols: list[str] | str | None = None,
-) -> int | None:
-    """Merge-on-read DELETE by key (Iceberg v2 equality deletes): write
-    the distinct key set as an EQUALITY DELETE file (content=2, its
-    ``equality_ids`` naming the key columns by field id) and commit — NO
-    data file is opened, read, or rewritten, and unlike delete_where_mor
-    not even scanned: the write cost is O(|keys|) regardless of table
-    size, the cheapest possible DELETE at 100 TB (this is the shape CDC
-    and GDPR key purges take in Iceberg). Readers subtract matching rows
-    from data files whose commit sequence PRECEDES the delete's — a later
-    re-append of the same key survives, per the spec's row-delta ordering.
-    Returns the snapshot id, or None for an empty key set."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    meta = iceberg_meta.current_metadata(table_or_path)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_or_path}")
-    if isinstance(key_cols, str):
-        key_cols = [key_cols]
-    key_cols = key_cols or keys.columns
-    schema = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
-    ids_by_name = {f["name"]: f["id"] for f in schema["fields"]}
+def _write_eq_deletes(
+    meta: dict, keys: DataFrame, key_cols: list[str], del_dir: str
+) -> list[iceberg_meta.DataFile]:
+    """Write the distinct ``key_cols`` of ``keys`` as EQUALITY DELETE
+    parquet under ``del_dir`` and return its non-empty files as content=2
+    DataFiles whose ``equality_ids`` name the key columns by field id of
+    the current schema. Range-partition + sort like the position path:
+    sorted runs, AQE coalesces a small key set to one file, a huge one
+    scales out."""
+    ids_by_name = {
+        f["name"]: f["id"] for f in iceberg_meta._current_schema(meta)["fields"]
+    }
     eq_ids = [ids_by_name[c] for c in key_cols]
-    del_dir = os.path.join(table_or_path, "data", f"eqdelete-{uuid.uuid4().hex[:8]}")
-    # range-partition + sort like the position path: sorted runs, AQE
-    # coalesces a small key set to one file, a huge one scales out
     (
         keys.select(*[F.col(c) for c in key_cols])
         .distinct()
@@ -786,7 +789,35 @@ def delete_keys_mor(
         .write.mode("overwrite")
         .parquet(del_dir)
     )
-    dfs = _scan_delete_dir(del_dir, content=2, equality_ids=eq_ids)
+    return _scan_delete_dir(del_dir, content=2, equality_ids=eq_ids)
+
+
+def delete_keys_mor(
+    spark: SparkSession,
+    table_or_path: str,
+    keys: DataFrame,
+    key_cols: list[str] | str | None = None,
+) -> int | None:
+    """Merge-on-read DELETE by key (Iceberg v2 equality deletes): write
+    the distinct key set as an EQUALITY DELETE file (_write_eq_deletes:
+    content=2, its ``equality_ids`` naming the key columns by field id)
+    and commit — NO data file is opened, read, or rewritten, and unlike
+    delete_where_mor not even scanned: the write cost is O(|keys|)
+    regardless of table size, the cheapest possible DELETE at 100 TB (this
+    is the shape CDC and GDPR key purges take in Iceberg). Readers
+    subtract matching rows from data files whose commit sequence PRECEDES
+    the delete's — a later re-append of the same key survives, per the
+    spec's row-delta ordering. Returns the snapshot id, or None for an empty key set."""
+    import uuid
+
+    meta = iceberg_meta.current_metadata(table_or_path)
+    if meta is None:
+        raise FileNotFoundError(f"no iceberg table at {table_or_path}")
+    if isinstance(key_cols, str):
+        key_cols = [key_cols]
+    key_cols = key_cols or keys.columns
+    del_dir = os.path.join(table_or_path, "data", f"eqdelete-{uuid.uuid4().hex[:8]}")
+    dfs = _write_eq_deletes(meta, keys, key_cols, del_dir)
     if not dfs:
         import shutil
 
@@ -818,33 +849,18 @@ def upsert_keys_mor(
     a plain first-commit append. Returns the snapshot id."""
     import uuid
 
-    from pyspark.sql import functions as F
-
     if isinstance(key_cols, str):
         key_cols = [key_cols]
     key_cols = key_cols or list(updates.columns[:1])
     meta = iceberg_meta.current_metadata(table_or_path)
     if meta is None or meta.get("current-snapshot-id", -1) == -1:
         return append(updates, table_or_path, summary=summary)
-    schema = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
-    ids_by_name = {f["name"]: f["id"] for f in schema["fields"]}
-    eq_ids = [ids_by_name[c] for c in key_cols]
     nonce = uuid.uuid4().hex[:8]
     seq = meta["last-sequence-number"] + 1
     data_dir = os.path.join(table_or_path, "data", f"seq-{seq}-{nonce}")
     del_dir = os.path.join(table_or_path, "data", f"eqdelete-{nonce}")
+    dels = _write_eq_deletes(meta, updates, key_cols, del_dir)
     _write_rewrite(updates, data_dir, meta)
-    (
-        updates.select(*[F.col(c) for c in key_cols])
-        .distinct()
-        .repartitionByRange(*key_cols)
-        .sortWithinPartitions(*key_cols)
-        .write.mode("overwrite")
-        .parquet(del_dir)
-    )
-    dels = _scan_delete_dir(del_dir, content=2, equality_ids=eq_ids)
     return iceberg_meta.commit_parquet_dir(
         table_or_path,
         data_dir,
@@ -872,9 +888,7 @@ def _eq_affected(table_or_path: str, eq_dels, old_files) -> set[str]:
     import pyarrow.parquet as pq
 
     meta = iceberg_meta.current_metadata(table_or_path)
-    schema = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
+    schema = iceberg_meta._current_schema(meta)
     name_by_id = {f["id"]: f["name"] for f in schema["fields"]}
     conservative = {f.path for f in old_files}
     keysets: dict[int, list] = {}
@@ -987,49 +1001,22 @@ def delete_keys(
 ) -> int | None:
     """Key-set copy-on-write delete: remove every row whose ``key`` appears
     in ``keys`` (a DataFrame — arbitrarily large, joined not collected).
-    Same rewrite shape as delete_where: only files containing a doomed key
-    are rewritten (anti-join against the key set), the rest carry forward
-    untouched; partitioned tables rewrite through the hive layout so
-    replacement files keep their partition values (_write_rewrite), and
+    Same rewrite as delete_where (_rewrite_files): only files containing a
+    doomed key are rewritten (semi-join to find them, anti-join against
+    the key set to rewrite them), the rest carry forward untouched;
+    partitioned tables rewrite through the hive layout so replacement
+    files keep their partition values (_write_rewrite), and
     ``partition_filter`` prunes the search to the named partitions. This is
     how dedup verdicts scale to physical removal — the loser set flows
     through a join, never a predicate string."""
-    import uuid
-    from urllib.parse import unquote, urlparse
-
-    from pyspark.sql import functions as F
-
-    meta = iceberg_meta.current_metadata(table_or_path)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_or_path}")
-    scan = iceberg_meta.read_snapshot(
-        spark, table_or_path, partition_filter=partition_filter
-    ).withColumn("__file", F.input_file_name())
     keyset = keys.select(F.col(key)).distinct()
-    affected_uris = [
-        r["__file"]
-        for r in scan.join(keyset, key, "left_semi")
-        .select("__file")
-        .distinct()
-        .collect()
-    ]
-    if not affected_uris:
-        return None
-    # input_file_name() returns percent-encoded URIs; manifests store raw
-    # abspaths — unquote or the remove-path match silently finds nothing
-    affected = {os.path.abspath(unquote(urlparse(u).path)) for u in affected_uris}
-    survivors = (
-        scan.filter(F.col("__file").isin(affected_uris))
-        .join(keyset, key, "left_anti")
-        .drop("__file")
-    )
-    rw_dir = os.path.join(table_or_path, "data", f"rw-{uuid.uuid4().hex[:8]}")
-    _write_rewrite(survivors, rw_dir, meta)
-    return iceberg_meta.commit_parquet_dir(
+    return _rewrite_files(
+        spark,
         table_or_path,
-        rw_dir,
-        summary={"operation-detail": f"delete-keys:{key}"},
-        remove_paths=affected,
+        hits=lambda scan: scan.join(keyset, key, "left_semi"),
+        keep=lambda scan: scan.join(keyset, key, "left_anti"),
+        detail=f"delete-keys:{key}",
+        partition_filter=partition_filter,
     )
 
 
@@ -1056,51 +1043,25 @@ def merge_keys(
     """MERGE INTO by key (copy-on-write upsert): rows of ``updates`` whose
     key exists in the table REPLACE those rows; unmatched keys are plain
     inserts — all as one snapshot. Only files containing a matched key are
-    rewritten (survivors + replacement rows written together); when
-    nothing matches, this degrades to a pure append. Partitioned tables
-    rewrite through the hive layout (_write_rewrite) — ``updates`` must
-    carry the partition columns, and a row's NEW partition value simply
-    lands it in the right directory (partition-moving upserts work).
-    Completes the DML set: append / delete_where / delete_keys /
-    merge_keys."""
-    import uuid
-    from urllib.parse import unquote, urlparse
-
-    from pyspark.sql import functions as F
-
-    meta = iceberg_meta.current_metadata(table_or_path)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_or_path}")
-    scan = iceberg_meta.read_snapshot(spark, table_or_path).withColumn(
-        "__file", F.input_file_name()
-    )
+    rewritten (_rewrite_files: survivors + replacement rows written
+    together); when nothing matches, this degrades to a pure append.
+    Partitioned tables rewrite through the hive layout (_write_rewrite) —
+    ``updates`` must carry the partition columns, and a row's NEW
+    partition value simply lands it in the right directory
+    (partition-moving upserts work). Completes the DML set: append /
+    delete_where / delete_keys / merge_keys."""
     keyset = updates.select(F.col(key)).distinct()
-    affected_uris = [
-        r["__file"]
-        for r in scan.join(keyset, key, "left_semi")
-        .select("__file")
-        .distinct()
-        .collect()
-    ]
-    if not affected_uris:
-        return append(updates, table_or_path, summary={"operation-detail": "merge-insert-only"})
-    # input_file_name() returns percent-encoded URIs; manifests store raw
-    # abspaths — unquote or the remove-path match silently finds nothing
-    affected = {os.path.abspath(unquote(urlparse(u).path)) for u in affected_uris}
-    survivors = (
-        scan.filter(F.col("__file").isin(affected_uris))
-        .join(keyset, key, "left_anti")
-        .drop("__file")
-    )
-    merged = survivors.unionByName(updates.select(*survivors.columns))
-    rw_dir = os.path.join(table_or_path, "data", f"rw-{uuid.uuid4().hex[:8]}")
-    _write_rewrite(merged, rw_dir, meta)
-    return iceberg_meta.commit_parquet_dir(
+    sid = _rewrite_files(
+        spark,
         table_or_path,
-        rw_dir,
-        summary={"operation-detail": f"merge-keys:{key}"},
-        remove_paths=affected,
+        hits=lambda scan: scan.join(keyset, key, "left_semi"),
+        keep=lambda scan: scan.join(keyset, key, "left_anti"),
+        detail=f"merge-keys:{key}",
+        add=updates,
     )
+    if sid is None:
+        return append(updates, table_or_path, summary={"operation-detail": "merge-insert-only"})
+    return sid
 
 
 def _zvalue_expr(
@@ -1318,9 +1279,7 @@ def compact_files(
     # predating an additive evolution must null-project the new columns
     # instead of the compaction inheriting one arbitrary footer's schema
     # and silently dropping them from the rewritten files
-    cur_schema = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
+    cur_schema = iceberg_meta._current_schema(meta)
     ddl = iceberg_meta._spark_ddl(cur_schema)
     rw_dir = os.path.join(table_or_path, "data", f"compact-{uuid.uuid4().hex[:8]}")
     n_small = n_out_total = 0

@@ -14,7 +14,11 @@ manifest field (field-id props), v2 required manifest_file/manifest_entry
 fields, sequence numbers written explicitly, snapshot log + metadata log,
 exclusive metadata-file creation as the commit point with listing-based
 version resolution (the hadoop catalog's semantics; version-hint is a
-fast-path hint). Implemented on top of that: identity partitioning with
+fast-path hint). Every metadata writer — commits, refs, write-audit-
+publish, rollback, expiry, manifest rewrite — reads the table state once
+(_resolve_state) and publishes through _publish_metadata against the
+version it read, so a concurrent commit raises CommitConflict instead of
+being overwritten. Implemented on top of that: identity partitioning with
 manifest-level pruning, bucket[N] / truncate[W] / day / month / year
 partition transforms (spec murmur3 — published Appendix B hash vectors
 pinned in tests; negative-safe truncate; epoch-ordinal temporals;
@@ -335,6 +339,11 @@ def current_metadata(table_dir: str) -> dict | None:
     return _resolve_state(table_dir)[1]
 
 
+def _current_schema(meta: dict) -> dict:
+    """The schema entry ``current-schema-id`` names."""
+    return next(s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"])
+
+
 import struct as _struct
 
 
@@ -492,9 +501,7 @@ def _partition_specs(meta: dict, spec_id: int | None = None) -> list[dict]:
     for identity, 'int' for bucket)."""
     sid = meta["default-spec-id"] if spec_id is None else spec_id
     spec = next(s for s in meta["partition-specs"] if s["spec-id"] == sid)
-    schema = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
+    schema = _current_schema(meta)
     by_id = {f["id"]: f for f in schema["fields"]}
     out = []
     for f in spec["fields"]:
@@ -593,7 +600,7 @@ def _maybe_evolve_schema(base: dict, spark_schema) -> dict:
     files. Existing columns must keep their types; drops/renames are out
     of scope (rejected loudly, not silently mangled)."""
     new_schema, _ = iceberg_schema(spark_schema)
-    cur = next(s for s in base["schemas"] if s["schema-id"] == base["current-schema-id"])
+    cur = _current_schema(base)
     cur_by_name = {f["name"]: f for f in cur["fields"]}
     new_names = {f["name"] for f in new_schema["fields"]}
     missing = sorted(n for n in cur_by_name if n not in new_names)
@@ -826,16 +833,20 @@ def commit_append(
     snapshot would keep BOTH manifests: double counts plus stale paths from
     the loser's overwritten files.
 
-    Commit protocol (hadoop catalog): write the manifest and manifest
-    list, then CREATE v{N+1}.metadata.json exclusively — that creation is
-    the commit point (version resolution lists metadata files; the
-    version-hint is only a fast-path hint refreshed afterwards). A crash
+    Commit protocol (hadoop catalog): read the table state once (version
+    N and its metadata), write the manifest and manifest list, then
+    publish v{N+1}.metadata.json through _publish_metadata against that
+    same N, like every other metadata writer — the exclusive create is the
+    commit point (version resolution lists metadata files; the
+    version-hint is only a fast-path hint refreshed afterwards). A
+    concurrent commit that took v{N+1} first raises CommitConflict; a
+    crash replay of this very commit is welcomed as already done. A crash
     before the metadata create leaves only unreferenced manifest/data
     files (orphans); a crash after it is a completed commit the resuming
     job discovers through its snapshot-summary markers."""
     meta_dir = _meta_dir(table_dir)
     os.makedirs(meta_dir, exist_ok=True)
-    prev = current_metadata(table_dir)
+    version, prev = _resolve_state(table_dir)
     if prev is None:
         if spark_schema is None:
             raise ValueError("first commit needs the table schema")
@@ -865,7 +876,6 @@ def commit_append(
         version = 0
     else:
         base = dict(prev)
-        version = current_version(table_dir)
         if spark_schema is not None:
             base = _maybe_evolve_schema(base, spark_schema)
         if partition_by is not None:
@@ -901,13 +911,8 @@ def commit_append(
                         "allow_spec_evolution=True — or create a new table "
                         "or restate the existing spec verbatim"
                     )
-                cur_schema_ev = next(
-                    s
-                    for s in base["schemas"]
-                    if s["schema-id"] == base["current-schema-id"]
-                )
                 new_fields, last_pid = _build_spec_fields(
-                    cur_schema_ev,
+                    _current_schema(base),
                     partition_by,
                     existing_specs=base["partition-specs"],
                     last_partition_id=base.get("last-partition-id", 999),
@@ -930,8 +935,9 @@ def commit_append(
     # different concurrent commit at the same sequence writes a DIFFERENT
     # manifest — it can never clobber files a winning commit references
     # (its own become unreferenced orphans). The snapshot id inherits the
-    # digest, which is what lets the metadata-create conflict check below
-    # tell "replay of this very commit" apart from "someone else won".
+    # digest, which is what lets the metadata-create conflict check
+    # (_publish_metadata) tell "replay of this very commit" apart from
+    # "someone else won".
     digest = hashlib.md5(
         "\n".join(
             [f"{f.path}:{f.file_size}:{f.record_count}" for f in files]
@@ -955,9 +961,7 @@ def commit_append(
         uid, seq, [manifest_name] + ([del_manifest_name] if delete_files else [])
     )
     pfields = _partition_fields(base)
-    cur_schema = next(
-        s for s in base["schemas"] if s["schema-id"] == base["current-schema-id"]
-    )
+    cur_schema = _current_schema(base)
     types_by_id = {
         f["id"]: f["type"] for f in cur_schema["fields"] if isinstance(f["type"], str)
     }
@@ -1009,7 +1013,7 @@ def commit_append(
         manifest_entry_schema(pfields),
         _mk_entries(files, 0),
         meta={
-            "schema": json.dumps(base["schemas"][base["current-schema-id"] if base["schemas"] else 0]),
+            "schema": json.dumps(cur_schema),
             "partition-spec": "[]",
             "partition-spec-id": str(default_sid),
             "format-version": str(FORMAT_VERSION),
@@ -1028,7 +1032,7 @@ def commit_append(
             manifest_entry_schema(pfields),
             _mk_entries(delete_files, None),
             meta={
-                "schema": json.dumps(base["schemas"][base["current-schema-id"] if base["schemas"] else 0]),
+                "schema": json.dumps(cur_schema),
                 "partition-spec": "[]",
                 "partition-spec-id": str(default_sid),
                 "format-version": str(FORMAT_VERSION),
@@ -1220,49 +1224,7 @@ def commit_append(
                 "metadata-file": os.path.join(meta_dir, f"v{version}.metadata.json"),
             }
         ]
-    new_version = version + 1
-    meta_path = os.path.join(meta_dir, f"v{new_version}.metadata.json")
-    # Optimistic concurrency (the hadoop catalog's create-if-absent rename):
-    # only ONE writer may create v{N+1}. Because snapshot ids are a pure
-    # function of (table, sequence, manifests), a CRASH REPLAY of this very
-    # commit reproduces the existing file's snapshot id and is welcomed
-    # through (the hint just gets repaired); a DIFFERENT concurrent commit
-    # collides with a different id and is rejected — the caller must
-    # re-read table state and retry at the next sequence number. This is
-    # what turns two uncoordinated writers from silent lineage corruption
-    # (observed: duplicate wave snapshots with racing file listings) into a
-    # detected conflict.
-    # Atomic publish: write the full payload to a tmp file, fsync, then
-    # os.link(tmp, meta_path) — link both (a) fails iff the path exists
-    # (create-if-absent, exactly one racing writer wins this version) and
-    # (b) publishes COMPLETE content in one atomic metadata operation, so
-    # a reader can never observe a half-flushed winner. The previous
-    # O_EXCL-create-then-buffered-write had a window where a losing
-    # committer read the winner's still-flushing file, classified it as
-    # torn, and overwrote the winner's commit — a silently lost snapshot.
-    payload = json.dumps(new_meta, indent=2)
-    tmp_meta = meta_path + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-    with open(tmp_meta, "w") as f:
-        f.write(payload)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        try:
-            os.link(tmp_meta, meta_path)
-        except FileExistsError:
-            _reconcile_existing_commit(meta_path, tmp_meta, snap_id)
-    finally:
-        try:
-            os.unlink(tmp_meta)
-        except OSError:
-            pass
-
-    # hint swap is a fast-path convenience, NOT the commit point — a crash
-    # right here leaves a committed table (resolution lists v{new_version})
-    tmp = _hint_path(table_dir) + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        f.write(str(new_version))
-    os.replace(tmp, _hint_path(table_dir))
+    _publish_metadata(table_dir, version, new_meta, snap_id)
     return snap_id
 
 
@@ -1317,7 +1279,7 @@ def set_ref(
         raise ValueError("'main' is managed by commits")
     if type not in ("tag", "branch"):
         raise ValueError(f"ref type must be tag or branch, not {type!r}")
-    meta = current_metadata(table_dir)
+    version, meta = _resolve_state(table_dir)
     if meta is None:
         raise FileNotFoundError(f"no iceberg table at {table_dir}")
     sid = _resolve_sid(meta, snapshot_id)
@@ -1327,7 +1289,7 @@ def set_ref(
         **meta.get("refs", {}),
         name: {"snapshot-id": sid, "type": type},
     }
-    _publish_metadata(table_dir, new_meta)
+    _publish_metadata(table_dir, version, new_meta)
 
 
 def stage_snapshot(
@@ -1342,7 +1304,7 @@ def stage_snapshot(
     snapshot id."""
     if branch == "main":
         raise ValueError("'main' is the publish target, not a staging branch")
-    meta = current_metadata(table_dir)
+    version, meta = _resolve_state(table_dir)
     if meta is None:
         raise FileNotFoundError(f"no iceberg table at {table_dir}")
     cur = meta.get("current-snapshot-id")
@@ -1364,7 +1326,7 @@ def stage_snapshot(
         refs["main"] = {"snapshot-id": parent, "type": "branch"}
     new_meta["refs"] = refs
     new_meta["current-snapshot-id"] = parent if parent not in (None, -1) else -1
-    _publish_metadata(table_dir, new_meta)
+    _publish_metadata(table_dir, version, new_meta)
     return cur
 
 
@@ -1374,7 +1336,7 @@ def publish_branch(table_dir: str, branch: str) -> int:
     drop the branch ref. The data files were in place since the staged
     commit; publishing is one metadata version, so the whole WAP cycle
     adds zero data writes. Returns the published snapshot id."""
-    meta = current_metadata(table_dir)
+    version, meta = _resolve_state(table_dir)
     if meta is None:
         raise FileNotFoundError(f"no iceberg table at {table_dir}")
     ref = meta.get("refs", {}).get(branch)
@@ -1402,7 +1364,7 @@ def publish_branch(table_dir: str, branch: str) -> int:
     new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
         {"timestamp-ms": int(time.time() * 1000), "snapshot-id": sid}
     ]
-    _publish_metadata(table_dir, new_meta)
+    _publish_metadata(table_dir, version, new_meta)
     return sid
 
 
@@ -1413,7 +1375,7 @@ def rollback(table_dir: str, snapshot_id) -> int:
     time-travelable, reclaimed later by expire_snapshots like any other
     unreferenced history. One metadata version; no data file is touched.
     Accepts a snapshot id or a ref name."""
-    meta = current_metadata(table_dir)
+    version, meta = _resolve_state(table_dir)
     if meta is None:
         raise FileNotFoundError(f"no iceberg table at {table_dir}")
     sid = _resolve_sid(meta, snapshot_id)
@@ -1427,7 +1389,7 @@ def rollback(table_dir: str, snapshot_id) -> int:
     new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
         {"timestamp-ms": int(time.time() * 1000), "snapshot-id": sid}
     ]
-    _publish_metadata(table_dir, new_meta)
+    _publish_metadata(table_dir, version, new_meta)
     return sid
 
 
@@ -1435,33 +1397,61 @@ def remove_ref(table_dir: str, name: str) -> None:
     """Drop a named ref; its snapshot becomes expirable again."""
     if name == "main":
         raise ValueError("'main' is managed by commits")
-    meta = current_metadata(table_dir)
+    version, meta = _resolve_state(table_dir)
     if meta is None:
         raise FileNotFoundError(f"no iceberg table at {table_dir}")
     if name not in meta.get("refs", {}):
         raise ValueError(f"no ref named {name!r}")
     new_meta = dict(meta)
     new_meta["refs"] = {k: v for k, v in meta["refs"].items() if k != name}
-    _publish_metadata(table_dir, new_meta)
+    _publish_metadata(table_dir, version, new_meta)
 
 
-def _publish_metadata(table_dir: str, new_meta: dict) -> None:
-    """Write a new metadata version via the atomic tmp+hard-link create; a
-    concurrent committer winning the version raises CommitConflict (retry
-    against the fresh state)."""
-    version = current_version(table_dir)
-    meta_path = os.path.join(_meta_dir(table_dir), f"v{version + 1}.metadata.json")
+def _publish_metadata(
+    table_dir: str, version: int, new_meta: dict, snap_id: int | None = None
+) -> None:
+    """Publish ``new_meta`` as v{version+1}.metadata.json — the one
+    metadata publish of every writer. ``version`` is the version the
+    caller's single _resolve_state read returned (0 before the first
+    commit), so new metadata only ever replaces the state it was built on.
+
+    Optimistic concurrency (the hadoop catalog's create-if-absent rename):
+    only ONE writer may create v{N+1}. Write the full payload to a tmp
+    file, fsync, then os.link(tmp, meta_path) — link both (a) fails iff
+    the path exists (exactly one racing writer wins this version) and (b)
+    publishes COMPLETE content in one atomic metadata operation, so a
+    reader can never observe a half-flushed winner (an O_EXCL create then
+    buffered write let a losing committer read the winner's still-flushing
+    file, classify it as torn and overwrite it — a silently lost
+    snapshot). A writer whose read went stale therefore raises
+    CommitConflict instead of publishing over the winner; the caller
+    re-reads table state and retries. A commit passes its ``snap_id``:
+    snapshot ids are a pure function of (table, sequence, manifests), so a
+    CRASH REPLAY of the same commit reproduces the existing file's id and
+    is welcomed through _reconcile_existing_commit, while a different id
+    still conflicts. This is what turns two uncoordinated writers from
+    silent lineage corruption (observed: duplicate wave snapshots with
+    racing file listings) into a detected conflict.
+
+    The version-hint swap afterwards is a fast-path convenience, NOT the
+    commit point — a crash right before it leaves a committed table
+    (resolution lists v{version+1})."""
+    new_version = version + 1
+    meta_path = os.path.join(_meta_dir(table_dir), f"v{new_version}.metadata.json")
     tmp_meta = meta_path + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
     with open(tmp_meta, "w") as f:
         f.write(json.dumps(new_meta, indent=2))
         f.flush()
         os.fsync(f.fileno())
     try:
-        os.link(tmp_meta, meta_path)
-    except FileExistsError:
-        raise CommitConflict(
-            f"{meta_path} committed concurrently; retry"
-        ) from None
+        try:
+            os.link(tmp_meta, meta_path)
+        except FileExistsError:
+            if snap_id is None:
+                raise CommitConflict(
+                    f"{meta_path} committed concurrently; re-read and retry"
+                ) from None
+            _reconcile_existing_commit(meta_path, tmp_meta, snap_id)
     finally:
         try:
             os.unlink(tmp_meta)
@@ -1469,7 +1459,7 @@ def _publish_metadata(table_dir: str, new_meta: dict) -> None:
             pass
     tmp = _hint_path(table_dir) + f".tmp.{os.getpid()}"
     with open(tmp, "w") as f:
-        f.write(str(version + 1))
+        f.write(str(new_version))
     os.replace(tmp, _hint_path(table_dir))
 
 
@@ -1500,9 +1490,7 @@ def snapshot_files(
         # an empty table, not an error
         return []
     snap = meta["snapshots"][_snapshot_index(meta["snapshots"], sid)]
-    schema = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
+    schema = _current_schema(meta)
     ids_by_name = {
         f["name"]: (f["id"], f["type"])
         for f in schema["fields"]
@@ -1514,7 +1502,13 @@ def snapshot_files(
     }
     _, manifests = avro_io.read_container(open(snap["manifest-list"], "rb").read())
     pf = partition_filter or {}
-    known_specs = {sp["spec-id"] for sp in meta.get("partition-specs", [])}
+    # spec field names straight from the specs: resolving a spec's source
+    # columns against the CURRENT schema would fail on an old spec whose
+    # source column is gone, and names are all the filter needs
+    spec_names = {
+        sp["spec-id"]: {f["name"] for f in sp["fields"]}
+        for sp in meta.get("partition-specs", [])
+    }
     if pf:
         # fail LOUD on keys no spec defines: per-manifest key dropping is
         # the spec-evolution courtesy (files under an older spec are kept
@@ -1522,9 +1516,7 @@ def snapshot_files(
         # EVERY spec — a typo or a non-partition column — would silently
         # return the FULL table (fail-open), and delete_where-style callers
         # scope destructive operations with this filter
-        all_names: set = set()
-        for sid in known_specs:
-            all_names |= {f["name"] for f in _partition_specs(meta, sid)}
+        all_names = set().union(*spec_names.values())
         unknown = sorted(set(pf) - all_names)
         if unknown:
             raise ValueError(
@@ -1532,26 +1524,17 @@ def snapshot_files(
                 f"partition spec of {table_dir} (spec fields: "
                 f"{sorted(all_names)})"
             )
-    spec_names: dict[int, set] = {}
     out: list[DataFile] = []
     for mf in manifests:
         if mf.get("content", 0) != 0:  # delete manifest: not data files
             continue
         mf_sid = mf.get("partition_spec_id", 0)
-        if pf and mf_sid not in spec_names:
-            spec_names[mf_sid] = (
-                {f["name"] for f in _partition_specs(meta, mf_sid)}
-                if mf_sid in known_specs
-                else set()
-            )
         # after partition spec evolution a filter key may not exist in an
         # OLDER manifest's spec: those files are conservatively KEPT
         # (metadata skipping is an optimization — read_snapshot applies
         # the exact residual filter for identity columns), never pruned
         # by a spec-absent key comparing against None
-        mpf = (
-            {k: v for k, v in pf.items() if k in spec_names[mf_sid]} if pf else {}
-        )
+        mpf = {k: v for k, v in pf.items() if k in spec_names.get(mf_sid, ())}
         _, entries = avro_io.read_container(open(mf["manifest_path"], "rb").read())
         for e in entries:
             if e["status"] == 2:  # DELETED
@@ -1675,9 +1658,7 @@ def commit_parquet_dir(
 
     meta = current_metadata(table_dir)
     if meta is not None:
-        schema = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-        )
+        schema = _current_schema(meta)
     else:
         if spark_schema is None:
             raise ValueError("first commit needs the table schema")
@@ -1944,9 +1925,7 @@ def read_snapshot(
     meta = current_metadata(table_dir)
     files = snapshot_files(table_dir, snapshot_id, partition_filter, range_filter)
     dels = snapshot_delete_files(table_dir, snapshot_id)
-    cur_schema = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
+    cur_schema = _current_schema(meta)
     ddl = _spark_ddl(cur_schema)
     if not files:
         # every file pruned (or an empty snapshot): an empty TYPED frame,
@@ -2142,13 +2121,14 @@ def expire_snapshots(
     always kept) — the table-hygiene pass a long-lived 100 TB table needs so
     metadata and manifest counts stay bounded by retention, not job count.
 
-    Writes a new metadata version (atomic version-hint swap, like commits).
+    Publishes one new metadata version through _publish_metadata, like
+    every metadata writer (a concurrent commit raises CommitConflict).
     Manifest lists of expired snapshots — and manifests no surviving
     snapshot references — become removable; data files are never touched
     here (append-only tables share data files across snapshots via manifest
     reuse; see orphan_files for data-level hygiene). Dry-run by default:
     ``remove=True`` actually unlinks."""
-    meta = current_metadata(table_dir)
+    version, meta = _resolve_state(table_dir)
     if meta is None:
         raise FileNotFoundError(f"no iceberg table at {table_dir}")
     snaps = meta["snapshots"]
@@ -2183,33 +2163,7 @@ def expire_snapshots(
         e for e in meta["snapshot-log"] if e["snapshot-id"] in keep_ids
     ]
     new_meta["last-updated-ms"] = ts
-    version = current_version(table_dir)
-    new_version = version + 1
-    meta_dir = _meta_dir(table_dir)
-    meta_path = os.path.join(meta_dir, f"v{new_version}.metadata.json")
-    # same atomic tmp+hard-link publish as commits (a reader can never see
-    # a half-flushed metadata file); expiry racing a concurrent commit
-    # must NOT silently overwrite its snapshot, so a loser raises
-    tmp_meta = meta_path + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-    with open(tmp_meta, "w") as f:
-        f.write(json.dumps(new_meta, indent=2))
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp_meta, meta_path)
-    except FileExistsError:
-        raise CommitConflict(
-            f"{meta_path} committed concurrently; re-run expiry"
-        ) from None
-    finally:
-        try:
-            os.unlink(tmp_meta)
-        except OSError:
-            pass
-    tmp = _hint_path(table_dir) + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        f.write(str(new_version))
-    os.replace(tmp, _hint_path(table_dir))
+    _publish_metadata(table_dir, version, new_meta)
 
     if remove:
         for p in removable:
@@ -2236,7 +2190,7 @@ def rewrite_manifests(table_dir: str, ts_ms: int | None = None) -> int | None:
     delete sequence gate are all preserved; the superseded manifests
     become expirable with their old snapshots. No-op (returns None) when
     there is nothing to fold."""
-    meta = current_metadata(table_dir)
+    version, meta = _resolve_state(table_dir)
     if meta is None:
         raise FileNotFoundError(f"no iceberg table at {table_dir}")
     cur_id = meta.get("current-snapshot-id", -1)
@@ -2340,7 +2294,7 @@ def rewrite_manifests(table_dir: str, ts_ms: int | None = None) -> int | None:
     new_meta["snapshot-log"] = meta["snapshot-log"] + [
         {"timestamp-ms": ts, "snapshot-id": snap_id}
     ]
-    _publish_metadata(table_dir, new_meta)
+    _publish_metadata(table_dir, version, new_meta)
     return snap_id
 
 
@@ -2425,8 +2379,6 @@ def metadata_table(spark, table_dir: str, kind: str):
     scripts. Everything comes from the manifest walk — a driver-side
     metadata read, bounded by file count, no data file opened; the frames
     are small and the point is the SQL surface, not parallelism."""
-    from pyspark.sql import functions as F
-
     meta = current_metadata(table_dir)
     if meta is None:
         raise FileNotFoundError(f"no iceberg table at {table_dir}")
@@ -2606,9 +2558,7 @@ def read_changelog(
         if to_snapshot_id is None
         else _snapshot_index(snaps, to_snapshot_id) + 1
     )
-    cur_schema = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
+    cur_schema = _current_schema(meta)
     ddl = _spark_ddl(cur_schema)
     names = [f["name"] for f in cur_schema["fields"]]
     types = {f["name"]: _spark_type(f["type"]) for f in cur_schema["fields"]}
@@ -2727,9 +2677,7 @@ def read_incremental(
     """DataFrame over only the rows appended after ``since_snapshot_id``.
     Empty typed frame when nothing is new."""
     meta = current_metadata(table_dir)
-    cur_schema = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
+    cur_schema = _current_schema(meta)
     files = added_files(table_dir, since_snapshot_id, to_snapshot_id)
     if not files:
         from ..session import empty_df

@@ -355,6 +355,62 @@ class TestConcurrentCommit:
         assert not any(f.path.startswith(w0a) for f in files)
         assert ice.read_snapshot(spark, table).count() == 20
 
+    @pytest.mark.parametrize(
+        "writer",
+        ["commit_append", "set_ref", "remove_ref", "stage_snapshot",
+         "publish_branch", "rollback", "expire_snapshots", "rewrite_manifests"],
+    )
+    def test_stale_read_never_loses_a_concurrent_commit(
+        self, spark, docs_df, tmp_path, monkeypatch, writer
+    ):
+        """A writer builds its new metadata from ONE state read and
+        publishes against the version of that read. Here only the writer's
+        first read is stale (every later read is live) while a concurrent
+        commit s3 has landed: the writer must raise CommitConflict, and s3
+        must stay in the history and current — not be dropped by a publish
+        of stale content at the next free version."""
+        from parquet_to_arrow_spark.sources.iceberg_meta import CommitConflict
+
+        table = str(tmp_path / "table")
+        dirs = [str(tmp_path / n) for n in ("a", "b", "c")]
+        for i, d in enumerate(dirs):
+            docs_df.filter(f"doc_id % 3 = {i}").coalesce(1).write.parquet(d)
+        s1 = ice.commit_parquet_dir(table, dirs[0], spark_schema=docs_df.schema, ts_ms=1)
+        ice.commit_parquet_dir(table, dirs[1], ts_ms=2)
+        if writer == "publish_branch":
+            ice.stage_snapshot(table, "audit")  # main steps back to s1
+        if writer == "remove_ref":
+            ice.set_ref(table, "pin", s1)
+        stale = ice._resolve_state(table)
+        s3 = ice.commit_parquet_dir(table, dirs[2], ts_ms=3)  # lands concurrently
+
+        live = ice._resolve_state
+        calls = []
+
+        def first_read_stale(table_dir):
+            calls.append(table_dir)
+            return stale if len(calls) == 1 else live(table_dir)
+
+        monkeypatch.setattr(ice, "_resolve_state", first_read_stale)
+        run = {
+            "commit_append": lambda: ice.commit_append(
+                table, [ice.DataFile(os.path.join(dirs[0], "x.parquet"), 1, 1)],
+                ts_ms=4),
+            "set_ref": lambda: ice.set_ref(table, "tag1", s1),
+            "remove_ref": lambda: ice.remove_ref(table, "pin"),
+            "stage_snapshot": lambda: ice.stage_snapshot(table, "audit"),
+            "publish_branch": lambda: ice.publish_branch(table, "audit"),
+            "rollback": lambda: ice.rollback(table, s1),
+            "expire_snapshots": lambda: ice.expire_snapshots(table, ts_ms=4),
+            "rewrite_manifests": lambda: ice.rewrite_manifests(table, ts_ms=4),
+        }[writer]
+        with pytest.raises(CommitConflict):
+            run()
+        monkeypatch.undo()
+
+        assert s3 in [s["snapshot-id"] for s in ice.snapshots(table)]
+        assert ice.current_metadata(table)["current-snapshot-id"] == s3
+
 
 class TestPartitionedTable:
     def test_identity_partition_commit_prune_and_read(self, spark, tmp_path):
@@ -2670,6 +2726,34 @@ class TestPartitionSpecEvolution:
             w = w.partitionBy(*part)
         w.parquet(d)
         return d, df.schema
+
+    def test_partition_filter_tolerates_spec_with_dropped_source(
+        self, spark, tmp_path
+    ):
+        """A spec whose source column is absent from the current schema
+        (another writer dropped the column after evolving away from it)
+        must not break the filter's unknown-key check: names come from the
+        specs themselves. A key no spec defines still raises."""
+        table = str(tmp_path / "t")
+        rows = [(1, "en", "web"), (2, "de", "web"), (3, "en", "books")]
+        d0, schema = self._mk(spark, tmp_path, ["source"], rows, 1)
+        ice.commit_parquet_dir(
+            table, d0, spark_schema=schema, ts_ms=1, partition_by=["source"]
+        )
+        version, meta = ice._resolve_state(table)
+        meta["partition-specs"].append(
+            {"spec-id": 1, "fields": [{"name": "gone", "transform": "identity",
+                                       "source-id": 99, "field-id": 1001}]}
+        )
+        with open(os.path.join(table, "metadata",
+                               f"v{version + 1}.metadata.json"), "w") as f:
+            json.dump(meta, f)
+
+        web = ice.snapshot_files(table, partition_filter={"source": "web"})
+        assert [f.partition for f in web] == [{"source": "web"}]
+        assert sum(f.record_count for f in web) == 2
+        with pytest.raises(ValueError, match="not defined by any"):
+            ice.snapshot_files(table, partition_filter={"sorce": "web"})
 
     def test_evolve_identity_to_identity_reads_and_prunes_both_ways(
         self, spark, tmp_path
