@@ -13,9 +13,9 @@ greedily from frequency counts over a sample; the stream is re-coded as
 - Decompression is fully vectorized: escape/literal positions are resolved
   from 0xFF-run parity, then a (512 x 8) symbol matrix gather emits output.
 
-Used for the byte view of token streams and for UTF-8 string columns
-(documents.text). Round-trip is byte-exact (reference round-trip contract:
-/root/reference/README.md:93-95).
+The byte-blob codec of string and binary columns (documents.text); the
+integer token streams never reach it. Round-trip is byte-exact (reference
+round-trip contract: README.md:93-95).
 """
 
 from __future__ import annotations
@@ -141,38 +141,21 @@ def decompress(payload: bytes, symbols: list[bytes]) -> bytes:
     return mat[keep].tobytes()
 
 
-# --- integer-codec interface (byte view of the token stream) ---------------
+# --- byte-blob codec interface (column._encode_blob / _decode_blob) --------
+
+PROBE_BYTES = 4096
 
 
-def encode(values: np.ndarray) -> tuple[bytes, dict]:
-    data = values.tobytes()
-    symbols = build_symbol_table(data)
-    payload = compress(data, symbols)
-    meta = {
-        "dtype": values.dtype.name,
-        "symbols": [s.hex() for s in symbols],
-    }
-    return payload, meta
+def estimate(blob: bytes, symbols: list[bytes]) -> int:
+    """Compressed size of the blob's first PROBE_BYTES under ``symbols``:
+    the measured probe the column layer gates a full compress on
+    (SURVEY.md §7.4 item 4)."""
+    return len(compress(blob[:PROBE_BYTES], symbols))
 
 
-def decode(payload: bytes, meta: dict, n: int) -> np.ndarray:
-    symbols = [bytes.fromhex(h) for h in meta["symbols"]]
-    raw = decompress(payload, symbols)
-    return np.frombuffer(raw, dtype=np.dtype(meta["dtype"]), count=n)
+def encode(blob: bytes, symbols: list[bytes]) -> tuple[bytes, dict]:
+    return compress(blob, symbols), {"symbols": [s.hex() for s in symbols]}
 
 
-def estimate(stats: dict) -> int:
-    """Sample-compression extrapolation (measured, not guessed —
-    cf. SURVEY.md §7.4 item 4)."""
-    sample = stats.get("byte_sample", b"")
-    total = stats["n"] * stats["itemsize"]
-    if not sample or total == 0:
-        return 1 << 62
-    # ranking estimate only: an 8 KiB training slice ranks within noise of
-    # the full 64 KiB sample at ~1/6 the probe cost (the winning codec
-    # re-trains on its real input anyway)
-    symbols = build_symbol_table(sample[:8192])
-    compressed = len(compress(sample[:4096], symbols))
-    ratio = compressed / max(len(sample[:4096]), 1)
-    table_bytes = sum(len(s) + 1 for s in symbols) + 2
-    return int(total * ratio) + table_bytes
+def decode(payload: bytes, meta: dict, n: int) -> bytes:
+    return decompress(payload, [bytes.fromhex(h) for h in meta["symbols"]])

@@ -127,21 +127,17 @@ def _encode_blob(blob: bytes, n_strings: int = 0, fixed_width: int = 0) -> dict:
         if enc is not None and len(enc["payload"]) < len(blob):
             return enc
     symbols = fsst.build_symbol_table(blob)
-    sample = blob[:4096]
-    if symbols and len(fsst.compress(sample, symbols)) < _FSST_SAMPLE_GATE * len(sample):
-        payload = fsst.compress(blob, symbols)
+    probe = min(len(blob), fsst.PROBE_BYTES)
+    if symbols and fsst.estimate(blob, symbols) < _FSST_SAMPLE_GATE * probe:
+        payload, meta = fsst.encode(blob, symbols)
         if len(payload) < len(blob):
-            return {
-                "codec": "fsst_bytes",
-                "meta": {"symbols": [s.hex() for s in symbols]},
-                "payload": payload,
-            }
+            return {"codec": "fsst_bytes", "meta": meta, "payload": payload}
     return {"codec": "plain_bytes", "meta": {}, "payload": blob}
 
 
 def _decode_blob(enc_codec: str, meta: dict, payload: bytes, n: int = 0) -> bytes:
     if enc_codec == "fsst_bytes":
-        return fsst.decompress(payload, [bytes.fromhex(h) for h in meta["symbols"]])
+        return fsst.decode(payload, meta, n)
     if enc_codec == "planes_bytes":
         return _decode_fixed_planes(meta, payload, n)
     return payload

@@ -27,6 +27,8 @@ the pre-metadata fallback kept for compatibility.
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
 
 import pandas as pd
@@ -106,17 +108,10 @@ def iceberg_roundtrip_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     (metadata-only commit — the data file is referenced in place, zero
     copies) and read it back through the snapshot walk. Identity through
     the table format IS the check; the oracle is a plain SELECT."""
-    import hashlib
-
     import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, "documents.parquet")
-    # key the scratch table by the source file's identity AND content stamp
-    # (size + mtime) so a regenerated corpus re-commits instead of serving
-    # stale metadata, and by uid so users on a shared box cannot collide
-    st = os.stat(src)
-    stamp = f"{os.path.abspath(src)}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}"
-    table = f"/tmp/iceberg_docs_{hashlib.md5(stamp.encode()).hexdigest()[:12]}"
+    table = _scratch_table(sf_dir, "docs")
     if not is_metadata_table(table):
         pf = pq.ParquetFile(src)
         iceberg_meta.commit_append(
@@ -129,17 +124,31 @@ def iceberg_roundtrip_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@functools.lru_cache(maxsize=1)
+def _writer_digest() -> str:
+    """md5 of the table writer's source (this module, iceberg_meta,
+    avro_io, puffin): part of every scratch-table stamp, so tables written
+    by an older writer are rebuilt rather than served."""
+    h = hashlib.md5()
+    here = os.path.dirname(os.path.abspath(__file__))
+    for name in ("iceberg.py", "iceberg_meta.py", "avro_io.py", "puffin.py"):
+        with open(os.path.join(here, name), "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
+
+
 def _scratch_table(sf_dir: str, tag: str) -> str:
     """Deterministic per-corpus scratch-table path: keyed by the source
     parquet's identity AND content stamp (size + mtime) so a regenerated
-    corpus re-commits instead of serving stale metadata, and by uid so
-    users on a shared box cannot collide (same scheme as
-    iceberg_roundtrip_documents)."""
-    import hashlib
-
+    corpus re-commits instead of serving stale metadata, by the writer's
+    source digest so a changed writer rebuilds it, and by uid so users on
+    a shared box cannot collide."""
     src = os.path.join(sf_dir, "documents.parquet")
     st = os.stat(src)
-    stamp = f"{os.path.abspath(src)}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:{tag}"
+    stamp = (
+        f"{os.path.abspath(src)}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:{tag}"
+        f":{_writer_digest()}"
+    )
     return f"/tmp/iceberg_{tag}_{hashlib.md5(stamp.encode()).hexdigest()[:12]}"
 
 

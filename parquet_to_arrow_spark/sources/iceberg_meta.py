@@ -816,7 +816,10 @@ def commit_append(
     snapshot/sequence as EXISTING entries), the files themselves stay on
     disk for time travel until snapshot expiry. Combined with ``files``
     carrying the rewritten survivors-of-the-predicate, this is a full
-    CoW DELETE commit.
+    CoW DELETE commit. Every path must be live in the state this commit
+    reads: a rewrite planned before a concurrent commit removed one of
+    its files raises CommitConflict instead of resurrecting that commit's
+    deleted rows.
 
     ``partition_by`` (first commit only): identity-partition the table by
     these columns — the spec gets transform "identity" fields (ids from
@@ -1117,13 +1120,13 @@ def commit_append(
         updated_props[idx_prop] = json.dumps(index)
     if remove_paths:
         removed = {os.path.abspath(p) for p in remove_paths}
+        live_paths: set[str] = set()
         rewritten: list[dict] = []
         for mf in prev_manifests:
             _, m_entries = avro_io.read_container(open(mf["manifest_path"], "rb").read())
-            keep = [
-                e for e in m_entries
-                if e["status"] != 2 and e["data_file"]["file_path"] not in removed
-            ]
+            live = [e for e in m_entries if e["status"] != 2]
+            live_paths.update(e["data_file"]["file_path"] for e in live)
+            keep = [e for e in live if e["data_file"]["file_path"] not in removed]
             if len(keep) == len(m_entries):
                 rewritten.append(mf)  # untouched manifest carried forward
                 continue
@@ -1168,6 +1171,15 @@ def commit_append(
                         e["data_file"]["record_count"] for e in keep
                     ),
                 )
+            )
+        gone = sorted(removed - live_paths)
+        if gone:
+            # planned on an older snapshot: a concurrent commit already
+            # removed these files, and committing the rewrite would bring
+            # back rows it deleted and duplicate the rest
+            raise CommitConflict(
+                f"{len(gone)} remove_paths are no longer live (e.g. {gone[0]}); "
+                "re-plan on the current snapshot"
             )
         prev_manifests = rewritten
     manifests = prev_manifests + (

@@ -3,8 +3,8 @@
 The Spark-scale generalization of the reference's metadata probe — it decides
 per column from row-group-0 metadata whether to preserve dictionary encoding
 (reference: src/parquet-to-arrow.cc:25-33). Here the decision inputs are
-measured chunk statistics: value range, run structure, cardinality estimate,
-and a deterministic byte sample for FSST size extrapolation.
+measured chunk statistics: value range, run structure, cardinality estimate
+and delta width.
 
 All passes are vectorized numpy; cardinality is estimated on a fixed-size
 prefix sample (deterministic) because the exact unique pass is only needed if
@@ -16,7 +16,6 @@ from __future__ import annotations
 import numpy as np
 
 _CARD_SAMPLE = 1 << 16
-_BYTE_SAMPLE = 1 << 16
 
 
 def int_stats(values: np.ndarray, vmin: int | None = None, vmax: int | None = None) -> dict:
@@ -29,7 +28,7 @@ def int_stats(values: np.ndarray, vmin: int | None = None, vmax: int | None = No
         "itemsize": values.dtype.itemsize,
     }
     if n == 0:
-        stats.update(vmin=0, vmax=0, n_runs=0, max_run=0, card=0, byte_sample=b"")
+        stats.update(vmin=0, vmax=0, n_runs=0, max_run=0, card=0)
         return stats
     stats["vmin"] = int(values.min()) if vmin is None else int(vmin)
     stats["vmax"] = int(values.max()) if vmax is None else int(vmax)
@@ -75,5 +74,4 @@ def int_stats(values: np.ndarray, vmin: int | None = None, vmax: int | None = No
         stats["delta_width"] = (int(ds.max()) - int(ds.min())).bit_length()
     else:
         stats["delta_width"] = 0
-    stats["byte_sample"] = values[: _BYTE_SAMPLE // values.dtype.itemsize].tobytes()
     return stats

@@ -14,7 +14,7 @@ import pytest
 from parquet_to_arrow_spark.codecs import ALL, bitpack, delta, dictionary, for_, fsst, plain, rle
 from parquet_to_arrow_spark.codecs.base import pack_bits, unpack_bits
 from parquet_to_arrow_spark.column import encode_int_array, decode_int_array
-from parquet_to_arrow_spark.selector import select_int_codec
+from parquet_to_arrow_spark.selector import rank_int_codecs
 from parquet_to_arrow_spark.stats import int_stats
 
 I32 = np.int32
@@ -53,7 +53,7 @@ NONNEG = {k: v for k, v in FIXTURES.items() if len(v) == 0 or v.min() >= 0}
 
 
 @pytest.mark.parametrize("name", list(FIXTURES))
-@pytest.mark.parametrize("codec", ["plain", "for", "delta", "rle", "dict", "fsst"])
+@pytest.mark.parametrize("codec", ["plain", "for", "delta", "rle", "dict"])
 def test_codec_roundtrip(codec, name):
     values = FIXTURES[name]
     mod = ALL[codec]
@@ -160,7 +160,7 @@ SELECTOR_EXPECT = {
 
 @pytest.mark.parametrize("name", list(SELECTOR_EXPECT))
 def test_selector_picks_sensible_codec(name):
-    choice = select_int_codec(int_stats(FIXTURES[name]))
+    choice = rank_int_codecs(int_stats(FIXTURES[name]))[0][1]
     expect = SELECTOR_EXPECT[name]
     assert choice in (expect if isinstance(expect, set) else {expect})
 
@@ -179,3 +179,19 @@ def test_selector_deterministic():
     values = FIXTURES["uniform_small_vocab"]
     choices = {encode_int_array(values)["codec"] for _ in range(3)}
     assert len(choices) == 1
+
+
+def test_int_encode_never_probes_fsst(monkeypatch):
+    """FSST is the byte-blob codec only: an integer part never builds a
+    symbol table, even where every analytic codec leaves PLAIN-size output."""
+
+    def boom(*_args, **_kwargs):
+        raise AssertionError("integer encode built an FSST symbol table")
+
+    monkeypatch.setattr(fsst, "build_symbol_table", boom)
+    values = FIXTURES["full_range_int32"]
+    enc = encode_int_array(values)
+    np.testing.assert_array_equal(
+        decode_int_array(enc["codec"], enc["meta"], enc["payload"], len(values)), values
+    )
+    assert "fsst" not in ALL

@@ -355,6 +355,35 @@ class TestConcurrentCommit:
         assert not any(f.path.startswith(w0a) for f in files)
         assert ice.read_snapshot(spark, table).count() == 20
 
+    def test_stale_copy_on_write_removal_fails_closed(self, tmp_path):
+        """A copy-on-write rewrite planned before a concurrent rewrite
+        removed its file ("remove f1, add f3" after "remove f1, add f2")
+        reads a state where f1 is no longer live. Publishing it would bring
+        f1's deleted rows back as f3; it must raise CommitConflict and
+        leave the table at [f2]."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        from parquet_to_arrow_spark.sources.iceberg_meta import CommitConflict
+
+        table = str(tmp_path / "table")
+        paths = {}
+        for name, ids in (("f1", range(10)), ("f2", range(5)), ("f3", range(5, 10))):
+            paths[name] = str(tmp_path / f"{name}.parquet")
+            pq.write_table(pa.table({"id": pa.array(ids, pa.int64())}), paths[name])
+
+        def data_file(name):
+            p = paths[name]
+            return ice.DataFile(p, pq.ParquetFile(p).metadata.num_rows, os.path.getsize(p))
+
+        schema = StructType([StructField("id", LongType())])
+        ice.commit_append(table, [data_file("f1")], spark_schema=schema, ts_ms=1)
+        ice.commit_append(table, [data_file("f2")], ts_ms=2, remove_paths={paths["f1"]})
+        with pytest.raises(CommitConflict):
+            ice.commit_append(table, [data_file("f3")], ts_ms=3, remove_paths={paths["f1"]})
+        assert [f.path for f in ice.snapshot_files(table)] == [paths["f2"]]
+
     @pytest.mark.parametrize(
         "writer",
         ["commit_append", "set_ref", "remove_ref", "stage_snapshot",
@@ -410,6 +439,23 @@ class TestConcurrentCommit:
 
         assert s3 in [s["snapshot-id"] for s in ice.snapshots(table)]
         assert ice.current_metadata(table)["current-snapshot-id"] == s3
+
+
+class TestScratchTables:
+    def test_scratch_path_tracks_the_writer_source(self, tmp_path, monkeypatch):
+        """Query scratch tables are keyed by the writer's source digest: a
+        changed writer gets a fresh path (and so a rebuild), not the table
+        an older writer left behind."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from parquet_to_arrow_spark.sources import iceberg
+
+        pq.write_table(pa.table({"doc_id": [1]}), str(tmp_path / "documents.parquet"))
+        before = iceberg._scratch_table(str(tmp_path), "docs")
+        assert iceberg._scratch_table(str(tmp_path), "docs") == before
+        monkeypatch.setattr(iceberg, "_writer_digest", lambda: "0" * 32)
+        assert iceberg._scratch_table(str(tmp_path), "docs") != before
 
 
 class TestPartitionedTable:

@@ -238,7 +238,7 @@ def test_column_codec_lineage(spark, tokens):
     assert len(lineage) > 0
     for r in lineage:
         assert r["token_groups"] >= 1
-        assert r["lengths_codec"] in {"plain", "bitpack", "for", "rle", "dict", "fsst"}
+        assert r["lengths_codec"] in {"plain", "bitpack", "for", "rle", "dict"}
         assert r["doc_id_mode"] in {"dict", "flat"}
         assert r["source_mode"] in {"dict", "flat"}
 
@@ -250,7 +250,7 @@ def test_group_codec_metrics(spark, tokens):
     encoded = encode_tokens_df(tokens).cache()
     rows = group_codec_metrics(encoded).collect()
     assert rows, "expected per-group lineage"
-    assert {r["codec"] for r in rows} <= {"plain", "bitpack", "for", "rle", "dict", "fsst"}
+    assert {r["codec"] for r in rows} <= {"plain", "bitpack", "for", "rle", "dict"}
     # group-level values roll up to the chunk totals exactly
     t = totals(manifest_from_encoded(encoded))
     assert sum(r["n_values"] for r in rows) == t["n_values"]

@@ -153,10 +153,7 @@ def main(argv: list[str] | None = None) -> int:
         # coerce by the COLUMN's declared type, never by what the value
         # looks like: '0042' against a string column must stay '0042'
         meta = ice.current_metadata(args.table)
-        schema = next(
-            s for s in meta["schemas"]
-            if s["schema-id"] == meta["current-schema-id"]
-        )
+        schema = ice._current_schema(meta)
         ctype = next(
             (f["type"] for f in schema["fields"] if f["name"] == args.column),
             "string",
