@@ -2,9 +2,11 @@
 
 The job is resumable from a checkpoint table keyed by partition bucket
 (``pkey``): after each successful bucket write the pkey is recorded; a
-restart anti-joins pending buckets against the checkpoint (SURVEY.md §2.3 —
-left anti join) and only encodes what's missing. The reference's analogue is
-its row-range skip that never decodes skipped rows
+restart (scripts/encode_job.py) collects the done set and filters the keyed
+input to the pending keys, so only what's missing is encoded. ``pending``
+is the same cut as a broadcast left anti join against the checkpoint
+(SURVEY.md §2.3) for callers that keep the done set as a DataFrame. The
+reference's analogue is its row-range skip that never decodes skipped rows
 (src/parquet-to-text-stream.cc:146-159): here "skip" is partition pruning by
 key, which Spark pushes into the scan.
 

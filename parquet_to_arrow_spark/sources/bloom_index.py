@@ -152,11 +152,9 @@ def update_bloom_index(
 def _refresh_index(
     spark, table_or_path: str, column: str, fpp: float | None, full: bool
 ) -> tuple[str, int]:
-    meta = iceberg_meta.current_metadata(table_or_path)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_or_path}")
+    _, meta = iceberg_meta._table_state(table_or_path)
     sid = meta.get("current-snapshot-id")
-    sizes = {f.path: f.file_size for f in iceberg_meta.snapshot_files(table_or_path)}
+    sizes = {f.path: f.file_size for f in iceberg_meta._live_files(meta, sid)[0]}
     live = sorted(sizes)
     if fpp is None:
         # the quantity that matters is EXPECTED FALSE-POSITIVE FILES per
@@ -287,12 +285,17 @@ def bloom_candidate_files(
     idx = _load_index(table_or_path, column)
     if idx is None:
         return None
-    out = []
-    for f in iceberg_meta.snapshot_files(table_or_path):
-        b = idx.get(f.path)
-        if b is None or b.might_contain(value):
-            out.append(f.path)
-    return out
+    return _might_hold(idx, iceberg_meta.snapshot_files(table_or_path), value)
+
+
+def _might_hold(idx: dict, files: list, value) -> list[str]:
+    """Paths of ``files`` whose filter in ``idx`` might contain ``value``;
+    files without a recorded filter stay candidates."""
+    return [
+        f.path
+        for f in files
+        if f.path not in idx or idx[f.path].might_contain(value)
+    ]
 
 
 _MAX_K = 64  # _params cap; the unrolled membership expression relies on it
@@ -316,6 +319,14 @@ def bloom_candidate_files_distributed(spark, table_or_path: str, column: str, va
     whose filter might contain the key, PLUS live files with no recorded
     filter (post-index appends — conservative by construction, same rule
     as the driver-side path). None when no index exists for the column."""
+    return _distributed_candidates(
+        spark, table_or_path, column, value, iceberg_meta.snapshot_files(table_or_path)
+    )
+
+
+def _distributed_candidates(spark, table_or_path: str, column: str, value, files):
+    """bloom_candidate_files_distributed over the live data ``files`` of
+    one snapshot."""
     from pyspark.sql import functions as F
 
     p = _index_path(table_or_path, column)
@@ -336,10 +347,7 @@ def bloom_candidate_files_distributed(spark, table_or_path: str, column: str, va
             f" >> CAST(pmod({pos}, 8) AS INT)) & 1 = 1)"
         )
     might = F.expr(" AND ".join(probes))
-    live = spark.createDataFrame(
-        [(f.path,) for f in iceberg_meta.snapshot_files(table_or_path)],
-        "path string",
-    )
+    live = spark.createDataFrame([(f.path,) for f in files], "path string")
     # unindexed live files (bits null after the left join) stay candidates;
     # the index side is file-count-sized — broadcast it
     joined = live.join(F.broadcast(idx), "path", "left")
@@ -361,22 +369,23 @@ def point_lookup(spark, table_or_path: str, column: str, value,
     lookup-sized either way."""
     from pyspark.sql import functions as F
 
-    meta = iceberg_meta.current_metadata(table_or_path)
-    if iceberg_meta.snapshot_delete_files(table_or_path) or (
-        meta is not None and iceberg_meta._partition_fields(meta)
-    ):
+    # one snapshot for the whole lookup: the delete probe, the candidate
+    # files and any fallback scan all come from this state read
+    _, meta = iceberg_meta._table_state(table_or_path)
+    sid = meta["current-snapshot-id"]
+    files, dels = iceberg_meta._live_files(meta, sid)
+    if dels or iceberg_meta._partition_fields(meta):
         # MoR deletes need the anti-join plan; partitioned tables need the
         # partition-literal re-injection — both live in read_snapshot
-        return iceberg_meta.read_snapshot(spark, table_or_path).filter(
-            F.col(column) == F.lit(value)
-        )
-    if distributed:
-        cdf = bloom_candidate_files_distributed(spark, table_or_path, column, value)
+        cands = None
+    elif distributed:
+        cdf = _distributed_candidates(spark, table_or_path, column, value, files)
         cands = None if cdf is None else [r["path"] for r in cdf.collect()]
     else:
-        cands = bloom_candidate_files(table_or_path, column, value)
+        idx = _load_index(table_or_path, column)
+        cands = None if idx is None else _might_hold(idx, files, value)
     if cands is None:
-        return iceberg_meta.read_snapshot(spark, table_or_path).filter(
+        return iceberg_meta.read_snapshot(spark, table_or_path, sid).filter(
             F.col(column) == F.lit(value)
         )
     schema = iceberg_meta._current_schema(meta)

@@ -325,8 +325,9 @@ def changelog_replay_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the replay is one window over (doc_id), a corpus-
     cardinality key — no small-key partition, no driver loop; this is the
-    probe-scale changelog check (scripts/lakehouse_probe.py changelog_leg,
-    2M rows x 16 waves) at driver scale."""
+    probe-scale changelog check (2M rows x 16 waves, recorded in
+    BENCH/BASELINE.md; its probe script has since been deleted) at driver
+    scale."""
     from pyspark.sql import Window
 
     table = _scratch_table(sf_dir, "cdc")
@@ -518,11 +519,9 @@ def _rewrite_files(
     import uuid
     from urllib.parse import unquote, urlparse
 
-    meta = iceberg_meta.current_metadata(table_or_path)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_or_path}")
+    _, meta = iceberg_meta._table_state(table_or_path)
     scan = iceberg_meta.read_snapshot(
-        spark, table_or_path, partition_filter=partition_filter
+        spark, table_or_path, meta["current-snapshot-id"], partition_filter
     ).withColumn("__file", F.input_file_name())
     affected_uris = [
         r["__file"] for r in hits(scan).select("__file").distinct().collect()
@@ -598,11 +597,13 @@ def _doomed_positions(
     pending deletes, so a re-delete never records a row twice."""
     if iceberg_available(spark):
         raise NotImplementedError("use the catalog's DELETE FROM on the jar path")
-    meta = iceberg_meta.current_metadata(table_or_path)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_or_path}")
+    _, meta = iceberg_meta._table_state(table_or_path)
     scan = iceberg_meta.read_snapshot(
-        spark, table_or_path, partition_filter=partition_filter, with_positions=True
+        spark,
+        table_or_path,
+        meta["current-snapshot-id"],
+        partition_filter,
+        with_positions=True,
     )
     return meta, scan.filter(predicate).select(
         F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
@@ -819,9 +820,7 @@ def delete_keys_mor(
     spec's row-delta ordering. Returns the snapshot id, or None for an empty key set."""
     import uuid
 
-    meta = iceberg_meta.current_metadata(table_or_path)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_or_path}")
+    _, meta = iceberg_meta._table_state(table_or_path)
     if isinstance(key_cols, str):
         key_cols = [key_cols]
     key_cols = key_cols or keys.columns
@@ -882,7 +881,7 @@ def upsert_keys_mor(
     )
 
 
-def _eq_affected(table_or_path: str, eq_dels, old_files) -> set[str]:
+def _eq_affected(meta: dict, eq_dels, old_files) -> set[str]:
     """Data files an equality delete can actually touch, narrowed by the
     manifests' column min/max bounds: a file whose recorded key range
     contains NO delete key cannot lose a row and is carried forward
@@ -896,7 +895,6 @@ def _eq_affected(table_or_path: str, eq_dels, old_files) -> set[str]:
 
     import pyarrow.parquet as pq
 
-    meta = iceberg_meta.current_metadata(table_or_path)
     schema = iceberg_meta._current_schema(meta)
     name_by_id = {f["id"]: f["name"] for f in schema["fields"]}
     conservative = {f.path for f in old_files}
@@ -953,13 +951,13 @@ def materialize_deletes(spark: SparkSession, table_or_path: str) -> int | None:
 
     from pyspark.sql import functions as F
 
-    dels = iceberg_meta.snapshot_delete_files(table_or_path)
+    _, meta = iceberg_meta._table_state(table_or_path)
+    sid = meta["current-snapshot-id"]
+    live_files, dels = iceberg_meta._live_files(meta, sid)
     if not dels:
         return None
-    meta = iceberg_meta.current_metadata(table_or_path)
     pos_dels = [f for f in dels if f.content == 1]
     eq_dels = [f for f in dels if f.content == 2]
-    live_files = iceberg_meta.snapshot_files(table_or_path)
     live = {f.path for f in live_files}
     affected_paths: set[str] = set()
     if pos_dels:
@@ -974,7 +972,7 @@ def materialize_deletes(spark: SparkSession, table_or_path: str) -> int | None:
     if eq_dels:
         max_dseq = max(f.sequence or 0 for f in eq_dels)
         old_files = [f for f in live_files if (f.sequence or 0) < max_dseq]
-        affected_paths |= _eq_affected(table_or_path, eq_dels, old_files)
+        affected_paths |= _eq_affected(meta, eq_dels, old_files)
     # read_snapshot already applies the deletes; keep positions to select
     # the affected files. __fp is the scanner's URI while affected_paths
     # are manifest abspaths — resolve the mapping exactly by collecting
@@ -982,7 +980,7 @@ def materialize_deletes(spark: SparkSession, table_or_path: str) -> int | None:
     # pruned) and decoding driver-side; a fully-deleted file simply has no
     # surviving URI and is removed without replacement rows, which is
     # correct
-    scan = iceberg_meta.read_snapshot(spark, table_or_path, with_positions=True)
+    scan = iceberg_meta.read_snapshot(spark, table_or_path, sid, with_positions=True)
     uri_by_path = {
         os.path.abspath(unquote(urlparse(r["__fp"]).path)): r["__fp"]
         for r in scan.select("__fp").distinct().collect()
@@ -1248,10 +1246,9 @@ def compact_files(
 
     if sort_by and zorder:
         raise ValueError("pass sort_by or zorder, not both")
-    meta = iceberg_meta.current_metadata(table_or_path)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_or_path}")
-    if iceberg_meta.snapshot_delete_files(table_or_path):
+    _, meta = iceberg_meta._table_state(table_or_path)
+    live_files, dels = iceberg_meta._live_files(meta, meta["current-snapshot-id"])
+    if dels:
         # compaction reads raw file paths (no delete anti-join) — silently
         # resurrecting MoR-deleted rows would be corruption, so refuse
         raise ValueError(
@@ -1261,7 +1258,7 @@ def compact_files(
     pfields = iceberg_meta._partition_fields(meta)
     default_sid = meta.get("default-spec-id", 0)
 
-    small = [f for f in iceberg_meta.snapshot_files(table_or_path) if f.file_size < target_bytes]
+    small = [f for f in live_files if f.file_size < target_bytes]
     # group by (spec id, that spec's partition tuple) — one group, key
     # (sid,), for unpartitioned. Files written under an OLDER spec
     # (partition spec evolution) compact as migration groups: their own

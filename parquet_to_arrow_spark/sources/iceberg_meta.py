@@ -18,7 +18,12 @@ fast-path hint). Every metadata writer — commits, refs, write-audit-
 publish, rollback, expiry, manifest rewrite — reads the table state once
 (_resolve_state) and publishes through _publish_metadata against the
 version it read, so a concurrent commit raises CommitConflict instead of
-being overwritten. Implemented on top of that: identity partitioning with
+being overwritten. Every reader — snapshot scans, file lists, changelog
+and incremental reads, metadata tables — likewise resolves ONE snapshot
+from one state read and takes that snapshot's data files and delete
+files from one walk of its manifest list (_live_files), so a commit
+landing mid-read can never pair one snapshot's files with another's
+deletes. Implemented on top of that: identity partitioning with
 manifest-level pruning, bucket[N] / truncate[W] / day / month / year
 partition transforms (spec murmur3 — published Appendix B hash vectors
 pinned in tests; negative-safe truncate; epoch-ordinal temporals;
@@ -46,6 +51,7 @@ independent Iceberg reader exists in this image).
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -337,6 +343,22 @@ def current_version(table_dir: str) -> int | None:
 
 def current_metadata(table_dir: str) -> dict | None:
     return _resolve_state(table_dir)[1]
+
+
+def _table_state(table_dir: str) -> tuple[int, dict]:
+    """(version, metadata) from one _resolve_state read; a path with no
+    table raises FileNotFoundError."""
+    version, meta = _resolve_state(table_dir)
+    if meta is None:
+        raise FileNotFoundError(f"no iceberg table at {table_dir}")
+    return version, meta
+
+
+def _read_avro(path: str) -> list[dict]:
+    """Records of one Avro container (a manifest list or a manifest): the
+    one Avro read of the metadata layer."""
+    with open(path, "rb") as f:
+        return avro_io.read_container(f.read())[1]
 
 
 def _current_schema(meta: dict) -> dict:
@@ -1086,9 +1108,7 @@ def commit_append(
     cur_id = base.get("current-snapshot-id", -1)
     if cur_id and cur_id != -1:
         cur_snap = next(s for s in base["snapshots"] if s["snapshot-id"] == cur_id)
-        _, prev_manifests = avro_io.read_container(
-            open(cur_snap["manifest-list"], "rb").read()
-        )
+        prev_manifests = _read_avro(cur_snap["manifest-list"])
     operation = "append"
     if delete_files:
         # spec row-delta commits: deletes-only = "delete", mixed = "overwrite"
@@ -1123,7 +1143,7 @@ def commit_append(
         live_paths: set[str] = set()
         rewritten: list[dict] = []
         for mf in prev_manifests:
-            _, m_entries = avro_io.read_container(open(mf["manifest_path"], "rb").read())
+            m_entries = _read_avro(mf["manifest_path"])
             live = [e for e in m_entries if e["status"] != 2]
             live_paths.update(e["data_file"]["file_path"] for e in live)
             keep = [e for e in live if e["data_file"]["file_path"] not in removed]
@@ -1256,6 +1276,14 @@ def _snapshot_index(snaps: list[dict], sid: int) -> int:
     )
 
 
+def _snapshot_range(snaps: list[dict], since_sid, to_sid) -> tuple[int, int]:
+    """[lo, hi) positions of the snapshots in (since, to]; None = from the
+    table's beginning / up to its last snapshot."""
+    lo = 0 if since_sid is None else _snapshot_index(snaps, since_sid) + 1
+    hi = len(snaps) if to_sid is None else _snapshot_index(snaps, to_sid) + 1
+    return lo, hi
+
+
 def snapshots(table_dir: str) -> list[dict]:
     meta = current_metadata(table_dir)
     return list(meta["snapshots"]) if meta else []
@@ -1291,9 +1319,7 @@ def set_ref(
         raise ValueError("'main' is managed by commits")
     if type not in ("tag", "branch"):
         raise ValueError(f"ref type must be tag or branch, not {type!r}")
-    version, meta = _resolve_state(table_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_dir}")
+    version, meta = _table_state(table_dir)
     sid = _resolve_sid(meta, snapshot_id)
     _snapshot_index(meta["snapshots"], sid)  # must exist (not expired)
     new_meta = dict(meta)
@@ -1316,9 +1342,7 @@ def stage_snapshot(
     snapshot id."""
     if branch == "main":
         raise ValueError("'main' is the publish target, not a staging branch")
-    version, meta = _resolve_state(table_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_dir}")
+    version, meta = _table_state(table_dir)
     cur = meta.get("current-snapshot-id")
     if cur in (None, -1):
         raise ValueError("no current snapshot to stage")
@@ -1348,9 +1372,7 @@ def publish_branch(table_dir: str, branch: str) -> int:
     drop the branch ref. The data files were in place since the staged
     commit; publishing is one metadata version, so the whole WAP cycle
     adds zero data writes. Returns the published snapshot id."""
-    version, meta = _resolve_state(table_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_dir}")
+    version, meta = _table_state(table_dir)
     ref = meta.get("refs", {}).get(branch)
     if ref is None:
         raise ValueError(f"no branch named {branch!r}")
@@ -1387,9 +1409,7 @@ def rollback(table_dir: str, snapshot_id) -> int:
     time-travelable, reclaimed later by expire_snapshots like any other
     unreferenced history. One metadata version; no data file is touched.
     Accepts a snapshot id or a ref name."""
-    version, meta = _resolve_state(table_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_dir}")
+    version, meta = _table_state(table_dir)
     sid = _resolve_sid(meta, snapshot_id)
     _snapshot_index(meta["snapshots"], sid)  # must exist (not expired)
     new_meta = dict(meta)
@@ -1409,9 +1429,7 @@ def remove_ref(table_dir: str, name: str) -> None:
     """Drop a named ref; its snapshot becomes expirable again."""
     if name == "main":
         raise ValueError("'main' is managed by commits")
-    version, meta = _resolve_state(table_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_dir}")
+    version, meta = _table_state(table_dir)
     if name not in meta.get("refs", {}):
         raise ValueError(f"no ref named {name!r}")
     new_meta = dict(meta)
@@ -1475,44 +1493,88 @@ def _publish_metadata(
     os.replace(tmp, _hint_path(table_dir))
 
 
-def snapshot_files(
-    table_dir: str,
-    snapshot_id: int | None = None,
-    partition_filter: dict | None = None,
-    range_filter: dict | None = None,
-) -> list[DataFile]:
-    """Data files reachable from a snapshot (default: current), resolved
-    through manifest list -> manifests — the same two-hop walk an Iceberg
-    runtime performs.
-
-    ``partition_filter`` ({column: value}) prunes files by their manifest
-    partition values; ``range_filter`` ({column: (lo, hi)}, inclusive,
-    None = unbounded side) prunes by the manifests' column min/max bounds
-    — files whose recorded range cannot intersect the predicate are never
-    opened, listed, or stat-ed. Both are metadata-only skips; files
-    WITHOUT bounds for a filtered column are conservatively kept, and the
-    caller still applies the row-level predicate (skipping is an
-    optimization, exactly as in Iceberg)."""
-    meta = current_metadata(table_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_dir}")
-    sid = _resolve_sid(meta, snapshot_id)
+def _live_files(meta: dict, sid: int | None) -> tuple[list[DataFile], list[DataFile]]:
+    """(data files, delete files) live in snapshot ``sid`` of ``meta``:
+    one read of its manifest list, one of each manifest it names — the
+    same two-hop walk an Iceberg runtime performs. Entries marked DELETED
+    (status 2) are skipped. Data files carry their partition values and
+    their column bounds decoded by the current schema; delete files carry
+    their content kind (1 position, 2 equality), equality key ids and
+    deletion-vector span. A ``sid`` of None or -1 is the pre-first-snapshot
+    state (e.g. the only commit is WAP-staged): an empty table, not an
+    error."""
     if sid in (None, -1):
-        # pre-first-snapshot state (e.g. the only commit is WAP-staged):
-        # an empty table, not an error
-        return []
+        return [], []
     snap = meta["snapshots"][_snapshot_index(meta["snapshots"], sid)]
-    schema = _current_schema(meta)
-    ids_by_name = {
-        f["name"]: (f["id"], f["type"])
-        for f in schema["fields"]
+    types = {
+        f["id"]: f["type"]
+        for f in _current_schema(meta)["fields"]
         if isinstance(f["type"], str)
     }
-    rf = {
-        ids_by_name[name][0]: (lo, hi, ids_by_name[name][1])
-        for name, (lo, hi) in (range_filter or {}).items()
+
+    def bounds(raw) -> dict | None:
+        return {
+            b["key"]: decode_bound(b["value"], types[b["key"]])
+            for b in raw or []
+            if b["key"] in types
+        } or None
+
+    data: list[DataFile] = []
+    deletes: list[DataFile] = []
+    for mf in _read_avro(snap["manifest-list"]):
+        content = mf.get("content", 0)
+        spec_id = mf.get("partition_spec_id", 0)
+        for e in _read_avro(mf["manifest_path"]):
+            if e["status"] == 2:  # DELETED
+                continue
+            d = e["data_file"]
+            if content == 0:
+                data.append(
+                    DataFile(
+                        d["file_path"],
+                        d["record_count"],
+                        d["file_size_in_bytes"],
+                        partition=d.get("partition") or None,
+                        lower_bounds=bounds(d.get("lower_bounds")),
+                        upper_bounds=bounds(d.get("upper_bounds")),
+                        sequence=e.get("sequence_number"),
+                        spec_id=spec_id,
+                    )
+                )
+            else:
+                deletes.append(
+                    DataFile(
+                        d["file_path"],
+                        d["record_count"],
+                        d["file_size_in_bytes"],
+                        content=d.get("content", 1),
+                        equality_ids=d.get("equality_ids"),
+                        sequence=e.get("sequence_number"),
+                        spec_id=spec_id,
+                        referenced_data_file=d.get("referenced_data_file"),
+                        content_offset=d.get("content_offset"),
+                        content_size=d.get("content_size_in_bytes"),
+                    )
+                )
+    return data, deletes
+
+
+def _prune(
+    meta: dict,
+    files: list[DataFile],
+    partition_filter: dict | None,
+    range_filter: dict | None,
+    table_dir: str,
+) -> list[DataFile]:
+    """The data files of a walk that may hold rows matching the filters
+    (see snapshot_files) — decided on manifest metadata alone."""
+    schema = _current_schema(meta)
+    ids_by_name = {
+        f["name"]: f["id"] for f in schema["fields"] if isinstance(f["type"], str)
     }
-    _, manifests = avro_io.read_container(open(snap["manifest-list"], "rb").read())
+    rf = {
+        ids_by_name[name]: (lo, hi) for name, (lo, hi) in (range_filter or {}).items()
+    }
     pf = partition_filter or {}
     # spec field names straight from the specs: resolving a spec's source
     # columns against the CURRENT schema would fail on an old spec whose
@@ -1536,58 +1598,47 @@ def snapshot_files(
                 f"partition spec of {table_dir} (spec fields: "
                 f"{sorted(all_names)})"
             )
-    out: list[DataFile] = []
-    for mf in manifests:
-        if mf.get("content", 0) != 0:  # delete manifest: not data files
-            continue
-        mf_sid = mf.get("partition_spec_id", 0)
+
+    def keep(f: DataFile) -> bool:
         # after partition spec evolution a filter key may not exist in an
         # OLDER manifest's spec: those files are conservatively KEPT
         # (metadata skipping is an optimization — read_snapshot applies
         # the exact residual filter for identity columns), never pruned
         # by a spec-absent key comparing against None
-        mpf = {k: v for k, v in pf.items() if k in spec_names.get(mf_sid, ())}
-        _, entries = avro_io.read_container(open(mf["manifest_path"], "rb").read())
-        for e in entries:
-            if e["status"] == 2:  # DELETED
-                continue
-            d = e["data_file"]
-            part = d.get("partition") or {}
-            if any(part.get(k) != v for k, v in mpf.items()):
-                continue
-            lo_b = {b["key"]: b["value"] for b in d.get("lower_bounds") or []}
-            hi_b = {b["key"]: b["value"] for b in d.get("upper_bounds") or []}
-            skip = False
-            for fid, (lo, hi, itype) in rf.items():
-                if fid in lo_b and hi is not None and decode_bound(lo_b[fid], itype) > hi:
-                    skip = True
-                    break
-                if fid in hi_b and lo is not None and decode_bound(hi_b[fid], itype) < lo:
-                    skip = True
-                    break
-            if skip:
-                continue
-            out.append(
-                DataFile(
-                    d["file_path"],
-                    d["record_count"],
-                    d["file_size_in_bytes"],
-                    partition=part or None,
-                    lower_bounds={
-                        k: decode_bound(v, _fid_type(schema, k))
-                        for k, v in lo_b.items()
-                        if _fid_type(schema, k)
-                    } or None,
-                    upper_bounds={
-                        k: decode_bound(v, _fid_type(schema, k))
-                        for k, v in hi_b.items()
-                        if _fid_type(schema, k)
-                    } or None,
-                    sequence=e.get("sequence_number"),
-                    spec_id=mf_sid,
-                )
-            )
-    return out
+        names = spec_names.get(f.spec_id, ())
+        part = f.partition or {}
+        if any(part.get(k) != v for k, v in pf.items() if k in names):
+            return False
+        lo_b, hi_b = f.lower_bounds or {}, f.upper_bounds or {}
+        return not any(
+            (hi is not None and fid in lo_b and lo_b[fid] > hi)
+            or (lo is not None and fid in hi_b and hi_b[fid] < lo)
+            for fid, (lo, hi) in rf.items()
+        )
+
+    return [f for f in files if keep(f)]
+
+
+def snapshot_files(
+    table_dir: str,
+    snapshot_id: int | None = None,
+    partition_filter: dict | None = None,
+    range_filter: dict | None = None,
+) -> list[DataFile]:
+    """Data files reachable from a snapshot (default: current), from one
+    state read and one manifest walk (_live_files).
+
+    ``partition_filter`` ({column: value}) prunes files by their manifest
+    partition values; ``range_filter`` ({column: (lo, hi)}, inclusive,
+    None = unbounded side) prunes by the manifests' column min/max bounds
+    — files whose recorded range cannot intersect the predicate are never
+    opened, listed, or stat-ed. Both are metadata-only skips; files
+    WITHOUT bounds for a filtered column are conservatively kept, and the
+    caller still applies the row-level predicate (skipping is an
+    optimization, exactly as in Iceberg)."""
+    _, meta = _table_state(table_dir)
+    data, _ = _live_files(meta, _resolve_sid(meta, snapshot_id))
+    return _prune(meta, data, partition_filter, range_filter, table_dir)
 
 
 def snapshot_delete_files(
@@ -1600,45 +1651,8 @@ def snapshot_delete_files(
     Empty for a table no MoR delete ever touched — the read path's
     is-there-anything-to-apply probe is this list's truthiness, a
     metadata-only check."""
-    meta = current_metadata(table_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_dir}")
-    sid = _resolve_sid(meta, snapshot_id)
-    if sid == -1:
-        return []
-    snap = meta["snapshots"][_snapshot_index(meta["snapshots"], sid)]
-    _, manifests = avro_io.read_container(open(snap["manifest-list"], "rb").read())
-    out: list[DataFile] = []
-    for mf in manifests:
-        if mf.get("content", 0) != 1:
-            continue
-        _, entries = avro_io.read_container(open(mf["manifest_path"], "rb").read())
-        for e in entries:
-            if e["status"] == 2:
-                continue
-            d = e["data_file"]
-            out.append(
-                DataFile(
-                    d["file_path"],
-                    d["record_count"],
-                    d["file_size_in_bytes"],
-                    content=d.get("content", 1),
-                    equality_ids=d.get("equality_ids"),
-                    sequence=e.get("sequence_number"),
-                    spec_id=mf.get("partition_spec_id", 0),
-                    referenced_data_file=d.get("referenced_data_file"),
-                    content_offset=d.get("content_offset"),
-                    content_size=d.get("content_size_in_bytes"),
-                )
-            )
-    return out
-
-
-def _fid_type(schema: dict, fid: int) -> str | None:
-    for f in schema["fields"]:
-        if f["id"] == fid and isinstance(f["type"], str):
-            return f["type"]
-    return None
+    _, meta = _table_state(table_dir)
+    return _live_files(meta, _resolve_sid(meta, snapshot_id))[1]
 
 
 def commit_parquet_dir(
@@ -1836,6 +1850,11 @@ def _delete_target_ranges(dels: list[DataFile]) -> list[tuple[str, str]] | None:
     return ranges
 
 
+def _union(frames: list):
+    """One frame of the (same-schema) ``frames``, matched by column name."""
+    return functools.reduce(lambda a, b: a.unionByName(b), frames)
+
+
 def _pos_delete_frame(spark, pos_dels: list[DataFile]):
     """One (file_path, pos) DataFrame across BOTH position-delete
     representations: v2 position-delete parquet files, and v3 Puffin
@@ -1891,10 +1910,7 @@ def _pos_delete_frame(spark, pos_dels: list[DataFile]):
             ),
         )
         parts.append(desc.repartition(n_parts).mapInPandas(gen, POS_DELETE_DDL))
-    out = parts[0]
-    for df in parts[1:]:
-        out = out.unionByName(df)
-    return out
+    return _union(parts)
 
 
 def read_snapshot(
@@ -1905,8 +1921,11 @@ def read_snapshot(
     range_filter: dict | None = None,
     with_positions: bool = False,
 ):
-    """Snapshot scan as a DataFrame: the resolved (and partition-pruned)
-    file list goes straight to the parquet reader. For a partitioned table
+    """Snapshot scan as a DataFrame: one state read resolves the selector
+    to one snapshot, and one manifest walk of that snapshot yields both its
+    data files and its delete files, so the scan can never pair one
+    snapshot's files with another's deletes. The (partition-pruned) file
+    list goes straight to the parquet reader. For a partitioned table
     the partition columns — not stored in the data files, per the hive
     layout — are re-attached as typed literals per partition group (robust
     across multi-root wave/batch directories where a single basePath does
@@ -1934,16 +1953,18 @@ def read_snapshot(
     producing NEW position-delete files."""
     from pyspark.sql import functions as F
 
-    meta = current_metadata(table_dir)
-    files = snapshot_files(table_dir, snapshot_id, partition_filter, range_filter)
-    dels = snapshot_delete_files(table_dir, snapshot_id)
+    _, meta = _table_state(table_dir)
+    data, dels = _live_files(meta, _resolve_sid(meta, snapshot_id))
+    files = _prune(meta, data, partition_filter, range_filter, table_dir)
     cur_schema = _current_schema(meta)
     ddl = _spark_ddl(cur_schema)
     if not files:
+        from ..session import empty_df
+
         # every file pruned (or an empty snapshot): an empty TYPED frame,
         # not an error — probing an absent partition is a normal query
-        return spark.createDataFrame(
-            [], ddl + (", __fp string, __pos bigint" if with_positions else "")
+        return empty_df(
+            spark, ddl + (", __fp string, __pos bigint" if with_positions else "")
         )
     pos_dels = [f for f in dels if f.content == 1]
     eq_dels = [f for f in dels if f.content == 2]
@@ -1983,14 +2004,14 @@ def read_snapshot(
             groups_eq.setdefault(tuple(sorted(f.equality_ids or [])), []).append(f)
         for ids, fs in sorted(groups_eq.items()):
             names = [names_by_id[i] for i in ids]
-            fr = None
-            for f in fs:
-                part = (
+            fr = _union(
+                [
                     spark.read.parquet(f.path)
                     .select(*[F.col(n).alias(f"__eq_{n}") for n in names])
                     .withColumn("__dseq", F.lit(f.sequence))
-                )
-                fr = part if fr is None else fr.unionByName(part)
+                    for f in fs
+                ]
+            )
             if sum(f.file_size for f in fs) < (64 << 20):
                 fr = F.broadcast(fr)
             eqfs.append((names, fr))
@@ -2050,10 +2071,7 @@ def read_snapshot(
                         fr, cond & (F.col("__dseq") > F.lit(sq)), "left_anti"
                     )
                 parts.append(df)
-        out = parts[0]
-        for df in parts[1:]:
-            out = out.unionByName(df)
-        return out
+        return _union(parts)
 
     # only IDENTITY fields re-attach as literal columns: a bucket field's
     # value is a derived hash, not a table column — its source column is
@@ -2082,14 +2100,12 @@ def read_snapshot(
             (f.partition or {}).get(s["name"]) for s in _id_specs(f.spec_id)
         )
         groups.setdefault(key, []).append(f)
-    parts = []
-    for key, gfiles in sorted(groups.items()):
-        parts.append(
+    out = _union(
+        [
             _scan(gfiles, part_lits=list(zip(_id_specs(key[0]), key[1:])))
-        )
-    out = parts[0]
-    for df in parts[1:]:
-        out = out.unionByName(df)
+            for key, gfiles in sorted(groups.items())
+        ]
+    )
     if partition_filter and multi_spec:
         # residual EXACT filter: metadata pruning could not apply a filter
         # key to manifests whose spec lacks it (kept conservatively), so
@@ -2140,9 +2156,7 @@ def expire_snapshots(
     here (append-only tables share data files across snapshots via manifest
     reuse; see orphan_files for data-level hygiene). Dry-run by default:
     ``remove=True`` actually unlinks."""
-    version, meta = _resolve_state(table_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_dir}")
+    version, meta = _table_state(table_dir)
     snaps = meta["snapshots"]
     # refs PIN snapshots (spec: expiry never removes a referenced
     # snapshot) — a tag is the retention contract for audits/repro builds
@@ -2158,13 +2172,13 @@ def expire_snapshots(
 
     live_manifests: set[str] = set()
     for s in keep:
-        _, mfs = avro_io.read_container(open(s["manifest-list"], "rb").read())
-        live_manifests |= {m["manifest_path"] for m in mfs}
+        live_manifests |= {m["manifest_path"] for m in _read_avro(s["manifest-list"])}
     removable: list[str] = [s["manifest-list"] for s in expired]
     for s in expired:
-        _, mfs = avro_io.read_container(open(s["manifest-list"], "rb").read())
         removable += [
-            m["manifest_path"] for m in mfs if m["manifest_path"] not in live_manifests
+            m["manifest_path"]
+            for m in _read_avro(s["manifest-list"])
+            if m["manifest_path"] not in live_manifests
         ]
     removable = sorted(set(removable))
 
@@ -2202,14 +2216,12 @@ def rewrite_manifests(table_dir: str, ts_ms: int | None = None) -> int | None:
     delete sequence gate are all preserved; the superseded manifests
     become expirable with their old snapshots. No-op (returns None) when
     there is nothing to fold."""
-    version, meta = _resolve_state(table_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_dir}")
+    version, meta = _table_state(table_dir)
     cur_id = meta.get("current-snapshot-id", -1)
     if cur_id == -1:
         return None
     snap = meta["snapshots"][_snapshot_index(meta["snapshots"], cur_id)]
-    _, manifests = avro_io.read_container(open(snap["manifest-list"], "rb").read())
+    manifests = _read_avro(snap["manifest-list"])
     # fold within (content, spec-id) groups: after partition spec
     # evolution, manifests of different specs carry different partition
     # structs and cannot share one file
@@ -2229,8 +2241,7 @@ def rewrite_manifests(table_dir: str, ts_ms: int | None = None) -> int | None:
     for content, spec_id in sorted(by_key):
         entries: list[dict] = []
         for mf in by_key[(content, spec_id)]:
-            _, es = avro_io.read_container(open(mf["manifest_path"], "rb").read())
-            for e in es:
+            for e in _read_avro(mf["manifest_path"]):
                 if e["status"] == 2:
                     continue
                 e = dict(e)
@@ -2315,15 +2326,13 @@ def orphan_files(table_dir: str, data_dir: str | None = None) -> list[str]:
     references — crash leftovers from writes whose commit never landed.
     Listing only (deletion is the operator's call, after a grace period, as
     in Iceberg's own remove_orphan_files action)."""
-    meta = current_metadata(table_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_dir}")
+    _, meta = _table_state(table_dir)
     referenced: set[str] = set()
     for s in meta["snapshots"]:
-        _, mfs = avro_io.read_container(open(s["manifest-list"], "rb").read())
-        for m in mfs:
-            _, entries = avro_io.read_container(open(m["manifest_path"], "rb").read())
-            referenced |= {e["data_file"]["file_path"] for e in entries}
+        for m in _read_avro(s["manifest-list"]):
+            referenced |= {
+                e["data_file"]["file_path"] for e in _read_avro(m["manifest_path"])
+            }
     root = data_dir or os.path.join(table_dir, "data")
     found: list[str] = []
     for dirpath, _, names in os.walk(root):
@@ -2355,16 +2364,15 @@ def added_files(
     double-processing. rewrite_manifests' 'replace' snapshots reorganize
     METADATA only (identical file paths), so they pass through — table
     maintenance must not force consumer rebases."""
-    meta = current_metadata(table_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_dir}")
+    return _added_files(_table_state(table_dir)[1], since_snapshot_id, to_snapshot_id)
+
+
+def _added_files(
+    meta: dict, since_snapshot_id: int | None, to_snapshot_id: int | None
+) -> list[DataFile]:
+    """added_files over one already-read table state."""
     snaps = meta["snapshots"]
-    lo = 0
-    if since_snapshot_id is not None:
-        lo = _snapshot_index(snaps, since_snapshot_id) + 1
-    hi = len(snaps)
-    if to_snapshot_id is not None:
-        hi = _snapshot_index(snaps, to_snapshot_id) + 1
+    lo, hi = _snapshot_range(snaps, since_snapshot_id, to_snapshot_id)
     bad = [
         s["snapshot-id"]
         for s in snaps[lo:hi]
@@ -2375,9 +2383,10 @@ def added_files(
             f"incremental range contains non-append snapshots {bad} "
             "(rewrite/delete/compaction re-files old rows); rebase the consumer"
         )
-    after = {f.path: f for f in snapshot_files(table_dir, to_snapshot_id)}
+    to_files, _ = _live_files(meta, _resolve_sid(meta, to_snapshot_id))
+    after = {f.path: f for f in to_files}
     if since_snapshot_id is not None:
-        for f in snapshot_files(table_dir, since_snapshot_id):
+        for f in _live_files(meta, since_snapshot_id)[0]:
             after.pop(f.path, None)
     return [after[p] for p in sorted(after)]
 
@@ -2390,10 +2399,10 @@ def metadata_table(spark, table_dir: str, kind: str):
     delete rows are pending?") are plain Spark SQL instead of bespoke
     scripts. Everything comes from the manifest walk — a driver-side
     metadata read, bounded by file count, no data file opened; the frames
-    are small and the point is the SQL surface, not parallelism."""
-    meta = current_metadata(table_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_dir}")
+    are small and the point is the SQL surface, not parallelism. One state
+    read serves every kind."""
+    _, meta = _table_state(table_dir)
+    cur = meta.get("current-snapshot-id")
     if kind == "snapshots":
         rows = [
             (
@@ -2412,7 +2421,6 @@ def metadata_table(spark, table_dir: str, kind: str):
             "committed_at_ms long, operation string, summary string",
         )
     if kind == "history":
-        cur = meta.get("current-snapshot-id")
         rows = [
             (e["timestamp-ms"], e["snapshot-id"], e["snapshot-id"] == cur)
             for e in meta.get("snapshot-log", [])
@@ -2429,11 +2437,7 @@ def metadata_table(spark, table_dir: str, kind: str):
             rows, "name string, type string, snapshot_id long"
         )
     if kind in ("files", "delete_files"):
-        fs = (
-            snapshot_files(table_dir)
-            if kind == "files"
-            else snapshot_delete_files(table_dir)
-        )
+        fs = _live_files(meta, cur)[0 if kind == "files" else 1]
         rows = [
             (
                 f.path,
@@ -2454,7 +2458,7 @@ def metadata_table(spark, table_dir: str, kind: str):
         )
     if kind == "partitions":
         groups: dict[str, list] = {}
-        for f in snapshot_files(table_dir):
+        for f in _live_files(meta, cur)[0]:
             key = json.dumps(f.partition or {}, sort_keys=True)
             groups.setdefault(key, []).append(f)
         rows = [
@@ -2472,15 +2476,12 @@ def metadata_table(spark, table_dir: str, kind: str):
             "total_size_bytes long",
         )
     if kind == "manifests":
-        cur = meta.get("current-snapshot-id")
+        ddl = "path string, length long, content int, added_snapshot_id long"
         if cur in (None, -1):
-            return spark.createDataFrame(
-                [], "path string, length long, content int, added_snapshot_id long"
-            )
+            from ..session import empty_df
+
+            return empty_df(spark, ddl)
         snap = next(s for s in meta["snapshots"] if s["snapshot-id"] == cur)
-        _, mlist = avro_io.read_container(
-            open(snap["manifest-list"], "rb").read()
-        )
         rows = [
             (
                 m["manifest_path"],
@@ -2488,11 +2489,9 @@ def metadata_table(spark, table_dir: str, kind: str):
                 m.get("content", 0),
                 m["added_snapshot_id"],
             )
-            for m in mlist
+            for m in _read_avro(snap["manifest-list"])
         ]
-        return spark.createDataFrame(
-            rows, "path string, length long, content int, added_snapshot_id long"
-        )
+        return spark.createDataFrame(rows, ddl)
     if kind == "partition_specs":
         rows = [
             (
@@ -2556,20 +2555,9 @@ def read_changelog(
     |range| scan nodes, bounded by snapshot retention."""
     from pyspark.sql import functions as F
 
-    meta = current_metadata(table_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no iceberg table at {table_dir}")
+    _, meta = _table_state(table_dir)
     snaps = meta["snapshots"]
-    lo = (
-        0
-        if since_snapshot_id is None
-        else _snapshot_index(snaps, since_snapshot_id) + 1
-    )
-    hi = (
-        len(snaps)
-        if to_snapshot_id is None
-        else _snapshot_index(snaps, to_snapshot_id) + 1
-    )
+    lo, hi = _snapshot_range(snaps, since_snapshot_id, to_snapshot_id)
     cur_schema = _current_schema(meta)
     ddl = _spark_ddl(cur_schema)
     names = [f["name"] for f in cur_schema["fields"]]
@@ -2586,22 +2574,17 @@ def read_changelog(
             .withColumn("_change_ordinal", F.lit(ordinal))
         )
 
-    prev_sid = None if lo == 0 else snaps[lo - 1]["snapshot-id"]
-    prev_data = (
-        set()
-        if lo == 0
-        else {f.path for f in snapshot_files(table_dir, prev_sid)}
-    )
-    prev_dels = (
-        set()
-        if lo == 0
-        else {f.path for f in snapshot_delete_files(table_dir, prev_sid)}
-    )
+    # one manifest walk per snapshot: the one before the range, then each
+    # snapshot of the range, all from the same table state
+    prev_data: set[str] = set()
+    prev_dels: set[str] = set()
+    if lo:
+        data, dels = _live_files(meta, snaps[lo - 1]["snapshot-id"])
+        prev_data, prev_dels = {f.path for f in data}, {f.path for f in dels}
     for ordinal, s in enumerate(snaps[lo:hi]):
         sid = s["snapshot-id"]
         op = s.get("summary", {}).get("operation", "append")
-        cur_data_files = snapshot_files(table_dir, sid)
-        cur_del_files = snapshot_delete_files(table_dir, sid)
+        cur_data_files, cur_del_files = _live_files(meta, sid)
         cur_data = {f.path for f in cur_data_files}
         cur_dels = {f.path for f in cur_del_files}
         if op == "replace":
@@ -2674,13 +2657,12 @@ def read_changelog(
             )
         prev_data, prev_dels = cur_data, cur_dels
     if not frames:
-        return spark.createDataFrame(
-            [], ddl + ", _change_op string, _snapshot_id long, _change_ordinal int"
+        from ..session import empty_df
+
+        return empty_df(
+            spark, ddl + ", _change_op string, _snapshot_id long, _change_ordinal int"
         )
-    out = frames[0]
-    for df in frames[1:]:
-        out = out.unionByName(df)
-    return out
+    return _union(frames)
 
 
 def read_incremental(
@@ -2688,11 +2670,11 @@ def read_incremental(
 ):
     """DataFrame over only the rows appended after ``since_snapshot_id``.
     Empty typed frame when nothing is new."""
-    meta = current_metadata(table_dir)
-    cur_schema = _current_schema(meta)
-    files = added_files(table_dir, since_snapshot_id, to_snapshot_id)
+    _, meta = _table_state(table_dir)
+    ddl = _spark_ddl(_current_schema(meta))
+    files = _added_files(meta, since_snapshot_id, to_snapshot_id)
     if not files:
         from ..session import empty_df
 
-        return empty_df(spark, _spark_ddl(cur_schema))
-    return spark.read.schema(_spark_ddl(cur_schema)).parquet(*[f.path for f in files])
+        return empty_df(spark, ddl)
+    return spark.read.schema(ddl).parquet(*[f.path for f in files])

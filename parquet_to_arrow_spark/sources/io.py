@@ -217,7 +217,9 @@ def input_files_df(
     a plain parquet directory is listed; an Iceberg table resolves through
     the manifest walk of one snapshot (default: current; NOT a directory
     listing, which would also pick up orphan files from crashed writes and
-    tear under concurrent appends), paths AND sizes from metadata.
+    tear under concurrent appends), paths AND sizes from metadata. One
+    state read resolves the snapshot; the partition check, the delete
+    refusal and the file list all come from it.
 
     Fails closed where the raw data files are not the snapshot's rows: an
     identity partition on a scanned column (its values live in paths, not
@@ -245,12 +247,14 @@ def input_files_df(
             "columns are not in the data files; use read_snapshot + the "
             "keyed encode)"
         )
-    if iceberg_meta.snapshot_delete_files(path, snapshot_id):
+    dfiles, dels = iceberg_meta._live_files(
+        meta, iceberg_meta._resolve_sid(meta, snapshot_id)
+    )
+    if dels:
         raise ValueError(
             "snapshot has pending position deletes; run "
             "iceberg.materialize_deletes before the file-split scan"
         )
-    dfiles = iceberg_meta.snapshot_files(path, snapshot_id)
     return files_df(
         spark,
         None,

@@ -22,6 +22,10 @@ Modes:
 
 Verification (--verify) compares per-row token hashes of input vs decoded
 output without ever shipping token arrays through the JVM (sources/io).
+An Iceberg input is pinned to one snapshot when the job starts
+(--input-snapshot, default: current): --verify's hash frame and the
+encode, fast or keyed, both read that snapshot, so a commit landing
+mid-job changes neither side.
 The fast path and --verify both refuse an Iceberg snapshot with pending
 merge-on-read deletes; with --verify the refusal comes before anything is
 written.
@@ -102,18 +106,26 @@ def main(argv: list[str] | None = None) -> int:
     if args.iceberg_table:
         from parquet_to_arrow_spark.sources import iceberg as ice
 
+    # resolve the input snapshot ONCE (None for a plain parquet directory):
+    # every read below names this id, never "current"
+    in_meta = iceberg_meta.current_metadata(args.input)
+    in_snapshot = (
+        None
+        if in_meta is None
+        else iceberg_meta._resolve_sid(in_meta, args.input_snapshot)
+    )
+
     if args.verify:
-        # built before the first write: it resolves (and checks) the SAME
-        # snapshot the encode reads (historical when --input-snapshot was
-        # given), so a refused snapshot stops the job with nothing written
+        # built before the first write: it checks the snapshot the encode
+        # reads, so a refused snapshot stops the job with nothing written
         input_hashes = pio.token_hashes_from_parquet(
-            spark, args.input, snapshot_id=args.input_snapshot
+            spark, args.input, snapshot_id=in_snapshot
         )
 
     if args.mode == "fast":
         # an Iceberg input is snapshot-consistent: the file list comes from
         # the manifest walk, so concurrent appends cannot tear this run's view
-        encoded = pio.encode_parquet_dir(spark, args.input, snapshot_id=args.input_snapshot)
+        encoded = pio.encode_parquet_dir(spark, args.input, snapshot_id=in_snapshot)
         encoded.write.mode("append").option("compression", "zstd").parquet(args.output)
         if args.iceberg_table:
             # commit only the files this run added (append mode accretes)
@@ -144,9 +156,9 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F
 
         tokens = (
-            iceberg_meta.read_snapshot(spark, args.input, args.input_snapshot)
-            if iceberg_meta.current_version(args.input) is not None
-            else spark.read.parquet(args.input)
+            spark.read.parquet(args.input)
+            if in_meta is None
+            else iceberg_meta.read_snapshot(spark, args.input, in_snapshot)
         )
         keyed = ckpt.with_pkey(tokens, args.buckets)
         if args.cache_input == "always" or (

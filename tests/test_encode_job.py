@@ -236,3 +236,35 @@ def test_verify_refuses_pending_deletes_before_writing(job_spark, tmp_path):
     with pytest.raises(ValueError, match="position deletes"):
         encode_job.main(args)
     assert not os.path.exists(out) and not os.path.exists(ckpt)
+
+
+def test_verify_and_encode_read_one_pinned_snapshot(
+    job_spark, tmp_path, monkeypatch, capsys
+):
+    """An append landing between --verify's hash frame and the encode must
+    change neither: both read the snapshot the job pinned at start."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from parquet_to_arrow_spark.sources import iceberg as ice, io as pio
+
+    spark = job_spark
+    tokens = synth_tokens_df(spark, 600, avg_tokens=16, n_partitions=2).cache()
+    half = F.col("doc_id") < "doc-000000000300"
+    table = str(tmp_path / "intable")
+    ice.append(tokens.filter(half), table)
+    real = pio.encode_parquet_dir
+
+    def append_then_encode(*args, **kwargs):
+        ice.append(tokens.filter(~half), table)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pio, "encode_parquet_dir", append_then_encode)
+    args = ["--input", table, "--output", str(tmp_path / "out"),
+            "--manifest", str(tmp_path / "man"), "--mode", "fast", "--verify"]
+    code = encode_job.main(args)
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["verify"]
+    assert code == 0 and report["equal"] and report["n_left"] == 300, report
+    assert len(ice.iceberg_meta.snapshots(table)) == 2  # the append did land
+    tokens.unpersist()

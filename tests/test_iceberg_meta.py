@@ -3534,3 +3534,70 @@ class TestRound6Fixes:
             ).collect()
         }
         assert got == {0, 2, 4}
+
+
+# ------------------------------------------------ one snapshot per read
+
+
+def _pre_materialize_table(spark, tmp_path):
+    """A 10-row table, a merge-on-read delete of id < 3, then
+    materialize_deletes. Returns (table, the state read just before the
+    materialize)."""
+    from parquet_to_arrow_spark.sources import iceberg
+
+    table = str(tmp_path / "table")
+    iceberg.append(spark.range(10).coalesce(1), table)
+    iceberg.delete_where_mor(spark, table, "id < 3")
+    pre = ice._resolve_state(table)
+    iceberg.materialize_deletes(spark, table)
+    return table, pre
+
+
+@pytest.mark.parametrize("k", [1, 2, 3])
+def test_reader_sees_one_snapshot(spark, tmp_path, monkeypatch, k):
+    """The first k state reads see the table as it was before the
+    materialize: however many of them a scan makes, it must pair that
+    snapshot's data files with that snapshot's delete files — taking the
+    data from one state and the (since folded) deletes from another would
+    resurrect the deleted rows."""
+    table, pre = _pre_materialize_table(spark, tmp_path)
+    real = ice._resolve_state
+    calls = []
+
+    def stale_then_real(table_dir):
+        calls.append(table_dir)
+        return pre if len(calls) <= k else real(table_dir)
+
+    monkeypatch.setattr(ice, "_resolve_state", stale_then_real)
+    got = sorted(r["id"] for r in ice.read_snapshot(spark, table).collect())
+    assert got == list(range(3, 10))
+
+
+def test_each_reader_makes_one_state_read(spark, tmp_path, monkeypatch):
+    from parquet_to_arrow_spark.sources import iceberg, io as pio
+
+    table = str(tmp_path / "table")
+    for i in range(3):
+        iceberg.append(spark.range(i * 10, i * 10 + 10).coalesce(1), table)
+    first = ice.snapshots(table)[0]["snapshot-id"]
+    real = ice._resolve_state
+    calls = []
+
+    def counting(table_dir):
+        calls.append(table_dir)
+        return real(table_dir)
+
+    monkeypatch.setattr(ice, "_resolve_state", counting)
+    readers = {
+        "read_snapshot": lambda: ice.read_snapshot(spark, table),
+        "input_files_df": lambda: pio.input_files_df(spark, table, ("id",)),
+        "read_changelog": lambda: ice.read_changelog(spark, table),
+        "added_files": lambda: ice.added_files(table, first),
+        "metadata_table files": lambda: ice.metadata_table(spark, table, "files"),
+    }
+    reads = {}
+    for name, call in readers.items():
+        calls.clear()
+        call()
+        reads[name] = len(calls)
+    assert reads == dict.fromkeys(readers, 1)

@@ -91,22 +91,43 @@ def test_file_split_plans_start_no_python_worker(spark, tmp_path):
 def test_files_df_lays_out_one_greedy_group_per_partition(spark):
     from parquet_to_arrow_spark.sources.io import files_df
 
-    assert spark.sparkContext.defaultParallelism == 8
+    # every case is far below one task's bytes, so there is one bin per
+    # core of the session, capped at the file count
+    par = spark.sparkContext.defaultParallelism
+
+    def greedy(fs: list[str], sz: dict) -> list[list[str]]:
+        """Largest file first into the least-loaded bin, ties to the
+        lowest-index bin."""
+        bins: list[list[str]] = [[] for _ in range(min(len(fs), par))]
+        load = [0] * len(bins)
+        for f in sorted(fs, key=lambda f: (-sz[f], f)):
+            i = min(range(len(bins)), key=lambda i: (load[i], i))
+            bins[i].append(f)
+            load[i] += sz[f]
+        return bins
+
     files = [f"/data/f{i}.parquet" for i in range(10)]
     sizes = dict(zip(files, [100, 90, 80, 70, 60, 50, 40, 30, 20, 10]))
-    # 8 bins, largest file first into the least-loaded bin
-    want = [[f] for f in files[:6]] + [[files[6], files[9]], [files[7], files[8]]]
-    # zero-byte files leave the second bin empty; it keeps its partition
+    want = greedy(files, sizes)
+    if par == 8:
+        assert want == [[f] for f in files[:6]] + [
+            [files[6], files[9]], [files[7], files[8]]
+        ]
+    # zero-byte files all land in the first bin; the second bin stays
+    # empty and keeps its partition
     zero = ["/data/a.parquet", "/data/b.parquet"]
-    # equal sizes: ties go to the lowest-index bin, so bins 0-3 get 3 files
-    # and bins 4-7 get 2
+    zero_want = [zero] + [[]] * (min(2, par) - 1)
+    # equal sizes: ties go to the lowest-index bin, so the bins fill
+    # round-robin
     eq = [f"/data/e{i:02d}.parquet" for i in range(20)]
-    eq_want = [eq[i::8] for i in range(8)]
+    n_eq = min(20, par)
+    eq_want = [eq[i::n_eq] for i in range(n_eq)]
     for fs, sz, groups in (
         (files, sizes, want),
-        (zero, dict.fromkeys(zero, 0), [zero, []]),
+        (zero, dict.fromkeys(zero, 0), zero_want),
         (eq, dict.fromkeys(eq, 1), eq_want),
     ):
+        assert groups == greedy(fs, sz)
         df = files_df(spark, None, files=fs, sizes=sz)
         assert df.columns == ["path"]
         assert df.rdd.getNumPartitions() == len(groups)
@@ -207,6 +228,25 @@ def test_iceberg_snapshot_scan_keeps_pushdown(spark, tmp_path):
     scan = ice.read_snapshot(spark, str(tmp_path / "tbl")).select("doc_id")
     read_schema = [ln for ln in plan_of(scan).splitlines() if "ReadSchema" in ln][0]
     assert "doc_id" in read_schema and "other" not in read_schema
+
+
+def test_fully_pruned_snapshot_read_starts_no_python_worker(spark, tmp_path):
+    """A partition filter that prunes every file yields the empty typed
+    frame as a JVM local relation, not a PythonRDD scan."""
+    from parquet_to_arrow_spark.sources import iceberg_meta as ice
+
+    df = spark.createDataFrame(
+        [(i, ["web", "code"][i % 2]) for i in range(10)], "doc_id long, source string"
+    )
+    d = str(tmp_path / "w")
+    df.write.partitionBy("source").parquet(d)
+    table = str(tmp_path / "tbl")
+    ice.commit_parquet_dir(
+        table, d, spark_schema=df.schema, ts_ms=1, partition_by=["source"]
+    )
+    empty = ice.read_snapshot(spark, table, partition_filter={"source": "absent"})
+    assert empty.count() == 0 and empty.columns == ["doc_id", "source"]
+    assert "ExistingRDD" not in plan_of(empty), plan_of(empty)
 
 
 def test_bucketed_tables_join_without_shuffle(spark, tmp_path):

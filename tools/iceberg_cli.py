@@ -119,12 +119,12 @@ def main(argv: list[str] | None = None) -> int:
             ],
         }
     elif args.cmd == "history":
-        meta = ice.current_metadata(args.table)
+        version, meta = ice._table_state(args.table)
         out = {
             "table_uuid": meta["table-uuid"],
             "current_snapshot_id": meta["current-snapshot-id"],
             "last_sequence_number": meta["last-sequence-number"],
-            "current_version": ice.current_version(args.table),
+            "current_version": version,
             "snapshot_log": meta["snapshot-log"],
             "partition_spec": meta["partition-specs"][meta["default-spec-id"]],
         }
@@ -152,15 +152,18 @@ def main(argv: list[str] | None = None) -> int:
 
         # coerce by the COLUMN's declared type, never by what the value
         # looks like: '0042' against a string column must stay '0042'
-        meta = ice.current_metadata(args.table)
+        # one snapshot: the column type, the file count and the candidates
+        _, meta = ice._table_state(args.table)
         schema = ice._current_schema(meta)
         ctype = next(
             (f["type"] for f in schema["fields"] if f["name"] == args.column),
             "string",
         )
         v = int(args.value) if ctype in ("int", "long") else args.value
-        cands = bi.bloom_candidate_files(args.table, args.column, v)
-        total = len(ice.snapshot_files(args.table))
+        files = ice._live_files(meta, meta["current-snapshot-id"])[0]
+        idx = bi._load_index(args.table, args.column)
+        cands = None if idx is None else bi._might_hold(idx, files, v)
+        total = len(files)
         out = {
             "indexed": cands is not None,
             "n_files": total,
@@ -200,17 +203,13 @@ def main(argv: list[str] | None = None) -> int:
         if cur in (None, -1):
             out = []
         else:
-            from parquet_to_arrow_spark.sources import avro_io
-
             snap = next(
                 s for s in meta["snapshots"] if s["snapshot-id"] == cur)
-            _, mlist = avro_io.read_container(
-                open(snap["manifest-list"], "rb").read())
             out = [
                 {"path": m["manifest_path"],
                  "content": m.get("content", 0),
                  "added_snapshot_id": m["added_snapshot_id"]}
-                for m in mlist
+                for m in ice._read_avro(snap["manifest-list"])
             ]
     elif args.cmd == "rollback":
         target = (
