@@ -5,7 +5,8 @@ Prints ONE JSON line:
    "queries": {name: best-of-3 sec, ...}, "queries_median": {name: sec, ...},
    "sf": <sf>,
    "encode": {raw_gib, seconds, gib_per_s, ratio},
-   "scaling": {n_cores, n4_cores, gib_per_s_n, gib_per_s_4n, efficiency}}
+   "scaling": {n_cores, n4_cores, gib_per_s_n, gib_per_s_4n, efficiency}
+              or {"skipped": "nproc < 4N"} on a machine with fewer than 4N cores}
 
 Env:
   SPARK_GRAFT_SF_DIR   table dir (default /root/testdata/sf0.1)
@@ -232,6 +233,11 @@ def main() -> None:
         # (observed: 1-core reps swinging 30 s..86 s on identical work while
         # 2-core reps agree to <1%). Override with SPARK_GRAFT_SCALE_N.
         n = int(os.environ.get("SPARK_GRAFT_SCALE_N", "2"))
+    if SCALING and len(os.sched_getaffinity(0)) < 4 * n:
+        # a 4N-core leg on fewer cores (the count nproc reports, affinity
+        # included) measures oversubscription, not scaling
+        result["scaling"] = {"skipped": f"nproc < {4 * n}"}
+    elif SCALING:
         # 8M rows (6.9 GiB): big enough that the low-core leg cannot ride
         # entirely on a hot page cache (at 3.46 GiB the fully-cached 2-core
         # leg drifted FASTER across repeated runs, deflating the ratio to

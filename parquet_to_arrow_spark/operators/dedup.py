@@ -416,6 +416,29 @@ def ngram_jaccard_pairs(spark, sf_dir, threshold: float = 0.3, max_df: int = 64)
     )
 
 
+def _majority_bits(occ, starts, counts):
+    """SimHash of each document from its words' 64-bit hashes ``occ``
+    (document i owns rows ``starts[i]`` to ``starts[i] + counts[i]``, every
+    count > 0): bit b is set iff more than half of the words have bit b set
+    (ties -> 0), returned as int64. Bit b of a word is bit b % 8 of its
+    little-endian byte b // 8; the votes are unpacked one byte at a time as
+    words x 8 uint8 and summed per document in int32, so a document of more
+    than 255 words cannot overflow the count. Per byte, because reduceat
+    casts its whole input to the sum's dtype: the transient is 40 bytes a
+    word, where a words x 64 int32 vote matrix is 256."""
+    import numpy as np
+
+    by = occ.astype("<u8", copy=False).view(np.uint8).reshape(-1, 8)
+    ones = np.empty((len(starts), 64), dtype=np.int32)
+    for j in range(8):
+        bits = np.unpackbits(by[:, j : j + 1], axis=1, bitorder="little")
+        ones[:, 8 * j : 8 * j + 8] = np.add.reduceat(bits, starts, axis=0, dtype=np.int32)
+    # majority: bit set iff ones > words/2  (s = 2*ones - words > 0)
+    maj = (2 * ones) > counts[:, None]
+    weights = np.uint64(1) << np.arange(64, dtype=np.uint64)
+    return (maj * weights).sum(axis=1, dtype=np.uint64).view(np.int64)
+
+
 def simhash64(spark, sf_dir) -> DataFrame:
     """64-bit SimHash per doc: word-level md5 hashes, per-bit majority vote.
 
@@ -443,9 +466,6 @@ def simhash64(spark, sf_dir) -> DataFrame:
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
-
-        shifts = np.arange(64, dtype=np.uint64)
-        weights = np.uint64(1) << shifts
 
         for batch in batches:
             n = batch.num_rows
@@ -481,17 +501,9 @@ def simhash64(spark, sf_dir) -> DataFrame:
                 )
             # hi half occupies bits 32-63, lo half bits 0-31 (bit i of this
             # uint64 == the JVM pipeline's vote source for simhash bit i)
-            occ = w64[idx]
-            bits = ((occ[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int32)
             have = counts > 0
             # doc i's surviving words are rows [cs[off[i]], cs[off[i]]+counts[i])
-            starts = cs[off[:-1]][have]
-            ones = np.add.reduceat(bits, starts, axis=0)
-            # majority: bit set iff ones > words/2  (s = 2*ones - words > 0)
-            maj = (2 * ones) > counts[have][:, None]
-            sim = (maj.astype(np.uint64) * weights[None, :]).sum(
-                axis=1, dtype=np.uint64
-            ).view(np.int64)
+            sim = _majority_bits(w64[idx], cs[off[:-1]][have], counts[have])
             yield pa.RecordBatch.from_arrays(
                 [doc_id.filter(pa.array(have)), pa.array(sim, type=pa.int64())],
                 names=["doc_id", "simhash"],

@@ -517,11 +517,11 @@ def _rewrite_files(
     via time travel until snapshot expiry. Returns the snapshot id, or
     None when no file has a hit."""
     import uuid
-    from urllib.parse import unquote, urlparse
 
     _, meta = iceberg_meta._table_state(table_or_path)
+    sid = meta["current-snapshot-id"]
     scan = iceberg_meta.read_snapshot(
-        spark, table_or_path, meta["current-snapshot-id"], partition_filter
+        spark, table_or_path, sid, partition_filter
     ).withColumn("__file", F.input_file_name())
     affected_uris = [
         r["__file"] for r in hits(scan).select("__file").distinct().collect()
@@ -530,7 +530,7 @@ def _rewrite_files(
         return None
     # input_file_name() returns percent-encoded URIs; manifests store raw
     # abspaths — unquote or the remove-path match silently finds nothing
-    affected = {os.path.abspath(unquote(urlparse(u).path)) for u in affected_uris}
+    affected = {iceberg_meta._uri_path(u) for u in affected_uris}
     survivors = keep(scan.filter(F.col("__file").isin(affected_uris))).drop("__file")
     if add is not None:
         survivors = survivors.unionByName(add.select(*survivors.columns))
@@ -541,6 +541,7 @@ def _rewrite_files(
         rw_dir,
         summary={"operation-detail": detail},
         remove_paths=affected,
+        planned_snapshot_id=sid,
     )
 
 
@@ -947,7 +948,6 @@ def materialize_deletes(spark: SparkSession, table_or_path: str) -> int | None:
     (non-live) files are simply dropped. Returns the snapshot id, or None
     when no deletes are pending."""
     import uuid
-    from urllib.parse import unquote, urlparse
 
     from pyspark.sql import functions as F
 
@@ -967,7 +967,7 @@ def materialize_deletes(spark: SparkSession, table_or_path: str) -> int | None:
         target_uris = [
             r["file_path"] for r in ddf.select("file_path").distinct().collect()
         ]
-        by_uri = {u: os.path.abspath(unquote(urlparse(u).path)) for u in target_uris}
+        by_uri = {u: iceberg_meta._uri_path(u) for u in target_uris}
         affected_paths |= {p for p in by_uri.values() if p in live}
     if eq_dels:
         max_dseq = max(f.sequence or 0 for f in eq_dels)
@@ -982,7 +982,7 @@ def materialize_deletes(spark: SparkSession, table_or_path: str) -> int | None:
     # correct
     scan = iceberg_meta.read_snapshot(spark, table_or_path, sid, with_positions=True)
     uri_by_path = {
-        os.path.abspath(unquote(urlparse(r["__fp"]).path)): r["__fp"]
+        iceberg_meta._uri_path(r["__fp"]): r["__fp"]
         for r in scan.select("__fp").distinct().collect()
     }
     affected_uris = [
@@ -996,6 +996,7 @@ def materialize_deletes(spark: SparkSession, table_or_path: str) -> int | None:
         rw_dir,
         summary={"operation-detail": f"materialize-deletes:{len(dels)}"},
         remove_paths=affected_paths | {os.path.abspath(f.path) for f in dels},
+        planned_snapshot_id=sid,
     )
 
 
@@ -1247,7 +1248,8 @@ def compact_files(
     if sort_by and zorder:
         raise ValueError("pass sort_by or zorder, not both")
     _, meta = iceberg_meta._table_state(table_or_path)
-    live_files, dels = iceberg_meta._live_files(meta, meta["current-snapshot-id"])
+    planned_sid = meta["current-snapshot-id"]
+    live_files, dels = iceberg_meta._live_files(meta, planned_sid)
     if dels:
         # compaction reads raw file paths (no delete anti-join) — silently
         # resurrecting MoR-deleted rows would be corruption, so refuse
@@ -1351,4 +1353,5 @@ def compact_files(
         rw_dir,
         summary={"operation-detail": f"compact:{n_small}->{n_out_total}"},
         remove_paths={f.path for fs in groups.values() for f in fs},
+        planned_snapshot_id=planned_sid,
     )

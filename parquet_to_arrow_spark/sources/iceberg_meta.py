@@ -58,6 +58,7 @@ import os
 import time
 import uuid
 from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
 
 from . import avro_io
 
@@ -294,9 +295,15 @@ class DataFile:
 # the data file (a file: URI) so the read-side anti-join compares raw
 # scan-native values on both sides — no decode step whose edge cases
 # (percent-encoding, '+') could silently unmatch; driver-side code that
-# needs the manifest abspath converts with unquote(urlparse(...).path).
+# needs the manifest abspath converts with _uri_path.
 POS_DELETE_DDL = "file_path string, pos bigint"
 POS_DELETE_FIELD_IDS = {"file_path": 2147483546, "pos": 2147483545}
+
+
+def _uri_path(uri: str) -> str:
+    """The manifest abspath of a data file the scanner renders as a
+    (percent-encoded) ``file:`` URI."""
+    return os.path.abspath(unquote(urlparse(uri).path))
 
 
 def _meta_dir(table_dir: str) -> str:
@@ -819,6 +826,7 @@ def commit_append(
     remove_paths: set | None = None,
     delete_files: list[DataFile] | None = None,
     allow_spec_evolution: bool = False,
+    planned_snapshot_id: int | None = None,
 ) -> int:
     """Append ``files`` as one new snapshot; returns the snapshot id.
 
@@ -841,7 +849,14 @@ def commit_append(
     CoW DELETE commit. Every path must be live in the state this commit
     reads: a rewrite planned before a concurrent commit removed one of
     its files raises CommitConflict instead of resurrecting that commit's
-    deleted rows.
+    deleted rows. ``planned_snapshot_id`` (required with ``remove_paths``)
+    is the snapshot the rewrite read its rows from: a live delete file
+    whose data sequence number is above that snapshot's committed after
+    the rewrite was planned. If it may target a removed path (an equality
+    delete, a position delete without ``referenced_data_file``, or one
+    whose ``referenced_data_file`` is removed), its rows are still in the
+    rewrite and it would be lost with the removed file, so it raises
+    CommitConflict too.
 
     ``partition_by`` (first commit only): identity-partition the table by
     these columns — the spec gets transform "identity" fields (ids from
@@ -869,6 +884,8 @@ def commit_append(
     before the metadata create leaves only unreferenced manifest/data
     files (orphans); a crash after it is a completed commit the resuming
     job discovers through its snapshot-summary markers."""
+    if remove_paths and planned_snapshot_id is None:
+        raise ValueError("remove_paths needs the planned_snapshot_id it was read from")
     meta_dir = _meta_dir(table_dir)
     os.makedirs(meta_dir, exist_ok=True)
     version, prev = _resolve_state(table_dir)
@@ -1141,11 +1158,30 @@ def commit_append(
     if remove_paths:
         removed = {os.path.abspath(p) for p in remove_paths}
         live_paths: set[str] = set()
+        # an expired planned snapshot has no sequence number to compare
+        # against: every live delete counts as late (fail closed)
+        planned_seq = next(
+            (
+                s["sequence-number"]
+                for s in base["snapshots"]
+                if s["snapshot-id"] == planned_snapshot_id
+            ),
+            -1,
+        )
+        late: list[str] = []
         rewritten: list[dict] = []
         for mf in prev_manifests:
             m_entries = _read_avro(mf["manifest_path"])
             live = [e for e in m_entries if e["status"] != 2]
             live_paths.update(e["data_file"]["file_path"] for e in live)
+            if mf.get("content", 0):
+                for e in live:
+                    d, dseq = e["data_file"], e.get("sequence_number")
+                    ref = d.get("referenced_data_file")
+                    if (
+                        mf["sequence_number"] if dseq is None else dseq
+                    ) > planned_seq and (not ref or _uri_path(ref) in removed):
+                        late.append(d["file_path"])
             keep = [e for e in live if e["data_file"]["file_path"] not in removed]
             if len(keep) == len(m_entries):
                 rewritten.append(mf)  # untouched manifest carried forward
@@ -1200,6 +1236,15 @@ def commit_append(
             raise CommitConflict(
                 f"{len(gone)} remove_paths are no longer live (e.g. {gone[0]}); "
                 "re-plan on the current snapshot"
+            )
+        if late:
+            # a merge-on-read delete committed after the rewrite was
+            # planned: its rows are in the rewritten files, and the files
+            # it points at are about to be removed
+            raise CommitConflict(
+                f"{len(late)} delete files landed after snapshot "
+                f"{planned_snapshot_id} (e.g. {late[0]}); re-plan on the "
+                "current snapshot"
             )
         prev_manifests = rewritten
     manifests = prev_manifests + (
@@ -1666,6 +1711,7 @@ def commit_parquet_dir(
     remove_paths: set | None = None,
     delete_files: list[DataFile] | None = None,
     allow_spec_evolution: bool = False,
+    planned_snapshot_id: int | None = None,
 ) -> int:
     """Commit every parquet file of a directory Spark just wrote as one
     appended snapshot. ``delete_files`` ride along into the same snapshot
@@ -1678,8 +1724,6 @@ def commit_parquet_dir(
     parquet footers land in the manifest as Iceberg lower/upper bounds —
     the inputs to file-level min-max skipping (snapshot_files
     range_filter)."""
-    from urllib.parse import unquote
-
     import pyarrow.parquet as pq
 
     meta = current_metadata(table_dir)
@@ -1771,6 +1815,7 @@ def commit_parquet_dir(
         remove_paths=remove_paths,
         delete_files=delete_files,
         allow_spec_evolution=allow_spec_evolution,
+        planned_snapshot_id=planned_snapshot_id,
     )
     return sid
 
@@ -1810,8 +1855,6 @@ def _delete_target_ranges(dels: list[DataFile]) -> list[tuple[str, str]] | None:
     are tight. Returns None when any stat is missing or percent-encoded
     (decoding would not preserve lexicographic order) — the caller then
     conservatively applies deletes to every file."""
-    from urllib.parse import unquote, urlparse
-
     import pyarrow.parquet as pq
 
     ranges: list[tuple[str, str]] = []
@@ -1822,7 +1865,7 @@ def _delete_target_ranges(dels: list[DataFile]) -> list[tuple[str, str]] | None:
             t = f.referenced_data_file
             if "%" in t:
                 return None
-            t = os.path.abspath(unquote(urlparse(t).path))
+            t = _uri_path(t)
             ranges.append((t, t))
             continue
         md = pq.ParquetFile(f.path).metadata
@@ -1841,12 +1884,7 @@ def _delete_target_ranges(dels: list[DataFile]) -> list[tuple[str, str]] | None:
             hi = hi.decode() if isinstance(hi, bytes) else str(hi)
             if "%" in lo or "%" in hi:
                 return None
-            ranges.append(
-                (
-                    os.path.abspath(unquote(urlparse(lo).path)),
-                    os.path.abspath(unquote(urlparse(hi).path)),
-                )
-            )
+            ranges.append((_uri_path(lo), _uri_path(hi)))
     return ranges
 
 
@@ -2612,15 +2650,11 @@ def read_changelog(
             ddf = _pos_delete_frame(spark, pos)
             # targeted-file count is bounded by the delete set, and the
             # URIs are the scanner's own rendering (write-side invariant)
-            from urllib.parse import unquote, urlparse
-
             target_uris = [
                 r["file_path"]
                 for r in ddf.select("file_path").distinct().collect()
             ]
-            targets = sorted(
-                os.path.abspath(unquote(urlparse(u).path)) for u in target_uris
-            )
+            targets = sorted(_uri_path(u) for u in target_uris)
             raw = (
                 spark.read.schema(ddl)
                 .parquet(*targets)

@@ -378,11 +378,50 @@ class TestConcurrentCommit:
             return ice.DataFile(p, pq.ParquetFile(p).metadata.num_rows, os.path.getsize(p))
 
         schema = StructType([StructField("id", LongType())])
-        ice.commit_append(table, [data_file("f1")], spark_schema=schema, ts_ms=1)
-        ice.commit_append(table, [data_file("f2")], ts_ms=2, remove_paths={paths["f1"]})
+        sid = ice.commit_append(table, [data_file("f1")], spark_schema=schema, ts_ms=1)
+        ice.commit_append(
+            table, [data_file("f2")], ts_ms=2, remove_paths={paths["f1"]},
+            planned_snapshot_id=sid,
+        )
         with pytest.raises(CommitConflict):
-            ice.commit_append(table, [data_file("f3")], ts_ms=3, remove_paths={paths["f1"]})
+            ice.commit_append(
+                table, [data_file("f3")], ts_ms=3, remove_paths={paths["f1"]},
+                planned_snapshot_id=sid,
+            )
+        with pytest.raises(ValueError, match="planned_snapshot_id"):
+            ice.commit_append(table, [data_file("f3")], ts_ms=3, remove_paths={paths["f2"]})
         assert [f.path for f in ice.snapshot_files(table)] == [paths["f2"]]
+
+    @pytest.mark.parametrize("mor_delete", ["delete_where_mor", "delete_where_dv"])
+    def test_copy_on_write_fails_closed_against_concurrent_mor_delete(
+        self, spark, tmp_path, monkeypatch, mor_delete
+    ):
+        """A copy-on-write delete_where("id = 9") plans its rewrite, then a
+        merge-on-read delete("id < 3") commits a position delete (v2 delete
+        parquet, or a v3 deletion vector naming the file by URI) against
+        the same file, then the rewrite commits. The rewrite still holds
+        ids 0-2 and removes the file the delete points at, so committing it
+        would lose that delete: it must raise CommitConflict, and a read
+        must return the merge-on-read result."""
+        from parquet_to_arrow_spark.sources import iceberg
+        from parquet_to_arrow_spark.sources.iceberg_meta import CommitConflict
+
+        table, src = str(tmp_path / "table"), str(tmp_path / "src")
+        spark.range(10).coalesce(1).write.parquet(src)
+        ice.commit_parquet_dir(table, src, spark_schema=spark.range(1).schema, ts_ms=1)
+
+        commit = ice.commit_parquet_dir
+
+        def mor_lands_first(*args, **kwargs):
+            monkeypatch.setattr(ice, "commit_parquet_dir", commit)
+            getattr(iceberg, mor_delete)(spark, table, "id < 3")
+            return commit(*args, **kwargs)
+
+        monkeypatch.setattr(ice, "commit_parquet_dir", mor_lands_first)
+        with pytest.raises(CommitConflict):
+            iceberg.delete_where(spark, table, "id = 9")
+        ids = sorted(r.id for r in ice.read_snapshot(spark, table).collect())
+        assert ids == list(range(3, 10))
 
     @pytest.mark.parametrize(
         "writer",

@@ -141,6 +141,39 @@ def test_simhash_near_dup_has_small_hamming(spark, planted_docs):
     assert near < far, (near, far)
 
 
+def test_simhash_votes_match_shift_matrix_in_a_quarter_of_its_memory():
+    """The per-document majority vote equals the words x 64 shift-matrix
+    formula bit for bit, including a document of more than 255 words whose
+    bit counts would overflow a uint8 sum, while its transient allocation
+    stays under a quarter of that formula's int32 vote matrix."""
+    import tracemalloc
+
+    import numpy as np
+
+    from parquet_to_arrow_spark.operators.dedup import _majority_bits
+
+    rng = np.random.default_rng(7)
+    counts = np.array([1, 2, 5, 310, 64, 3, 1000], dtype=np.int64)
+    occ = rng.integers(0, 2**64, size=int(counts.sum()), dtype=np.uint64)
+    occ[1:3] = np.uint64(2**63 + 5)  # a 2-word doc: every bit a tie or unanimous
+    starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
+
+    shifts = np.arange(64, dtype=np.uint64)
+    bits = ((occ[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int32)
+    maj = (2 * np.add.reduceat(bits, starts, axis=0)) > counts[:, None]
+    want = (maj.astype(np.uint64) * (np.uint64(1) << shifts)[None, :]).sum(
+        axis=1, dtype=np.uint64
+    ).view(np.int64)
+
+    tracemalloc.start()
+    got = _majority_bits(occ, starts, counts)
+    peak = tracemalloc.get_traced_memory()[1]
+    tracemalloc.stop()
+    assert got.dtype == np.int64
+    assert np.array_equal(got, want)
+    assert peak < len(occ) * 64 * 4 // 4, peak
+
+
 def test_ann_lsh_subset_of_bruteforce_order(spark):
     from parquet_to_arrow_spark.operators.similarity import ann_lsh_topk, brute_force_topk
 
