@@ -636,7 +636,7 @@ def delete_where_mor(
     Files" + "Row-level deletes"."""
     import uuid
 
-    _, doomed = _doomed_positions(spark, table_or_path, predicate, partition_filter)
+    meta, doomed = _doomed_positions(spark, table_or_path, predicate, partition_filter)
     del_dir = os.path.join(table_or_path, "data", f"delete-{uuid.uuid4().hex[:8]}")
     # range-partition + sort: each delete file holds a contiguous sorted
     # (file_path, pos) run (spec sort order); AQE coalesces the typically
@@ -655,6 +655,7 @@ def delete_where_mor(
         [],
         summary={"operation-detail": "delete-where-mor"},
         delete_files=dfs,
+        planned_snapshot_id=meta["current-snapshot-id"],
     )
 
 
@@ -683,27 +684,39 @@ def delete_where_dv(
     keyed by file — the shuffle is the deleted rows, nothing else); the
     driver assembles only the per-file blob bytes (bounded by file count,
     not rows — the same driver-side footprint an Iceberg committer has).
-    Repeated DV deletes ACCUMULATE like v2 delete files do here (readers
-    union them; the v3 single-DV-per-file compaction happens at
-    materialize_deletes), and the scan that computes positions already
-    applies prior deletes, so re-deletes never double-record a row.
-    Returns the snapshot id, or None when nothing matched."""
+    A data file keeps ONE live DV (spec v3): the worker that builds a
+    file's bitmap ORs in that file's live DV from the planned snapshot
+    (the scan that computes positions already applies it, so no row is
+    recorded twice), and the commit replaces that DV entry, leaving other
+    files' DVs in the same Puffin live. A concurrent commit that changed
+    a target's DV or removed the file raises CommitConflict. Returns the
+    snapshot id, or None when nothing matched."""
     import uuid
 
     from . import puffin as pf
 
     meta, doomed = _doomed_positions(spark, table_or_path, predicate, partition_filter)
+    old_dvs: dict[str, list] = {}
+    # the planned snapshot's live DVs, by data file (a second walk of its
+    # manifests: read_snapshot keeps its delete files to itself)
+    for f in iceberg_meta._live_files(meta, meta["current-snapshot-id"])[1]:
+        if f.referenced_data_file:
+            old_dvs.setdefault(iceberg_meta._uri_path(f.referenced_data_file), []).append(f)
 
     def mk(pdf):
         import pandas as pd
 
-        from parquet_to_arrow_spark.sources import puffin as pfw
+        from parquet_to_arrow_spark.sources import iceberg_meta as ice, puffin as pfw
 
-        poss = sorted(set(int(x) for x in pdf["pos"]))
+        fp = pdf["file_path"].iloc[0]
+        poss = set(int(x) for x in pdf["pos"])
+        for f in old_dvs.get(ice._uri_path(fp), ()):
+            poss.update(int(x) for x in pfw.read_dv_blob(
+                pfw.read_blob(f.path, f.content_offset, f.content_size)))
         return pd.DataFrame(
             {
-                "file_path": [pdf["file_path"].iloc[0]],
-                "blob": [pfw.dv_blob_bytes(poss)],
+                "file_path": [fp],
+                "blob": [pfw.dv_blob_bytes(sorted(poss))],
                 "cardinality": [len(poss)],
             }
         )
@@ -752,6 +765,7 @@ def delete_where_dv(
         [],
         summary={"operation-detail": "delete-where-dv"},
         delete_files=dfs,
+        planned_snapshot_id=meta["current-snapshot-id"],
     )
 
 

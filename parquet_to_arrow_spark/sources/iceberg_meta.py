@@ -18,10 +18,15 @@ fast-path hint). Every metadata writer — commits, refs, write-audit-
 publish, rollback, expiry, manifest rewrite — reads the table state once
 (_resolve_state) and publishes through _publish_metadata against the
 version it read, so a concurrent commit raises CommitConflict instead of
-being overwritten. Every reader — snapshot scans, file lists, changelog
-and incremental reads, metadata tables — likewise resolves ONE snapshot
-from one state read and takes that snapshot's data files and delete
-files from one walk of its manifest list (_live_files), so a commit
+being overwritten. The two writers that add a snapshot (commit_append,
+rewrite_manifests) write every manifest through _write_manifest (one
+spec header, one manifest-list row), carry inherited manifests forward
+with _carry_forward / _as_existing, and commit through _commit_snapshot
+(manifest list, snapshot, main ref, snapshot and metadata logs). Every
+reader — snapshot scans, file lists, changelog and incremental reads,
+metadata tables — likewise resolves ONE snapshot from one state read and
+takes that snapshot's data files and delete files from one walk of its
+manifest list (_live_files), so a commit
 landing mid-read can never pair one snapshot's files with another's
 deletes. Implemented on top of that: identity partitioning with
 manifest-level pruning, bucket[N] / truncate[W] / day / month / year
@@ -814,474 +819,366 @@ def _build_spec_fields(
     return fields, next_id
 
 
-def commit_append(
-    table_dir: str,
-    files: list[DataFile],
-    spark_schema=None,
-    ts_ms: int | None = None,
-    properties: dict | None = None,
-    summary: dict | None = None,
-    replace_on: str | None = None,
-    partition_by: list[str] | None = None,
-    remove_paths: set | None = None,
-    delete_files: list[DataFile] | None = None,
-    allow_spec_evolution: bool = False,
-    planned_snapshot_id: int | None = None,
-) -> int:
-    """Append ``files`` as one new snapshot; returns the snapshot id.
-
-    ``delete_files``: POSITION DELETE files (parquet of POS_DELETE_DDL
-    rows) to commit alongside — the merge-on-read half of DML. They land
-    in their own content=1 manifest, referenced by a content=1 manifest
-    list entry, exactly the spec's row-delta commit; data files are NOT
-    touched. Readers (read_snapshot) subtract the (file_path, pos) pairs;
-    a deletes-only commit gets operation "delete". Sequence-number
-    applicability is trivially safe here: data files added after a delete
-    commit have fresh unique paths, so a stale delete row can never match
-    a newer file's rows by path.
-
-    ``remove_paths``: data files to DROP from the table in the same
-    commit — the copy-on-write half of delete/update: affected manifests
-    are rewritten without those entries (survivors keep their original
-    snapshot/sequence as EXISTING entries), the files themselves stay on
-    disk for time travel until snapshot expiry. Combined with ``files``
-    carrying the rewritten survivors-of-the-predicate, this is a full
-    CoW DELETE commit. Every path must be live in the state this commit
-    reads: a rewrite planned before a concurrent commit removed one of
-    its files raises CommitConflict instead of resurrecting that commit's
-    deleted rows. ``planned_snapshot_id`` (required with ``remove_paths``)
-    is the snapshot the rewrite read its rows from: a live delete file
-    whose data sequence number is above that snapshot's committed after
-    the rewrite was planned. If it may target a removed path (an equality
-    delete, a position delete without ``referenced_data_file``, or one
-    whose ``referenced_data_file`` is removed), its rows are still in the
-    rewrite and it would be lost with the removed file, so it raises
-    CommitConflict too.
-
-    ``partition_by`` (first commit only): identity-partition the table by
-    these columns — the spec gets transform "identity" fields (ids from
-    1000), each manifest entry carries the file's partition values, and
-    snapshot_files can then PRUNE files by partition without opening them.
-
-    ``replace_on``: a summary key naming a logical partition (e.g. "wave").
-    When a PRIOR snapshot carries the same value for that key, its manifests
-    are dropped from the inherited manifest list — the commit is an
-    OVERWRITE of that logical partition, not an append. This is what makes
-    a re-committed wave idempotent end to end: a duplicate job (zombie
-    racing its own resume — observed under kill-9 soaks) re-writes the wave
-    directory with fresh file names, and without replacement the current
-    snapshot would keep BOTH manifests: double counts plus stale paths from
-    the loser's overwritten files.
-
-    Commit protocol (hadoop catalog): read the table state once (version
-    N and its metadata), write the manifest and manifest list, then
-    publish v{N+1}.metadata.json through _publish_metadata against that
-    same N, like every other metadata writer — the exclusive create is the
-    commit point (version resolution lists metadata files; the
-    version-hint is only a fast-path hint refreshed afterwards). A
-    concurrent commit that took v{N+1} first raises CommitConflict; a
-    crash replay of this very commit is welcomed as already done. A crash
-    before the metadata create leaves only unreferenced manifest/data
-    files (orphans); a crash after it is a completed commit the resuming
-    job discovers through its snapshot-summary markers."""
-    if remove_paths and planned_snapshot_id is None:
-        raise ValueError("remove_paths needs the planned_snapshot_id it was read from")
-    meta_dir = _meta_dir(table_dir)
-    os.makedirs(meta_dir, exist_ok=True)
-    version, prev = _resolve_state(table_dir)
-    if prev is None:
-        if spark_schema is None:
-            raise ValueError("first commit needs the table schema")
-        schema, last_col = iceberg_schema(spark_schema)
-        spec_fields, last_part_id = _build_spec_fields(schema, partition_by)
-        base = {
-            "format-version": FORMAT_VERSION,
-            "table-uuid": _table_uuid(table_dir),
-            "location": os.path.abspath(table_dir),
-            "last-sequence-number": 0,
-            "last-updated-ms": 0,
-            "last-column-id": last_col,
-            "current-schema-id": 0,
-            "schemas": [schema],
-            "default-spec-id": 0,
-            "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
-            "last-partition-id": last_part_id,
-            "default-sort-order-id": 0,
-            "sort-orders": [{"order-id": 0, "fields": []}],
-            "properties": properties or {},
-            "current-snapshot-id": -1,
-            "refs": {},
-            "snapshots": [],
-            "snapshot-log": [],
-            "metadata-log": [],
-        }
-        version = 0
-    else:
-        base = dict(prev)
-        if spark_schema is not None:
-            base = _maybe_evolve_schema(base, spark_schema)
-        if partition_by is not None:
-            # On an existing table a silently-ignored (or conflicting)
-            # partition_by would commit hive-layout values under the wrong
-            # spec — be loud. A verbatim restatement of the current spec
-            # is the one harmless case (callers with a fixed job config).
-            # With allow_spec_evolution=True a DIFFERENT value is Iceberg
-            # partition spec evolution (Table Spec v2): the new spec is
-            # appended under a bumped spec-id and becomes the default;
-            # EXISTING manifests keep their old spec-id and old layout —
-            # only metadata changes, no data file is rewritten.
-            cur_spec = next(
-                s
-                for s in base["partition-specs"]
-                if s["spec-id"] == base["default-spec-id"]
-            )
-            name_by_id = {
-                f["id"]: f["name"]
-                for s in base["schemas"]
-                for f in s["fields"]
-            }
-            want = []
-            for f in cur_spec["fields"]:
-                src = name_by_id.get(f["source-id"], "?")
-                tr = f["transform"]
-                want.append(src if tr == "identity" else f"{src}:{tr}")
-            if list(partition_by) != want:
-                if not allow_spec_evolution:
-                    raise ValueError(
-                        f"table already has partition spec {want}; partition "
-                        f"spec evolution (-> {list(partition_by)}) needs "
-                        "allow_spec_evolution=True — or create a new table "
-                        "or restate the existing spec verbatim"
-                    )
-                new_fields, last_pid = _build_spec_fields(
-                    _current_schema(base),
-                    partition_by,
-                    existing_specs=base["partition-specs"],
-                    last_partition_id=base.get("last-partition-id", 999),
-                )
-                new_sid = max(s["spec-id"] for s in base["partition-specs"]) + 1
-                base["partition-specs"] = base["partition-specs"] + [
-                    {"spec-id": new_sid, "fields": new_fields}
-                ]
-                base["default-spec-id"] = new_sid
-                base["last-partition-id"] = max(
-                    base.get("last-partition-id", 999), last_pid
-                )
-
-    seq = base["last-sequence-number"] + 1
-    ts = int(ts_ms if ts_ms is not None else time.time() * 1000)
-    uid = base["table-uuid"]
-
-    # --- manifest: name is CONTENT-ADDRESSED (digest of the file list), so
-    # a crash replay reproduces the same name byte-identically while a
-    # different concurrent commit at the same sequence writes a DIFFERENT
-    # manifest — it can never clobber files a winning commit references
-    # (its own become unreferenced orphans). The snapshot id inherits the
-    # digest, which is what lets the metadata-create conflict check
-    # (_publish_metadata) tell "replay of this very commit" apart from
-    # "someone else won".
-    digest = hashlib.md5(
-        "\n".join(
-            [f"{f.path}:{f.file_size}:{f.record_count}" for f in files]
-            + sorted(f"-{p}" for p in (remove_paths or ()))
-            + [
-                # referenced_data_file disambiguates DV entries that share
-                # one Puffin path and happen to match on (size, count) —
-                # without it two DIFFERENT delete commits could collide
-                # into one content-derived snapshot id and the conflict
-                # check would welcome the second as a replay
-                f"+d{f.path}:{f.file_size}:{f.record_count}:{f.referenced_data_file or ''}"
-                for f in (delete_files or [])
-            ]
-        ).encode()
-    ).hexdigest()[:12]
-    manifest_name = f"{uid}-seq{seq}-{digest}-m0.avro"
-    manifest_path = os.path.join(meta_dir, manifest_name)
-    del_manifest_name = f"{uid}-seq{seq}-{digest}-d0.avro"
-    del_manifest_path = os.path.join(meta_dir, del_manifest_name)
-    snap_id = _snapshot_id(
-        uid, seq, [manifest_name] + ([del_manifest_name] if delete_files else [])
-    )
-    pfields = _partition_fields(base)
-    cur_schema = _current_schema(base)
-    types_by_id = {
-        f["id"]: f["type"] for f in cur_schema["fields"] if isinstance(f["type"], str)
+def _new_table_metadata(
+    table_dir: str, spark_schema, partition_by, properties: dict | None
+) -> dict:
+    """Table metadata before the first snapshot: schema 0 from
+    ``spark_schema``, partition spec 0 from ``partition_by``."""
+    if spark_schema is None:
+        raise ValueError("first commit needs the table schema")
+    schema, last_col = iceberg_schema(spark_schema)
+    spec_fields, last_part_id = _build_spec_fields(schema, partition_by)
+    return {
+        "format-version": FORMAT_VERSION,
+        "table-uuid": _table_uuid(table_dir),
+        "location": os.path.abspath(table_dir),
+        "last-sequence-number": 0,
+        "last-updated-ms": 0,
+        "last-column-id": last_col,
+        "current-schema-id": 0,
+        "schemas": [schema],
+        "default-spec-id": 0,
+        "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
+        "last-partition-id": last_part_id,
+        "default-sort-order-id": 0,
+        "sort-orders": [{"order-id": 0, "fields": []}],
+        "properties": properties or {},
+        "current-snapshot-id": -1,
+        "refs": {},
+        "snapshots": [],
+        "snapshot-log": [],
+        "metadata-log": [],
     }
 
-    def _bmap(bounds: dict | None):
+
+def _evolve_partition_spec(base: dict, partition_by, allow_spec_evolution: bool) -> dict:
+    """``base`` with ``partition_by`` as its default partition spec. On an
+    existing table a silently-ignored (or conflicting) partition_by would
+    commit hive-layout values under the wrong spec — be loud. A verbatim
+    restatement of the current spec is the one harmless case (callers with
+    a fixed job config). With allow_spec_evolution=True a DIFFERENT value
+    is Iceberg partition spec evolution (Table Spec v2): the new spec is
+    appended under a bumped spec-id and becomes the default; EXISTING
+    manifests keep their old spec-id and old layout — only metadata
+    changes, no data file is rewritten."""
+    cur_spec = next(
+        s for s in base["partition-specs"] if s["spec-id"] == base["default-spec-id"]
+    )
+    name_by_id = {f["id"]: f["name"] for s in base["schemas"] for f in s["fields"]}
+    want = []
+    for f in cur_spec["fields"]:
+        src = name_by_id.get(f["source-id"], "?")
+        tr = f["transform"]
+        want.append(src if tr == "identity" else f"{src}:{tr}")
+    if list(partition_by) == want:
+        return base
+    if not allow_spec_evolution:
+        raise ValueError(
+            f"table already has partition spec {want}; partition "
+            f"spec evolution (-> {list(partition_by)}) needs "
+            "allow_spec_evolution=True — or create a new table "
+            "or restate the existing spec verbatim"
+        )
+    last = base.get("last-partition-id", 999)
+    new_fields, last_pid = _build_spec_fields(
+        _current_schema(base),
+        partition_by,
+        existing_specs=base["partition-specs"],
+        last_partition_id=last,
+    )
+    new_sid = max(s["spec-id"] for s in base["partition-specs"]) + 1
+    return dict(
+        base,
+        **{
+            "partition-specs": base["partition-specs"]
+            + [{"spec-id": new_sid, "fields": new_fields}],
+            "default-spec-id": new_sid,
+            "last-partition-id": max(last, last_pid),
+        },
+    )
+
+
+def _current_manifests(meta: dict) -> list[dict]:
+    """Manifest-list rows of the current snapshot (none before the first)."""
+    cur_id = meta.get("current-snapshot-id", -1)
+    if not cur_id or cur_id == -1:
+        return []
+    return _read_avro(
+        meta["snapshots"][_snapshot_index(meta["snapshots"], cur_id)]["manifest-list"]
+    )
+
+
+def _replace_logical_partition(
+    base: dict, manifests: list[dict], replace_on: str, key: str, manifest_path: str
+) -> tuple[list[dict], dict]:
+    """``replace_on``: drop the inherited manifests of logical partition
+    ``key`` — those of every prior snapshot whose summary carries the same
+    value, and the one the properties' replace index names (which
+    survives snapshot expiry: expiry drops the snapshot entries the
+    id-based match needs but inherits their manifests forward). Returns
+    (kept manifests, properties with the index moved to
+    ``manifest_path``)."""
+    replaced_ids = {
+        s["snapshot-id"]
+        for s in base["snapshots"]
+        if s.get("summary", {}).get(replace_on) == key
+    }
+    props = dict(base.get("properties", {}))
+    idx_prop = f"replace-index-{replace_on}"
+    index = json.loads(props.get(idx_prop, "{}"))
+    replaced_paths = {index[key]} if key in index else set()
+    kept = [
+        m
+        for m in manifests
+        if m["added_snapshot_id"] not in replaced_ids
+        and m["manifest_path"] not in replaced_paths
+    ]
+    index[key] = os.path.abspath(manifest_path)
+    props[idx_prop] = json.dumps(index)
+    return kept, props
+
+
+def _added_entries(meta: dict, files: list[DataFile], snap_id: int, seq: int) -> list[dict]:
+    """ADDED manifest entries for ``files`` under the default partition
+    spec, each stamped with its DataFile's content kind; column bounds
+    are serialized by the current schema."""
+    pfields = _partition_fields(meta)
+    types = {
+        f["id"]: f["type"] for f in _current_schema(meta)["fields"] if isinstance(f["type"], str)
+    }
+
+    def bmap(bounds: dict | None):
         if not bounds:
             return None
         return [
-            {"key": fid, "value": encode_bound(v, types_by_id[fid])}
+            {"key": fid, "value": encode_bound(v, types[fid])}
             for fid, v in sorted(bounds.items())
-            if fid in types_by_id and v is not None
+            if fid in types and v is not None
         ]
 
-    def _mk_entries(fs: list[DataFile], content: int | None) -> list[dict]:
-        # content=None: take each file's own (delete manifests mix position
-        # [1] and equality [2] files only in principle — commits keep them
-        # separate, but the entry is always stamped from the DataFile)
-        return [
-            {
-                "status": 1,  # ADDED
-                "snapshot_id": snap_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": {
-                    "content": content if content is not None else f.content,
-                    "file_path": os.path.abspath(f.path),
-                    "file_format": "PARQUET",
-                    "partition": {
-                        name: _coerce((f.partition or {}).get(name), itype)
-                        for name, itype in pfields
-                    },
-                    "record_count": f.record_count,
-                    "file_size_in_bytes": f.file_size,
-                    "lower_bounds": _bmap(f.lower_bounds),
-                    "upper_bounds": _bmap(f.upper_bounds),
-                    "split_offsets": None,
-                    "equality_ids": f.equality_ids,
-                    "sort_order_id": None,
-                    "referenced_data_file": f.referenced_data_file,
-                    "content_offset": f.content_offset,
-                    "content_size_in_bytes": f.content_size,
+    return [
+        {
+            "status": 1,  # ADDED
+            "snapshot_id": snap_id,
+            "sequence_number": seq,
+            "file_sequence_number": seq,
+            "data_file": {
+                "content": f.content,
+                "file_path": os.path.abspath(f.path),
+                "file_format": "PARQUET",
+                "partition": {
+                    name: _coerce((f.partition or {}).get(name), itype)
+                    for name, itype in pfields
                 },
-            }
-            for f in fs
-        ]
+                "record_count": f.record_count,
+                "file_size_in_bytes": f.file_size,
+                "lower_bounds": bmap(f.lower_bounds),
+                "upper_bounds": bmap(f.upper_bounds),
+                "split_offsets": None,
+                "equality_ids": f.equality_ids,
+                "sort_order_id": None,
+                "referenced_data_file": f.referenced_data_file,
+                "content_offset": f.content_offset,
+                "content_size_in_bytes": f.content_size,
+            },
+        }
+        for f in files
+    ]
 
-    default_sid = base.get("default-spec-id", 0)
-    manifest_bytes = avro_io.write_container(
-        manifest_entry_schema(pfields),
-        _mk_entries(files, 0),
+
+def _as_existing(entries: list[dict]) -> list[dict]:
+    """Mark entries carried into a rewritten manifest EXISTING: their
+    original snapshot and sequence numbers stay, and the fields an older
+    manifest may lack are filled with null."""
+    for e in entries:
+        e["status"] = 0
+        for fld in ("equality_ids", "referenced_data_file",
+                    "content_offset", "content_size_in_bytes"):
+            e["data_file"].setdefault(fld, None)
+    return entries
+
+
+def _write_manifest(
+    meta: dict,
+    path: str,
+    entries: list[dict],
+    spec_id: int,
+    content: int,
+    seq: int,
+    snap_id: int,
+) -> dict:
+    """Write ``entries`` as one manifest under partition spec ``spec_id``
+    and return its manifest-list row: the one manifest writer. The header
+    carries the keys the spec's "Manifests" section requires; the row's
+    file and row counts come from the entries' status (1 ADDED, 0
+    EXISTING)."""
+    spec = next(s for s in meta["partition-specs"] if s["spec-id"] == spec_id)
+    payload = avro_io.write_container(
+        manifest_entry_schema(_partition_fields(meta, spec_id)),
+        entries,
         meta={
-            "schema": json.dumps(cur_schema),
-            "partition-spec": "[]",
-            "partition-spec-id": str(default_sid),
+            "schema": json.dumps(_current_schema(meta)),
+            "partition-spec": json.dumps(spec["fields"]),
+            "partition-spec-id": str(spec_id),
             "format-version": str(FORMAT_VERSION),
-            "content": "data",
+            "content": "deletes" if content else "data",
         },
     )
-    with open(manifest_path, "wb") as f:
-        f.write(manifest_bytes)
-    if delete_files:
-        # position-delete manifest: same entry schema, content=1 on both
-        # the entries and the manifest-list row ("Delete Manifests" in the
-        # spec); partition struct stays null — delete application is
-        # path-keyed here, partition pruning of deletes is an optimization
-        # this layer doesn't take
-        del_manifest_bytes = avro_io.write_container(
-            manifest_entry_schema(pfields),
-            _mk_entries(delete_files, None),
-            meta={
-                "schema": json.dumps(cur_schema),
-                "partition-spec": "[]",
-                "partition-spec-id": str(default_sid),
-                "format-version": str(FORMAT_VERSION),
-                "content": "deletes",
-            },
-        )
-        with open(del_manifest_path, "wb") as f:
-            f.write(del_manifest_bytes)
-
-    # --- manifest list: previous snapshot's manifests + the new one
-    new_mf = {
-        "manifest_path": os.path.abspath(manifest_path),
-        "manifest_length": len(manifest_bytes),
-        "partition_spec_id": default_sid,
-        "content": 0,
+    with open(path, "wb") as f:
+        f.write(payload)
+    added = [e["data_file"]["record_count"] for e in entries if e["status"] == 1]
+    existing = [e["data_file"]["record_count"] for e in entries if e["status"] == 0]
+    return {
+        "manifest_path": os.path.abspath(path),
+        "manifest_length": len(payload),
+        "partition_spec_id": spec_id,
+        "content": content,
         "sequence_number": seq,
-        "min_sequence_number": seq,
+        "min_sequence_number": min((e["sequence_number"] for e in entries), default=seq),
         "added_snapshot_id": snap_id,
-        "added_files_count": len(files),
-        "existing_files_count": 0,
+        "added_files_count": len(added),
+        "existing_files_count": len(existing),
         "deleted_files_count": 0,
-        "added_rows_count": sum(f.record_count for f in files),
-        "existing_rows_count": 0,
+        "added_rows_count": sum(added),
+        "existing_rows_count": sum(existing),
         "deleted_rows_count": 0,
         "partitions": [],
     }
-    del_mf = (
-        {
-            "manifest_path": os.path.abspath(del_manifest_path),
-            "manifest_length": len(del_manifest_bytes),
-            "partition_spec_id": default_sid,
-            "content": 1,
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snap_id,
-            "added_files_count": len(delete_files),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": sum(f.record_count for f in delete_files),
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-            "partitions": [],
-        }
-        if delete_files
-        else None
-    )
-    prev_manifests: list[dict] = []
-    cur_id = base.get("current-snapshot-id", -1)
-    if cur_id and cur_id != -1:
-        cur_snap = next(s for s in base["snapshots"] if s["snapshot-id"] == cur_id)
-        prev_manifests = _read_avro(cur_snap["manifest-list"])
-    operation = "append"
-    if delete_files:
-        # spec row-delta commits: deletes-only = "delete", mixed = "overwrite"
-        operation = "overwrite" if files else "delete"
-    updated_props = dict(base.get("properties", {}))
-    if replace_on and summary and replace_on in summary:
-        key = str(summary[replace_on])
-        replaced_ids = {
-            s["snapshot-id"]
-            for s in base["snapshots"]
-            if s.get("summary", {}).get(replace_on) == key
-        }
-        # the properties index maps logical key -> its live manifest PATH,
-        # surviving snapshot expiry (which drops the snapshot entries the
-        # id-based match needs but inherits their manifests forward)
-        idx_prop = f"replace-index-{replace_on}"
-        index = json.loads(updated_props.get(idx_prop, "{}"))
-        replaced_paths = {index[key]} if key in index else set()
-        n_before = len(prev_manifests)
-        prev_manifests = [
-            m
-            for m in prev_manifests
-            if m["added_snapshot_id"] not in replaced_ids
-            and m["manifest_path"] not in replaced_paths
-        ]
-        if len(prev_manifests) != n_before:
-            operation = "overwrite"
-        index[key] = os.path.abspath(manifest_path)
-        updated_props[idx_prop] = json.dumps(index)
-    if remove_paths:
-        removed = {os.path.abspath(p) for p in remove_paths}
-        live_paths: set[str] = set()
-        # an expired planned snapshot has no sequence number to compare
-        # against: every live delete counts as late (fail closed)
-        planned_seq = next(
-            (
-                s["sequence-number"]
-                for s in base["snapshots"]
-                if s["snapshot-id"] == planned_snapshot_id
-            ),
-            -1,
-        )
-        late: list[str] = []
-        rewritten: list[dict] = []
-        for mf in prev_manifests:
-            m_entries = _read_avro(mf["manifest_path"])
-            live = [e for e in m_entries if e["status"] != 2]
-            live_paths.update(e["data_file"]["file_path"] for e in live)
-            if mf.get("content", 0):
-                for e in live:
-                    d, dseq = e["data_file"], e.get("sequence_number")
-                    ref = d.get("referenced_data_file")
-                    if (
-                        mf["sequence_number"] if dseq is None else dseq
-                    ) > planned_seq and (not ref or _uri_path(ref) in removed):
-                        late.append(d["file_path"])
-            keep = [e for e in live if e["data_file"]["file_path"] not in removed]
-            if len(keep) == len(m_entries):
-                rewritten.append(mf)  # untouched manifest carried forward
+
+
+def _carry_forward(
+    manifests: list[dict], removed: set[str], new_dvs: set[str], planned_seq: int
+) -> tuple[list[tuple], set[str], list[str], set[str]]:
+    """One walk of the manifests a commit inherits. The removal key is
+    (file_path, referenced_data_file): an entry goes when its path is in
+    ``removed`` (a Puffin path takes all its deletion vectors), or when it
+    is a deletion vector (DV) of a data file in ``new_dvs``, which this
+    commit gives a new DV (one live DV per data file, spec v3), leaving
+    other files' DVs in the same Puffin live. Returns (kept, live, late,
+    gone):
+
+    - kept: in manifest order, (row, None) for each manifest that lost
+      nothing and (row, surviving entries) for each that lost some but
+      not all;
+    - live: the paths of the data files that stay;
+    - late: delete files whose data sequence number is above
+      ``planned_seq`` that this commit replaces (a DV), or that may target
+      a removed data file — an equality delete, a position delete without
+      a reference, or one whose referenced file is removed;
+    - gone: the removed paths no live entry carries."""
+    kept: list[tuple] = []
+    live: set[str] = set()
+    seen: set[str] = set()
+    removed_data: set[str] = set()
+    recent: list[tuple] = []
+    for mf in manifests:
+        entries = _read_avro(mf["manifest_path"])
+        keep = []
+        for e in entries:
+            if e["status"] == 2:
                 continue
-            # a pure removal (no surviving rows added back) is a DELETE;
-            # zero-row rewrite artifacts don't make it an overwrite
-            operation = (
-                "overwrite" if sum(f.record_count for f in files) else "delete"
-            )
-            if not keep:
-                continue  # every entry removed: drop the manifest
-            for e in keep:
-                e["status"] = 0  # EXISTING: original snapshot/sequence kept
-                for fld in ("equality_ids", "referenced_data_file",
-                            "content_offset", "content_size_in_bytes"):
-                    e["data_file"].setdefault(fld, None)
-            rw_digest = hashlib.md5(
-                "\n".join(e["data_file"]["file_path"] for e in keep).encode()
-            ).hexdigest()[:12]
-            rw_path = os.path.join(meta_dir, f"{uid}-seq{seq}-rw{rw_digest}-m.avro")
-            # rewrite under the manifest's OWN spec (post-evolution, old
-            # manifests keep their old partition struct), dict(mf, ...)
-            # below carries its partition_spec_id forward
-            rw_bytes = avro_io.write_container(
-                manifest_entry_schema(
-                    _partition_fields(base, mf.get("partition_spec_id", 0))
-                ),
-                keep,
-            )
-            with open(rw_path, "wb") as f:
-                f.write(rw_bytes)
-            rewritten.append(
-                dict(
-                    mf,
-                    manifest_path=os.path.abspath(rw_path),
-                    manifest_length=len(rw_bytes),
-                    added_files_count=0,
-                    deleted_files_count=0,
-                    existing_files_count=len(keep),
-                    added_rows_count=0,
-                    deleted_rows_count=0,
-                    existing_rows_count=sum(
-                        e["data_file"]["record_count"] for e in keep
-                    ),
-                )
-            )
-        gone = sorted(removed - live_paths)
-        if gone:
-            # planned on an older snapshot: a concurrent commit already
-            # removed these files, and committing the rewrite would bring
-            # back rows it deleted and duplicate the rest
+            d, dseq = e["data_file"], e.get("sequence_number")
+            path, ref = d["file_path"], d.get("referenced_data_file")
+            target = _uri_path(ref) if ref else None
+            drop = path in removed or target in new_dvs
+            seen.add(path)
+            if mf.get("content", 0):
+                if (mf["sequence_number"] if dseq is None else dseq) > planned_seq:
+                    recent.append((path, target))
+            elif drop:
+                removed_data.add(path)
+            else:
+                live.add(path)
+            if not drop:
+                keep.append(e)
+        if keep:
+            kept.append((mf, None if len(keep) == len(entries) else keep))
+    late = [
+        p for p, t in recent
+        if t in new_dvs or (removed_data and (t is None or t in removed_data))
+    ]
+    return kept, live, late, removed - seen
+
+
+def _check_plan(
+    base: dict,
+    planned_snapshot_id: int | None,
+    delete_files: list[DataFile],
+    live: set[str],
+    late: list[str],
+    gone: set[str],
+) -> None:
+    """Raise CommitConflict when a commit planned on
+    ``planned_snapshot_id`` no longer fits the state it commits on: a file
+    it removes is gone; a delete committed since may target a file it
+    removes, or is a DV it replaces (``late``); a DV's data file is no
+    longer live; or a position delete without a referenced file was
+    planned before a commit that removed data files (its rows may now live
+    in other files). That last check walks the planned snapshot's
+    manifests, only when the current snapshot has moved since planning."""
+    if gone:
+        # planned on an older snapshot: a concurrent commit already
+        # removed these files, and committing the rewrite would bring
+        # back rows it deleted and duplicate the rest
+        raise CommitConflict(
+            f"{len(gone)} remove_paths are no longer live (e.g. "
+            f"{min(gone)}); re-plan on the current snapshot"
+        )
+    stale = late + [
+        f.referenced_data_file
+        for f in delete_files
+        if f.referenced_data_file and _uri_path(f.referenced_data_file) not in live
+    ]
+    if any(f.content == 1 and not f.referenced_data_file for f in delete_files) and (
+        planned_snapshot_id != base.get("current-snapshot-id")
+    ):
+        try:
+            planned = _live_files(base, planned_snapshot_id)[0]
+        except ValueError:
             raise CommitConflict(
-                f"{len(gone)} remove_paths are no longer live (e.g. {gone[0]}); "
-                "re-plan on the current snapshot"
-            )
-        if late:
-            # a merge-on-read delete committed after the rewrite was
-            # planned: its rows are in the rewritten files, and the files
-            # it points at are about to be removed
-            raise CommitConflict(
-                f"{len(late)} delete files landed after snapshot "
-                f"{planned_snapshot_id} (e.g. {late[0]}); re-plan on the "
+                f"planned snapshot {planned_snapshot_id} expired; re-plan on the "
                 "current snapshot"
-            )
-        prev_manifests = rewritten
-    manifests = prev_manifests + (
-        [new_mf] if files or not (remove_paths or delete_files) else []
-    ) + ([del_mf] if del_mf else [])
-    mlist_path = os.path.join(meta_dir, f"snap-{snap_id}-1-{uid}.avro")
+            ) from None
+        stale += [f.path for f in planned if f.path not in live]
+    if stale:
+        raise CommitConflict(
+            f"{len(stale)} files changed after snapshot {planned_snapshot_id} "
+            f"(e.g. {stale[0]}); re-plan on the current snapshot"
+        )
+
+
+def _commit_snapshot(
+    table_dir: str,
+    version: int,
+    base: dict,
+    snap_id: int,
+    seq: int,
+    ts: int,
+    manifests: list[dict],
+    summary: dict,
+) -> int:
+    """Commit ``manifests`` as snapshot ``snap_id`` on top of ``base``, the
+    state read at ``version``: the one snapshot commit. It writes the
+    manifest list, appends the snapshot, moves main and the current
+    pointer, logs both, and publishes v{version+1} through
+    _publish_metadata (a crash replay of the same snapshot id is
+    welcomed). Returns ``snap_id``."""
+    uid = base["table-uuid"]
+    mlist_path = os.path.join(_meta_dir(table_dir), f"snap-{snap_id}-1-{uid}.avro")
     with open(mlist_path, "wb") as f:
         f.write(avro_io.write_container(MANIFEST_FILE_SCHEMA, manifests))
-
-    # --- new table metadata
     snapshot = {
         "snapshot-id": snap_id,
         "sequence-number": seq,
         "timestamp-ms": ts,
         "manifest-list": os.path.abspath(mlist_path),
-        "summary": {
-            "operation": operation,
-            "added-data-files": str(len(files)),
-            "added-records": str(sum(f.record_count for f in files)),
-            **(
-                {
-                    "added-delete-files": str(len(delete_files)),
-                    "added-position-deletes": str(
-                        sum(f.record_count for f in delete_files)
-                    ),
-                }
-                if delete_files
-                else {}
-            ),
-            **{k: str(v) for k, v in (summary or {}).items()},
-        },
+        "summary": summary,
         "schema-id": base["current-schema-id"],
     }
+    cur_id = base.get("current-snapshot-id", -1)
     if cur_id and cur_id != -1:
         snapshot["parent-snapshot-id"] = cur_id
     new_meta = dict(base)
-    new_meta["properties"] = updated_props
     new_meta["last-sequence-number"] = seq
     new_meta["last-updated-ms"] = ts
     new_meta["current-snapshot-id"] = snap_id
@@ -1298,11 +1195,162 @@ def commit_append(
         new_meta["metadata-log"] = base["metadata-log"] + [
             {
                 "timestamp-ms": base["last-updated-ms"],
-                "metadata-file": os.path.join(meta_dir, f"v{version}.metadata.json"),
+                "metadata-file": os.path.join(
+                    _meta_dir(table_dir), f"v{version}.metadata.json"
+                ),
             }
         ]
     _publish_metadata(table_dir, version, new_meta, snap_id)
     return snap_id
+
+
+def commit_append(
+    table_dir: str,
+    files: list[DataFile],
+    spark_schema=None,
+    ts_ms: int | None = None,
+    properties: dict | None = None,
+    summary: dict | None = None,
+    replace_on: str | None = None,
+    partition_by: list[str] | None = None,
+    remove_paths: set | None = None,
+    delete_files: list[DataFile] | None = None,
+    allow_spec_evolution: bool = False,
+    planned_snapshot_id: int | None = None,
+) -> int:
+    """Append ``files`` as one new snapshot; returns the snapshot id.
+
+    ``delete_files``: position deletes (POS_DELETE_DDL parquet, or
+    deletion vectors in a Puffin file) or equality deletes, committed in
+    their own content=1 manifest — the spec's row-delta commit.
+    A deletion vector (DV) names its data file (``referenced_data_file``)
+    and replaces that file's live DV(s): a data file keeps one live DV
+    (spec v3), so the caller merges the DV of the planned snapshot into
+    the new one (delete_where_dv). ``remove_paths``: files to drop — the
+    copy-on-write half of DML, and the delete files a fold replaces (a
+    Puffin path drops all its DVs). Manifests that lose entries are
+    rewritten, survivors kept as EXISTING; the files stay on disk for
+    time travel until expiry.
+
+    ``planned_snapshot_id`` (required with ``remove_paths``) is the
+    snapshot the commit was planned on; the commit raises CommitConflict
+    when that plan went stale (_check_plan) — a removed path no longer
+    live, a later delete that may target a removed file, a DV whose data
+    file is gone or whose replaced DV is newer than the plan, or a
+    position delete planned before a commit that removed data files.
+
+    ``partition_by`` partitions a new table; on an existing one it must
+    restate the spec or, with ``allow_spec_evolution``, evolve it
+    (_evolve_partition_spec). ``replace_on`` names a summary key (e.g.
+    "wave"): prior manifests of the same value are dropped
+    (_replace_logical_partition), so a re-committed wave written under
+    fresh file names overwrites its first commit instead of doubling it.
+
+    Protocol: one state read (version N), one walk of the inherited
+    manifests (_carry_forward), every manifest through _write_manifest,
+    and _commit_snapshot publishes v{N+1} against N. A concurrent commit
+    that took v{N+1} raises CommitConflict; a crash replay of this commit
+    is welcomed (names and snapshot ids are content-addressed). A crash
+    before the publish leaves only unreferenced files (orphans)."""
+    if remove_paths and planned_snapshot_id is None:
+        raise ValueError("remove_paths needs the planned_snapshot_id it was read from")
+    meta_dir = _meta_dir(table_dir)
+    os.makedirs(meta_dir, exist_ok=True)
+    version, base = _resolve_state(table_dir)
+    if base is None:
+        version = 0
+        base = _new_table_metadata(table_dir, spark_schema, partition_by, properties)
+    else:
+        if spark_schema is not None:
+            base = _maybe_evolve_schema(base, spark_schema)
+        if partition_by is not None:
+            base = _evolve_partition_spec(base, partition_by, allow_spec_evolution)
+    seq = base["last-sequence-number"] + 1
+    ts = int(ts_ms if ts_ms is not None else time.time() * 1000)
+    uid = base["table-uuid"]
+    delete_files = delete_files or []
+    removed = {os.path.abspath(p) for p in remove_paths or ()}
+    new_dvs = {_uri_path(f.referenced_data_file) for f in delete_files if f.referenced_data_file}
+    # content-addressed names: a crash replay reproduces them, a different
+    # concurrent commit at the same sequence never clobbers a winner's, and
+    # the snapshot id inherits the digest (replay vs conflict)
+    digest = hashlib.md5(
+        "\n".join(
+            [f"{f.path}:{f.file_size}:{f.record_count}" for f in files]
+            + sorted(f"-{p}" for p in remove_paths or ())
+            + [
+                # the DV reference keeps DVs sharing one Puffin path apart
+                f"+d{f.path}:{f.file_size}:{f.record_count}:{f.referenced_data_file or ''}"
+                for f in delete_files
+            ]
+        ).encode()
+    ).hexdigest()[:12]
+    names = [f"{uid}-seq{seq}-{digest}-m0.avro", f"{uid}-seq{seq}-{digest}-d0.avro"]
+    snap_id = _snapshot_id(uid, seq, names if delete_files else names[:1])
+    manifest_path = os.path.join(meta_dir, names[0])
+
+    manifests = _current_manifests(base)
+    operation = ("overwrite" if files else "delete") if delete_files else "append"
+    props = base.get("properties", {})
+    if replace_on and summary and replace_on in summary:
+        n = len(manifests)
+        manifests, props = _replace_logical_partition(
+            base, manifests, replace_on, str(summary[replace_on]), manifest_path
+        )
+        if len(manifests) != n:
+            operation = "overwrite"
+    if removed or new_dvs or planned_snapshot_id is not None:
+        # an expired (or absent) planned snapshot has no sequence number to
+        # compare against: every live delete counts as late (fail closed)
+        planned_seq = next((s["sequence-number"] for s in base["snapshots"]
+                            if s["snapshot-id"] == planned_snapshot_id), -1)
+        kept, live, late, gone = _carry_forward(manifests, removed, new_dvs, planned_seq)
+        _check_plan(base, planned_snapshot_id, delete_files, live, late, gone)
+        if removed:
+            # a pure removal (no surviving rows added back) is a DELETE
+            operation = "overwrite" if sum(f.record_count for f in files) else "delete"
+        manifests = []
+        for mf, keep in kept:
+            if keep is not None:
+                # rewritten under the manifest's OWN spec, keeping its
+                # sequence and added snapshot (replace_on matches by it);
+                # named by the kept entries' removal keys, so two commits
+                # racing at one sequence that keep different DVs of one
+                # Puffin never write the same file
+                rw = hashlib.md5("\n".join(
+                    f"{d['file_path']}:{d['referenced_data_file']}"
+                    if d.get("referenced_data_file") else d["file_path"]
+                    for d in (e["data_file"] for e in keep)
+                ).encode()).hexdigest()[:12]
+                mf = _write_manifest(
+                    base, os.path.join(meta_dir, f"{uid}-seq{seq}-rw{rw}-m.avro"),
+                    _as_existing(keep), mf.get("partition_spec_id", 0),
+                    mf.get("content", 0), mf["sequence_number"], mf["added_snapshot_id"],
+                )
+            manifests.append(mf)
+    spec_id = base.get("default-spec-id", 0)
+    if files or not (removed or delete_files):
+        manifests.append(_write_manifest(
+            base, manifest_path, _added_entries(base, files, snap_id, seq),
+            spec_id, 0, seq, snap_id,
+        ))
+    if delete_files:
+        manifests.append(_write_manifest(
+            base, os.path.join(meta_dir, names[1]),
+            _added_entries(base, delete_files, snap_id, seq), spec_id, 1, seq, snap_id,
+        ))
+    summary = {
+        "operation": operation,
+        "added-data-files": str(len(files)),
+        "added-records": str(sum(f.record_count for f in files)),
+        **({"added-delete-files": str(len(delete_files)),
+            "added-position-deletes": str(sum(f.record_count for f in delete_files))}
+           if delete_files else {}),
+        **{k: str(v) for k, v in (summary or {}).items()},
+    }
+    return _commit_snapshot(
+        table_dir, version, dict(base, properties=props), snap_id, seq, ts, manifests, summary
+    )
 
 
 # ---------------------------------------------------------------- read side
@@ -2255,11 +2303,7 @@ def rewrite_manifests(table_dir: str, ts_ms: int | None = None) -> int | None:
     become expirable with their old snapshots. No-op (returns None) when
     there is nothing to fold."""
     version, meta = _table_state(table_dir)
-    cur_id = meta.get("current-snapshot-id", -1)
-    if cur_id == -1:
-        return None
-    snap = meta["snapshots"][_snapshot_index(meta["snapshots"], cur_id)]
-    manifests = _read_avro(snap["manifest-list"])
+    manifests = _current_manifests(meta)
     # fold within (content, spec-id) groups: after partition spec
     # evolution, manifests of different specs carry different partition
     # structs and cannot share one file
@@ -2269,94 +2313,35 @@ def rewrite_manifests(table_dir: str, ts_ms: int | None = None) -> int | None:
         by_key.setdefault(key, []).append(mf)
     if all(len(v) <= 1 for v in by_key.values()):
         return None
-    meta_dir = _meta_dir(table_dir)
     uid = meta["table-uuid"]
     seq = meta["last-sequence-number"] + 1
-    ts = int(ts_ms if ts_ms is not None else time.time() * 1000)
-
-    new_manifests: list[dict] = []
-    manifest_names: list[str] = []
+    folds = []
     for content, spec_id in sorted(by_key):
-        entries: list[dict] = []
-        for mf in by_key[(content, spec_id)]:
-            for e in _read_avro(mf["manifest_path"]):
-                if e["status"] == 2:
-                    continue
-                e = dict(e)
-                e["status"] = 0  # EXISTING: original snapshot/sequence kept
-                for fld in ("equality_ids", "referenced_data_file",
-                            "content_offset", "content_size_in_bytes"):
-                    e["data_file"].setdefault(fld, None)
-                entries.append(e)
+        entries = _as_existing([
+            e
+            for mf in by_key[(content, spec_id)]
+            for e in _read_avro(mf["manifest_path"])
+            if e["status"] != 2
+        ])
         digest = hashlib.md5(
             "\n".join(e["data_file"]["file_path"] for e in entries).encode()
         ).hexdigest()[:12]
-        name = f"{uid}-seq{seq}-rwm{digest}-c{content}s{spec_id}.avro"
-        path = os.path.join(meta_dir, name)
-        payload = avro_io.write_container(
-            manifest_entry_schema(_partition_fields(meta, spec_id)),
-            entries,
-            meta={"content": "data" if content == 0 else "deletes"},
-        )
-        with open(path, "wb") as f:
-            f.write(payload)
-        manifest_names.append(name)
-        new_manifests.append(
-            {
-                "manifest_path": os.path.abspath(path),
-                "manifest_length": len(payload),
-                "partition_spec_id": spec_id,
-                "content": content,
-                "sequence_number": seq,
-                "min_sequence_number": min(
-                    (e["sequence_number"] for e in entries), default=seq
-                ),
-                "added_snapshot_id": 0,  # patched below once snap_id exists
-                "added_files_count": 0,
-                "existing_files_count": len(entries),
-                "deleted_files_count": 0,
-                "added_rows_count": 0,
-                "existing_rows_count": sum(
-                    e["data_file"]["record_count"] for e in entries
-                ),
-                "deleted_rows_count": 0,
-                "partitions": [],
-            }
-        )
-    snap_id = _snapshot_id(uid, seq, manifest_names)
-    for mf in new_manifests:
-        mf["added_snapshot_id"] = snap_id
-    mlist_path = os.path.join(meta_dir, f"snap-{snap_id}-1-{uid}.avro")
-    with open(mlist_path, "wb") as f:
-        f.write(avro_io.write_container(MANIFEST_FILE_SCHEMA, new_manifests))
-    snapshot = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": ts,
-        "manifest-list": os.path.abspath(mlist_path),
-        "summary": {
-            "operation": "replace",
-            "operation-detail": f"rewrite-manifests:{len(manifests)}->{len(new_manifests)}",
-            "added-data-files": "0",
-            "added-records": "0",
-        },
-        "schema-id": meta["current-schema-id"],
-        "parent-snapshot-id": cur_id,
-    }
-    new_meta = dict(meta)
-    new_meta["last-sequence-number"] = seq
-    new_meta["last-updated-ms"] = ts
-    new_meta["current-snapshot-id"] = snap_id
-    new_meta["refs"] = {
-        **meta.get("refs", {}),
-        "main": {"snapshot-id": snap_id, "type": "branch"},
-    }
-    new_meta["snapshots"] = meta["snapshots"] + [snapshot]
-    new_meta["snapshot-log"] = meta["snapshot-log"] + [
-        {"timestamp-ms": ts, "snapshot-id": snap_id}
+        folds.append((f"{uid}-seq{seq}-rwm{digest}-c{content}s{spec_id}.avro",
+                      entries, spec_id, content))
+    snap_id = _snapshot_id(uid, seq, [name for name, *_ in folds])
+    new_manifests = [
+        _write_manifest(meta, os.path.join(_meta_dir(table_dir), name), entries,
+                        spec_id, content, seq, snap_id)
+        for name, entries, spec_id, content in folds
     ]
-    _publish_metadata(table_dir, version, new_meta)
-    return snap_id
+    summary = {
+        "operation": "replace",
+        "operation-detail": f"rewrite-manifests:{len(manifests)}->{len(new_manifests)}",
+        "added-data-files": "0",
+        "added-records": "0",
+    }
+    ts = int(ts_ms if ts_ms is not None else time.time() * 1000)
+    return _commit_snapshot(table_dir, version, meta, snap_id, seq, ts, new_manifests, summary)
 
 
 def orphan_files(table_dir: str, data_dir: str | None = None) -> list[str]:

@@ -423,6 +423,88 @@ class TestConcurrentCommit:
         ids = sorted(r.id for r in ice.read_snapshot(spark, table).collect())
         assert ids == list(range(3, 10))
 
+    @pytest.mark.parametrize("kind", ["position", "deletion_vector"])
+    def test_position_delete_fails_closed_against_concurrent_removal(
+        self, tmp_path, kind
+    ):
+        """A position delete of (f1, 0) planned on the snapshot holding f1
+        commits after a copy-on-write commit replaced f1 by f2 (ids 0-4).
+        f2 still holds id 0, so committing the delete would silently lose
+        it: a v2 delete file without a referenced data file, planned before
+        a commit that removed data files, and a deletion vector whose data
+        file is no longer live must both raise CommitConflict."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        from parquet_to_arrow_spark.sources import puffin as pf
+        from parquet_to_arrow_spark.sources.iceberg_meta import CommitConflict
+
+        table = str(tmp_path / "table")
+        f1, f2 = str(tmp_path / "f1.parquet"), str(tmp_path / "f2.parquet")
+        pq.write_table(pa.table({"id": pa.array(range(10), pa.int64())}), f1)
+        pq.write_table(pa.table({"id": pa.array(range(5), pa.int64())}), f2)
+        schema = StructType([StructField("id", LongType())])
+        planned = ice.commit_append(
+            table, [ice.DataFile(f1, 10, os.path.getsize(f1))], spark_schema=schema, ts_ms=1
+        )
+        ice.commit_append(
+            table, [ice.DataFile(f2, 5, os.path.getsize(f2))], ts_ms=2,
+            remove_paths={f1}, planned_snapshot_id=planned,
+        )
+        uri = "file://" + f1
+        if kind == "position":
+            d = str(tmp_path / "d.parquet")
+            pq.write_table(pa.table({"file_path": [uri], "pos": pa.array([0], pa.int64())}), d)
+            delete = ice.DataFile(d, 1, os.path.getsize(d), content=1)
+        else:
+            d = str(tmp_path / "dv.puffin")
+            (m,) = pf.write_puffin(
+                d, [{"type": pf.DV_BLOB_TYPE, "data": pf.dv_blob_bytes([0]),
+                     "properties": {"referenced-data-file": uri, "cardinality": "1"}}],
+                sequence_number=3,
+            )
+            delete = ice.DataFile(
+                d, 1, os.path.getsize(d), content=1, referenced_data_file=uri,
+                content_offset=m["offset"], content_size=m["length"],
+            )
+        with pytest.raises(CommitConflict):
+            ice.commit_append(
+                table, [], ts_ms=3, delete_files=[delete], planned_snapshot_id=planned
+            )
+        assert [f.path for f in ice.snapshot_files(table)] == [f2]
+        assert ice.snapshot_delete_files(table) == []
+
+    @pytest.mark.parametrize("mor_delete", ["delete_where_mor", "delete_where_dv"])
+    def test_mor_delete_fails_closed_against_concurrent_copy_on_write(
+        self, spark, tmp_path, monkeypatch, mor_delete
+    ):
+        """The mirror of the test above through the public deletes: a
+        merge-on-read delete("id < 3") plans its positions, then a
+        copy-on-write delete_where("id = 9") rewrites the file, then the
+        merge-on-read delete commits. Its positions point at the removed
+        file while ids 0-2 live on in the rewrite, so it must raise
+        CommitConflict, and a read must return the copy-on-write result."""
+        from parquet_to_arrow_spark.sources import iceberg
+        from parquet_to_arrow_spark.sources.iceberg_meta import CommitConflict
+
+        table, src = str(tmp_path / "table"), str(tmp_path / "src")
+        spark.range(10).coalesce(1).write.parquet(src)
+        ice.commit_parquet_dir(table, src, spark_schema=spark.range(1).schema, ts_ms=1)
+
+        commit = ice.commit_append
+
+        def cow_lands_first(*args, **kwargs):
+            monkeypatch.setattr(ice, "commit_append", commit)
+            iceberg.delete_where(spark, table, "id = 9")
+            return commit(*args, **kwargs)
+
+        monkeypatch.setattr(ice, "commit_append", cow_lands_first)
+        with pytest.raises(CommitConflict):
+            getattr(iceberg, mor_delete)(spark, table, "id < 3")
+        ids = sorted(r.id for r in ice.read_snapshot(spark, table).collect())
+        assert ids == list(range(9))
+
     @pytest.mark.parametrize(
         "writer",
         ["commit_append", "set_ref", "remove_ref", "stage_snapshot",
@@ -3227,6 +3309,81 @@ class TestDeletionVectors:
         delete_where_dv(spark, table, "doc_id = 21")  # second DV commit
         got = {r["doc_id"] for r in read_table(spark, table).collect()}
         assert got == set(range(30)) - {3, 17, 21}
+        # a DV delete on a file that already has a DV merges into it: one
+        # live DV per data file, holding both positions
+        delete_where_dv(spark, table, "doc_id = 4")
+        got = {r["doc_id"] for r in read_table(spark, table).collect()}
+        assert got == set(range(30)) - {3, 4, 17, 21}
+        dvs = [f for f in ice.snapshot_delete_files(table) if f.referenced_data_file]
+        refs = [f.referenced_data_file for f in dvs]
+        assert len(refs) == len(set(refs)) == 2
+        assert sorted(f.record_count for f in dvs) == [1, 2]
+
+    @pytest.mark.parametrize("earlier_dv", [False, True])
+    def test_dv_deletes_planned_on_one_snapshot_conflict(
+        self, spark, tmp_path, monkeypatch, earlier_dv
+    ):
+        """Two DV deletes of the same data file planned on one snapshot:
+        the one that commits second would replace the file's DV with a
+        merge that lacks the first delete's positions, so it raises
+        CommitConflict and the table keeps the first delete."""
+        from parquet_to_arrow_spark.sources import iceberg
+        from parquet_to_arrow_spark.sources.iceberg_meta import CommitConflict
+
+        table = self._table(spark, tmp_path)
+        if earlier_dv:
+            iceberg.delete_where_dv(spark, table, "doc_id = 5")
+        commit = ice.commit_append
+
+        def other_lands_first(*args, **kwargs):
+            monkeypatch.setattr(ice, "commit_append", commit)
+            iceberg.delete_where_dv(spark, table, "doc_id = 3")
+            return commit(*args, **kwargs)
+
+        monkeypatch.setattr(ice, "commit_append", other_lands_first)
+        with pytest.raises(CommitConflict):
+            iceberg.delete_where_dv(spark, table, "doc_id = 4")
+        got = {r["doc_id"] for r in iceberg.read_table(spark, table).collect()}
+        assert got == set(range(30)) - {3} - ({5} if earlier_dv else set())
+        refs = [f.referenced_data_file for f in ice.snapshot_delete_files(table)]
+        assert len(refs) == len(set(refs)) == 1
+
+    def test_dv_replacement_keeps_the_shared_puffin_dvs(self, spark, tmp_path, monkeypatch):
+        """One DV delete on two files writes one Puffin holding both DVs.
+        Two DV deletes, one per file, then race from the same table state:
+        the winner replaces its file's DV and leaves the other file's DV in
+        that Puffin live; the loser raises CommitConflict at publish, and
+        the rewritten delete manifest it wrote must not replace the
+        winner's, so no deleted row comes back."""
+        from parquet_to_arrow_spark.sources import iceberg
+        from parquet_to_arrow_spark.sources.iceberg_meta import CommitConflict
+
+        table = self._table(spark, tmp_path, n_files=2)
+        iceberg.delete_where_dv(spark, table, "doc_id IN (1, 11)")
+        (shared,) = {f.path for f in ice.snapshot_delete_files(table)}
+        stale, live = ice._resolve_state(table), ice._resolve_state
+        commit = ice.commit_append
+
+        def other_lands_first(*args, **kwargs):
+            monkeypatch.setattr(ice, "commit_append", commit)
+            iceberg.delete_where_dv(spark, table, "doc_id = 12")
+            reads = iter([stale])  # this commit read the state before it
+            monkeypatch.setattr(ice, "_resolve_state", lambda t: next(reads, None) or live(t))
+            return commit(*args, **kwargs)
+
+        monkeypatch.setattr(ice, "commit_append", other_lands_first)
+        with pytest.raises(CommitConflict):
+            iceberg.delete_where_dv(spark, table, "doc_id = 2")
+        monkeypatch.undo()
+        got = {r["doc_id"] for r in iceberg.read_table(spark, table).collect()}
+        assert got == set(range(20)) - {1, 11, 12}
+        dvs = ice.snapshot_delete_files(table)
+        refs = [f.referenced_data_file for f in dvs]
+        assert len(refs) == len(set(refs)) == 2  # one live DV per data file
+        # the first file keeps its DV (id 1) in the shared Puffin; the
+        # second file's merged DV holds ids 11 and 12
+        assert sorted((f.record_count, f.path == shared) for f in dvs) == [
+            (1, True), (2, False)]
 
     def test_materialize_folds_dvs(self, spark, tmp_path):
         from parquet_to_arrow_spark.sources.iceberg import (
@@ -3640,3 +3797,74 @@ def test_each_reader_makes_one_state_read(spark, tmp_path, monkeypatch):
         call()
         reads[name] = len(calls)
     assert reads == dict.fromkeys(readers, 1)
+
+
+class TestManifestWriter:
+    def test_every_manifest_carries_the_spec_header(self, spark, tmp_path):
+        """Spec "Manifests": every manifest's Avro header names the table
+        schema, the partition spec (its field list) and spec id, the format
+        version and the content kind — on an identity-partitioned table,
+        for the appended, the copy-on-write rewritten and the folded
+        manifests alike."""
+        from parquet_to_arrow_spark.sources.iceberg import delete_where
+
+        df = spark.createDataFrame(
+            [(i, f"t{i}", ["web", "books"][i % 2]) for i in range(20)],
+            "doc_id long, text string, source string",
+        )
+        table = str(tmp_path / "table")
+        for i in range(2):
+            d = str(tmp_path / f"w{i}")
+            df.filter(f"doc_id % 4 DIV 2 = {i}").write.partitionBy("source").parquet(d)
+            ice.commit_parquet_dir(table, d, spark_schema=df.schema, ts_ms=1 + i,
+                                   partition_by=["source"])
+        assert delete_where(spark, table, "doc_id = 0") is not None
+        assert ice.rewrite_manifests(table, ts_ms=9) is not None
+        meta = ice.current_metadata(table)
+        specs = {s["spec-id"]: s["fields"] for s in meta["partition-specs"]}
+        assert specs[0]  # partitioned: the field list is not empty
+        mdir = ice._meta_dir(table)
+        paths = [n for n in os.listdir(mdir)
+                 if n.endswith(".avro") and not n.startswith("snap-")]
+        assert len(paths) >= 4  # two appends, one CoW rewrite, one fold
+        for name in paths:
+            with open(os.path.join(mdir, name), "rb") as f:
+                header, _ = avro_io.read_container(f.read())
+            assert json.loads(header["partition-spec"]) == specs[
+                int(header["partition-spec-id"])], name
+            assert json.loads(header["schema"])["fields"], name
+            assert header["format-version"] == b"2", name
+            assert header["content"] in (b"data", b"deletes"), name
+
+    def test_manifest_list_counts_match_entries(self, spark, tmp_path):
+        """After append, replace_on overwrite, copy-on-write, merge-on-read
+        and DV deletes, rewrite_manifests, materialize_deletes and
+        compact_files, every manifest-list row of every snapshot counts
+        exactly its manifest's live entries and their rows."""
+        from parquet_to_arrow_spark.sources import iceberg
+
+        table = str(tmp_path / "table")
+        df = spark.createDataFrame([(i, f"t{i}") for i in range(40)],
+                                   "doc_id long, text string")
+        for i, wave in enumerate((0, 1, 0)):  # the third replaces wave 0
+            d = str(tmp_path / f"w{i}")
+            df.filter(f"doc_id % 2 = {wave}").coalesce(2).write.parquet(d)
+            ice.commit_parquet_dir(table, d, spark_schema=df.schema, ts_ms=1 + i,
+                                   summary={"wave": wave}, replace_on="wave")
+        assert iceberg.delete_where(spark, table, "doc_id = 0") is not None
+        assert iceberg.delete_where_mor(spark, table, "doc_id = 1") is not None
+        assert iceberg.delete_where_dv(spark, table, "doc_id = 2") is not None
+        assert ice.rewrite_manifests(table) is not None
+        assert iceberg.materialize_deletes(spark, table) is not None
+        assert iceberg.compact_files(spark, table) is not None
+        got = {r["doc_id"] for r in iceberg.read_table(spark, table).collect()}
+        assert got == set(range(3, 40))
+        for snap in ice.snapshots(table):
+            for mf in ice._read_avro(snap["manifest-list"]):
+                live = [e for e in ice._read_avro(mf["manifest_path"]) if e["status"] != 2]
+                rows = {s: sum(e["data_file"]["record_count"] for e in live
+                               if e["status"] == s) for s in (0, 1)}
+                assert mf["added_files_count"] + mf["existing_files_count"] == len(live)
+                assert mf["added_files_count"] == sum(e["status"] == 1 for e in live)
+                assert mf["added_rows_count"] == rows[1]
+                assert mf["existing_rows_count"] == rows[0]
