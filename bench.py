@@ -36,8 +36,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from parquet_to_arrow_spark.session import available_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", available_cores()))
 SCALING = os.environ.get("SPARK_GRAFT_SCALING", "1") != "0"
 
 # sf guess from dir name for reporting + synth sizing
@@ -233,7 +235,7 @@ def main() -> None:
         # (observed: 1-core reps swinging 30 s..86 s on identical work while
         # 2-core reps agree to <1%). Override with SPARK_GRAFT_SCALE_N.
         n = int(os.environ.get("SPARK_GRAFT_SCALE_N", "2"))
-    if SCALING and len(os.sched_getaffinity(0)) < 4 * n:
+    if SCALING and available_cores() < 4 * n:
         # a 4N-core leg on fewer cores (the count nproc reports, affinity
         # included) measures oversubscription, not scaling
         result["scaling"] = {"skipped": f"nproc < {4 * n}"}

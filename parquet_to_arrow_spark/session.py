@@ -41,6 +41,12 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     return f"{min(MAX_DRIVER_MIB, total_kib // 2048)}m"
 
 
+def available_cores() -> int:
+    """CPUs this process may run on: its affinity mask, the count nproc
+    reports. ``os.cpu_count()`` counts the whole machine instead."""
+    return len(os.sched_getaffinity(0))
+
+
 def empty_df(spark: SparkSession, ddl: str) -> DataFrame:
     """Zero-row DataFrame of schema ``ddl``, built on the JVM as an empty
     local relation: collecting it runs no task and starts no Python worker.
@@ -59,7 +65,7 @@ def get_spark(
     extra: dict | None = None,
 ) -> SparkSession:
     cores = cores or os.environ.get("SPARK_GRAFT_CPUS", "*")
-    ncores = os.cpu_count() if cores == "*" else int(cores)
+    ncores = available_cores() if cores == "*" else int(cores)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)

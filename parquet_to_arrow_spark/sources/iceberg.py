@@ -1,25 +1,9 @@
-"""Iceberg table source/sink.
-
-Two tiers, chosen at runtime:
-
-1. **Jar-backed** (production cluster): the iceberg-spark runtime catalog —
-   `spark.read.format("iceberg")` / `df.writeTo(...).append()`. This image
-   ships no jar, so the wiring is documented here and exercised nowhere.
-
-   SparkSession.builder
-     .config("spark.sql.extensions",
-             "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions")
-     .config("spark.sql.catalog.lake", "org.apache.iceberg.spark.SparkCatalog")
-     .config("spark.sql.catalog.lake.type", "hadoop")   # or hive/rest
-     .config("spark.sql.catalog.lake.warehouse", "s3://bucket/warehouse")
-
-2. **Engine-native metadata** (sources/iceberg_meta): the engine's own
-   pure-Python Iceberg-v2 metadata layer — hadoop-style version-hint
-   commits, Avro manifest lists/manifests, snapshot time travel — over
-   ordinary Spark-written parquet data files. This is what actually runs
-   (and is tested) here: appends create real snapshots, reads resolve the
-   current snapshot's file list and hand it to the parquet scan, so
-   pushdown/pruning are untouched.
+"""Iceberg table source/sink over the engine's own pure-Python Iceberg-v2
+metadata layer (sources/iceberg_meta): hadoop-style version-hint commits,
+Avro manifest lists/manifests, snapshot time travel — over ordinary
+Spark-written parquet data files. Appends create real snapshots; reads
+resolve the current snapshot's file list and hand it to the parquet scan,
+so pushdown/pruning are untouched. No iceberg-spark runtime jar is used.
 
 A plain parquet directory (no metadata/ dir) still reads as a bare table —
 the pre-metadata fallback kept for compatibility.
@@ -37,14 +21,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import iceberg_meta
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-
-
 def is_metadata_table(path: str) -> bool:
     return iceberg_meta.current_version(path) is not None
 
@@ -56,11 +32,9 @@ def read_table(
     partition_filter: dict | None = None,
     range_filter: dict | None = None,
 ) -> DataFrame:
-    """Snapshot-consistent scan: jar catalog if present, else the engine's
-    metadata walk (with manifest-level partition/min-max file skipping),
-    else a bare parquet directory."""
-    if iceberg_available(spark):
-        return spark.read.format("iceberg").load(table_or_path)
+    """Snapshot-consistent scan: the engine's metadata walk (with
+    manifest-level partition/min-max file skipping), or a bare parquet
+    directory."""
     if is_metadata_table(table_or_path):
         return iceberg_meta.read_snapshot(
             spark, table_or_path, snapshot_id, partition_filter, range_filter
@@ -68,7 +42,7 @@ def read_table(
     return spark.read.parquet(table_or_path)
 
 
-def append(df: DataFrame, table_or_path: str, summary: dict | None = None) -> int | None:
+def append(df: DataFrame, table_or_path: str, summary: dict | None = None) -> int:
     """Append as ONE new snapshot. Data files land under a UNIQUE
     data/seq-<n>-<nonce>/ directory per attempt — two racing appends can
     therefore never overwrite each other's files; the loser of the
@@ -76,10 +50,7 @@ def append(df: DataFrame, table_or_path: str, summary: dict | None = None) -> in
     files (listed by iceberg_meta.orphan_files, reclaimed after a grace
     period, exactly Iceberg's own model). A crashed attempt likewise
     leaves only orphans, never a half-visible snapshot. Returns the
-    snapshot id (None on the jar path)."""
-    if iceberg_available(df.sparkSession):
-        df.writeTo(table_or_path).append()
-        return None
+    snapshot id."""
     import uuid
 
     meta = iceberg_meta.current_metadata(table_or_path)
@@ -573,8 +544,6 @@ def delete_where(
     of those waves' files, AND snapshot expiry can defeat both matches —
     run deletes and wave jobs against the same table sequentially, not
     interleaved."""
-    if iceberg_available(spark):
-        raise NotImplementedError("use the catalog's DELETE FROM on the jar path")
     return _rewrite_files(
         spark,
         table_or_path,
@@ -596,8 +565,6 @@ def _doomed_positions(
     Positions come from the scanner's native _metadata.row_index (no
     window, no shuffle over the data), and the scan already applies
     pending deletes, so a re-delete never records a row twice."""
-    if iceberg_available(spark):
-        raise NotImplementedError("use the catalog's DELETE FROM on the jar path")
     _, meta = iceberg_meta._table_state(table_or_path)
     scan = iceberg_meta.read_snapshot(
         spark,

@@ -18,11 +18,14 @@ fast-path hint). Every metadata writer — commits, refs, write-audit-
 publish, rollback, expiry, manifest rewrite — reads the table state once
 (_resolve_state) and publishes through _publish_metadata against the
 version it read, so a concurrent commit raises CommitConflict instead of
-being overwritten. The two writers that add a snapshot (commit_append,
-rewrite_manifests) write every manifest through _write_manifest (one
-spec header, one manifest-list row), carry inherited manifests forward
-with _carry_forward / _as_existing, and commit through _commit_snapshot
-(manifest list, snapshot, main ref, snapshot and metadata logs). Every
+being overwritten. The writer passes only its own change; _publish_metadata
+is the one transition that derives the rest (last-updated-ms from the one
+clock _clock_ms, the metadata-log entry, the snapshot-log entry of a moved
+current snapshot, the main ref). The two writers that add a snapshot
+(commit_append, rewrite_manifests) write every manifest through
+_write_manifest (one spec header, one manifest-list row), carry inherited
+manifests forward with _carry_forward / _as_existing, and commit through
+_commit_snapshot (manifest list and snapshot). Every
 reader — snapshot scans, file lists, changelog and incremental reads,
 metadata tables — likewise resolves ONE snapshot from one state read and
 takes that snapshot's data files and delete files from one walk of its
@@ -1159,10 +1162,10 @@ def _commit_snapshot(
 ) -> int:
     """Commit ``manifests`` as snapshot ``snap_id`` on top of ``base``, the
     state read at ``version``: the one snapshot commit. It writes the
-    manifest list, appends the snapshot, moves main and the current
-    pointer, logs both, and publishes v{version+1} through
-    _publish_metadata (a crash replay of the same snapshot id is
-    welcomed). Returns ``snap_id``."""
+    manifest list, appends the snapshot, makes it current and publishes
+    v{version+1} through _publish_metadata, which moves main and writes
+    the logs (a crash replay of the same snapshot id is welcomed).
+    Returns ``snap_id``."""
     uid = base["table-uuid"]
     mlist_path = os.path.join(_meta_dir(table_dir), f"snap-{snap_id}-1-{uid}.avro")
     with open(mlist_path, "wb") as f:
@@ -1178,29 +1181,12 @@ def _commit_snapshot(
     cur_id = base.get("current-snapshot-id", -1)
     if cur_id and cur_id != -1:
         snapshot["parent-snapshot-id"] = cur_id
-    new_meta = dict(base)
-    new_meta["last-sequence-number"] = seq
-    new_meta["last-updated-ms"] = ts
-    new_meta["current-snapshot-id"] = snap_id
-    # main moves with the commit; named tags/branches (set_ref) survive it
-    new_meta["refs"] = {
-        **base.get("refs", {}),
-        "main": {"snapshot-id": snap_id, "type": "branch"},
-    }
-    new_meta["snapshots"] = base["snapshots"] + [snapshot]
-    new_meta["snapshot-log"] = base["snapshot-log"] + [
-        {"timestamp-ms": ts, "snapshot-id": snap_id}
-    ]
-    if version > 0:
-        new_meta["metadata-log"] = base["metadata-log"] + [
-            {
-                "timestamp-ms": base["last-updated-ms"],
-                "metadata-file": os.path.join(
-                    _meta_dir(table_dir), f"v{version}.metadata.json"
-                ),
-            }
-        ]
-    _publish_metadata(table_dir, version, new_meta, snap_id)
+    _publish_metadata(
+        table_dir, version, base,
+        {"last-sequence-number": seq, "current-snapshot-id": snap_id,
+         "snapshots": base["snapshots"] + [snapshot]},
+        ts, snap_id,
+    )
     return snap_id
 
 
@@ -1266,7 +1252,7 @@ def commit_append(
         if partition_by is not None:
             base = _evolve_partition_spec(base, partition_by, allow_spec_evolution)
     seq = base["last-sequence-number"] + 1
-    ts = int(ts_ms if ts_ms is not None else time.time() * 1000)
+    ts = _clock_ms(ts_ms)
     uid = base["table-uuid"]
     delete_files = delete_files or []
     removed = {os.path.abspath(p) for p in remove_paths or ()}
@@ -1415,12 +1401,10 @@ def set_ref(
     version, meta = _table_state(table_dir)
     sid = _resolve_sid(meta, snapshot_id)
     _snapshot_index(meta["snapshots"], sid)  # must exist (not expired)
-    new_meta = dict(meta)
-    new_meta["refs"] = {
-        **meta.get("refs", {}),
-        name: {"snapshot-id": sid, "type": type},
-    }
-    _publish_metadata(table_dir, version, new_meta)
+    _publish_metadata(
+        table_dir, version, meta,
+        {"refs": {**meta.get("refs", {}), name: {"snapshot-id": sid, "type": type}}},
+    )
 
 
 def stage_snapshot(
@@ -1445,17 +1429,11 @@ def stage_snapshot(
             "concurrent commit landed — resolve before staging"
         )
     snap = next(s for s in meta["snapshots"] if s["snapshot-id"] == cur)
-    parent = snap.get("parent-snapshot-id", -1)
-    new_meta = dict(meta)
-    refs = {
-        k: v for k, v in meta.get("refs", {}).items() if k != "main"
-    }
-    refs[branch] = {"snapshot-id": cur, "type": "branch"}
-    if parent not in (None, -1):
-        refs["main"] = {"snapshot-id": parent, "type": "branch"}
-    new_meta["refs"] = refs
-    new_meta["current-snapshot-id"] = parent if parent not in (None, -1) else -1
-    _publish_metadata(table_dir, version, new_meta)
+    _publish_metadata(
+        table_dir, version, meta,
+        {"refs": {**meta.get("refs", {}), branch: {"snapshot-id": cur, "type": "branch"}},
+         "current-snapshot-id": snap.get("parent-snapshot-id", -1)},
+    )
     return cur
 
 
@@ -1482,16 +1460,11 @@ def publish_branch(table_dir: str, branch: str) -> int:
             f"main moved to {cur} since {branch!r} was staged off "
             f"{parent}; rebase the staged work before publishing"
         )
-    new_meta = dict(meta)
-    new_meta["refs"] = {
-        **{k: v for k, v in meta["refs"].items() if k != branch},
-        "main": {"snapshot-id": sid, "type": "branch"},
-    }
-    new_meta["current-snapshot-id"] = sid
-    new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": int(time.time() * 1000), "snapshot-id": sid}
-    ]
-    _publish_metadata(table_dir, version, new_meta)
+    _publish_metadata(
+        table_dir, version, meta,
+        {"refs": {k: v for k, v in meta["refs"].items() if k != branch},
+         "current-snapshot-id": sid},
+    )
     return sid
 
 
@@ -1505,16 +1478,7 @@ def rollback(table_dir: str, snapshot_id) -> int:
     version, meta = _table_state(table_dir)
     sid = _resolve_sid(meta, snapshot_id)
     _snapshot_index(meta["snapshots"], sid)  # must exist (not expired)
-    new_meta = dict(meta)
-    new_meta["current-snapshot-id"] = sid
-    new_meta["refs"] = {
-        **meta.get("refs", {}),
-        "main": {"snapshot-id": sid, "type": "branch"},
-    }
-    new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": int(time.time() * 1000), "snapshot-id": sid}
-    ]
-    _publish_metadata(table_dir, version, new_meta)
+    _publish_metadata(table_dir, version, meta, {"current-snapshot-id": sid})
     return sid
 
 
@@ -1525,18 +1489,39 @@ def remove_ref(table_dir: str, name: str) -> None:
     version, meta = _table_state(table_dir)
     if name not in meta.get("refs", {}):
         raise ValueError(f"no ref named {name!r}")
-    new_meta = dict(meta)
-    new_meta["refs"] = {k: v for k, v in meta["refs"].items() if k != name}
-    _publish_metadata(table_dir, version, new_meta)
+    _publish_metadata(
+        table_dir, version, meta, {"refs": {k: v for k, v in meta["refs"].items() if k != name}}
+    )
+
+
+def _clock_ms(ts_ms: int | None = None) -> int:
+    """The writer's timestamp: ``ts_ms`` when the caller gives one, else
+    the wall clock — the one clock of the metadata writers."""
+    return int(ts_ms if ts_ms is not None else time.time() * 1000)
 
 
 def _publish_metadata(
-    table_dir: str, version: int, new_meta: dict, snap_id: int | None = None
+    table_dir: str,
+    version: int,
+    base: dict,
+    changes: dict,
+    ts_ms: int | None = None,
+    snap_id: int | None = None,
 ) -> None:
-    """Publish ``new_meta`` as v{version+1}.metadata.json — the one
-    metadata publish of every writer. ``version`` is the version the
-    caller's single _resolve_state read returned (0 before the first
+    """Publish ``base`` with the writer's ``changes`` as
+    v{version+1}.metadata.json — the one metadata transition and the one
+    publish of every writer. ``base`` is the state the caller's single
+    _resolve_state read returned at ``version`` (0 before the first
     commit), so new metadata only ever replaces the state it was built on.
+
+    A writer passes only its own change (new refs, a new current
+    snapshot, new snapshots or a filtered snapshot list); the rest of the
+    next version follows from ``base`` here, per the spec's table-metadata
+    fields: ``last-updated-ms`` is the writer's timestamp (_clock_ms of
+    ``ts_ms``); ``metadata-log`` gains v{version}.metadata.json; when
+    ``current-snapshot-id`` moves to a snapshot, ``snapshot-log`` gains one
+    entry (entries of snapshots no longer in the table are dropped); and
+    ``refs.main`` names the current snapshot, absent while there is none.
 
     Optimistic concurrency (the hadoop catalog's create-if-absent rename):
     only ONE writer may create v{N+1}. Write the full payload to a tmp
@@ -1559,6 +1544,25 @@ def _publish_metadata(
     The version-hint swap afterwards is a fast-path convenience, NOT the
     commit point — a crash right before it leaves a committed table
     (resolution lists v{version+1})."""
+    ts = _clock_ms(ts_ms)
+    new_meta = {**base, **changes, "last-updated-ms": ts}
+    if version > 0:
+        new_meta["metadata-log"] = base["metadata-log"] + [{
+            "timestamp-ms": base["last-updated-ms"],
+            "metadata-file": os.path.join(_meta_dir(table_dir), f"v{version}.metadata.json"),
+        }]
+    cur = new_meta["current-snapshot-id"]
+    log = base["snapshot-log"]
+    if cur != -1 and cur != base["current-snapshot-id"]:
+        log = log + [{"timestamp-ms": ts, "snapshot-id": cur}]
+    live = {s["snapshot-id"] for s in new_meta["snapshots"]}
+    new_meta["snapshot-log"] = [e for e in log if e["snapshot-id"] in live]
+    refs = dict(new_meta.get("refs", {}))
+    if cur == -1:
+        refs.pop("main", None)
+    else:
+        refs["main"] = {"snapshot-id": cur, "type": "branch"}
+    new_meta["refs"] = refs
     new_version = version + 1
     meta_path = os.path.join(_meta_dir(table_dir), f"v{new_version}.metadata.json")
     tmp_meta = meta_path + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
@@ -1947,8 +1951,19 @@ def _pos_delete_frame(spark, pos_dels: list[DataFile]):
     deletion vectors (content=1 + referenced_data_file) — each DV blob is
     decoded IN A WORKER via mapInPandas (driver touches only the
     file-count-sized descriptor list), so the two representations feed the
-    identical downstream anti-join."""
+    identical downstream anti-join.
+
+    The frame is broadcast when its DECODED size is small — one rule for
+    both representations and both readers (read_snapshot, read_changelog),
+    so the plan does not flip between v2 parquet and DVs for the same
+    delete set. On-disk bytes are the wrong scale for DVs: a bitmap
+    container packs 65536 rows into 8 KiB, so blob bytes would
+    force-broadcast a multi-GB decoded frame. record_count x ~96 bytes
+    (pos + repeated path string) estimates the expanded rows; 256 MiB
+    decoded (~2.8M delete rows) is the ceiling a 1000-executor fetch
+    comfortably absorbs."""
     import pandas as _pd  # noqa: F401  (worker-side import sanity)
+    from pyspark.sql import functions as F
 
     pq_files = [f for f in pos_dels if not f.referenced_data_file]
     dvs = [f for f in pos_dels if f.referenced_data_file]
@@ -1996,7 +2011,68 @@ def _pos_delete_frame(spark, pos_dels: list[DataFile]):
             ),
         )
         parts.append(desc.repartition(n_parts).mapInPandas(gen, POS_DELETE_DDL))
-    return _union(parts)
+    ddf = _union(parts)
+    return F.broadcast(ddf) if sum(f.record_count for f in pos_dels) * 96 < (256 << 20) else ddf
+
+
+def _eq_delete_frames(spark, eq_dels: list[DataFile], schema: dict) -> list[tuple]:
+    """[(key column names, frame)] of the equality deletes: one frame per
+    distinct key-column set, each delete file's rows stamped with its
+    commit sequence (``__dseq``) — application is gated per data file by
+    dseq > data seq (rows appended AFTER an equality delete survive it,
+    the spec's row-delta ordering)."""
+    from pyspark.sql import functions as F
+
+    names_by_id = {f["id"]: f["name"] for f in schema["fields"]}
+    groups: dict[tuple, list[DataFile]] = {}
+    for f in eq_dels:
+        groups.setdefault(tuple(sorted(f.equality_ids or [])), []).append(f)
+    out = []
+    for ids, fs in sorted(groups.items()):
+        names = [names_by_id[i] for i in ids]
+        fr = _union([
+            spark.read.parquet(f.path)
+            .select(*[F.col(n).alias(f"__eq_{n}") for n in names])
+            .withColumn("__dseq", F.lit(f.sequence))
+            for f in fs
+        ])
+        if sum(f.file_size for f in fs) < (64 << 20):
+            fr = F.broadcast(fr)
+        out.append((names, fr))
+    return out
+
+
+def _residual_partition_filter(meta: dict, out, files: list[DataFile], partition_filter: dict):
+    """``out`` with the EXACT partition filter re-applied after partition
+    spec evolution: metadata pruning could not apply a filter key to
+    manifests whose spec lacks it (kept conservatively), so identity-column
+    filters are re-applied on the data — Catalyst pushes them to the scans
+    / constant-folds them on literal-attached groups. A DERIVED-transform
+    key (doc_id_bucket, ts_day, ... — no table column to re-filter on)
+    that is absent from some live file's spec would silently turn exact
+    pruning into a superset read: reject loudly instead (filter on the
+    source column, or compact_files to migrate the old layout first)."""
+    from pyspark.sql import functions as F
+
+    live_sids = {f.spec_id for f in files}
+    for k, v in partition_filter.items():
+        if k in out.columns:
+            out = out.filter(F.col(k).isNull() if v is None else F.col(k) == F.lit(v))
+            continue
+        missing = [
+            sid
+            for sid in sorted(live_sids)
+            if k not in {s["name"] for s in _partition_specs(meta, sid)}
+        ]
+        if missing:
+            raise ValueError(
+                f"partition_filter key {k!r} is a derived transform "
+                f"absent from live spec(s) {missing} after partition "
+                "spec evolution — pruning would silently return a "
+                "superset; filter on the source column instead, or "
+                "compact_files to migrate old-layout files"
+            )
+    return out
 
 
 def read_snapshot(
@@ -2026,7 +2102,7 @@ def read_snapshot(
     delete files' file_path stat ranges (_delete_target_ranges) bypass the
     join entirely — at 100 TB a delete touching one partition never drags
     the other 99.9% of the scan through a join; (b) the delete set joins
-    broadcast when manifest-recorded sizes are small (the common case —
+    broadcast when its decoded size is small (_pos_delete_frame; the common case —
     data side streams, zero shuffle), degrading to a shuffled anti-join of
     only the TARGETED files otherwise. Equality deletes (content=2) apply
     as a null-safe anti-join on their key columns, gated by commit order
@@ -2063,44 +2139,8 @@ def read_snapshot(
             ranges is None or any(lo <= path <= hi for lo, hi in ranges)
         )
 
-    ddf = None
-    if pos_dels:
-        ddf = _pos_delete_frame(spark, pos_dels)
-        # broadcast by the DECODED anti-join frame's size — identical rule
-        # for both representations, so the plan does not flip between v2
-        # parquet and DVs for the same delete set. On-disk bytes would be
-        # the wrong scale for DVs (a bitmap container packs 65536 rows
-        # into 8 KiB; blob bytes would force-broadcast a multi-GB decoded
-        # frame); record_count x ~96 bytes (pos + repeated path string)
-        # estimates the expanded rows, 256 MB decoded (~2.8M delete rows)
-        # is the ceiling a 1000-executor fetch comfortably absorbs
-        est = sum(f.record_count for f in pos_dels) * 96
-        if est < (256 << 20):
-            ddf = F.broadcast(ddf)
-
-    # equality deletes: one frame per distinct key-column set, each delete
-    # file's rows stamped with its commit sequence — application is gated
-    # per data file by dseq > data seq (rows appended AFTER an equality
-    # delete survive it, the spec's row-delta ordering)
-    eqfs: list[tuple[list[str], object]] = []
-    if eq_dels:
-        names_by_id = {f["id"]: f["name"] for f in cur_schema["fields"]}
-        groups_eq: dict[tuple, list[DataFile]] = {}
-        for f in eq_dels:
-            groups_eq.setdefault(tuple(sorted(f.equality_ids or [])), []).append(f)
-        for ids, fs in sorted(groups_eq.items()):
-            names = [names_by_id[i] for i in ids]
-            fr = _union(
-                [
-                    spark.read.parquet(f.path)
-                    .select(*[F.col(n).alias(f"__eq_{n}") for n in names])
-                    .withColumn("__dseq", F.lit(f.sequence))
-                    for f in fs
-                ]
-            )
-            if sum(f.file_size for f in fs) < (64 << 20):
-                fr = F.broadcast(fr)
-            eqfs.append((names, fr))
+    ddf = _pos_delete_frame(spark, pos_dels) if pos_dels else None
+    eqfs = _eq_delete_frames(spark, eq_dels, cur_schema)
 
     def _scan(dfiles: list[DataFile], part_lits=()):
         """One scan node per (pos-targeted?, sequence) file group:
@@ -2193,35 +2233,7 @@ def read_snapshot(
         ]
     )
     if partition_filter and multi_spec:
-        # residual EXACT filter: metadata pruning could not apply a filter
-        # key to manifests whose spec lacks it (kept conservatively), so
-        # re-apply identity-column filters on the data — Catalyst pushes
-        # them to the scans / constant-folds them on literal-attached
-        # groups. A DERIVED-transform key (doc_id_bucket, ts_day, ... — no
-        # table column to re-filter on) that is absent from some live
-        # file's spec would silently turn exact pruning into a superset
-        # read: reject loudly instead (filter on the source column, or
-        # compact_files to migrate the old layout first)
-        live_sids = {f.spec_id for f in files}
-        for k, v in partition_filter.items():
-            if k in out.columns:
-                out = out.filter(
-                    F.col(k).isNull() if v is None else F.col(k) == F.lit(v)
-                )
-                continue
-            missing = [
-                sid
-                for sid in sorted(live_sids)
-                if k not in {s["name"] for s in _partition_specs(meta, sid)}
-            ]
-            if missing:
-                raise ValueError(
-                    f"partition_filter key {k!r} is a derived transform "
-                    f"absent from live spec(s) {missing} after partition "
-                    "spec evolution — pruning would silently return a "
-                    "superset; filter on the source column instead, or "
-                    "compact_files to migrate old-layout files"
-                )
+        out = _residual_partition_filter(meta, out, files, partition_filter)
     return out
 
 
@@ -2268,14 +2280,7 @@ def expire_snapshots(
         ]
     removable = sorted(set(removable))
 
-    ts = int(ts_ms if ts_ms is not None else time.time() * 1000)
-    new_meta = dict(meta)
-    new_meta["snapshots"] = keep
-    new_meta["snapshot-log"] = [
-        e for e in meta["snapshot-log"] if e["snapshot-id"] in keep_ids
-    ]
-    new_meta["last-updated-ms"] = ts
-    _publish_metadata(table_dir, version, new_meta)
+    _publish_metadata(table_dir, version, meta, {"snapshots": keep}, ts_ms)
 
     if remove:
         for p in removable:
@@ -2340,8 +2345,9 @@ def rewrite_manifests(table_dir: str, ts_ms: int | None = None) -> int | None:
         "added-data-files": "0",
         "added-records": "0",
     }
-    ts = int(ts_ms if ts_ms is not None else time.time() * 1000)
-    return _commit_snapshot(table_dir, version, meta, snap_id, seq, ts, new_manifests, summary)
+    return _commit_snapshot(
+        table_dir, version, meta, snap_id, seq, _clock_ms(ts_ms), new_manifests, summary
+    )
 
 
 def orphan_files(table_dir: str, data_dir: str | None = None) -> list[str]:
@@ -2649,8 +2655,6 @@ def read_changelog(
                     F.col("_metadata.row_index").alias("__pos"),
                 )
             )
-            if sum(f.file_size for f in pos) < (64 << 20):
-                ddf = F.broadcast(ddf)
             hit = raw.join(
                 ddf,
                 (F.col("__fp") == F.col("file_path"))

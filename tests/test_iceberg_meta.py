@@ -561,6 +561,73 @@ class TestConcurrentCommit:
         assert s3 in [s["snapshot-id"] for s in ice.snapshots(table)]
         assert ice.current_metadata(table)["current-snapshot-id"] == s3
 
+    @pytest.mark.parametrize(
+        "writer",
+        ["commit_append", "set_ref", "remove_ref", "stage_snapshot",
+         "publish_branch", "rollback", "expire_snapshots", "rewrite_manifests"],
+    )
+    def test_every_writer_makes_one_metadata_transition(self, tmp_path, monkeypatch, writer):
+        """Every writer's new version follows from the one it read by the
+        spec's table-metadata rules: metadata-log lists v1..v{N-1} in order
+        (each entry stamped with that version's last-updated-ms),
+        last-updated-ms is the writer's timestamp, and when the current
+        snapshot moves, snapshot-log gains an entry for it and main follows
+        it. Writers without a ts_ms read the metadata layer's clock."""
+        import time
+        import types
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        clock = {"ms": 3000}
+        monkeypatch.setattr(
+            ice, "time", types.SimpleNamespace(time=lambda: clock["ms"] / 1000, sleep=time.sleep)
+        )
+        table = str(tmp_path / "table")
+        files = []
+        for i in range(3):
+            p = str(tmp_path / f"f{i}.parquet")
+            pq.write_table(pa.table({"id": pa.array([i], pa.int64())}), p)
+            files.append(ice.DataFile(p, 1, os.path.getsize(p)))
+        schema = StructType([StructField("id", LongType())])
+        s1 = ice.commit_append(table, files[:1], spark_schema=schema, ts_ms=1000)
+        ice.commit_append(table, files[1:2], ts_ms=2000)
+        if writer == "publish_branch":
+            ice.stage_snapshot(table, "audit")  # main steps back to s1
+        if writer == "remove_ref":
+            ice.set_ref(table, "pin", s1)
+        version, before = ice._resolve_state(table)
+
+        clock["ms"] = 5000
+        {
+            "commit_append": lambda: ice.commit_append(table, files[2:], ts_ms=5000),
+            "set_ref": lambda: ice.set_ref(table, "tag1", s1),
+            "remove_ref": lambda: ice.remove_ref(table, "pin"),
+            "stage_snapshot": lambda: ice.stage_snapshot(table, "audit"),
+            "publish_branch": lambda: ice.publish_branch(table, "audit"),
+            "rollback": lambda: ice.rollback(table, s1),
+            "expire_snapshots": lambda: ice.expire_snapshots(table, ts_ms=5000),
+            "rewrite_manifests": lambda: ice.rewrite_manifests(table, ts_ms=5000),
+        }[writer]()
+
+        n, meta = ice._resolve_state(table)
+        assert n == version + 1
+        meta_dir = os.path.join(table, "metadata")
+        log = meta["metadata-log"]
+        assert [e["metadata-file"] for e in log] == [
+            os.path.join(meta_dir, f"v{i}.metadata.json") for i in range(1, n)
+        ]
+        for e in log:
+            with open(e["metadata-file"]) as f:
+                assert e["timestamp-ms"] == json.load(f)["last-updated-ms"]
+        assert meta["last-updated-ms"] == 5000
+        cur = meta["current-snapshot-id"]
+        assert cur != -1
+        if cur != before["current-snapshot-id"]:
+            assert meta["snapshot-log"][-1] == {"timestamp-ms": 5000, "snapshot-id": cur}
+        assert meta["refs"]["main"] == {"snapshot-id": cur, "type": "branch"}
+
 
 class TestScratchTables:
     def test_scratch_path_tracks_the_writer_source(self, tmp_path, monkeypatch):
@@ -2405,8 +2472,8 @@ class TestWriteAuditPublish:
         from parquet_to_arrow_spark.sources.iceberg import append, read_table
 
         table = str(tmp_path / "t")
-        append(spark.createDataFrame([(1, "a")], "k long, v string")
-               .coalesce(1), table)
+        s1 = append(spark.createDataFrame([(1, "a")], "k long, v string")
+                    .coalesce(1), table)
         sid = append(spark.createDataFrame([(2, "b")], "k long, v string")
                      .coalesce(1), table)
         staged = ice.stage_snapshot(table, "audit", expect_sid=sid)
@@ -2424,6 +2491,10 @@ class TestWriteAuditPublish:
         assert {r["k"] for r in read_table(spark, table).collect()} == {1, 2}
         refs = ice.current_metadata(table)["refs"]
         assert "audit" not in refs and refs["main"]["snapshot-id"] == sid
+        # history shows each move of the current snapshot: two commits, the
+        # stage's step back to s1, and the publish
+        history = ice.metadata_table(spark, table, "history").collect()
+        assert [r["snapshot_id"] for r in history] == [s1, sid, s1, sid]
 
     def test_stage_detects_concurrent_commit(self, spark, tmp_path):
         from parquet_to_arrow_spark.sources.iceberg import append
@@ -3475,6 +3546,45 @@ class TestDeletionVectors:
         assert (
             sorted(r["doc_id"] for r in read_table(spark, table).collect()) == got
         )
+
+    def test_changelog_sizes_dv_broadcast_by_decoded_rows(self, spark, tmp_path):
+        """read_changelog broadcasts the position-delete frame by the
+        same decoded-size rule as read_snapshot (_pos_delete_frame): a DV
+        whose manifest counts 3M deleted rows decodes to ~290 MB however
+        small its Puffin file is, so neither plan hints a broadcast. Only
+        the plans are inspected."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        from parquet_to_arrow_spark.sources import puffin as pf
+
+        table = str(tmp_path / "t")
+        f1 = str(tmp_path / "f1.parquet")
+        pq.write_table(pa.table({"id": pa.array(range(10), pa.int64())}), f1)
+        s1 = ice.commit_append(
+            table, [ice.DataFile(f1, 10, os.path.getsize(f1))],
+            spark_schema=StructType([StructField("id", LongType())]), ts_ms=1,
+        )
+        uri = "file://" + f1
+        d = str(tmp_path / "dv.puffin")
+        (m,) = pf.write_puffin(
+            d, [{"type": pf.DV_BLOB_TYPE, "data": pf.dv_blob_bytes([0]),
+                 "properties": {"referenced-data-file": uri, "cardinality": "1"}}],
+            sequence_number=2,
+        )
+        assert os.path.getsize(d) < 1024
+        ice.commit_append(
+            table, [], ts_ms=2, planned_snapshot_id=s1,
+            delete_files=[ice.DataFile(
+                d, 3_000_000, os.path.getsize(d), content=1, referenced_data_file=uri,
+                content_offset=m["offset"], content_size=m["length"],
+            )],
+        )
+        for df in (ice.read_changelog(spark, table, since_snapshot_id=s1),
+                   ice.read_snapshot(spark, table)):
+            plan = df._jdf.queryExecution().analyzed().toString()
+            assert "ResolvedHint" not in plan and "strategy=broadcast" not in plan, plan
 
 
 class TestReviewRound5b:
