@@ -182,13 +182,6 @@ def date_ymd(ts: Column) -> Column:
     return F.date_format(ts, "yyyy-MM-dd")
 
 
-# --- F2: non-finite floats render as null -------------------------------------
-
-
-def finite_or_null(c: Column) -> Column:
-    return F.when(F.isnan(c) | c.isin(float("inf"), float("-inf")), F.lit(None)).otherwise(c)
-
-
 # --- F6: RFC-4180 CSV ----------------------------------------------------------
 
 _CSV_HAZARD = '[",\r\n]'
@@ -202,28 +195,11 @@ def csv_field(c: Column) -> Column:
 
 
 def csv_lines(df: DataFrame, columns: list[str]) -> DataFrame:
-    """One RFC-4180 record per row (no CRLF terminator — the sink joins with
-    CRLF and prepends the header, reference :444-507)."""
+    """One RFC-4180 record per row (no CRLF terminator — the sink,
+    tools/parquet_to_text.iter_text, joins with CRLF and prepends the
+    header, reference :444-507)."""
     fields = [csv_field(F.col(c).cast("string")) for c in columns]
     return df.select(F.concat_ws(",", *fields).alias("line"))
-
-
-def write_csv_rfc4180(df: DataFrame, columns: list[str], path: str) -> None:
-    """CSV sink: header + CRLF records, exact reference framing. The line
-    column is computed distributed; only the final file concat is sequential
-    (one text part per partition, like any single-file sink)."""
-    header = ",".join(columns)
-    lines = csv_lines(df, columns)
-    lines.write.mode("overwrite").option("lineSep", "\r\n").text(path + ".parts")
-    import glob
-
-    with open(path, "wb") as out:
-        out.write(header.encode())
-        for part in sorted(glob.glob(f"{path}.parts/part-*")):
-            with open(part, "rb") as f:
-                data = f.read()
-            if data:
-                out.write(b"\r\n" + data[:-2] if data.endswith(b"\r\n") else b"\r\n" + data)
 
 
 # --- F7/S7: JSON array-of-objects ---------------------------------------------

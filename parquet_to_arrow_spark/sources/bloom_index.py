@@ -45,7 +45,6 @@ import uuid
 
 import numpy as np
 
-from ..session import empty_df
 from . import iceberg_meta
 from .io import files_df
 
@@ -356,11 +355,12 @@ def _distributed_candidates(spark, table_or_path: str, column: str, value, files
 
 def point_lookup(spark, table_or_path: str, column: str, value,
                  distributed: bool = False):
-    """Equality lookup through the Bloom index: read only candidate files.
-    Falls back to the plain snapshot scan when there is no index, when
-    every file was pruned (empty typed frame), or when the snapshot
-    carries pending MoR delete files (the anti-join path needs the full
-    read_snapshot plan — correctness over pruning).
+    """Equality lookup through the Bloom index: read only the candidate
+    files, through the same data-file scan as read_snapshot
+    (iceberg_meta._scan_files), so pending merge-on-read deletes apply and
+    identity-partition columns carry their values. Without an index every
+    live file is read; when every file is pruned the result is an empty
+    typed frame.
 
     ``distributed``: resolve candidates through the column-expression
     membership path (bloom_candidate_files_distributed) instead of the
@@ -369,31 +369,18 @@ def point_lookup(spark, table_or_path: str, column: str, value,
     lookup-sized either way."""
     from pyspark.sql import functions as F
 
-    # one snapshot for the whole lookup: the delete probe, the candidate
-    # files and any fallback scan all come from this state read
+    # one snapshot for the whole lookup: the candidate files and the
+    # deletes they are read with come from this state read
     _, meta = iceberg_meta._table_state(table_or_path)
-    sid = meta["current-snapshot-id"]
-    files, dels = iceberg_meta._live_files(meta, sid)
-    if dels or iceberg_meta._partition_fields(meta):
-        # MoR deletes need the anti-join plan; partitioned tables need the
-        # partition-literal re-injection — both live in read_snapshot
-        cands = None
-    elif distributed:
+    files, dels = iceberg_meta._live_files(meta, meta["current-snapshot-id"])
+    if distributed:
         cdf = _distributed_candidates(spark, table_or_path, column, value, files)
-        cands = None if cdf is None else [r["path"] for r in cdf.collect()]
+        cands = None if cdf is None else {r["path"] for r in cdf.collect()}
     else:
         idx = _load_index(table_or_path, column)
-        cands = None if idx is None else _might_hold(idx, files, value)
-    if cands is None:
-        return iceberg_meta.read_snapshot(spark, table_or_path, sid).filter(
-            F.col(column) == F.lit(value)
-        )
-    schema = iceberg_meta._current_schema(meta)
-    ddl = iceberg_meta._spark_ddl(schema)
-    if not cands:
-        return empty_df(spark, ddl)
-    return (
-        spark.read.schema(ddl)
-        .parquet(*cands)
-        .filter(F.col(column) == F.lit(value))
+        cands = None if idx is None else set(_might_hold(idx, files, value))
+    if cands is not None:
+        files = [f for f in files if f.path in cands]
+    return iceberg_meta._scan_files(spark, meta, files, dels).filter(
+        F.col(column) == F.lit(value)
     )

@@ -70,8 +70,7 @@ def append(df: DataFrame, table_or_path: str, summary: dict | None = None) -> in
 def committed_summaries(table_or_path: str) -> list[dict]:
     """Snapshot summaries of the current history (empty for a non-table) —
     resumable jobs read their own commit markers back from these."""
-    return [s.get("summary", {}) for s in iceberg_meta.snapshots(table_or_path)] \
-        if is_metadata_table(table_or_path) else []
+    return [s.get("summary", {}) for s in iceberg_meta.snapshots(table_or_path)]
 
 
 def iceberg_roundtrip_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -921,16 +920,19 @@ def materialize_deletes(spark: SparkSession, table_or_path: str) -> int | None:
     maintenance pass that caps merge-on-read amplification. After it, the
     snapshot is pure data files again (compaction and the fast-path encode
     require that). Position deletes target exactly the files they
-    reference; equality deletes narrow by the manifests' key min/max
-    bounds (_eq_affected — a one-key purge rewrites one file), falling
-    back to every pre-delete-sequence file when bounds or the narrowing
-    preconditions are missing. Untargeted data files are carried forward
-    untouched; stale position-delete rows referencing already-rewritten
-    (non-live) files are simply dropped. Returns the snapshot id, or None
-    when no deletes are pending."""
+    reference (iceberg_meta._pos_delete_targets: a DV names its file in
+    the manifest, a v2 delete file by its file_path column); equality
+    deletes narrow by the manifests' key min/max bounds (_eq_affected — a
+    one-key purge rewrites one file), falling back to every
+    pre-delete-sequence file when bounds or the narrowing preconditions
+    are missing. The affected files are read through the one data-file
+    scan (iceberg_meta._scan_files) with every pending delete applied; a
+    fully-deleted file yields no rows and is removed without replacement.
+    Untargeted data files are carried forward untouched; stale
+    position-delete rows referencing already-rewritten (non-live) files
+    are simply dropped. Returns the snapshot id, or None when no deletes
+    are pending."""
     import uuid
-
-    from pyspark.sql import functions as F
 
     _, meta = iceberg_meta._table_state(table_or_path)
     sid = meta["current-snapshot-id"]
@@ -939,37 +941,16 @@ def materialize_deletes(spark: SparkSession, table_or_path: str) -> int | None:
         return None
     pos_dels = [f for f in dels if f.content == 1]
     eq_dels = [f for f in dels if f.content == 2]
-    live = {f.path for f in live_files}
-    affected_paths: set[str] = set()
-    if pos_dels:
-        # both representations: v2 delete parquet AND v3 deletion vectors
-        # (iceberg_meta._pos_delete_frame decodes DV blobs in workers)
-        ddf = iceberg_meta._pos_delete_frame(spark, pos_dels)
-        target_uris = [
-            r["file_path"] for r in ddf.select("file_path").distinct().collect()
-        ]
-        by_uri = {u: iceberg_meta._uri_path(u) for u in target_uris}
-        affected_paths |= {p for p in by_uri.values() if p in live}
+    affected_paths = iceberg_meta._pos_delete_targets(spark, pos_dels) & {
+        f.path for f in live_files
+    }
     if eq_dels:
         max_dseq = max(f.sequence or 0 for f in eq_dels)
         old_files = [f for f in live_files if (f.sequence or 0) < max_dseq]
         affected_paths |= _eq_affected(meta, eq_dels, old_files)
-    # read_snapshot already applies the deletes; keep positions to select
-    # the affected files. __fp is the scanner's URI while affected_paths
-    # are manifest abspaths — resolve the mapping exactly by collecting
-    # the scan's distinct URIs (bounded by file count, data columns
-    # pruned) and decoding driver-side; a fully-deleted file simply has no
-    # surviving URI and is removed without replacement rows, which is
-    # correct
-    scan = iceberg_meta.read_snapshot(spark, table_or_path, sid, with_positions=True)
-    uri_by_path = {
-        iceberg_meta._uri_path(r["__fp"]): r["__fp"]
-        for r in scan.select("__fp").distinct().collect()
-    }
-    affected_uris = [
-        uri_by_path[p] for p in sorted(affected_paths) if p in uri_by_path
-    ]
-    survivors = scan.filter(F.col("__fp").isin(affected_uris)).drop("__fp", "__pos")
+    survivors = iceberg_meta._scan_files(
+        spark, meta, [f for f in live_files if f.path in affected_paths], dels
+    )
     rw_dir = os.path.join(table_or_path, "data", f"rw-{uuid.uuid4().hex[:8]}")
     _write_rewrite(survivors, rw_dir, meta)
     return iceberg_meta.commit_parquet_dir(
@@ -1224,16 +1205,14 @@ def compact_files(
     import uuid
     from urllib.parse import quote
 
-    from pyspark.sql import functions as F
-
     if sort_by and zorder:
         raise ValueError("pass sort_by or zorder, not both")
     _, meta = iceberg_meta._table_state(table_or_path)
     planned_sid = meta["current-snapshot-id"]
     live_files, dels = iceberg_meta._live_files(meta, planned_sid)
     if dels:
-        # compaction reads raw file paths (no delete anti-join) — silently
-        # resurrecting MoR-deleted rows would be corruption, so refuse
+        # compaction scans without deletes and commits data files only —
+        # silently resurrecting MoR-deleted rows would be corruption, so refuse
         raise ValueError(
             "table has pending position deletes; run materialize_deletes "
             "before compact_files"
@@ -1264,36 +1243,19 @@ def compact_files(
     }
     if not groups:
         return None
-    # read with the CURRENT table schema (as read_snapshot does): files
-    # predating an additive evolution must null-project the new columns
-    # instead of the compaction inheriting one arbitrary footer's schema
-    # and silently dropping them from the rewritten files
     cur_schema = iceberg_meta._current_schema(meta)
-    ddl = iceberg_meta._spark_ddl(cur_schema)
     rw_dir = os.path.join(table_or_path, "data", f"compact-{uuid.uuid4().hex[:8]}")
     n_small = n_out_total = 0
     for gi, (key, fs) in enumerate(sorted(groups.items(), key=lambda kv: tuple(map(str, kv[0])))):
         sid, key = key[0], key[1:]
         total = sum(f.file_size for f in fs)
         n_out = max(1, math.ceil(total / target_bytes))
-        df = spark.read.schema(ddl).parquet(*[f.path for f in fs])
+        # the one data-file scan: the current schema (files predating an
+        # additive evolution null-project the new columns) and, for a
+        # migration group, ITS spec's identity literals, which the write
+        # below moves to the CURRENT layout
+        df = iceberg_meta._scan_files(spark, meta, fs)
         migration = sid != default_sid
-        if migration:
-            # migration group: re-attach ITS spec's identity literals (the
-            # hive layout stripped them from these data files) BEFORE the
-            # shared clustering below, then write through the CURRENT
-            # layout — one compaction pass migrates AND clusters
-            own_names = [name for name, _ in iceberg_meta._partition_fields(meta, sid)]
-            val_by_name = dict(zip(own_names, key))
-            for sp in iceberg_meta._partition_specs(meta, sid):
-                if sp["transform"] != "identity":
-                    continue
-                df = df.withColumn(
-                    sp["name"],
-                    F.lit(val_by_name[sp["name"]]).cast(
-                        iceberg_meta._ICEBERG_TO_SPARK[sp["value_type"]]
-                    ),
-                )
         # clustering applies identically to current-spec and migration
         # groups: a zorder/sort request must not silently degrade to
         # coalesce on exactly the migrated files

@@ -31,7 +31,11 @@ metadata tables — likewise resolves ONE snapshot from one state read and
 takes that snapshot's data files and delete files from one walk of its
 manifest list (_live_files), so a commit
 landing mid-read can never pair one snapshot's files with another's
-deletes. Implemented on top of that: identity partitioning with
+deletes. Every reader of data files — read_snapshot, read_incremental
+and read_changelog here, materialize_deletes and compact_files
+(sources/iceberg.py), point_lookup (sources/bloom_index.py) — then scans
+them through one _scan_files (current schema, identity-partition
+literals, deletes). Implemented on top of that: identity partitioning with
 manifest-level pruning, bucket[N] / truncate[W] / day / month / year
 partition transforms (spec murmur3 — published Appendix B hash vectors
 pinned in tests; negative-safe truncate; epoch-ordinal temporals;
@@ -297,15 +301,13 @@ class DataFile:
     content_size: int | None = None
 
 
-# Position-delete file columns carry RESERVED field ids (spec "Reserved
-# field IDs"): file_path = int.max-101, pos = int.max-102. The delete
+# Position-delete file columns (spec "Position Delete Files"). The delete
 # parquet stores file_path exactly as Spark's _metadata.file_path renders
 # the data file (a file: URI) so the read-side anti-join compares raw
 # scan-native values on both sides — no decode step whose edge cases
 # (percent-encoding, '+') could silently unmatch; driver-side code that
 # needs the manifest abspath converts with _uri_path.
 POS_DELETE_DDL = "file_path string, pos bigint"
-POS_DELETE_FIELD_IDS = {"file_path": 2147483546, "pos": 2147483545}
 
 
 def _uri_path(uri: str) -> str:
@@ -2015,6 +2017,22 @@ def _pos_delete_frame(spark, pos_dels: list[DataFile]):
     return F.broadcast(ddf) if sum(f.record_count for f in pos_dels) * 96 < (256 << 20) else ddf
 
 
+def _pos_delete_targets(spark, pos_dels: list[DataFile]) -> set[str]:
+    """Exact abspaths of the data files the position deletes name. A
+    deletion vector names its one target in its manifest entry
+    (referenced_data_file), so no DV blob is decoded; a v2 position-delete
+    file's targets come from reading its ``file_path`` column alone."""
+    targets = {_uri_path(f.referenced_data_file) for f in pos_dels if f.referenced_data_file}
+    v2 = [f.path for f in pos_dels if not f.referenced_data_file]
+    if v2:
+        rows = (
+            spark.read.schema(POS_DELETE_DDL).parquet(*v2)
+            .select("file_path").distinct().collect()
+        )
+        targets |= {_uri_path(r["file_path"]) for r in rows}
+    return targets
+
+
 def _eq_delete_frames(spark, eq_dels: list[DataFile], schema: dict) -> list[tuple]:
     """[(key column names, frame)] of the equality deletes: one frame per
     distinct key-column set, each delete file's rows stamped with its
@@ -2075,56 +2093,43 @@ def _residual_partition_filter(meta: dict, out, files: list[DataFile], partition
     return out
 
 
-def read_snapshot(
-    spark,
-    table_dir: str,
-    snapshot_id: int | None = None,
-    partition_filter: dict | None = None,
-    range_filter: dict | None = None,
-    with_positions: bool = False,
-):
-    """Snapshot scan as a DataFrame: one state read resolves the selector
-    to one snapshot, and one manifest walk of that snapshot yields both its
-    data files and its delete files, so the scan can never pair one
-    snapshot's files with another's deletes. The (partition-pruned) file
-    list goes straight to the parquet reader. For a partitioned table
-    the partition columns — not stored in the data files, per the hive
-    layout — are re-attached as typed literals per partition group (robust
-    across multi-root wave/batch directories where a single basePath does
-    not exist). Time travel = pass an older snapshot id.
+def _scan_files(spark, meta: dict, files: list[DataFile], dels=(), with_positions=False):
+    """The one scan of data files every reader builds: ``files`` read with
+    the CURRENT schema (files written before an additive evolution project
+    the new columns as null), with ``dels`` applied. An empty ``files`` is
+    an empty TYPED frame, not an error.
 
-    Position deletes: when the snapshot carries content=1 delete files,
-    their (file_path, pos) pairs are SUBTRACTED via an anti-join against
-    the scan's native (_metadata.file_path, _metadata.row_index) — the
-    merge-on-read plan every Iceberg reader runs. Parquet row positions
-    come from the scanner itself (no window, no shuffle on the data side),
-    and the join is doubly bounded for scale: (a) data files OUTSIDE the
-    delete files' file_path stat ranges (_delete_target_ranges) bypass the
-    join entirely — at 100 TB a delete touching one partition never drags
-    the other 99.9% of the scan through a join; (b) the delete set joins
-    broadcast when its decoded size is small (_pos_delete_frame; the common case —
-    data side streams, zero shuffle), degrading to a shuffled anti-join of
-    only the TARGETED files otherwise. Equality deletes (content=2) apply
-    as a null-safe anti-join on their key columns, gated by commit order
-    (dseq > data file's sequence — later appends with a deleted key
-    survive). materialize_deletes remains the maintenance bound on
-    accumulation of either kind.
+    Identity partitions: the hive layout keeps partition columns out of the
+    data files, so each (spec, identity values) group of files gets them
+    back as typed literals — robust across multi-root wave/batch
+    directories where no single basePath exists. Only IDENTITY fields
+    re-attach: a bucket/truncate/temporal value is derived, and its source
+    column is physically in the files. Each file resolves its layout
+    against the spec ITS manifest was written under, so mixed-layout
+    snapshots after partition spec evolution read with zero rewrites. The
+    literals attach BEFORE the equality-delete anti-join: a delete keyed
+    on a partition column would otherwise compare against NULL and
+    silently no-op.
+
+    Position deletes (v2 parquet and v3 DVs, _pos_delete_frame) are
+    SUBTRACTED by an anti-join on the scanner's native
+    (_metadata.file_path, _metadata.row_index) — no window, no shuffle on
+    the data side. Data files outside the delete files' file_path ranges
+    (_delete_target_ranges) bypass the join entirely; the delete set joins
+    broadcast when its decoded size is small. Equality deletes apply as a
+    null-safe anti-join on their key columns, gated by commit order (dseq
+    > the data file's sequence: later appends with a deleted key survive).
 
     ``with_positions``: keep the scan-native ``__fp`` (file: URI) and
-    ``__pos`` (row index) columns on the result — the write-side input for
-    producing NEW position-delete files."""
+    ``__pos`` (row index) columns on the result."""
     from pyspark.sql import functions as F
 
-    _, meta = _table_state(table_dir)
-    data, dels = _live_files(meta, _resolve_sid(meta, snapshot_id))
-    files = _prune(meta, data, partition_filter, range_filter, table_dir)
     cur_schema = _current_schema(meta)
     ddl = _spark_ddl(cur_schema)
     if not files:
         from ..session import empty_df
 
-        # every file pruned (or an empty snapshot): an empty TYPED frame,
-        # not an error — probing an absent partition is a normal query
+        # no JVM scan node at all: probing an absent partition is a normal query
         return empty_df(
             spark, ddl + (", __fp string, __pos bigint" if with_positions else "")
         )
@@ -2144,18 +2149,8 @@ def read_snapshot(
 
     def _scan(dfiles: list[DataFile], part_lits=()):
         """One scan node per (pos-targeted?, sequence) file group:
-        pos-targeted files carry positions and subtract the delete pairs;
         sequence grouping exists only when equality deletes need their
-        dseq > seq gate; untargeted files carry positions only when the
-        caller asked for them.
-
-        ``part_lits``: (spec, value) pairs for identity-partition columns.
-        Hive layout strips these from the data files, so they MUST be
-        re-attached as typed literals BEFORE the equality-delete anti-join
-        runs — an equality delete keyed on a partition column would
-        otherwise compare against NULL and silently no-op (and a later
-        materialize_deletes would then drop the delete file, permanently
-        losing the delete)."""
+        dseq > seq gate."""
         hit = [f for f in dfiles if _targeted(f.path)]
         miss = [f for f in dfiles if not _targeted(f.path)]
         parts = []
@@ -2199,13 +2194,6 @@ def read_snapshot(
                 parts.append(df)
         return _union(parts)
 
-    # only IDENTITY fields re-attach as literal columns: a bucket field's
-    # value is a derived hash, not a table column — its source column is
-    # physically present in the data files (bucket-partitioned writes keep
-    # it; only the derived <col>_bucket directory column is stripped).
-    # After partition spec evolution each file resolves its layout against
-    # the spec ITS manifest was written under (files group by spec id
-    # first), so mixed-layout snapshots read correctly with zero rewrites.
     multi_spec = len(meta.get("partition-specs", [])) > 1
     id_specs_by_sid: dict[int, list[dict]] = {}
 
@@ -2226,13 +2214,37 @@ def read_snapshot(
             (f.partition or {}).get(s["name"]) for s in _id_specs(f.spec_id)
         )
         groups.setdefault(key, []).append(f)
-    out = _union(
+    return _union(
         [
             _scan(gfiles, part_lits=list(zip(_id_specs(key[0]), key[1:])))
             for key, gfiles in sorted(groups.items())
         ]
     )
-    if partition_filter and multi_spec:
+
+
+def read_snapshot(
+    spark,
+    table_dir: str,
+    snapshot_id: int | None = None,
+    partition_filter: dict | None = None,
+    range_filter: dict | None = None,
+    with_positions: bool = False,
+):
+    """Snapshot scan as a DataFrame: one state read resolves the selector
+    to one snapshot, and one manifest walk of that snapshot yields both its
+    data files and its delete files, so the scan can never pair one
+    snapshot's files with another's deletes. The (partition- and
+    range-pruned) data files go through _scan_files with that snapshot's
+    deletes applied. Time travel = pass an older snapshot id.
+
+    ``with_positions``: keep the scan-native ``__fp`` (file: URI) and
+    ``__pos`` (row index) columns on the result — the write-side input for
+    producing NEW position-delete files."""
+    _, meta = _table_state(table_dir)
+    data, dels = _live_files(meta, _resolve_sid(meta, snapshot_id))
+    files = _prune(meta, data, partition_filter, range_filter, table_dir)
+    out = _scan_files(spark, meta, files, dels, with_positions)
+    if partition_filter and len(meta.get("partition-specs", [])) > 1:
         out = _residual_partition_filter(meta, out, files, partition_filter)
     return out
 
@@ -2557,10 +2569,12 @@ def read_changelog(
 
     - ``insert`` rows — the content of data files ADDED by the snapshot
       (plain appends, and the append half of a row-delta upsert);
-    - ``delete`` rows — full pre-image rows resolved from POSITION delete
-      files added by the snapshot (read back from their still-live target
-      files by (file_path, pos) — a semi-join against the scanner's native
-      positions, bounded to the targeted files);
+    - ``delete`` rows — full pre-image rows of the POSITION deletes
+      (v2 files and DVs) added by the snapshot: the targeted data files
+      as the PREVIOUS snapshot reads them (its deletes applied, so a row
+      deleted earlier — e.g. carried into a merged DV — is not emitted
+      again), semi-joined with the added deletes on the scanner's native
+      (file_path, pos);
     - ``delete_key`` rows — EQUALITY delete files' key sets, key columns
       populated and every other column null (the spec's minimal
       representation; resolving full pre-images would re-scan pre-state).
@@ -2578,10 +2592,12 @@ def read_changelog(
     raises and the consumer rebases.
 
     Scale shape: pure metadata set-differences pick the per-snapshot file
-    lists; each emission is a plain pruned parquet scan (no shuffle except
-    the position-delete semi-join, which is bounded to targeted files and
-    broadcast-sized delete sets); the union is one plan over at most
-    |range| scan nodes, bounded by snapshot retention."""
+    lists, and building the frame runs no Spark job for DV deletes (their
+    targets come from the manifests, _pos_delete_targets); each emission
+    is a _scan_files scan (no shuffle except the position-delete
+    semi-join, which is bounded to targeted files and broadcast-sized
+    delete sets); the union is one plan over at most |range| scan nodes,
+    bounded by snapshot retention."""
     from pyspark.sql import functions as F
 
     _, meta = _table_state(table_dir)
@@ -2605,19 +2621,19 @@ def read_changelog(
 
     # one manifest walk per snapshot: the one before the range, then each
     # snapshot of the range, all from the same table state
-    prev_data: set[str] = set()
-    prev_dels: set[str] = set()
+    prev_data_files: list[DataFile] = []
+    prev_del_files: list[DataFile] = []
     if lo:
-        data, dels = _live_files(meta, snaps[lo - 1]["snapshot-id"])
-        prev_data, prev_dels = {f.path for f in data}, {f.path for f in dels}
+        prev_data_files, prev_del_files = _live_files(meta, snaps[lo - 1]["snapshot-id"])
     for ordinal, s in enumerate(snaps[lo:hi]):
         sid = s["snapshot-id"]
         op = s.get("summary", {}).get("operation", "append")
         cur_data_files, cur_del_files = _live_files(meta, sid)
+        prev_data = {f.path for f in prev_data_files}
+        prev_dels = {f.path for f in prev_del_files}
         cur_data = {f.path for f in cur_data_files}
-        cur_dels = {f.path for f in cur_del_files}
         if op == "replace":
-            prev_data, prev_dels = cur_data, cur_dels
+            prev_data_files, prev_del_files = cur_data_files, cur_del_files
             continue
         if prev_data - cur_data:
             raise ValueError(
@@ -2628,35 +2644,20 @@ def read_changelog(
         added_data = [f for f in cur_data_files if f.path not in prev_data]
         added_dels = [f for f in cur_del_files if f.path not in prev_dels]
         if added_data:
-            _emit(
-                spark.read.schema(ddl).parquet(*[f.path for f in added_data]),
-                "insert",
-                sid,
-                ordinal,
-            )
+            _emit(_scan_files(spark, meta, added_data), "insert", sid, ordinal)
         pos = [f for f in added_dels if f.content == 1]
         eqs = [f for f in added_dels if f.content == 2]
         if pos:
-            # both representations: v2 delete parquet AND v3 DVs
-            ddf = _pos_delete_frame(spark, pos)
-            # targeted-file count is bounded by the delete set, and the
-            # URIs are the scanner's own rendering (write-side invariant)
-            target_uris = [
-                r["file_path"]
-                for r in ddf.select("file_path").distinct().collect()
-            ]
-            targets = sorted(_uri_path(u) for u in target_uris)
-            raw = (
-                spark.read.schema(ddl)
-                .parquet(*targets)
-                .select(
-                    "*",
-                    F.col("_metadata.file_path").alias("__fp"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                )
+            targets = _pos_delete_targets(spark, pos)
+            before = _scan_files(
+                spark,
+                meta,
+                [f for f in prev_data_files if f.path in targets],
+                prev_del_files,
+                with_positions=True,
             )
-            hit = raw.join(
-                ddf,
+            hit = before.join(
+                _pos_delete_frame(spark, pos),
                 (F.col("__fp") == F.col("file_path"))
                 & (F.col("__pos") == F.col("pos")),
                 "semi",
@@ -2678,7 +2679,7 @@ def read_changelog(
                 sid,
                 ordinal,
             )
-        prev_data, prev_dels = cur_data, cur_dels
+        prev_data_files, prev_del_files = cur_data_files, cur_del_files
     if not frames:
         from ..session import empty_df
 
@@ -2694,10 +2695,4 @@ def read_incremental(
     """DataFrame over only the rows appended after ``since_snapshot_id``.
     Empty typed frame when nothing is new."""
     _, meta = _table_state(table_dir)
-    ddl = _spark_ddl(_current_schema(meta))
-    files = _added_files(meta, since_snapshot_id, to_snapshot_id)
-    if not files:
-        from ..session import empty_df
-
-        return empty_df(spark, ddl)
-    return spark.read.schema(ddl).parquet(*[f.path for f in files])
+    return _scan_files(spark, meta, _added_files(meta, since_snapshot_id, to_snapshot_id))

@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 SCHEMA_DDL = "doc_id string, tokens array<int>, n_tok int, source string"
 
-_MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
 _PAD = np.int32(0)
 
 SOURCES = ["web", "books", "code", "wiki", "forum"]

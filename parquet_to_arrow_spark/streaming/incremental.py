@@ -54,6 +54,18 @@ def run_incremental_encode(spark, input_dir, output_dir, checkpoint_dir) -> None
     q.awaitTermination()
 
 
+def _replayed(table_dir: str, epoch_id: int) -> bool:
+    """True when a snapshot of the table already records a batch id at or
+    above ``epoch_id``: the epoch is a replay, already durable."""
+    from ..sources import iceberg
+
+    return any(
+        int(s["batch"]) >= epoch_id
+        for s in iceberg.committed_summaries(table_dir)
+        if "batch" in s
+    )
+
+
 def incremental_encode_to_iceberg(
     spark: SparkSession,
     input_dir: str,
@@ -84,13 +96,8 @@ def incremental_encode_to_iceberg(
     def sink(batch_df, epoch_id: int) -> None:
         import os
 
-        committed = [
-            int(s["summary"]["batch"])
-            for s in iceberg_meta.snapshots(table_dir)
-            if "batch" in s.get("summary", {})
-        ]
-        if committed and epoch_id <= max(committed):
-            return  # replayed epoch: already durable in the table
+        if _replayed(table_dir, epoch_id):
+            return
         encoded = encode_tokens_df(batch_df)
         data_dir = os.path.join(table_dir, "data", f"batch-{epoch_id}")
         encoded.write.mode("overwrite").parquet(data_dir)
@@ -136,7 +143,7 @@ def streaming_upsert_to_iceberg(
     must not depend on it."""
     from pyspark.sql import functions as F
 
-    from ..sources import iceberg, iceberg_meta
+    from ..sources import iceberg
 
     stream = (
         spark.readStream.schema(schema_ddl)
@@ -145,17 +152,8 @@ def streaming_upsert_to_iceberg(
     )
 
     def sink(batch_df, epoch_id: int) -> None:
-        try:
-            snaps = iceberg_meta.snapshots(table_dir)
-        except FileNotFoundError:
-            snaps = []
-        committed = [
-            int(s["summary"]["batch"])
-            for s in snaps
-            if "batch" in s.get("summary", {})
-        ]
-        if committed and epoch_id <= max(committed):
-            return  # replayed epoch: already durable in the table
+        if _replayed(table_dir, epoch_id):
+            return
         others = [c for c in batch_df.columns if c not in key_cols]
         latest = batch_df.groupBy(*key_cols).agg(
             F.max(F.struct(*others)).alias("__r")

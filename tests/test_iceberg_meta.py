@@ -3978,3 +3978,108 @@ class TestManifestWriter:
                 assert mf["added_files_count"] == sum(e["status"] == 1 for e in live)
                 assert mf["added_rows_count"] == rows[1]
                 assert mf["existing_rows_count"] == rows[0]
+
+
+class TestOneDataFileScan:
+    """Every reader — read_incremental, read_changelog, materialize_deletes,
+    point_lookup, compact_files — scans data files through read_snapshot's
+    scan (_scan_files): identity-partition values come back, deletes
+    apply, and no reader forks to a full read_snapshot."""
+
+    def _dv_twice(self, spark, tmp_path):
+        """One 6-row file, then two DV deletes on it (doc 1, then doc 2):
+        the second DV merges the first. Returns (table, s0, s1, s2)."""
+        from parquet_to_arrow_spark.sources.iceberg import append, delete_where_dv
+
+        table = str(tmp_path / "t")
+        s0 = append(
+            spark.createDataFrame([(i, f"t{i}") for i in range(6)], "doc_id long, text string")
+            .coalesce(1),
+            table,
+        )
+        s1 = delete_where_dv(spark, table, "doc_id = 1")
+        s2 = delete_where_dv(spark, table, "doc_id = 2")
+        return table, s0, s1, s2
+
+    def test_incremental_and_changelog_carry_partition_values(self, spark, tmp_path):
+        from parquet_to_arrow_spark.sources.iceberg import append
+
+        schema = "doc_id long, text string, source string"
+        df = spark.createDataFrame(
+            [(i, f"t{i}", ["books", "code"][i % 2]) for i in range(6)], schema
+        )
+        d = str(tmp_path / "w")
+        df.write.partitionBy("source").parquet(d)
+        table = str(tmp_path / "t")
+        s1 = ice.commit_parquet_dir(
+            table, d, spark_schema=df.schema, ts_ms=1, partition_by=["source"]
+        )
+        append(spark.createDataFrame([(10 + i, f"w{i}", "web") for i in range(3)], schema), table)
+        want = {(10, "web"), (11, "web"), (12, "web")}
+        assert {
+            (r["doc_id"], r["source"]) for r in ice.read_incremental(spark, table, s1).collect()
+        } == want
+        rows = ice.read_changelog(spark, table, since_snapshot_id=s1).collect()
+        assert {(r["doc_id"], r["source"], r["_change_op"]) for r in rows} == {
+            (k, v, "insert") for k, v in want
+        }
+
+    def test_changelog_emits_each_dv_delete_once(self, spark, tmp_path):
+        table, s0, s1, s2 = self._dv_twice(spark, tmp_path)
+
+        def deletes(since):
+            return sorted(
+                (r["doc_id"], r["text"], r["_snapshot_id"])
+                for r in ice.read_changelog(spark, table, since_snapshot_id=since).collect()
+                if r["_change_op"] == "delete"
+            )
+
+        assert deletes(s1) == [(2, "t2", s2)]
+        assert deletes(s0) == [(1, "t1", s1), (2, "t2", s2)]
+
+    def test_changelog_over_dvs_runs_no_spark_job(self, spark, tmp_path):
+        """Building the changelog frame over a DV-only range reads the
+        targets from the manifests: no DV is decoded and no job runs until
+        the frame is collected."""
+        table, s0, _, _ = self._dv_twice(spark, tmp_path)
+        sc = spark.sparkContext
+        group = "changelog-build-only"
+        sc.setJobGroup(group, "build the changelog frame")
+        try:
+            ch = ice.read_changelog(spark, table, since_snapshot_id=s0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert sorted(r["doc_id"] for r in ch.collect()) == [1, 2]
+
+    @pytest.mark.parametrize("layout", ["pending_mor_delete", "partitioned"])
+    def test_point_lookup_reads_only_candidates(self, spark, tmp_path, layout):
+        from pyspark.sql import functions as F
+
+        from parquet_to_arrow_spark.sources import bloom_index as bi
+        from parquet_to_arrow_spark.sources.iceberg import delete_where_mor
+
+        table = str(tmp_path / "t")
+        part = ["source"] if layout == "partitioned" else None
+        for k in range(4):
+            df = spark.createDataFrame(
+                [(f"doc-{k}-{i}", i, ["web", "books"][k % 2]) for i in range(20)],
+                "doc_id string, n long, source string",
+            ).coalesce(1)
+            d = str(tmp_path / f"w{k}")
+            (df.write.partitionBy(*part) if part else df.write).parquet(d)
+            ice.commit_parquet_dir(
+                table, d, spark_schema=df.schema, ts_ms=1 + k, partition_by=part
+            )
+        if layout == "pending_mor_delete":
+            assert delete_where_mor(spark, table, "n < 5") is not None
+        bi.build_bloom_index(spark, table, "doc_id")
+        live = {f.path for f in ice.snapshot_files(table)}
+        for key in ("doc-1-3", "doc-1-7", "doc-nope"):
+            cands = set(bi.bloom_candidate_files(table, "doc_id", key))
+            assert len(cands) < len(live)
+            got = bi.point_lookup(spark, table, "doc_id", key)
+            assert {ice._uri_path(u) for u in got.inputFiles()} & live == cands
+            want = ice.read_snapshot(spark, table).filter(F.col("doc_id") == key)
+            assert got.columns == want.columns
+            assert sorted(got.collect()) == sorted(want.collect())
