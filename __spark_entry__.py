@@ -347,12 +347,14 @@ def _clusters_sql() -> str:
 
 def _minhash_ctes() -> str:
     """The shared MinHash pipeline CTE chain (DuckDB twin of
-    dedup.minhash_signatures + the LSH banding of minhash_lsh_pairs):
-    distinct char-5-gram shingles, md5-derived signed-64 hash
-    (_md5_signed64's arithmetic verbatim), one-permutation binning on the
-    hash's top 6 bits, per-bin min, md5(global_min ':' bin) densification,
-    16 bands of 4 joined on the raw band values (Spark joins on xxhash64 of
-    the slice — equal slices ⇒ equal hashes), est_jaccard = matches/64.
+    dedup.minhash_signatures' per-batch worker + the LSH banding of
+    minhash_lsh_pairs): distinct char-5-gram shingles, md5-derived
+    signed-64 hash (_md5_signed64's arithmetic; the worker reads the same
+    value as md5's first 8 bytes, big-endian signed), one-permutation
+    binning on the hash's top 6 bits, per-bin min, md5(global_min ':' bin)
+    densification, 16 bands of 4 joined on the raw band values (Spark
+    buckets on xxhash64 of the signature blob's 32-byte slices — equal
+    slices ⇒ equal hashes), est_jaccard = matches/64.
     Ends at the ``est`` CTE so both the pair oracle and the minhash-seeded
     clusters oracle compose on it. The band cap never binds at oracle scale
     (500 docs < DEFAULT_BAND_CAP)."""

@@ -9,8 +9,8 @@ Modes:
       Write .explain("formatted") for each headline query to
       <outdir>/<name>_<suffix>.txt (judge-checkable plan evidence).
   python bench_extra.py minhash  [sf_dir] [reps]
-      Stage-by-stage timing of the minhash_lsh_pairs pipeline (guide §1.4
-      noop-sink isolation per stage).
+      Stage-by-stage timing of the minhash_lsh_pairs pipeline: scan, the
+      signature mapInArrow, the full query (noop-sink isolation per stage).
 
 All timing uses the same session config as bench.py (session.get_spark).
 """
@@ -23,8 +23,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from pyspark.sql import functions as F  # noqa: E402
 
 import bench  # noqa: E402
 
@@ -98,17 +96,7 @@ def run_minhash_stages(sf_dir: str, reps: int) -> None:
             ts.append(round(time.time() - t0, 3))
         out[name] = ts
 
-    docs = lambda: spark.read.parquet(f"{sf_dir}/documents.parquet")  # noqa: E731
-    stage("scan", docs)
-    stage("shingles", lambda: dedup.doc_shingles(docs()))
-
-    def hashed():
-        sh = dedup.doc_shingles(docs())
-        h, hi = dedup._md5_signed64(F.col("shingle"))
-        return sh.select("doc_id", h.alias("h"), F.shiftright(hi, 32 - dedup._BIN_BITS).alias("bin"))
-
-    stage("hashed", hashed)
-    stage("binmin", lambda: hashed().groupBy("doc_id", "bin").agg(F.min("h").alias("mh")))
+    stage("scan", lambda: spark.read.parquet(f"{sf_dir}/documents.parquet"))
     stage("signatures", lambda: dedup.minhash_signatures(spark, sf_dir))
     stage("full", lambda: dedup.minhash_lsh_pairs(spark, sf_dir))
     spark.stop()

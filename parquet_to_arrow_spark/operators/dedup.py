@@ -2,11 +2,11 @@
 
 Scale design notes (100 TB):
 - exact: one hash-shuffle on the content fingerprint (md5), min-key wins.
-- MinHash+LSH: one md5-derived hash per shingle (one-permutation hashing:
-  single explode + single groupBy, no per-permutation passes), band into
-  B buckets, per-band candidate cap, self-join per bucket, verify candidate
-  pairs. All JVM-side; the shuffle key is the band signature, so skewed
-  popular shingles never form a hot key.
+- MinHash+LSH: one md5-derived hash per distinct shingle (one-permutation
+  hashing) and the per-bin minima in one zero-shuffle mapInArrow per Arrow
+  batch; band into B buckets (the one shuffle, keyed by band signature, so
+  skewed popular shingles never form a hot key), per-band candidate cap,
+  and a streaming vectorized verify of each bucket in the workers.
 - SimHash: vectorized bit-majority in a single pandas-free pipeline using
   explode + bitwise aggs.
 - n-gram Jaccard: exact verification on LSH candidates (or small inputs),
@@ -16,8 +16,13 @@ Scale design notes (100 TB):
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..column import _strings_from, _utf8_parts
 from ..sources.io import spread
 
 # K=64 signatures in 16 bands of 4 rows: the (1/b)^(1/r) S-curve threshold
@@ -94,51 +99,216 @@ def _md5_signed64(col):
     return h, hi
 
 
+def _signature_batches(batches):
+    """mapInArrow body of minhash_signatures: (doc_id, text) batches ->
+    (doc_id, 512-byte signature blob) batches, one output row per doc.
+    md5 runs once per DISTINCT shingle of the batch (a dict vocabulary,
+    as simhash64 does); h is the digest's first 8 bytes as a big-endian
+    signed int64 (= _md5_signed64's hi_signed * 2^32 + lo) and the bin its
+    top 6 bits (digest[0] >> 2)."""
+    for batch in batches:
+        n = batch.num_rows
+        if n == 0:
+            continue
+        if batch.column(1).null_count:
+            raise ValueError("minhash_signatures: text is null")
+        vocab: dict[str, int] = {}
+        ids: list[int] = []
+        counts = np.empty(n, dtype=np.int64)
+        for d, s in enumerate(batch.column(1).to_pylist()):
+            # Spark's sequence(1, greatest(length - 4, 1)) + substr: code
+            # points, and one "" shingle for empty text
+            sh = {s[i : i + SHINGLE] for i in range(max(len(s) - SHINGLE + 1, 1))}
+            ids.extend(vocab.setdefault(x, len(vocab)) for x in sh)
+            counts[d] = len(sh)
+        dg = np.frombuffer(
+            b"".join(hashlib.md5(x.encode("utf-8")).digest() for x in vocab),
+            dtype=np.uint8,
+        ).reshape(-1, 16)
+        ids = np.asarray(ids, dtype=np.int64)
+        h = np.ascontiguousarray(dg[:, :8]).view(">i8").ravel().astype(np.int64)
+        slot = np.repeat(np.arange(n) * N_MINHASH, counts) + (dg[ids, 0] >> 2)
+        sig = np.full(n * N_MINHASH, np.iinfo(np.int64).max)
+        np.minimum.at(sig, slot, h[ids])
+        empty = np.ones(n * N_MINHASH, dtype=bool)
+        empty[slot] = False
+        sig, empty = sig.reshape(n, N_MINHASH), empty.reshape(n, N_MINHASH)
+        g = sig.min(axis=1)  # empty bins hold int64 max: the filled-bin min
+        for d, i in zip(*np.nonzero(empty)):
+            fill = hashlib.md5(f"{g[d]}:{i}".encode()).digest()
+            sig[d, i] = int.from_bytes(fill[:8], "big", signed=True)
+        blob = sig.astype(">i8").tobytes()
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(0), _strings_from(blob, np.full(n, 8 * N_MINHASH), binary=True)],
+            names=["doc_id", "sig"],
+        )
+
+
 def minhash_signatures(spark, sf_dir, docs: DataFrame | None = None) -> DataFrame:
-    """K min-hashes per doc via ONE-PERMUTATION HASHING (Li/Owen/Zhang,
-    NeurIPS 2012): each shingle is hashed ONCE, assigned to one of K bins by
-    the hash's own top bits, and the signature is the per-bin minimum — K
-    signatures for the price of one string hash per shingle instead of K
-    (the naive K-seeded form cost 64 hash evaluations per shingle row and
-    dominated the dedup bench). The hash is md5-derived (_md5_signed64), so
-    the whole signature — and therefore minhash_lsh_pairs — has an exact
-    DuckDB oracle. Within a bin the top 6 bits are constant, so the SIGNED
-    per-bin min ranks identically to the unsigned one (two's-complement
-    order is monotone when the sign bit is fixed) — the standard OPH
-    construction, engine-portable. Empty bins are densified with
-    md5(global_min ':' bin): for two docs both missing bin i the fill
-    collides exactly when their global minima collide — itself a minhash
-    event — so the estimator stays honest; single-sided empties almost
-    never collide (slight underestimate)."""
+    """(doc_id, sig): K min-hashes per doc via ONE-PERMUTATION HASHING
+    (Li/Owen/Zhang, NeurIPS 2012): each distinct char-5-gram shingle is
+    hashed ONCE, assigned to one of K bins by the hash's own top bits, and
+    the signature is the per-bin minimum. ``sig`` is one 512-byte blob,
+    the K slots as big-endian int64, computed per Arrow batch by one
+    zero-shuffle mapInArrow (_signature_batches; one row per input row, a
+    null ``text`` raises ValueError). The hash is md5-derived
+    (_md5_signed64's value), so the signature — and therefore
+    minhash_lsh_pairs — has an exact DuckDB oracle. Within a bin the top 6
+    bits are constant, so the SIGNED per-bin min ranks identically to the
+    unsigned one. Empty bins are densified with md5(global_min ':' bin):
+    for two docs both missing bin i the fill collides exactly when their
+    global minima collide — itself a minhash event — so the estimator
+    stays honest; single-sided empties almost never collide (slight
+    underestimate)."""
     if docs is None:
         docs = _docs(spark, sf_dir)
-    sh = doc_shingles(docs)
-    h, hi = _md5_signed64(F.col("shingle"))
-    binned = sh.select(
-        "doc_id",
-        h.alias("h"),
-        F.shiftright(hi, 32 - _BIN_BITS).alias("bin"),
-    )
-    binmin = binned.groupBy("doc_id", "bin").agg(F.min("h").alias("mh"))
-    # signature as ONE array<long> column (not K scalar columns: 64-column
-    # plans generate pathological whole-stage code — cold codegen alone cost
-    # seconds); map lookup + densification in a single transform
-    m = F.map_from_entries(F.collect_list(F.struct("bin", "mh")))
-    per_doc = binmin.groupBy("doc_id").agg(m.alias("__m"))
-    g = F.array_min(F.map_values(F.col("__m")))
-
-    def _fill(i):
-        fh, _ = _md5_signed64(F.concat_ws(":", g.cast("string"), i.cast("string")))
-        return fh
-
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(N_MINHASH - 1)),
-        lambda i: F.coalesce(F.element_at(F.col("__m"), i.cast("long")), _fill(i)),
-    )
-    return per_doc.select("doc_id", sig.alias("sig"))
+    docs = spread(docs).select("doc_id", "text")
+    id_type = dict(docs.dtypes)["doc_id"]
+    return docs.mapInArrow(_signature_batches, f"doc_id {id_type}, sig binary")
 
 
 DEFAULT_BAND_CAP = 4096
+# buckets above this many docs take _verify_big's duplicate-collapse path
+_BIG_GROUP = 256
+
+
+def _verify_big(d, S, thr):
+    """Duplicate-collapse verify of one hot bucket (sf1.0: a 3,153-doc
+    bucket holds few DISTINCT signatures): byte-identical signature rows
+    merge into classes, the match matrix runs over the u classes, and doc
+    pairs expand only for qualifying class pairs (output-bounded);
+    intra-class pairs have matches == 64 by construction."""
+    order = np.argsort(d, kind="stable")
+    d, S = d[order], S[order]
+    rows = np.ascontiguousarray(S).view([("", S.dtype)] * N_MINHASH).ravel()
+    uniq, inv = np.unique(rows, return_inverse=True)
+    u = len(uniq)
+    U = uniq.view(S.dtype).reshape(u, N_MINHASH)
+    m = np.zeros((u, u), dtype=np.int16)
+    for s in range(N_MINHASH):
+        col = U[:, s]
+        m += col[:, None] == col[None, :]
+    est_uu = m / float(N_MINHASH)
+    by_class = np.argsort(inv, kind="stable")
+    counts = np.bincount(inv, minlength=u)
+    starts = np.zeros(u + 1, dtype=np.int64)
+    np.cumsum(counts, out=starts[1:])
+    members = [d[by_class[starts[c] : starts[c + 1]]] for c in range(u)]
+    out = []
+    for c1, c2 in zip(*np.nonzero(np.triu(est_uu >= thr))):
+        if c1 == c2:  # members are sorted: i < j within the class
+            iu, ju = np.triu_indices(counts[c1], 1)
+            a, b = members[c1][iu], members[c1][ju]
+        else:
+            A, B = np.broadcast_arrays(members[c1][:, None], members[c2][None, :])
+            a, b = np.minimum(A, B).ravel(), np.maximum(A, B).ravel()
+        out.append((a, b, np.full(len(a), est_uu[c1, c2])))
+    return out
+
+
+def _verify_sorted(band, doc, sigs, thr):
+    """[(doc_a, doc_b, est)] array triples of the >= ``thr`` pairs of the
+    complete buckets in ``band``-sorted rows, VECTORIZED BY SIZE CLASS: all
+    size-k buckets stack into one (g, k, 64) tensor and the 64-slot match
+    loop runs once per DISTINCT SIZE — not once per bucket. The per-bucket
+    form cost ~200 us of numpy-call overhead x ~10^5 buckets (21.9 s
+    single-thread at sf1.0, the whole stage); the class form is ~60 tensor
+    passes total. Buckets above _BIG_GROUP docs go to _verify_big."""
+    change = np.flatnonzero(band[1:] != band[:-1])
+    bounds = np.concatenate(([0], change + 1, [len(band)]))
+    sizes = np.diff(bounds)
+    out = []
+    for k in np.unique(sizes):
+        k = int(k)
+        if k < 2:
+            continue
+        gsel = np.flatnonzero(sizes == k)
+        if k > _BIG_GROUP:
+            for gi in gsel:
+                lo = bounds[gi]
+                out.extend(_verify_big(doc[lo : lo + k], sigs[lo : lo + k], thr))
+            continue
+        # all size-k buckets as one (g, k, 64) tensor, processed in chunks
+        # whose int8 match accumulator fits in cache: the slot loop sweeps
+        # the accumulator 64 times, so an out-of-cache m turns into ~12 GB
+        # of memory traffic on this membound box (counts <= 64 fit int8;
+        # slot-major transpose makes each sweep's reads contiguous)
+        idx = (bounds[gsel][:, None] + np.arange(k)[None, :]).ravel()
+        D = doc[idx].reshape(len(gsel), k)
+        G = sigs[idx].reshape(len(gsel), k, N_MINHASH)
+        ds = np.argsort(D, axis=1, kind="stable")
+        D = np.take_along_axis(D, ds, axis=1)
+        G = np.ascontiguousarray(
+            np.take_along_axis(G, ds[:, :, None], axis=1).transpose(0, 2, 1)
+        )  # (g, 64, k) slot-major
+        iu, ju = np.triu_indices(k, 1)
+        chunk = max(1, (1 << 20) // (k * k))
+        for c0 in range(0, len(gsel), chunk):
+            Gc = G[c0 : c0 + chunk]
+            m = np.zeros((len(Gc), k, k), dtype=np.int8)
+            for s in range(N_MINHASH):
+                col = Gc[:, s, :]
+                m += col[:, :, None] == col[:, None, :]
+            est = m[:, iu, ju] / float(N_MINHASH)
+            keep = est >= thr
+            if keep.any():
+                Dc = D[c0 : c0 + chunk]
+                out.append(
+                    (
+                        np.broadcast_to(Dc[:, iu], keep.shape)[keep],
+                        np.broadcast_to(Dc[:, ju], keep.shape)[keep],
+                        est[keep],
+                    )
+                )
+    return out
+
+
+def _verify_bands(batches, threshold):
+    """mapInArrow body of minhash_lsh_pairs' verify: (band, doc_id, sig)
+    batches in band order -> (doc_a, doc_b, est_jaccard) batches. Streams:
+    each batch's completed buckets are verified as it arrives and only the
+    trailing, possibly unfinished bucket is carried into the next batch,
+    so Python holds one batch plus one bucket (<= band_cap rows), never
+    the task's partition. Band order going backwards raises RuntimeError
+    (the band window sorts its output by band)."""
+    thr = float(threshold)
+    carry = None
+    out_type = None
+
+    def emit(parts):
+        if parts:
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.concatenate([p[0] for p in parts])).cast(out_type),
+                    pa.array(np.concatenate([p[1] for p in parts])).cast(out_type),
+                    pa.array(np.concatenate([p[2] for p in parts]), type=pa.float64()),
+                ],
+                names=["doc_a", "doc_b", "est_jaccard"],
+            )
+
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        out_type = batch.column(1).type
+        # only slot EQUALITY matters downstream, which is byte-order-
+        # invariant; ONE byteswap pass to native int64 (numpy ufuncs on a
+        # big-endian view re-swap on every operation of the match loop)
+        blob, _ = _utf8_parts(batch.column(2))
+        rows = (
+            batch.column(0).to_numpy(zero_copy_only=False),
+            batch.column(1).to_numpy(zero_copy_only=False),
+            np.frombuffer(blob, dtype=">i8").reshape(-1, N_MINHASH).astype(np.int64),
+        )
+        if carry is not None:
+            rows = tuple(np.concatenate(p) for p in zip(carry, rows))
+        band = rows[0]
+        if np.any(band[1:] < band[:-1]):
+            raise RuntimeError("minhash_lsh_pairs verify: rows are not sorted by band")
+        cut = int(np.searchsorted(band, band[-1]))
+        carry = tuple(r[cut:] for r in rows)
+        yield from emit(_verify_sorted(*(r[:cut] for r in rows), thr))
+    if carry is not None:
+        yield from emit(_verify_sorted(*carry, thr))
 
 
 def minhash_lsh_pairs(
@@ -152,21 +322,24 @@ def minhash_lsh_pairs(
     verification; returns (doc_a, doc_b, est_jaccard).
 
     Scale shape (round-6 restructure, guide §4.2): candidate pairs are NEVER
-    materialized as rows. The signature array rides on the band rows through
-    the window cap's one exchange; a mapInArrow over the window's
-    (band, tiebreak)-sorted output verifies each bucket as a vectorized
-    numpy block (k x 64 slot matrix -> pairwise match counts) and emits only
-    the >= threshold survivors. The previous plan enumerated every in-bucket
-    pair as a JVM row and re-attached signatures via two shuffle joins — but
-    bucket pairs grow quadratically (measured sf1.0: 24.0M bucket-pairs from
-    50k docs, 3,273 survivors, hottest bucket 3,153 docs), so it shuffled
-    and interpreter-evaluated (zip_with is CodegenFallback) ~7,000x more
-    rows than survive. Pair semantics are unchanged: same capped buckets,
-    same i<j in-bucket pairs, est = matches/64.0 (exact: integer / 2^6 in
-    float64 on both paths), same >= threshold filter, dedup after the filter
-    instead of before (est_jaccard is a pure function of the pair, so the
-    surviving rows are identical). Shuffle cost is N_BANDS x sig_bytes x
+    materialized as rows. The 512-byte signature blob rides on the band
+    rows through the window cap's one exchange; a mapInArrow over the
+    window's (band, tiebreak)-sorted output (_verify_bands) verifies each
+    bucket as a vectorized numpy block (k x 64 slot matrix -> pairwise
+    match counts), streaming bucket by bucket, and emits only the
+    >= threshold survivors. Enumerating every in-bucket pair as a JVM row
+    instead grows quadratically (measured sf1.0: 24.0M bucket-pairs from
+    50k docs, 3,273 survivors, hottest bucket 3,153 docs). Pair semantics:
+    capped buckets, i<j in-bucket pairs, est = matches/64.0 (exact: integer
+    / 2^6 in float64), >= threshold filter, one row per pair (est_jaccard
+    is a pure function of the pair). Shuffle cost is N_BANDS x sig_bytes x
     n_docs regardless of duplication; the verify pass is output-bounded.
+
+    The blob crosses the band shuffle AND the Python boundary as binary,
+    not array<long>: Spark's row<->Arrow bridge converts array elements one
+    at a time (the engine's core invariant — see sources/io.py). Banding
+    hashes 32-byte SLICES of it, so equal 4-slot slices <=> equal bytes =>
+    equal band hash.
 
     Skew guard: at most ``band_cap`` docs survive per band value before
     verification (deterministic row_number, overflow OBSERVED via
@@ -177,36 +350,15 @@ def minhash_lsh_pairs(
     which exact_dedup (or a keep-one pass over the survivors) already
     handles — the cap costs recall only for the pathological band, bounded
     and measured, instead of an unbounded join. The cap also bounds the
-    verify pass's per-group memory (band_cap^2/2 pairs).
+    verify pass's per-bucket memory (band_cap^2/2 pairs).
     """
     sig = minhash_signatures(spark, sf_dir, docs=docs)
-    rows_per_band = N_MINHASH // N_BANDS
-    # The signature crosses the band shuffle AND the Python boundary as ONE
-    # 512-byte binary blob, not array<long>: Spark's row<->Arrow bridge
-    # converts array elements one at a time (the engine's core invariant —
-    # see sources/io.py), and at N_BANDS x n_docs x 64 elements that
-    # per-element walk dominated the verify stage. The blob is the 64
-    # big-endian int64 slots; banding hashes 32-byte SLICES of it, so the
-    # bucket invariant is unchanged (equal 4-slot slices <=> equal bytes =>
-    # equal band hash). The pack runs once per doc (interpreted fold over
-    # 64 doc-sized elements), not once per band row.
-    sigbin = F.expr(
-        "aggregate(sig, cast('' as binary), "
-        "(acc, x) -> concat(acc, unhex(lpad(hex(x), 16, '0'))))"
-    )
-    packed = sig.select("doc_id", sigbin.alias("sigbin"))
-    band_cols = [
-        F.xxhash64(
-            F.expr(f"substring(sigbin, {b * rows_per_band * 8 + 1}, {rows_per_band * 8})"),
-            F.lit(b),
-        ).alias(f"band{b}")
+    width = N_MINHASH // N_BANDS * 8
+    band_hashes = [
+        F.xxhash64(F.substring("sig", b * width + 1, width), F.lit(b))
         for b in range(N_BANDS)
     ]
-    bands = packed.select("doc_id", "sigbin", *band_cols).select(
-        "doc_id",
-        F.col("sigbin").alias("sig"),
-        F.explode(F.array(*[F.col(f"band{b}") for b in range(N_BANDS)])).alias("band"),
-    )
+    bands = sig.select("doc_id", "sig", F.explode(F.array(*band_hashes)).alias("band"))
     w = Window.partitionBy("band").orderBy(F.xxhash64(F.col("doc_id")))
     ranked = bands.withColumn("__rk", F.row_number().over(w)).observe(
         "minhash_band_overflow",
@@ -215,169 +367,9 @@ def minhash_lsh_pairs(
     )
     capped = ranked.filter(F.col("__rk") <= band_cap).select("band", "doc_id", "sig")
     id_type = dict(capped.dtypes)["doc_id"]
-    thr = float(threshold)
-    k_sig = N_MINHASH
-
-    def verify(batches):
-        """Buffer the task's rows (the band-window just sorted them, so the
-        partition already fit in one task), then verify buckets VECTORIZED
-        BY SIZE CLASS: all size-k buckets stack into one (g, k, 64) tensor
-        and the 64-slot match loop runs once per DISTINCT SIZE — not once
-        per bucket. The per-bucket form cost ~200 us of numpy-call overhead
-        x ~10^5 buckets (21.9 s single-thread at sf1.0, the whole stage);
-        the class form is ~60 tensor passes total. Buckets above
-        _BIG_GROUP docs take the duplicate-collapse path (byte-identical
-        signature rows merge into classes; doc pairs expand only for
-        qualifying class pairs, output-bounded)."""
-        import numpy as np
-        import pyarrow as pa
-
-        _BIG_GROUP = 256
-        bands_l: list = []
-        docs_l: list = []
-        sigs_l: list = []
-        out_type = None
-
-        def run_big(d, S):
-            # duplicate-collapse for hot buckets (sf1.0: a 3,153-doc bucket
-            # holds few DISTINCT signatures): match matrix over u classes,
-            # intra-class pairs have matches == 64 by construction
-            order = np.argsort(d, kind="stable")
-            d, S = d[order], S[order]
-            rows = np.ascontiguousarray(S).view([("", S.dtype)] * k_sig).ravel()
-            uniq, inv = np.unique(rows, return_inverse=True)
-            u = len(uniq)
-            U = uniq.view(S.dtype).reshape(u, k_sig)
-            m = np.zeros((u, u), dtype=np.int16)
-            for s in range(k_sig):
-                col = U[:, s]
-                m += col[:, None] == col[None, :]
-            est_uu = m / float(k_sig)
-            by_class = np.argsort(inv, kind="stable")
-            counts = np.bincount(inv, minlength=u)
-            starts = np.zeros(u + 1, dtype=np.int64)
-            np.cumsum(counts, out=starts[1:])
-            members = [d[by_class[starts[c] : starts[c + 1]]] for c in range(u)]
-            out = []
-            if 1.0 >= thr:
-                for c in range(u):
-                    g = counts[c]
-                    if g < 2:
-                        continue
-                    iu, ju = np.triu_indices(g, 1)
-                    out.append(
-                        (members[c][iu], members[c][ju], np.full(len(iu), 1.0))
-                    )
-            qual = est_uu >= thr
-            np.fill_diagonal(qual, False)
-            for c1, c2 in zip(*np.nonzero(np.triu(qual, 1))):
-                A = members[c1][:, None]
-                B = members[c2][None, :]
-                out.append(
-                    (
-                        np.minimum(A, B).ravel(),
-                        np.maximum(A, B).ravel(),
-                        np.full(counts[c1] * counts[c2], est_uu[c1, c2]),
-                    )
-                )
-            return out
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            out_type = batch.column(1).type
-            bands_l.append(batch.column(0).to_numpy(zero_copy_only=False))
-            docs_l.append(batch.column(1).to_numpy(zero_copy_only=False))
-            # sig is one 512-byte blob per row (64 big-endian int64 slots);
-            # only slot EQUALITY matters downstream, which is byte-order-
-            # invariant — view the contiguous Arrow data buffer directly
-            sb = batch.column(2).cast(pa.large_binary())
-            bufs = sb.buffers()
-            off = np.frombuffer(
-                bufs[1], dtype=np.int64, count=len(sb) + 1, offset=sb.offset * 8
-            )
-            data = np.frombuffer(bufs[2], dtype=np.uint8)
-            sigs_l.append(
-                data[off[0] : off[-1]].view(">i8").reshape(batch.num_rows, k_sig)
-            )
-        if not bands_l:
-            return
-        band = np.concatenate(bands_l)
-        doc = np.concatenate(docs_l)
-        # ONE byteswap pass to native int64: numpy ufuncs on a big-endian
-        # view re-swap on every operation, which re-serialized the whole
-        # match loop (slot values change representation, not identity —
-        # only equality is consumed downstream)
-        sigs = np.concatenate(sigs_l).astype(np.int64)
-        # the window delivers rows sorted by band; verify that with one
-        # cheap pass and re-sort ONLY if the assumption ever breaks (the
-        # unconditional argsort + three full-array gathers measurably cost
-        # more than the whole match loop)
-        if len(band) > 1 and not np.all(band[1:] >= band[:-1]):
-            order = np.argsort(band, kind="stable")
-            band, doc, sigs = band[order], doc[order], sigs[order]
-        change = np.flatnonzero(band[1:] != band[:-1])
-        bounds = np.concatenate(([0], change + 1, [len(band)]))
-        sizes = np.diff(bounds)
-        out = []
-        for k in np.unique(sizes):
-            k = int(k)
-            if k < 2:
-                continue
-            gsel = np.flatnonzero(sizes == k)
-            if k > _BIG_GROUP:
-                for gi in gsel:
-                    lo = bounds[gi]
-                    out.extend(run_big(doc[lo : lo + k], sigs[lo : lo + k]))
-                continue
-            # all size-k buckets as one (g, k, 64) tensor, processed in
-            # chunks whose int8 match accumulator fits in cache: the slot
-            # loop sweeps the accumulator 64 times, so an out-of-cache m
-            # turns into ~12 GB of memory traffic on this membound box
-            # (counts <= 64 fit int8; slot-major transpose makes each
-            # sweep's reads contiguous)
-            idx = (bounds[gsel][:, None] + np.arange(k)[None, :]).ravel()
-            D = doc[idx].reshape(len(gsel), k)
-            G = sigs[idx].reshape(len(gsel), k, k_sig)
-            ds = np.argsort(D, axis=1, kind="stable")
-            D = np.take_along_axis(D, ds, axis=1)
-            G = np.ascontiguousarray(
-                np.take_along_axis(G, ds[:, :, None], axis=1).transpose(0, 2, 1)
-            )  # (g, 64, k) slot-major
-            iu, ju = np.triu_indices(k, 1)
-            chunk = max(1, (1 << 20) // (k * k))
-            for c0 in range(0, len(gsel), chunk):
-                Gc = G[c0 : c0 + chunk]
-                gc = len(Gc)
-                m = np.zeros((gc, k, k), dtype=np.int8)
-                for s in range(k_sig):
-                    col = Gc[:, s, :]
-                    m += col[:, :, None] == col[:, None, :]
-                est = m[:, iu, ju] / float(k_sig)
-                keep = est >= thr
-                if keep.any():
-                    Dc = D[c0 : c0 + chunk]
-                    out.append(
-                        (
-                            np.broadcast_to(Dc[:, iu], keep.shape)[keep],
-                            np.broadcast_to(Dc[:, ju], keep.shape)[keep],
-                            est[keep],
-                        )
-                    )
-        if out:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate([g[0] for g in out])).cast(out_type),
-                    pa.array(np.concatenate([g[1] for g in out])).cast(out_type),
-                    pa.array(
-                        np.concatenate([g[2] for g in out]), type=pa.float64()
-                    ),
-                ],
-                names=["doc_a", "doc_b", "est_jaccard"],
-            )
-
     pairs = capped.mapInArrow(
-        verify, f"doc_a {id_type}, doc_b {id_type}, est_jaccard double"
+        lambda it: _verify_bands(it, threshold),
+        f"doc_a {id_type}, doc_b {id_type}, est_jaccard double",
     )
     return pairs.dropDuplicates(["doc_a", "doc_b"])
 
@@ -426,8 +418,6 @@ def _majority_bits(occ, starts, counts):
     than 255 words cannot overflow the count. Per byte, because reduceat
     casts its whole input to the sum's dtype: the transient is 40 bytes a
     word, where a words x 64 int32 vote matrix is 256."""
-    import numpy as np
-
     by = occ.astype("<u8", copy=False).view(np.uint8).reshape(-1, 8)
     ones = np.empty((len(starts), 64), dtype=np.int32)
     for j in range(8):
@@ -461,10 +451,6 @@ def simhash64(spark, sf_dir) -> DataFrame:
     docs = spread(_docs(spark, sf_dir)).select("doc_id", "text")
 
     def run(batches):
-        import hashlib
-
-        import numpy as np
-        import pyarrow as pa
         import pyarrow.compute as pc
 
         for batch in batches:

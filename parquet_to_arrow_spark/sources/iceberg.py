@@ -765,15 +765,16 @@ def _write_eq_deletes(
     """Write the distinct ``key_cols`` of ``keys`` as EQUALITY DELETE
     parquet under ``del_dir`` and return its non-empty files as content=2
     DataFiles whose ``equality_ids`` name the key columns by field id of
-    the current schema. Range-partition + sort like the position path:
+    the current schema, written in that schema's types (readers read the
+    keys with them). Range-partition + sort like the position path:
     sorted runs, AQE coalesces a small key set to one file, a huge one
     scales out."""
-    ids_by_name = {
-        f["name"]: f["id"] for f in iceberg_meta._current_schema(meta)["fields"]
-    }
-    eq_ids = [ids_by_name[c] for c in key_cols]
+    fields = {f["name"]: f for f in iceberg_meta._current_schema(meta)["fields"]}
+    eq_ids = [fields[c]["id"] for c in key_cols]
     (
-        keys.select(*[F.col(c) for c in key_cols])
+        keys.select(
+            *[F.col(c).cast(iceberg_meta._spark_type(fields[c]["type"])) for c in key_cols]
+        )
         .distinct()
         .repartitionByRange(*key_cols)
         .sortWithinPartitions(*key_cols)

@@ -2033,6 +2033,14 @@ def _pos_delete_targets(spark, pos_dels: list[DataFile]) -> set[str]:
     return targets
 
 
+def _read_eq_keys(spark, f: DataFile, schema: dict):
+    """The key columns of equality-delete file ``f``, read with their types
+    from ``schema``: a schema-less read runs one schema-inference job per
+    delete file while the caller only builds its frame."""
+    keys = [x for x in schema["fields"] if x["id"] in set(f.equality_ids or [])]
+    return spark.read.schema(_spark_ddl({"fields": keys})).parquet(f.path)
+
+
 def _eq_delete_frames(spark, eq_dels: list[DataFile], schema: dict) -> list[tuple]:
     """[(key column names, frame)] of the equality deletes: one frame per
     distinct key-column set, each delete file's rows stamped with its
@@ -2049,7 +2057,7 @@ def _eq_delete_frames(spark, eq_dels: list[DataFile], schema: dict) -> list[tupl
     for ids, fs in sorted(groups.items()):
         names = [names_by_id[i] for i in ids]
         fr = _union([
-            spark.read.parquet(f.path)
+            _read_eq_keys(spark, f, schema)
             .select(*[F.col(n).alias(f"__eq_{n}") for n in names])
             .withColumn("__dseq", F.lit(f.sequence))
             for f in fs
@@ -2607,7 +2615,6 @@ def read_changelog(
     ddl = _spark_ddl(cur_schema)
     names = [f["name"] for f in cur_schema["fields"]]
     types = {f["name"]: _spark_type(f["type"]) for f in cur_schema["fields"]}
-    names_by_id = {f["id"]: f["name"] for f in cur_schema["fields"]}
 
     frames = []
 
@@ -2664,14 +2671,11 @@ def read_changelog(
             )
             _emit(hit, "delete", sid, ordinal)
         for f in eqs:
-            keys = [names_by_id[i] for i in (f.equality_ids or [])]
-            kdf = spark.read.parquet(f.path)
+            kdf = _read_eq_keys(spark, f, cur_schema)
             _emit(
                 kdf.select(
                     *[
-                        F.col(n).cast(types[n])
-                        if n in keys
-                        else F.lit(None).cast(types[n]).alias(n)
+                        n if n in kdf.columns else F.lit(None).cast(types[n]).alias(n)
                         for n in names
                     ]
                 ),

@@ -4083,3 +4083,36 @@ class TestOneDataFileScan:
             want = ice.read_snapshot(spark, table).filter(F.col("doc_id") == key)
             assert got.columns == want.columns
             assert sorted(got.collect()) == sorted(want.collect())
+
+    def test_eq_delete_frames_run_no_spark_job(self, spark, tmp_path):
+        """Equality-delete files are read with the key columns' types from
+        the current schema, so building read_snapshot or read_changelog over
+        an equality delete runs no schema-inference job."""
+        from parquet_to_arrow_spark.sources.iceberg import append, delete_keys_mor
+
+        table = str(tmp_path / "t")
+        s0 = append(
+            spark.createDataFrame([(i, f"t{i}") for i in range(10)], "doc_id long, text string"),
+            table,
+        )
+        delete_keys_mor(spark, table, spark.createDataFrame([(3,)], "doc_id int"), "doc_id")
+        sc = spark.sparkContext
+        frames = {}
+        for name, build in (
+            ("snapshot", lambda: ice.read_snapshot(spark, table)),
+            ("changelog", lambda: ice.read_changelog(spark, table, since_snapshot_id=s0)),
+        ):
+            group = f"eq-delete-build-{name}"
+            sc.setJobGroup(group, "build the frame")
+            try:
+                frames[name] = build()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+        assert sorted(r["doc_id"] for r in frames["snapshot"].collect()) == [
+            i for i in range(10) if i != 3
+        ]
+        rows = frames["changelog"].collect()
+        assert [(r["doc_id"], r["text"], r["_change_op"]) for r in rows] == [
+            (3, None, "delete_key")
+        ]

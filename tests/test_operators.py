@@ -122,6 +122,146 @@ def test_minhash_lsh_leaves_nothing_persisted(spark, tmp_path):
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
 
 
+def _spark_signatures(docs):
+    """Reference one-permutation MinHash signatures built from Spark
+    expressions alone: explode the shingles, md5-derived hash, per-(doc,
+    bin) min, then per doc the 64 slots with empty bins densified from
+    md5(global_min ':' bin). Returns {doc_id: 512-byte big-endian blob}."""
+    from parquet_to_arrow_spark.operators.dedup import (
+        N_MINHASH,
+        _BIN_BITS,
+        _md5_signed64,
+        doc_shingles,
+    )
+
+    h, hi = _md5_signed64(F.col("shingle"))
+    binned = doc_shingles(docs).select(
+        "doc_id", h.alias("h"), F.shiftright(hi, 32 - _BIN_BITS).alias("bin")
+    )
+    binmin = binned.groupBy("doc_id", "bin").agg(F.min("h").alias("mh"))
+    m = F.map_from_entries(F.collect_list(F.struct("bin", "mh")))
+    per_doc = binmin.groupBy("doc_id").agg(m.alias("__m"))
+    g = F.array_min(F.map_values(F.col("__m")))
+
+    def _fill(i):
+        fh, _ = _md5_signed64(F.concat_ws(":", g.cast("string"), i.cast("string")))
+        return fh
+
+    sig = F.transform(
+        F.sequence(F.lit(0), F.lit(N_MINHASH - 1)),
+        lambda i: F.coalesce(F.element_at(F.col("__m"), i.cast("long")), _fill(i)),
+    )
+    return {
+        r["doc_id"]: b"".join(x.to_bytes(8, "big", signed=True) for x in r["sig"])
+        for r in per_doc.select("doc_id", sig.alias("sig")).collect()
+    }
+
+
+EDGE_TEXTS = [
+    "", "a", "ab", "abc", "abcd", "abcde", "é", "ñandú", "日本語テキ",
+    "😀😀😀😀😀😀", "a\x00b\x00c\x00d", "mixed ñ 日 😀 text over five code points",
+]
+
+
+def test_minhash_signatures_match_spark_reference(spark):
+    """The per-batch signature worker equals the Spark-expression chain
+    byte for byte: empty text, texts shorter than one shingle, 2/3/4-byte
+    UTF-8 (shingles are code points, hashed over their UTF-8 bytes), NUL."""
+    from parquet_to_arrow_spark.operators.dedup import minhash_signatures
+
+    docs = spark.createDataFrame(list(enumerate(EDGE_TEXTS)), "doc_id long, text string")
+    got = {r["doc_id"]: bytes(r["sig"]) for r in minhash_signatures(spark, None, docs).collect()}
+    assert got == _spark_signatures(docs)
+    assert all(len(b) == 512 for b in got.values())
+
+
+def test_minhash_signatures_reject_null_text(spark):
+    from parquet_to_arrow_spark.operators.dedup import minhash_signatures
+
+    docs = spark.createDataFrame([(1, "some text"), (2, None)], "doc_id long, text string")
+    with pytest.raises(Exception, match="ValueError"):
+        minhash_signatures(spark, None, docs).collect()
+
+
+def _band_rows(rng):
+    """(band, doc, sig) rows sorted by band: small buckets, a 10-doc bucket
+    and a 300-doc bucket (above the duplicate-collapse threshold) whose docs
+    are drawn from a few base signatures with some slots redrawn."""
+    import numpy as np
+
+    bands, sigs = [], []
+    for band, n in ((-7, 3), (2, 10), (5, 300), (11, 4)):
+        base = rng.integers(-(2**62), 2**62, size=(4, 64))
+        s = base[rng.integers(0, 4, size=n)]
+        redraw = rng.random(s.shape) < rng.choice([0.0, 0.2, 0.6], size=(n, 1))
+        s[redraw] = rng.integers(-(2**62), 2**62, size=int(redraw.sum()))
+        bands += [band] * n
+        sigs.append(s)
+    sigs = np.concatenate(sigs)
+    docs = rng.permutation(len(sigs)).astype(np.int64) + 100
+    return np.asarray(bands, dtype=np.int64), docs, sigs
+
+
+def _band_batch(band, doc, sigs):
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(band),
+            pa.array(doc),
+            pa.array([row.astype(">i8").tobytes() for row in sigs], type=pa.binary()),
+        ],
+        names=["band", "doc_id", "sig"],
+    )
+
+
+def _pairs(batches):
+    return sorted(
+        (a, b, e)
+        for out in batches
+        for a, b, e in zip(*(out.column(i).to_pylist() for i in range(3)))
+    )
+
+
+def test_lsh_verify_streams_bands_across_batches():
+    """The verify carries only the trailing bucket between batches: a
+    bucket straddling three batches and a 300-doc bucket crossing a batch
+    boundary give exactly the one-batch pairs (which equal brute force over
+    each bucket), and the first pairs come out before the last batch is
+    read."""
+    import itertools
+
+    import numpy as np
+
+    from parquet_to_arrow_spark.operators.dedup import _verify_bands
+
+    band, doc, sigs = _band_rows(np.random.default_rng(15))
+    whole = _pairs(_verify_bands(iter([_band_batch(band, doc, sigs)]), 0.5))
+    brute = []
+    for b in np.unique(band):
+        sel = np.flatnonzero(band == b)
+        for i, j in itertools.combinations(sel, 2):
+            est = float((sigs[i] == sigs[j]).sum()) / 64
+            if est >= 0.5:
+                brute.append((min(doc[i], doc[j]), max(doc[i], doc[j]), est))
+    assert whole == sorted(brute) and len(whole) > 1000
+    # band 2 is rows 3..12 (three batches), band 5 rows 13..312 (two batches)
+    cuts = [0, 6, 9, 100, 200, len(band)]
+    read = []
+
+    def batches():
+        for lo, hi in zip(cuts, cuts[1:]):
+            read.append(hi)
+            yield _band_batch(band[lo:hi], doc[lo:hi], sigs[lo:hi])
+
+    stream = _verify_bands(batches(), 0.5)
+    first = next(stream)
+    assert len(read) < len(cuts) - 1
+    assert _pairs([first, *stream]) == whole
+    with pytest.raises(RuntimeError, match="sorted by band"):
+        list(_verify_bands(iter([_band_batch(band[::-1], doc, sigs)]), 0.5))
+
+
 def test_ngram_jaccard_scores_planted_pair(spark, planted_docs):
     from parquet_to_arrow_spark.operators.dedup import ngram_jaccard_pairs
 

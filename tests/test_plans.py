@@ -493,3 +493,19 @@ def test_balance_deciles_have_no_window_on_fact_path(spark):
         # no NTILE ranking function anywhere (percentile boundaries ARE fine)
         assert "ntile" not in plan.lower().replace("percentile", ""), plan
         assert "BroadcastHashJoin" in plan, plan
+
+
+def test_minhash_lsh_plan_has_one_explode_and_the_band_shuffles(spark):
+    """Signatures come from one mapInArrow over the scan: the executed plan
+    of minhash_lsh_pairs keeps only the band-window and pair-dedup hash
+    shuffles plus spread's small-input round-robin, and explodes only the
+    band hashes (the shingle explode and both signature groupBys are gone)."""
+    import re
+
+    from parquet_to_arrow_spark.operators.dedup import minhash_lsh_pairs
+
+    df = minhash_lsh_pairs(spark, SF)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
+    assert len(re.findall(r"\bExchange ", final)) == 3, final
+    assert len(re.findall(r"\bGenerate ", final)) == 1, final
