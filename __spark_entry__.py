@@ -349,8 +349,8 @@ def _minhash_ctes() -> str:
     """The shared MinHash pipeline CTE chain (DuckDB twin of
     dedup.minhash_signatures' per-batch worker + the LSH banding of
     minhash_lsh_pairs): distinct char-5-gram shingles, md5-derived
-    signed-64 hash (_md5_signed64's arithmetic; the worker reads the same
-    value as md5's first 8 bytes, big-endian signed), one-permutation
+    signed-64 hash from the md5 hex halves (the shingle kernel reads the
+    same value as md5's first 8 bytes, big-endian signed), one-permutation
     binning on the hash's top 6 bits, per-bin min, md5(global_min ':' bin)
     densification, 16 bands of 4 joined on the raw band values (Spark
     buckets on xxhash64 of the signature blob's 32-byte slices — equal

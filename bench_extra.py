@@ -3,8 +3,9 @@
 Modes:
   python bench_extra.py queries  [sf_dir] [reps] [name ...]
       Time headline queries exactly the way bench.py does (.count(), warm
-      session, best-of-N) without the encode/decode/scaling legs. Prints one
-      JSON line {name: [samples...]}.
+      session, best-of-N) without the encode/decode/scaling legs; each query
+      runs once untimed before its timed reps. Prints one JSON line
+      {name: [samples...]}.
   python bench_extra.py plans    [sf_dir] [outdir] [suffix] [name ...]
       Write .explain("formatted") for each headline query to
       <outdir>/<name>_<suffix>.txt (judge-checkable plan evidence).
@@ -47,6 +48,7 @@ def run_queries(sf_dir: str, reps: int, names: list[str]) -> None:
     out = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"bench_extra:{name}")
+        qs[name](spark, sf_dir).count()  # untimed: no timed rep is the query's first
         ts = []
         for _ in range(reps):
             t0 = time.time()

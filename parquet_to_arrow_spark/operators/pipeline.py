@@ -29,7 +29,7 @@ Scale notes (100 TB):
   — every stage is parallel at any input size.
 - stratified sampling is a stateless filter on md5(doc_id) — zero
   shuffles, and the md5-derived bucket has an exact DuckDB oracle twin
-  (same trick as dedup._md5_signed64).
+  (md5 hex halves, as the near-dup operators' shingle hashes).
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
-from .dedup import _docs, ngram_jaccard_pairs
+from .dedup import _docs, _jaccard_verified, content_fp, minhash_lsh_pairs, ngram_jaccard_pairs
 
 # sequences of 2048 tokens — the classic pretraining context length
 PACK_CAP = 2048
@@ -154,6 +154,13 @@ def connected_components(
     return labels
 
 
+def _with_sizes(labels: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id, cluster_size) from connected_components'
+    labels: every member carries its component's size."""
+    sizes = labels.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
+    return labels.join(sizes, "cluster_id").select("doc_id", "cluster_id", "cluster_size")
+
+
 def near_dup_clusters(
     spark: SparkSession, sf_dir: str, threshold: float = 0.3, max_rounds: int = 20
 ) -> DataFrame:
@@ -165,11 +172,7 @@ def near_dup_clusters(
         "doc_a", "doc_b"
     )
     nodes = _docs(spark, sf_dir).select("doc_id")
-    labels = connected_components(nodes, pairs, max_rounds=max_rounds)
-    sizes = labels.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
-    return labels.join(sizes, "cluster_id").select(
-        "doc_id", "cluster_id", "cluster_size"
-    )
+    return _with_sizes(connected_components(nodes, pairs, max_rounds=max_rounds))
 
 
 def near_dup_clusters_minhash(
@@ -190,47 +193,20 @@ def near_dup_clusters_minhash(
     self-join touches every sub-max_df shingle — at 10^12 docs that is the
     heavier path; the banded LSH shuffle carries only (band, doc_id) with a
     per-band cap, so candidate generation stays narrow regardless of corpus
-    shape. Verification is per-candidate O(|A|+|B|): each doc's distinct
-    shingle set is one array<long> of md5-derived hashes (collect_set), the
-    pair join is candidate-sized, and array_intersect gives |A∩B| without
-    ever re-joining on shingles. Hash sets (not raw shingles) keep the
-    arrays fixed-width AND give the DuckDB oracle an exact twin — both
-    engines compare the same md5-derived values, so even a hash collision
-    cannot diverge them."""
-    from .dedup import _md5_signed64, doc_shingles, minhash_lsh_pairs
-
+    shape. Verification is per-candidate O(|A|+|B|) (dedup._jaccard_verified):
+    the shingle kernel gives each doc's sorted distinct md5-derived hashes
+    as one int64 blob, the pair join is candidate-sized, and a worker
+    counts |A∩B| with np.intersect1d. Hashes, not raw shingles, give the
+    DuckDB oracle an exact twin: both engines compare the same md5-derived
+    values, so even a hash collision cannot diverge them."""
     cand = minhash_lsh_pairs(spark, sf_dir, threshold=est_floor, docs=docs).select(
         "doc_a", "doc_b"
     )
     if docs is None:
         docs = _docs(spark, sf_dir)
-    h, _ = _md5_signed64(F.col("shingle"))
-    hsets = (
-        doc_shingles(docs)
-        .select("doc_id", h.alias("h"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("hs"))
-    )
-    a = hsets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
-    b = hsets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"))
-    n_common = F.size(F.array_intersect("hs_a", "hs_b"))
-    verified = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn(
-            "jaccard",
-            n_common
-            / (F.size("hs_a") + F.size("hs_b") - n_common).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b")
-    )
+    verified = _jaccard_verified(cand, docs, threshold)
     nodes = docs.select("doc_id")
-    labels = connected_components(nodes, verified, max_rounds=max_rounds)
-    sizes = labels.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
-    return labels.join(sizes, "cluster_id").select(
-        "doc_id", "cluster_id", "cluster_size"
-    )
+    return _with_sizes(connected_components(nodes, verified, max_rounds=max_rounds))
 
 
 def near_dup_minhash_kept(
@@ -271,11 +247,8 @@ def embedding_dup_clusters(
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )
     nodes = _emb(spark, sf_dir).select(F.col("vec_id").alias("doc_id"))
-    labels = connected_components(nodes, pairs, max_rounds=max_rounds)
-    sizes = labels.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
-    return labels.join(sizes, "cluster_id").select(
-        F.col("doc_id").alias("vec_id"), "cluster_id", "cluster_size"
-    )
+    clusters = _with_sizes(connected_components(nodes, pairs, max_rounds=max_rounds))
+    return clusters.withColumnRenamed("doc_id", "vec_id")
 
 
 def _bpe_ish_token_count(text):
@@ -286,28 +259,6 @@ def _bpe_ish_token_count(text):
         + F.regexp_count(text, F.lit("[0-9]+"))
         + F.regexp_count(text, F.lit("[^A-Za-z0-9 ]"))
     ).cast("long")
-
-
-# COMPAT SHIM: _packed no longer pins caches at all. Earlier rounds pinned
-# the range-partitioned input (spark_partition_id is NOT stable across
-# recomputes — the range sampler reseeds per RDD instantiation) and made
-# the caller release it after materialization. Round 5 removes the pin:
-# slice ids now re-derive deterministically from the COLLECTED boundary
-# keys (a pure function of data content, stable under retries, recomputes
-# and interleaved composition), so there is nothing to leak and nothing
-# for the caller to manage. The API stays for callers that adopted it.
-_pack_caches: list = []
-
-
-def release_pack_caches() -> int:
-    """Compat no-op since the deterministic-slice rewrite: _packed pins no
-    caches, so there is nothing to release. Returns the number of frames
-    released (always 0)."""
-    n = 0
-    while _pack_caches:
-        _pack_caches.pop().unpersist()
-        n += 1
-    return n
 
 
 def _packed(
@@ -489,8 +440,6 @@ def training_mix(spark: SparkSession, sf_dir: str, cap: int = PACK_CAP) -> DataF
     one Catalyst plan: the dedup groupBy is the only wide stage before the
     packing shuffle; filters and the sample are stateless and push toward
     the scan."""
-    from .dedup import content_fp
-
     docs = _docs(spark, sf_dir)
     keep = (
         docs.select(content_fp().alias("fp"), "doc_id")
@@ -515,7 +464,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-derived bucket (0..99) is below the language's quota percent.
     Membership is a pure function of doc_id — identical under retries,
     re-runs, and engine changes — and the md5 arithmetic has an exact
-    DuckDB twin (dedup._md5_signed64's hex-halves trick), unlike
+    DuckDB twin (the md5 hex halves, as the shingle kernel's hash), unlike
     DataFrame.sampleBy's RNG. Zero shuffles: a stateless scan filter."""
     docs = _docs(spark, sf_dir)
     bucket, quota = _quota_bucket()

@@ -499,8 +499,9 @@ def winnow_fingerprints(spark, sf_dir) -> DataFrame:
     no shuffle, no Python: the per-doc fingerprint SET is reduced to scalar
     aggregates (count / min / max / sum of distinct selected hashes) so the
     result hashes identically in the DuckDB twin. The hash is the unsigned
-    hi half of md5(k-gram) (dedup._md5_signed64's trick), bounded < 2^32 so
-    the per-doc sum can never overflow a signed 64-bit."""
+    hi md5 hex half of the k-gram (the top half of the shingle kernel's
+    hash), bounded < 2^32 so the per-doc sum can never overflow a signed
+    64-bit."""
     text = F.col("text")
     n_h = F.greatest(F.length(text) - (WINNOW_K - 1), F.lit(1))
     hs = F.transform(

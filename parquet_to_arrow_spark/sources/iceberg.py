@@ -290,8 +290,8 @@ def changelog_replay_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_chars by 1_000_000 for md5-bucket 0 keys; wave 2 bumps by
     2_000_000 for buckets 0 and 1 — overwriting wave 1's bucket-0 rows),
     then REPLAY read_changelog: last insert per key across change
-    ordinals == the final state. The md5 bucket is dedup._md5_signed64's
-    hi half mod 10, so the expected state has an exact DuckDB twin.
+    ordinals == the final state. The md5 bucket is the hi md5 hex half
+    mod 10, so the expected state has an exact DuckDB twin.
 
     Scale shape: the replay is one window over (doc_id), a corpus-
     cardinality key — no small-key partition, no driver loop; this is the

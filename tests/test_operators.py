@@ -103,11 +103,12 @@ def test_minhash_band_cap_bounds_skewed_join(spark, tmp_path_factory):
     assert all(r["est_jaccard"] == 1.0 for r in pairs)
 
 
-def test_minhash_lsh_leaves_nothing_persisted(spark, tmp_path):
-    """The signatures feed one select inside the query: a call must not
+@pytest.mark.parametrize("op", ["minhash_lsh_pairs", "ngram_jaccard_pairs"])
+def test_minhash_lsh_leaves_nothing_persisted(spark, tmp_path, op):
+    """The shingles feed the query they are built for: a call must not
     leave a cached frame behind (it would leak storage per call and let a
-    repeated call skip the signature build)."""
-    from parquet_to_arrow_spark.operators.dedup import minhash_lsh_pairs
+    repeated call skip the shingle or signature build)."""
+    from parquet_to_arrow_spark.operators import dedup
 
     text = "signatures are built once per call and never kept around " * 4
     rows = [(i, text if i < 3 else f"unrelated document number {i} " * 6, "en", "web", 10)
@@ -117,9 +118,31 @@ def test_minhash_lsh_leaves_nothing_persisted(spark, tmp_path):
     ).write.parquet(str(tmp_path / "documents.parquet"))
 
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    pairs = minhash_lsh_pairs(spark, str(tmp_path), threshold=0.5).collect()
+    pairs = getattr(dedup, op)(spark, str(tmp_path), threshold=0.5).collect()
     assert {(r["doc_a"], r["doc_b"]) for r in pairs} >= {(0, 1), (0, 2), (1, 2)}
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+def _doc_shingles(df, k=5):
+    """Reference shingles from Spark expressions alone: the distinct char
+    k-grams of each doc, ``substr(text, i, k)`` for i in 1..max(length -
+    k + 1, 1), one row per (doc_id, shingle)."""
+    idx = F.sequence(F.lit(1), F.greatest(F.length("text") - (k - 1), F.lit(1)))
+    sh = F.array_distinct(F.transform(idx, lambda i: F.substr("text", i, F.lit(k))))
+    return df.select("doc_id", F.explode(sh).alias("shingle"))
+
+
+def _md5_signed64(col):
+    """Reference (signed 64-bit hash, unsigned hi half) of md5(col) from
+    its two 32-bit hex halves, recombined as hi_signed * 2^32 + lo: the
+    arithmetic of the DuckDB twins."""
+    hx = F.md5(col)
+    hi = F.conv(F.substring(hx, 1, 8), 16, 10).cast("long")
+    lo = F.conv(F.substring(hx, 9, 8), 16, 10).cast("long")
+    h = (
+        hi - F.when(hi >= F.lit(2147483648), F.lit(4294967296)).otherwise(F.lit(0))
+    ) * F.lit(4294967296) + lo
+    return h, hi
 
 
 def _spark_signatures(docs):
@@ -127,15 +150,10 @@ def _spark_signatures(docs):
     expressions alone: explode the shingles, md5-derived hash, per-(doc,
     bin) min, then per doc the 64 slots with empty bins densified from
     md5(global_min ':' bin). Returns {doc_id: 512-byte big-endian blob}."""
-    from parquet_to_arrow_spark.operators.dedup import (
-        N_MINHASH,
-        _BIN_BITS,
-        _md5_signed64,
-        doc_shingles,
-    )
+    from parquet_to_arrow_spark.operators.dedup import N_MINHASH, _BIN_BITS
 
     h, hi = _md5_signed64(F.col("shingle"))
-    binned = doc_shingles(docs).select(
+    binned = _doc_shingles(docs).select(
         "doc_id", h.alias("h"), F.shiftright(hi, 32 - _BIN_BITS).alias("bin")
     )
     binmin = binned.groupBy("doc_id", "bin").agg(F.min("h").alias("mh"))
@@ -181,6 +199,91 @@ def test_minhash_signatures_reject_null_text(spark):
     docs = spark.createDataFrame([(1, "some text"), (2, None)], "doc_id long, text string")
     with pytest.raises(Exception, match="ValueError"):
         minhash_signatures(spark, None, docs).collect()
+
+
+def test_shingle_kernel_matches_spark_reference(spark):
+    """The shingle kernel's per-doc hashes are the reference chain's
+    collect_set, ascending and distinct, on the edge texts; a null text
+    has none."""
+    import numpy as np
+    import pyarrow as pa
+
+    from parquet_to_arrow_spark.operators.dedup import _shingle_hashes
+
+    docs = spark.createDataFrame(list(enumerate(EDGE_TEXTS)), "doc_id long, text string")
+    h, _ = _md5_signed64(F.col("shingle"))
+    want = {
+        r["doc_id"]: sorted(r["hs"])
+        for r in _doc_shingles(docs).groupBy("doc_id").agg(F.collect_set(h).alias("hs")).collect()
+    }
+    hs, counts = _shingle_hashes(pa.array(EDGE_TEXTS + [None, "abcde"]))
+    got = [g.tolist() for g in np.split(hs, np.cumsum(counts)[:-1])]
+    assert hs.dtype == np.int64
+    assert dict(enumerate(got[: len(EDGE_TEXTS)])) == want
+    assert got[len(EDGE_TEXTS) :] == [[], want[EDGE_TEXTS.index("abcde")]]
+
+
+def test_hash_set_verify_matches_brute_force_jaccard():
+    """The exact verify, fed candidate pairs over several small batches,
+    keeps exactly the pairs whose brute-force shingle-set Jaccard is >= the
+    threshold, including identical, disjoint and single-shingle docs and a
+    pair exactly at the threshold."""
+    import itertools
+
+    import pyarrow as pa
+
+    from parquet_to_arrow_spark.operators.dedup import _hash_set_batches, _verify_hash_sets
+
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "the quick brown fox jumps over the lazy dog",
+        "the quick brown fox jumps over the lazy cat",
+        "zzzzzzzzzzzzzzzz",
+        "abcde", "abcdef", "a", "a", "", "ab",
+        "pack my box with five dozen liquor jugs",
+    ]
+    ids = list(range(100, 100 + len(texts)))
+    docs = pa.RecordBatch.from_arrays([pa.array(ids), pa.array(texts)], names=["doc_id", "text"])
+    (hs,) = _hash_set_batches(iter([docs]))
+    blob = dict(zip(hs.column(0).to_pylist(), hs.column(1).to_pylist()))
+    shingles = [{t[i : i + 5] for i in range(max(len(t) - 4, 1))} for t in texts]
+    pairs = list(itertools.combinations(range(len(texts)), 2))
+
+    def batch(part):
+        a, b = [ids[i] for i, _ in part], [ids[j] for _, j in part]
+        cols = [pa.array(a, pa.int64()), pa.array(b, pa.int64())]
+        cols += [pa.array([blob[d] for d in side], pa.binary()) for side in (a, b)]
+        return pa.RecordBatch.from_arrays(cols, names=["doc_a", "doc_b", "hs_a", "hs_b"])
+
+    for thr in (0.0, 0.3, 0.5, 1.0):
+        want = sorted(
+            (ids[i], ids[j]) for i, j in pairs
+            if len(shingles[i] & shingles[j]) / len(shingles[i] | shingles[j]) >= thr
+        )
+        batches = [batch(part) for part in (pairs[:7], pairs[7:8], pairs[8:8], pairs[8:])]
+        got = sorted(
+            (a, b)
+            for out in _verify_hash_sets(iter(batches), thr)
+            for a, b in zip(out.column(0).to_pylist(), out.column(1).to_pylist())
+        )
+        assert got == want, thr
+        # {abcde} vs {abcde, bcdef} is exactly 0.5
+        assert ((104, 105) in got) == (thr <= 0.5)
+
+
+def test_null_text_gives_no_ngram_pairs(spark, tmp_path):
+    """A null text has no shingles: ngram_jaccard_pairs pairs the other
+    docs as before and never the null one (minhash_signatures raises on it,
+    test_minhash_signatures_reject_null_text)."""
+    from parquet_to_arrow_spark.operators.dedup import ngram_jaccard_pairs
+
+    text = "a document with a null neighbour in the same table"
+    rows = [(1, text), (2, text), (3, None), (4, "something else entirely")]
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    got = [(r.doc_a, r.doc_b, r.jaccard) for r in ngram_jaccard_pairs(spark, str(tmp_path)).collect()]
+    assert got == [(1, 2, 1.0)]
 
 
 def _band_rows(rng):

@@ -277,11 +277,9 @@ def test_interleaved_packing_queries_stay_correct(spark):
     for r in rows:
         assert r.seq_id == acc // 512 and r.seq_offset == acc % 512, r
         acc += r.n_tok
-    # nothing pinned, nothing leaked: the compat API reports zero releases
-    # and packing added no persistent RDDs (<=, not ==: the shared
-    # session's ContextCleaner may evict OTHER tests' unreferenced caches
-    # while this test runs)
-    assert pl.release_pack_caches() == 0
+    # nothing pinned, nothing leaked: packing added no persistent RDDs
+    # (<=, not ==: the shared session's ContextCleaner may evict OTHER
+    # tests' unreferenced caches while this test runs)
     assert (
         spark.sparkContext._jsc.getPersistentRDDs().size()
         <= n_persistent_before

@@ -509,3 +509,64 @@ def test_minhash_lsh_plan_has_one_explode_and_the_band_shuffles(spark):
     final = df._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
     assert len(re.findall(r"\bExchange ", final)) == 3, final
     assert len(re.findall(r"\bGenerate ", final)) == 1, final
+
+
+def _physical_nodes(plan):
+    """Every node of an executed physical plan, descending into adaptive
+    plans, query stages and reused exchanges."""
+    yield plan
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _physical_nodes(plan.executedPlan())
+    elif name.endswith("QueryStageExec"):
+        yield from _physical_nodes(plan.plan())
+    elif name == "ReusedExchangeExec":
+        yield from _physical_nodes(plan.child())
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _physical_nodes(children.apply(i))
+
+
+def test_minhash_cluster_verify_exchanges_no_array_column(spark, monkeypatch):
+    """The exact verify of near_dup_clusters_minhash moves each doc's
+    shingle hashes as one binary blob: no exchange of the verified pair
+    plan, shuffle or broadcast, carries an array column (arrays cross the
+    JVM row bridge one element at a time; at this scale AQE broadcasts the
+    hash sets, so a shuffle-only check would see none). The pairs are
+    taken where connected_components receives them, because its
+    checkpoints hide them from the final plan."""
+    from pyspark.sql import functions as F
+
+    from parquet_to_arrow_spark.operators import pipeline as pl
+
+    seen = []
+
+    def capture(nodes, pairs, max_rounds=20):
+        seen.append(pairs)
+        return nodes.select("doc_id", F.col("doc_id").alias("cluster_id"))
+
+    monkeypatch.setattr(pl, "connected_components", capture)
+    pl.near_dup_clusters_minhash(spark, SF)
+    (pairs,) = seen
+    pairs.collect()
+    exchanges = [
+        node
+        for node in _physical_nodes(pairs._jdf.queryExecution().executedPlan())
+        if node.getClass().getSimpleName().endswith("ExchangeExec")
+    ]
+    assert exchanges
+    for node in exchanges:
+        out = node.output()
+        types = [out.apply(i).dataType().catalogString() for i in range(out.size())]
+        assert not [t for t in types if "array<" in t], (types, node.toString())
+
+
+def test_ngram_jaccard_plan_has_no_explode_and_no_cache(spark):
+    """n-gram Jaccard takes its (doc_id, hash) rows from the shingle
+    kernel's mapInArrow: no Generate (the shingle explode) and no cached
+    relation in its plan."""
+    from parquet_to_arrow_spark.operators.dedup import ngram_jaccard_pairs
+
+    plan = plan_of(ngram_jaccard_pairs(spark, SF))
+    assert "MapInArrow" in plan, plan
+    assert "Generate" not in plan and "InMemoryRelation" not in plan, plan
